@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs the headline query set on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}. Each query is fully
   * materialized via a noop-format write (count() would let Catalyst elide
@@ -10,16 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // A failed query must not contribute a bogus "time-to-crash" to the
     // totals (r7: the broken x_sessionize recorded 0.195 s and silently
     // flattered the registry total) — once() reports success, timed runs

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of selected queries —
   * `sbt "runMain graft.Explain <sfDir> [query ...]"`. Used to audit
   * pushdown (PushedFilters), pruning (ReadSchema), join strategies and
@@ -12,15 +10,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.benchQueries
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     names.foreach { name =>
       println(s"\n========== $name ==========")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -10,19 +10,7 @@ object Verify {
     // the driver always calls with exactly two args → full registry)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // classic (non-ANSI) semantics: the engine's coercion operators mirror
-      // the reference's defensive parsing (bad input → NULL, never throw)
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); see graft.util.Tables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     run(spark, sfDir, outDir, only): Unit
     spark.stop()
   }

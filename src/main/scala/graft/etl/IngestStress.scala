@@ -3,8 +3,6 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
-
 /** Ingest stress harness: synthesizes an N-page produtos source and runs
   * the full incremental step, timing the per-page commit path. Usage:
   *
@@ -29,14 +27,7 @@ object IngestStress {
     val groupK = if (args.length > 2) args(2).toInt else 1
     val mode = if (args.length > 3) args(3) else "merge"
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(8)
 
     val src = Files.createTempDirectory("stress-src").toString
     val tgt = Files.createTempDirectory("stress-tgt").toString

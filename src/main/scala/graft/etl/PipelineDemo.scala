@@ -2,8 +2,6 @@ package graft.etl
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable demo of the full ETL DAG over envelope fixtures:
   * `sbt "runMain graft.etl.PipelineDemo <sourceDir> <targetDir>"`.
   * Prints each step outcome, the audit counts, and the resulting state
@@ -12,14 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val Array(sourceDir, targetDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val report = Pipeline.run(spark, sourceDir, targetDir, Instant.now())
     report.steps.foreach(s => println(s"[step] ${s.process}: ${s.outcome}"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{dot, l2}
 import graft.types.Coercions.detRound
 import graft.util.Tables.t
 
@@ -698,7 +699,6 @@ object CorpusOps {
       // global sort); the fuse is a full-outer join of two 30-row
       // tables — driver-trivial at any corpus size. Contributions are
       // 1e9-quantized before the sum; ranks stay BIGINT.
-      graft.functions.GraftFunctions.register(s)
       def rankW(keys: Column*) = row_number()
         .over(Window.orderBy(keys: _*)).cast("long")
       val bmTop = bm25Scored(s, d)
@@ -1079,9 +1079,8 @@ object CorpusOps {
       // then compare squared pair distances d8²/d64² on the 50 fixed
       // (2i, 2i+1) pairs. E[d8²] = d64² under ±1/√k scaling; the ratio
       // column IS the gauge. Scan-side map per vector (8 codegen'd
-      // graft_dot folds), one self-join on the pair spine — no shuffle
+      // GraftDot folds), one self-join on the pair spine — no shuffle
       // beyond the join at any scale.
-      graft.functions.GraftFunctions.register(s)
       // sqrt(8.0) computed in-engine on both sides: 8.0 is exact, sqrt is
       // correctly rounded — identical doubles without a decimal literal
       // (decimal literals parse as DECIMAL in both engines' SQL).
@@ -1089,7 +1088,7 @@ object CorpusOps {
         .filter(col("vec_id") < 100)
         .select(Seq(col("vec_id"), col("embedding")) ++
           (0 until RpOutDims).map(j =>
-            (expr(s"graft_dot(embedding, ${rpVecSpark(j)})") / sqrt(lit(8.0)))
+            (dot(col("embedding"), expr(rpVecSpark(j))) / sqrt(lit(8.0)))
               .as(s"p$j")): _*)
         .localCheckpoint()
       val a = proj.select(Seq(col("vec_id").as("id_a"),
@@ -1104,7 +1103,7 @@ object CorpusOps {
         (col(s"a$j") - col(s"b$j")) * (col(s"a$j") - col(s"b$j")))
         .reduce(_ + _)
       a.join(b, col("id_b") === col("id_a") + 1)
-        .withColumn("d64sq", expr("graft_l2(ea, eb)"))
+        .withColumn("d64sq", l2(col("ea"), col("eb")))
         .withColumn("d8sq", d8sq)
         .select(col("id_a"), col("id_b"),
           detRound(sqrt(col("d64sq")), 6).as("d64"),

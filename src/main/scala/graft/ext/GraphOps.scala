@@ -248,7 +248,6 @@ object GraphOps {
       // backbone is pinned by the spec's independent replay. Top-64 per
       // key uses the bounded-heap aggregate (map-side partials ship at
       // most 64 entries per node — never a per-node sort).
-      graft.functions.GraftFunctions.register(s)
       val ew0 = t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(t(s, d, "orders").select(col("o_orderkey"), col("o_custkey")),
@@ -495,7 +494,6 @@ object GraphOps {
       // output column and the oracle applies the identical truncation.
       // Top-cap per supplier uses the bounded-heap aggregate (map-side
       // partials ship at most cap entries per supplier).
-      graft.functions.GraftFunctions.register(s)
       val links = t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(t(s, d, "orders").select(col("o_orderkey"), col("o_custkey")),
@@ -552,7 +550,6 @@ object GraphOps {
       // verdict #6; see x_cooccurrence_recs — weight = distinct TRAIN
       // orders linking the pair, cap exported as deg_cap, oracle
       // truncated identically).
-      graft.functions.GraftFunctions.register(s)
       // r21 optimization (guide §1.2 "the distributed algorithm", §2.4):
       // ONE era-conditional (c, sp) grain replaces the two separate era
       // grains the r20 shape kept. ow counts the pair's distinct TRAIN

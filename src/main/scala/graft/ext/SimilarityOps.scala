@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{dot, l2}
+
 import graft.util.Tables.t
 
 /** Similarity search over embedding columns (SURVEY.md §2.10 x_sim_topk).
@@ -25,10 +27,9 @@ object SimilarityOps {
 
   /** Dot product via the native codegen'd GraftDot expression — identical
     * left-fold semantics to `aggregate(zip_with(...))` (ascending index,
-    * double accumulator) but inside whole-stage codegen; sessions register
-    * it in each query fn (idempotent). */
+    * double accumulator) but inside whole-stage codegen. */
   private[ext] def dotExpr(a: String, b: String): Column =
-    expr(s"graft_dot($a, $b)")
+    dot(col(a), col(b))
 
   private[ext] def dotSql(a: String, b: String): String =
     s"""list_sum(list_transform(range(1, 65),
@@ -76,7 +77,7 @@ object SimilarityOps {
   /** adds p0..p{NumPlanes-1} projection columns for planes [lo, lo+NumPlanes). */
   private def withProjections(df: DataFrame, lo: Int): DataFrame =
     (0 until NumPlanes).foldLeft(df)((d, j) =>
-      d.withColumn(s"p$j", expr(s"graft_dot(embedding, ${planeSpark(lo + j)})")))
+      d.withColumn(s"p$j", dot(col("embedding"), expr(planeSpark(lo + j)))))
 
   private def bucketFromSigns: Column =
     expr((0 until NumPlanes).map(j =>
@@ -514,7 +515,7 @@ object SimilarityOps {
     * tiny broadcast + min_by partial aggregate (no window sort). */
   private def assignCells(emb: DataFrame, cents: DataFrame): DataFrame =
     emb.crossJoin(broadcast(cents))
-      .withColumn("cdist", expr("graft_l2(embedding, ce)"))
+      .withColumn("cdist", l2(col("embedding"), col("ce")))
       .groupBy(col("vec_id"))
       .agg(min_by(struct(col("cell"), col("embedding")),
         struct(col("cdist"), col("cell"))).as("w"))
@@ -683,7 +684,7 @@ object SimilarityOps {
       graft.util.ScaleJoins.topKPerKey(
           qAll.join(nAll, col("query_id") =!= col("neighbor_id"))
             .withColumn("negdist",
-              -expr("floor(graft_l2(qe, ne) * 1e6 + 0.5) / 1e6")),
+              -(floor(l2(col("qe"), col("ne")) * 1e6 + 0.5) / 1e6)),
           Seq("query_id"), "negdist", "neighbor_id", 10)
         .select("query_id", "neighbor_id")
     }
@@ -716,7 +717,7 @@ object SimilarityOps {
       graft.util.ScaleJoins.topKPerKey(
           fxShared(s, d).filter(col("vec_id") < 50)
             .crossJoin(broadcast(ivfCents(s, d)))
-            .withColumn("negcdist", -expr("graft_l2(embedding, ce)"))
+            .withColumn("negcdist", -l2(col("embedding"), col("ce")))
             .select(col("vec_id"), col("negcdist"), col("cell")),
           Seq("vec_id"), "negcdist", "cell", nprobe)
         .select(col("vec_id").as("query_id"), col("cell"))
@@ -758,7 +759,7 @@ object SimilarityOps {
       val seeds = subs.filter(col("vec_id") < k)
         .select(col("sub"), col("vec_id").as("cell"), col("sv").as("ce"))
       val a1 = subs.join(broadcast(seeds), Seq("sub"))
-        .withColumn("d", expr("graft_l2(sv, ce)"))
+        .withColumn("d", l2(col("sv"), col("ce")))
         .groupBy(col("vec_id"), col("sub"))
         .agg(min_by(struct(col("cell"), col("sv")),
           struct(col("d"), col("cell"))).as("w"))
@@ -780,7 +781,7 @@ object SimilarityOps {
                       k: Int, subs: DataFrame, cb: DataFrame): DataFrame =
     shared(s, s"pqcodes|$d|$tag|$m|$k") {
       subs.join(broadcast(cb), Seq("sub"))
-        .withColumn("d", expr("graft_l2(sv, ce)"))
+        .withColumn("d", l2(col("sv"), col("ce")))
         .groupBy(col("vec_id"), col("sub"))
         .agg(min_by(col("cell"), struct(col("d"), col("cell"))).as("code"))
         .select(col("vec_id"), (col("sub") * k + col("code")).as("key"))
@@ -798,7 +799,7 @@ object SimilarityOps {
         .join(broadcast(cb), Seq("sub"))
         .select(col("vec_id").as("query_id"),
           (col("sub") * k + col("cell")).as("key"),
-          expr("CAST(floor(graft_l2(sv, ce) * 1e6 + 0.5) AS DOUBLE)")
+          floor(l2(col("sv"), col("ce")) * 1e6 + 0.5).cast("double")
             .as("pd"))
     }
 
@@ -848,7 +849,7 @@ object SimilarityOps {
         .join(broadcast(cbR), Seq("sub"))
         .select(col("query_id"), col("cell"),
           (col("sub") * k + col("cbcell")).as("key"),
-          expr("CAST(floor(graft_l2(sv, ce) * 1e6 + 0.5) AS DOUBLE)")
+          floor(l2(col("sv"), col("ce")) * 1e6 + 0.5).cast("double")
             .as("pd"))
     }
 
@@ -947,7 +948,7 @@ object SimilarityOps {
         .join(fx.select(col("vec_id").as("neighbor_id"),
           col("embedding").as("ne")), "neighbor_id")
         .withColumn("negexact",
-          -expr("floor(graft_l2(qe, ne) * 1e6 + 0.5) / 1e6"))
+          -(floor(l2(col("qe"), col("ne")) * 1e6 + 0.5) / 1e6))
       val rtop = graft.util.ScaleJoins.topKPerKey(
           exact.select("query_id", "neighbor_id", "negexact"),
           Seq("query_id"), "negexact", "neighbor_id", 10)
@@ -994,7 +995,7 @@ object SimilarityOps {
     val assigned = assignCells(emb, cents)
     val probes = graft.util.ScaleJoins.topKPerKey(
         emb.filter(col("vec_id") < maxQuery).crossJoin(broadcast(cents))
-          .withColumn("negcdist", -expr("graft_l2(embedding, ce)"))
+          .withColumn("negcdist", -l2(col("embedding"), col("ce")))
           .select(col("vec_id"), col("negcdist"), col("cell")),
         Seq("vec_id"), "negcdist", "cell", nprobe)
       .select(col("vec_id").as("query_id"), col("cell"))
@@ -1002,7 +1003,7 @@ object SimilarityOps {
       col("embedding").as("qe")), "query_id")
     val c = assigned.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("ce2"), col("cell"))
-    val pairDist = expr("floor(graft_l2(qe, ce2) * 1e6 + 0.5) / 1e6")
+    val pairDist = floor(l2(col("qe"), col("ce2")) * 1e6 + 0.5) / 1e6
     graft.util.ScaleJoins.topKPerKey(
         q.join(c, Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
@@ -1015,7 +1016,6 @@ object SimilarityOps {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "x_sim_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val q = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1035,7 +1035,6 @@ object SimilarityOps {
       // aggregation ships at most k entries per query per map task —
       // shuffle O(P·k), not O(candidates); no per-group sort. Same answer
       // as x_sim_topk (same ordering, same tie-break), same oracle SQL.
-      graft.functions.GraftFunctions.register(s)
       bruteTopK(s, d, 20, 5)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
         .orderBy("query_id", "rank")
@@ -1057,7 +1056,6 @@ object SimilarityOps {
       // total, never a per-query driver loop. At 100 TB the candidate
       // stage swaps to the IVF/LSH shortlist paths; the MMR rounds are
       // shortlist-sized regardless of corpus.
-      graft.functions.GraftFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       val emb = t(s, d, "embeddings")
       val nrm = norms(emb)
@@ -1129,7 +1127,6 @@ object SimilarityOps {
       // (pos_sim − neg_sim) is read directly per anchor. Same bounded
       // plan as x_sim_topk (brute force here; the ANN shortlist paths
       // swap in at scale — a label filter composes with any tier).
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val q = emb.filter(col("vec_id") < 30)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -1170,7 +1167,6 @@ object SimilarityOps {
       // to a broadcast 64-wide row; encode/dequant are narrow map-side
       // zip_withs; at 100 TB this composes with IVF exactly like PQ
       // (codes inside probed cells, raw reads only for the shortlist).
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val mm = emb.select(posexplode(col("embedding")))
         .groupBy(col("pos"))
@@ -1198,8 +1194,8 @@ object SimilarityOps {
       val q = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val pairs = q.join(coded, col("query_id") =!= col("neighbor_id"))
-      val negExact = -expr("floor(graft_l2(qe, ce) * 1e6 + 0.5) / 1e6")
-      val negAdc = -expr("floor(graft_l2(qe, deq) * 1e6 + 0.5) / 1e6")
+      val negExact = -(floor(l2(col("qe"), col("ce")) * 1e6 + 0.5) / 1e6)
+      val negAdc = -(floor(l2(col("qe"), col("deq")) * 1e6 + 0.5) / 1e6)
       val truth = graft.util.ScaleJoins.topKPerKey(
           pairs.withColumn("negd", negExact)
             .select("query_id", "neighbor_id", "negd"),
@@ -1238,7 +1234,6 @@ object SimilarityOps {
 
     "x_sim_threshold" -> ((s, d) => {
       // embedding-cosine near-dup: all pairs above a similarity floor
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val q = emb.filter(col("vec_id") < 100)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1260,7 +1255,6 @@ object SimilarityOps {
       // the pair stage swaps to the LSH/IVF candidate paths — the
       // clustering consumes (a, b) pairs regardless of which tier
       // produced them.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val q = emb.filter(col("vec_id") < 100)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1306,7 +1300,6 @@ object SimilarityOps {
       // At 100 TB the cell count scales with the corpus so cells stay
       // bounded, and the pair stage can further swap in the LSH/IVF
       // candidate tiers unchanged.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val orig = emb.filter(col("vec_id") < 300)
         .select(col("vec_id").cast("long").as("vec_id"),
@@ -1320,13 +1313,13 @@ object SimilarityOps {
         .select(col("vec_id").as("cell"), col("embedding").as("ce"))
       val assigned = assignCells(corpus, seeds).localCheckpoint()
       val nrm = assigned.select(col("vec_id"),
-        sqrt(expr("graft_dot(embedding, embedding)")).as("nrm"))
+        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
       val pairs = assigned
         .select(col("cell"), col("vec_id").as("a"), col("embedding").as("va"))
         .join(assigned.select(col("cell"), col("vec_id").as("b"),
           col("embedding").as("vb")), Seq("cell"))
         .filter(col("a") < col("b"))
-        .withColumn("dot", expr("graft_dot(va, vb)"))
+        .withColumn("dot", dot(col("va"), col("vb")))
         .join(nrm.select(col("vec_id").as("a"), col("nrm").as("na")), "a")
         .join(nrm.select(col("vec_id").as("b"), col("nrm").as("nb")), "b")
         .withColumn("cos_sim",
@@ -1346,9 +1339,9 @@ object SimilarityOps {
         .join(assigned, "vec_id")
         .join(broadcast(cent), "cell")
         .withColumn("ccos", graft.types.Coercions.detRound(
-          expr("graft_dot(embedding, cce)") /
-            (sqrt(expr("graft_dot(embedding, embedding)")) *
-             sqrt(expr("graft_dot(cce, cce)"))), 6))
+          dot(col("embedding"), col("cce")) /
+            (sqrt(dot(col("embedding"), col("embedding"))) *
+             sqrt(dot(col("cce"), col("cce")))), 6))
         .groupBy(col("lbl").as("cluster"))
         .agg(min(col("cell")).as("cell"),
           count(lit(1)).as("n_members"),
@@ -1498,7 +1491,6 @@ object SimilarityOps {
       // composed kNN classifier: graft_topk 5 nearest labeled neighbors
       // per query, majority vote via max_by over (votes, -label) — every
       // stage partial-aggregates; no window, no per-group sort.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val q = emb.filter(col("vec_id") < 30)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1528,16 +1520,14 @@ object SimilarityOps {
       // every vector assigned to its nearest centroid cell, search within
       // the cell only. At 100 TB: k-means-trained centroids, same plan —
       // one small broadcast (centroids), one equi-join on cell id.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val cent = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val l2 = expr("graft_l2(embedding, ce)")
       // argmin assignment via min_by (partial-aggregating; replaces the
       // round-1 rn=1 window that sorted every group): struct(cdist, cid)
       // keys the minimum deterministically
       val assigned = emb.crossJoin(broadcast(cent))
-        .withColumn("cdist", l2)
+        .withColumn("cdist", l2(col("embedding"), col("ce")))
         .groupBy(col("vec_id"))
         .agg(min_by(col("cid"), struct(col("cdist"), col("cid"))).as("cell"),
              min_by(col("embedding"), struct(col("cdist"), col("cid")))
@@ -1547,7 +1537,7 @@ object SimilarityOps {
           col("cell"))
       val c = assigned.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("ce2"), col("cell"))
-      val pairDist = expr("floor(graft_l2(qe, ce2) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ce2")) * 1e6 + 0.5) / 1e6
       // top-k by ASCENDING distance through the descending-score heap:
       // negate in, negate back out (exact in IEEE)
       graft.util.ScaleJoins.topKPerKey(
@@ -1566,7 +1556,6 @@ object SimilarityOps {
       // assignment) → SEARCH (within-cell exact rerank). Same plan
       // shapes as x_ann_ivf, but the cells are learned; at 100 TB the
       // train loop runs on a sample while index/search are unchanged.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val trained = lloydOnce(emb, seedCents(emb, 8))
       val assigned = assignCells(emb, trained.select("cell", "ce"))
@@ -1575,7 +1564,7 @@ object SimilarityOps {
           col("cell"))
       val c = assigned.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("ce2"), col("cell"))
-      val pairDist = expr("floor(graft_l2(qe, ce2) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ce2")) * 1e6 + 0.5) / 1e6
       graft.util.ScaleJoins.topKPerKey(
           q.join(c, Seq("cell"))
             .filter(col("query_id") =!= col("neighbor_id"))
@@ -1594,7 +1583,6 @@ object SimilarityOps {
       // vector indexes into exactly ONE cell, so multi-cell candidates
       // are disjoint and need no dedup. x_ann_ivf_probe_quality measures
       // the recall this buys on the same fixture.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       ivfSearchProbed(emb, seedCents(emb, 8), 2, 30, 3)
         .orderBy("query_id", "rank")
@@ -1607,7 +1595,6 @@ object SimilarityOps {
       // this composition; previously train and multi-probe existed only
       // separately. Plan adds nothing over the parts: broadcast
       // centroids, one equi-join on cell.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val trained = lloydOnce(emb, seedCents(emb, 8)).select("cell", "ce")
       ivfSearchProbed(emb, trained, 2, 30, 3)
@@ -1621,10 +1608,9 @@ object SimilarityOps {
       // shows the measured curve and where it saturates (8 cells total:
       // nprobe=8 would be exact), i.e. how many probes this corpus is
       // worth before adding cells instead.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val trained = lloydOnce(emb, seedCents(emb, 8)).select("cell", "ce")
-      val pairDist = expr("floor(graft_l2(qe, ce2) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ce2")) * 1e6 + 0.5) / 1e6
       val q = emb.filter(col("vec_id") < 30)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val c = emb.select(col("vec_id").as("neighbor_id"),
@@ -1655,9 +1641,8 @@ object SimilarityOps {
       // nprobe=1 vs nprobe=2 on the same seed-centroid index — the
       // probes-vs-tables decision measured in-engine, the IVF twin of
       // x_ann_multiprobe_quality.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairDist = expr("floor(graft_l2(qe, ce2) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ce2")) * 1e6 + 0.5) / 1e6
       def top3(pairs: DataFrame): DataFrame =
         graft.util.ScaleJoins.topKPerKey(
             pairs.filter(col("query_id") =!= col("neighbor_id"))
@@ -1674,7 +1659,7 @@ object SimilarityOps {
       val s1 = top3(q1.join(c, Seq("cell")))
       val probes = graft.util.ScaleJoins.topKPerKey(
           emb.filter(col("vec_id") < 30).crossJoin(broadcast(cents))
-            .withColumn("negcdist", -expr("graft_l2(embedding, ce)"))
+            .withColumn("negcdist", -l2(col("embedding"), col("ce")))
             .select(col("vec_id"), col("negcdist"), col("cell")),
           Seq("vec_id"), "negcdist", "cell", 2)
         .select(col("vec_id").as("query_id"), col("cell"))
@@ -1710,7 +1695,6 @@ object SimilarityOps {
       // and the unrolled DuckDB oracle can hash-match the result).
       // Assignment distances stay raw doubles: both engines compute the
       // identical ascending-index left fold (x_ann_ivf precedent).
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       var cents = seedCents(emb, 4).withColumn("n_members", lit(0L))
       for (_ <- 1 to 2) cents = lloydOnce(emb, cents)
@@ -1728,7 +1712,6 @@ object SimilarityOps {
       // graft_topk. Each extra table adds one equi-join of the same shape
       // — recall grows, the plan only unions. This is the recall-scaling
       // path x_ann_lsh documents.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       def pairsFor(lo: Int): DataFrame = {
         val b = rhpBucketed(emb, lo)
@@ -1759,7 +1742,6 @@ object SimilarityOps {
       // the bucket (the scale path for x_sim_topk).
       // graft_topk heap aggregate instead of the rank window: only k
       // survivors per query leave each map task
-      graft.functions.GraftFunctions.register(s)
       lshTopK(s, d, 50, 3)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
         .orderBy("query_id", "rank")
@@ -1792,7 +1774,6 @@ object SimilarityOps {
       // shortlists concentrate in dense (often same-label) regions, the
       // postfilter loss grows with selectivity and this gauge is how
       // you measure it before picking a strategy.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val keep = emb.filter(col("label") === 1)
         .select(col("vec_id").as("neighbor_id"))
@@ -1841,9 +1822,8 @@ object SimilarityOps {
       // learn, so training is neutral here (real corpora cluster, and
       // the gauge is how you see the lift). Same data-dependence lesson
       // as x_ann_quality.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairDist = expr("floor(graft_l2(qe, ce2) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ce2")) * 1e6 + 0.5) / 1e6
       def top3(pairs: DataFrame): DataFrame =
         graft.util.ScaleJoins.topKPerKey(
             pairs.filter(col("query_id") =!= col("neighbor_id"))
@@ -1883,7 +1863,6 @@ object SimilarityOps {
     "x_ann_multiprobe" -> ((s, d) => {
       // query-directed multi-probe LSH top-k (see multiprobePairs): the
       // probe dial — the cheapest recall lever on an existing LSH index
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       graft.util.ScaleJoins.topKPerKey(
           scorePairs(multiprobePairs(s, d, 50), emb),
@@ -1898,7 +1877,6 @@ object SimilarityOps {
       // fixture — the measurement that justifies probing before adding
       // index tables. Measured on these fixtures: 3.3% single → 20.0%
       // multi-probe (the round-3 blind 9-flip scheme reached 13.3%).
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val truth = bruteTopK(s, d, 50, 3)
         .select("query_id", "neighbor_id").localCheckpoint()
@@ -1929,7 +1907,6 @@ object SimilarityOps {
       // cost against brute-force truth, the two numbers a production
       // tuning loop trades off. Plan shape stays two bucket equi-joins +
       // a union — the same shape at any corpus size.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val truth = bruteTopK(s, d, 50, 3)
         .select("query_id", "neighbor_id").localCheckpoint()
@@ -1969,7 +1946,6 @@ object SimilarityOps {
       // That is the data-dependence every ANN deployment must measure
       // (real embedding corpora cluster, and recall rises with
       // probes/tables) — exactly why the gauge is in the engine.
-      graft.functions.GraftFunctions.register(s)
       val truth = bruteTopK(s, d, 50, 3)
         .select("query_id", "neighbor_id").localCheckpoint()
       val approx = lshTopK(s, d, 50, 3).select("query_id", "neighbor_id")
@@ -1990,7 +1966,6 @@ object SimilarityOps {
       // single-bucket, 1 table × 16 query-directed probes, 2 tables ×
       // 16 probes. Plan shape per config is the production one — bucket
       // equi-joins + a union, never all-pairs.
-      graft.functions.GraftFunctions.register(s)
       val fx = clusteredFixture(s, d).localCheckpoint()
       val q = fx.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -2029,7 +2004,6 @@ object SimilarityOps {
       // coarse quantizer recovers the true clusters, so this measures
       // the production configuration where x_ann_trained_quality's
       // uniform fixture could only measure the floor.
-      graft.functions.GraftFunctions.register(s)
       // fixture, trained quantizer, exact-L2 truth, and probe sets all
       // come from the session-scoped shared prefix (r14 hardening —
       // this gauge was the last heavy-tier member rebuilding its own);
@@ -2038,7 +2012,7 @@ object SimilarityOps {
       // assignment deliberately drops
       val fx = fxShared(s, d)
       val assigned = assignCells(fx, ivfCents(s, d)).localCheckpoint()
-      val pairDist = expr("floor(graft_l2(qe, ce2) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ce2")) * 1e6 + 0.5) / 1e6
       def top10(pairs: DataFrame): DataFrame =
         graft.util.ScaleJoins.topKPerKey(
             pairs.filter(col("query_id") =!= col("neighbor_id"))
@@ -2079,7 +2053,6 @@ object SimilarityOps {
       // sweeps: those bound how many vectors are scored, PQ bounds the
       // bytes per scored vector — at 100 TB the two compose (ADC inside
       // the probed cells, rerank reading only shortlist raw vectors).
-      graft.functions.GraftFunctions.register(s)
       val fx = fxShared(s, d)
       val truth = l2Truth(s, d)
       pqRecallRows(s, d, fx, truth, 4, 50, 16, withRerank = false)
@@ -2101,10 +2074,9 @@ object SimilarityOps {
       // candidates instead of 12k, so recall lands near the IVF curve
       // at a fraction of either budget — the measured argument for why
       // 100 TB vector search stacks the two.
-      graft.functions.GraftFunctions.register(s)
       val fx = fxShared(s, d)
       val truth = l2Truth(s, d)
-      val pairDist = expr("floor(graft_l2(qe, ne) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ne")) * 1e6 + 0.5) / 1e6
       val nt = truth.agg(count(lit(1)).as("n_true"))
       def row(nprobe: Int, depth: Int): DataFrame = {
         // ADC scores only the probed candidates (M entry lookups each);
@@ -2153,10 +2125,9 @@ object SimilarityOps {
       // Same fixture, truth, IVF prefix, and candidate sets as
       // x_ann_ivfpq_recall, so the recall deltas are attributable to
       // residual encoding alone.
-      graft.functions.GraftFunctions.register(s)
       val fx = fxShared(s, d)
       val truth = l2Truth(s, d)
-      val pairDist = expr("floor(graft_l2(qe, ne) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ne")) * 1e6 + 0.5) / 1e6
       val nt = truth.agg(count(lit(1)).as("n_true"))
       def row(nprobe: Int, depth: Int): DataFrame = {
         // per-(query, probed cell) residual lookup tables and the ADC
@@ -2199,10 +2170,9 @@ object SimilarityOps {
       // k=256 (x_ann_ivfpq256_recall, same candidate sets) isolates the
       // residual effect at production k; residual k=64 isolates the
       // codebook-size effect under residual encoding.
-      graft.functions.GraftFunctions.register(s)
       val fx = fxShared(s, d)
       val truth = l2Truth(s, d)
-      val pairDist = expr("floor(graft_l2(qe, ne) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ne")) * 1e6 + 0.5) / 1e6
       val nt = truth.agg(count(lit(1)).as("n_true"))
       val shortAll = adcShortRes(s, d, 256, 1)
       val nc = ivfCand(s, d, 1).agg(count(lit(1)).as("n_candidates"))
@@ -2246,10 +2216,9 @@ object SimilarityOps {
       // predates those rules. Cost discipline on the Spark side: the
       // np1 ADC scan runs ONCE; the three rows are rerank-depth
       // prefixes of the same checkpointed 256-deep shortlist.
-      graft.functions.GraftFunctions.register(s)
       val fx = fxShared(s, d)
       val truth = l2Truth(s, d)
-      val pairDist = expr("floor(graft_l2(qe, ne) * 1e6 + 0.5) / 1e6")
+      val pairDist = floor(l2(col("qe"), col("ne")) * 1e6 + 0.5) / 1e6
       val nt = truth.agg(count(lit(1)).as("n_true"))
       val shortAll = adcShortRaw(s, d, 8, 256, 1)
       val nc = ivfCand(s, d, 1).agg(count(lit(1)).as("n_candidates"))
@@ -2290,7 +2259,6 @@ object SimilarityOps {
       // 50-query side broadcasts onto the labeled scan, top-3 via the
       // bounded-heap graft_topk (no window sort over 600k pairs), votes
       // are a tiny grouped count.
-      graft.functions.GraftFunctions.register(s)
       val fx = clusteredFixture(s, d).localCheckpoint()
       val isHeld = pmod(col("vec_id"), lit(24L)) === 0 && col("vec_id") < 1200
       val q = fx.filter(isHeld)
@@ -2300,7 +2268,7 @@ object SimilarityOps {
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
       val scored = lab.crossJoin(broadcast(q))
         .withColumn("negd",
-          -expr("floor(graft_l2(qe, ce) * 1e6 + 0.5) / 1e6"))
+          -(floor(l2(col("qe"), col("ce")) * 1e6 + 0.5) / 1e6))
       val top3 = graft.util.ScaleJoins.topKPerKey(
         scored, Seq("query_id"), "negd", "neighbor_id", 3)
       val wQ = org.apache.spark.sql.expressions.Window
@@ -2330,7 +2298,6 @@ object SimilarityOps {
       // score is scalar ln on identical ratios. At 100 TB: assignment is
       // a broadcast-centroid argmin (scan-side), term counts shuffle on
       // (cell, token) — nothing all-pairs.
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val trained = lloydOnce(emb, seedCents(emb, 8))
       val assigned = assignCells(emb, trained.select("cell", "ce"))

@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** `graft_topk(score, id, k)` — bounded-heap per-group top-k aggregate.
+/** `graft_topk(score, id, k)` — bounded-heap per-group top-k aggregate,
+  * built by the typed `graft.functions.topK` Column builder.
   *
   * Why a custom TypedImperativeAggregate (SURVEY.md §2.11 ladder, tier b):
   * the built-in way to take the top k rows per key is a rank window —

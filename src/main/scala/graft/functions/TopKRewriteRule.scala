@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType
   *     Generate(posexplode(top))
   *       Aggregate(p, graft_topk(score, id, k) AS top)
   *
-  * — the §2.11 ladder's (c) tier: a `Rule[LogicalPlan]` injected through
-  * `SparkSessionExtensions` (GraftExtensions) or
+  * — the §2.11 ladder's (c) tier: a `Rule[LogicalPlan]` installed through
   * `spark.experimental.extraOptimizations`. The window plan shuffles and
   * sorts EVERY candidate row per key; the aggregate ships at most k
   * entries per key per map task and never sorts a group.

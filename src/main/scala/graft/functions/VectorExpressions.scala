@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Element-type dispatch shared by the vector expressions: each side may be
   * ARRAY<FLOAT> (stored embeddings) or ARRAY<DOUBLE> (computed centroids —
@@ -28,8 +25,9 @@ private[functions] object VecAccess {
   * Why a custom Expression (SURVEY.md §2.11 ladder): the built-in way to dot
   * two float arrays is `aggregate(zip_with(...))`, but SQL higher-order
   * functions are interpreted — they sit outside whole-stage codegen and
-  * allocate a lambda frame per element. `graft_dot` generates a tight
-  * primitive loop instead. Semantics match the HOF left fold exactly
+  * allocate a lambda frame per element. `GraftDot` generates a tight
+  * primitive loop instead; callers build it with the typed
+  * `graft.functions.dot` Column builder, so no session registers it. Semantics match the HOF left fold exactly
   * (ascending index, double accumulator) so results are bit-identical and
   * remain comparable to the DuckDB oracle.
   */
@@ -120,70 +118,4 @@ case class GraftL2(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GraftL2 =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  /** Imperative registration (used by the query registry; idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => GraftDot(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2", exprs => GraftL2(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", exprs => GraftTopK(exprs.head, exprs(1), exprs(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_probe", exprs => GraftCmsProbe(exprs.head, exprs(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_merge", exprs => GraftCmsMerge(exprs.head, exprs(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_dot", exprs => GraftCmsDot(exprs.head, exprs(1)),
-      "scala_udf")
-    // Catalyst's bloom-filter pair exists for the optimizer's runtime
-    // filters but is not SQL-registered; exposing it makes the classic
-    // build-bloom-then-prune-before-shuffle recipe (j7_bloom_prejoin)
-    // expressible directly. The bloom side of graft_might_contain must
-    // be a scalar subquery or literal (enforced by its type check).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1), exprs(2), 0, 0),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs.head, exprs(1)),
-      "scala_udf")
-  }
-}
-
-/** SparkSessionExtensions entry point:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[GraftDot].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => GraftDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2"),
-      new ExpressionInfo(classOf[GraftL2].getName, "graft_l2"),
-      (exprs: Seq[Expression]) => GraftL2(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[GraftTopK].getName, "graft_topk"),
-      (exprs: Seq[Expression]) => GraftTopK(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cms_probe"),
-      new ExpressionInfo(classOf[GraftCmsProbe].getName, "graft_cms_probe"),
-      (exprs: Seq[Expression]) => GraftCmsProbe(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cms_dot"),
-      new ExpressionInfo(classOf[GraftCmsDot].getName, "graft_cms_dot"),
-      (exprs: Seq[Expression]) => GraftCmsDot(exprs.head, exprs(1))))
-    // top-k pattern rewrite: rank-window + filter → graft_topk aggregate
-    ext.injectOptimizerRule(_ => TopKRewriteRule)
-  }
 }

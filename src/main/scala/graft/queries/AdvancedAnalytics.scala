@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{bloomAgg, cmsDot, cmsProbe, mightContain}
 import graft.types.Coercions._
 import graft.util.Tables.t
 
@@ -147,25 +148,23 @@ object AdvancedAnalytics {
       // the oracle. Spark's optimizer injects this same shape as a
       // "runtime filter" when statistics allow; making it an explicit
       // operator keeps the guarantee statistics-independent.
-      graft.functions.GraftFunctions.register(s)
-      t(s, d, "orders").createOrReplaceTempView("v_bl_orders")
-      t(s, d, "lineitem").createOrReplaceTempView("v_bl_lineitem")
-      s.sql("""
-        WITH sel AS (
-          SELECT o_orderkey,
-                 date_format(date_trunc('month', o_orderdate), 'yyyy-MM-dd')
-                   AS month
-          FROM v_bl_orders WHERE o_orderpriority = '1-URGENT'),
-        pruned AS (
-          SELECT l_orderkey, l_extendedprice FROM v_bl_lineitem
-          WHERE graft_might_contain(
-            (SELECT graft_bloom_agg(o_orderkey, 100000L, 800000L) FROM sel),
-            l_orderkey))
-        SELECT month, COUNT(*) AS n_items,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-                 AS revenue
-        FROM pruned JOIN sel ON l_orderkey = o_orderkey
-        GROUP BY 1 ORDER BY month""")
+      // The bloom side is a scalar subquery, as might_contain requires.
+      val sel = t(s, d, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select(col("o_orderkey"),
+          date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM-dd")
+            .as("month"))
+      val bloom = sel
+        .select(bloomAgg(col("o_orderkey"), lit(100000L), lit(800000L)))
+        .scalar()
+      t(s, d, "lineitem")
+        .filter(mightContain(bloom, col("l_orderkey")))
+        .select(col("l_orderkey"), col("l_extendedprice"))
+        .join(sel, col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("month"))
+        .agg(count(lit(1)).as("n_items"),
+          dsum(col("l_extendedprice")).as("revenue"))
+        .orderBy("month")
     }),
 
     "j6_set_ops" -> ((s, d) => {
@@ -266,14 +265,13 @@ object AdvancedAnalytics {
       // count_min_sketch partial-aggregates per partition and merges by
       // element-wise addition (commutative ⇒ the estimate is identical
       // across partitionings); the one-row sketch then broadcasts to the
-      // probe side, answered by the native graft_cms_probe expression.
+      // probe side, answered by the native cmsProbe expression.
       // Bounded-gauge form (r7): the CMS guarantee — never undercounts,
       // overshoot ≤ eps·N (eps = 0.001) with confidence δ, deterministic
       // here under the fixed seed — is checked in-query against the exact
       // per-key count, emitted as 0/1 flags the DuckDB twin asserts as
       // constant-true. The spec additionally bounds the raw estimates and
       // asserts merge invariance under repartitioning.
-      graft.functions.GraftFunctions.register(s)
       val li = t(s, d, "lineitem")
       val sk = li.agg(
         expr("count_min_sketch(l_partkey, 0.001d, 0.99d, 42)").as("sk"),
@@ -282,7 +280,7 @@ object AdvancedAnalytics {
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("exact_freq"))
       exact.crossJoin(sk) // sk is a single aggregate row — broadcast NL join
         .select(col("l_partkey"), col("exact_freq"), col("total"),
-          expr("graft_cms_probe(sk, l_partkey)").as("est"))
+          cmsProbe(col("sk"), col("l_partkey")).as("est"))
         .select(col("l_partkey"), col("exact_freq"),
           when(col("est") >= col("exact_freq"), 1L).otherwise(0L)
             .as("cms_ge_exact"),
@@ -363,7 +361,6 @@ object AdvancedAnalytics {
       // exact join size is computed from the two key histograms (DECIMAL
       // partials), the estimate's guarantees are emitted as 0/1 flags
       // the DuckDB twin pins constant-true, with the 3x slop a8 uses.
-      graft.functions.GraftFunctions.register(s)
       val o = t(s, d, "orders")
       val e = t(s, d, "events")
       val sk1 = o.agg(
@@ -380,7 +377,7 @@ object AdvancedAnalytics {
           lit(0).cast("decimal(20,0)")).cast("long").as("exact_join_size"))
       exact.crossJoin(broadcast(sk1)).crossJoin(broadcast(sk2))
         .select(col("exact_join_size"), col("n_orders"), col("n_events"),
-          expr("graft_cms_dot(sk1, sk2)").as("est"))
+          cmsDot(col("sk1"), col("sk2")).as("est"))
         .select(col("exact_join_size"), col("n_orders"), col("n_events"),
           when(col("est") >= col("exact_join_size"), 1L).otherwise(0L)
             .as("est_ge_exact"),

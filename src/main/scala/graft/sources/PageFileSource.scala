@@ -82,7 +82,7 @@ object PageFileSource {
 }
 
 class PageTable(path: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_pages($path)"
+  override def name(): String = s"graft_pages path=$path"
   override def schema(): StructType = PageFileSource.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.Pipeline
 
 /** Runnable demo of the streaming ingest path:
@@ -13,14 +11,7 @@ import graft.etl.Pipeline
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val Array(pageDir, targetTable, checkpoint) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val stream = StreamingIngest.pageStream(spark, pageDir, "produtos",
       "produto", Pipeline.produtoSchema)

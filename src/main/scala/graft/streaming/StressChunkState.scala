@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM worker for the bucketed chunk-state kill test (r8): runs
   * the pre-staged batches under `inDir/batch-<i>` through
   * `chunkDedupBatchBucketed` in order, writing a `done-<i>` marker
@@ -18,15 +16,7 @@ import org.apache.spark.sql.SparkSession
 object StressChunkState {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outPath, statePath, nBatches, delayMs) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("stress-chunk-state")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(2)
     (0 until nBatches.toInt).foreach { i =>
       val marker = Paths.get(inDir, s"done-$i")
       if (!Files.exists(marker)) {

@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): for each named
   * registry query, capture — under the SAME session config as Bench —
@@ -28,17 +27,7 @@ object PerfProbe {
     val planDir = args(1)
     val tag = args(2)
     val names0 = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-perf-probe")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val names =
       if (names0 == Seq("ALL"))
         (graft.SparkEntry.benchQueries ++ graft.SparkEntry.heavyQueries ++

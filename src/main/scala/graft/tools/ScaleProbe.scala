@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Scale-curve probe (r13 verdict #4): run named registry queries
   * against a given SF dir and report wall time plus the listener-
@@ -25,15 +24,8 @@ object ScaleProbe {
     require(args.length >= 2, "usage: ScaleProbe <sfDir> <query> [query …]")
     val sfDir = args.head
     val names = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .appName("graft-scale-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     @volatile var shufWrite = 0L
     @volatile var shufRead = 0L

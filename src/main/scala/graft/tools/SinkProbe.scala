@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.StreamingIngest
 
 /** Scale probe for the foreachBatch sink folds (r16 verdict #8): time
@@ -22,15 +20,7 @@ object SinkProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .appName("graft-sink-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val ev0 = graft.util.Tables.t(spark, sfDir, "events")
     val ev = if (factor == 1) ev0
       else (1 to factor).map(_ => ev0).reduce(_ unionByName _)

@@ -1,27 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Forked-JVM workers for MultiProcessStressSpec (r7): the GroupCommit
-  * page claim and the PartitionedMerge compact/append protocols are
-  * FILESYSTEM-based, so in-JVM thread stress (the r6 x20 specs) shares
-  * one NIO view and one process identity — the honest test races two
-  * separate JVMs against the same directories. Each main is one worker;
-  * the spec forks several and asserts the end state.
-  */
-object StressMains {
-  private[tools] def session(app: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .appName(app)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
+/* Forked-JVM workers for MultiProcessStressSpec (r7): the GroupCommit
+ * page claim and the PartitionedMerge compact/append protocols are
+ * FILESYSTEM-based, so in-JVM thread stress (the r6 x20 specs) shares
+ * one NIO view and one process identity — the honest test races two
+ * separate JVMs against the same directories. Each main is one worker;
+ * the spec forks several and asserts the end state. */
 
 /** args: stagingDir tableDir workerId nPages every — stage nPages
   * one-row pages into a shared staging dir. `every <= 0` disables
@@ -33,7 +17,7 @@ object StressMains {
 object StressGroupCommit {
   def main(args: Array[String]): Unit = {
     val Array(stagingDir, tableDir, workerId, nPages, every) = args
-    val spark = StressMains.session(s"stress-gc-$workerId")
+    val spark = graft.Sessions.local(2)
     import spark.implicits._
     val e = every.toInt
     val merge: org.apache.spark.sql.DataFrame => Long =
@@ -58,7 +42,7 @@ object StressGroupCommit {
 object StressCompactAppend {
   def main(args: Array[String]): Unit = {
     val Array(tableDir, role, workerId, nOps) = args
-    val spark = StressMains.session(s"stress-ca-$workerId-$role")
+    val spark = graft.Sessions.local(2)
     import spark.implicits._
     val w = workerId.toInt
     role match {

@@ -3,6 +3,8 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.topK
+
 /** Scale-path join utilities (SURVEY.md §4, PERFORMANCE.md):
   *
   *  - **bucketed co-location**: the fact⋈fact join (orders⋈lineitem at
@@ -19,17 +21,17 @@ import org.apache.spark.sql.functions._
   */
 object ScaleJoins {
 
-  /** Per-key top-k via the graft_topk bounded-heap aggregate — the scale
+  /** Per-key top-k via the GraftTopK bounded-heap aggregate — the scale
     * replacement for `row_number().over(partitionBy(keys).orderBy(score
     * DESC, id ASC)) <= k`: map-side partials ship at most k entries per
     * key (shuffle O(partitions·k), not O(rows)) and no group is sorted.
     * Identical answer to the rank window, including the id tie-break.
-    * Output: keys ++ (id, score, rank). Requires a registered session
-    * (GraftFunctions.register). */
+    * Output: keys ++ (id, score, rank). Works on any session: the
+    * aggregate is built by the typed `graft.functions.topK` builder. */
   def topKPerKey(df: DataFrame, keys: Seq[String], scoreCol: String,
                  idCol: String, k: Int): DataFrame =
     df.groupBy(keys.map(col): _*)
-      .agg(expr(s"graft_topk($scoreCol, $idCol, $k)").as("__top"))
+      .agg(topK(col(scoreCol), col(idCol), k).as("__top"))
       .select(keys.map(col) :+ posexplode(col("__top")): _*)
       .select(keys.map(col) ++ Seq(
         col("col.id").as(idCol), col("col.score").as(scoreCol),

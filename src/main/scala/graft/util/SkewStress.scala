@@ -1,6 +1,5 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew stress for self-join candidate generation (PERFORMANCE.md round
@@ -26,16 +25,10 @@ object SkewStress {
     val cold = if (args.length > 1) args(1).toInt else 8000
     val chunks = if (args.length > 2) args(2).toInt else 16
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      // shuffle joins only: broadcast would hide the skew being measured
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(8)
+    // shuffle joins only: broadcast would hide the skew being measured
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     import spark.implicits._
 
     // pad adds realistic row weight so AQE's byte-based detector has

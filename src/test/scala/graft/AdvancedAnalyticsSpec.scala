@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.SketchMaintenance
+import graft.functions.cmsProbe
 import graft.queries.AdvancedAnalytics
 
 /** Round-2 analytical surface: shapes the oracle can't fully pin down
@@ -63,14 +66,13 @@ class AdvancedAnalyticsSpec extends SparkSpec {
   }
 
   test("a8_cms_freq overestimates only, within the eps·N bound") {
-    graft.functions.GraftFunctions.register(spark)
     val li = graft.util.Tables.t(spark, sf, "lineitem")
     val sk = li.agg(
       expr("count_min_sketch(l_partkey, 0.001d, 0.99d, 42)").as("sk"))
     val est = li.select(col("l_partkey")).distinct()
       .filter(col("l_partkey") <= 100).crossJoin(sk)
       .select(col("l_partkey"),
-        expr("graft_cms_probe(sk, l_partkey)").as("est_freq"))
+        cmsProbe(col("sk"), col("l_partkey")).as("est_freq"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(est.nonEmpty)
     val exact = li.filter(col("l_partkey") <= 100)
@@ -99,14 +101,13 @@ class AdvancedAnalyticsSpec extends SparkSpec {
     val base = AdvancedAnalytics.queries("a8_cms_freq")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val li = graft.util.Tables.t(spark, sf, "lineitem").repartition(13)
-    graft.functions.GraftFunctions.register(spark)
     val sk = li.agg(
       expr("count_min_sketch(l_partkey, 0.001d, 0.99d, 42)").as("sk"))
     val reparted = li.select(col("l_partkey")).distinct()
       .filter(col("l_partkey") <= 100)
       .crossJoin(sk)
       .select(col("l_partkey"),
-        expr("graft_cms_probe(sk, l_partkey)").as("est_freq"))
+        cmsProbe(col("sk"), col("l_partkey")).as("est_freq"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(reparted === base)
   }
@@ -130,6 +131,50 @@ class AdvancedAnalyticsSpec extends SparkSpec {
       .orderBy("month")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got === plain)
+  }
+
+  // A newSession() shares nothing registered on the shared session, so
+  // each case below fails if a graft function still needs registering.
+  private def rows(df: DataFrame) =
+    df.collect().map(_.toSeq).toSeq
+
+  test("ScaleJoins.topKPerKey runs on a fresh session") {
+    def top(s: SparkSession) = rows(
+      graft.util.ScaleJoins.topKPerKey(
+        s.range(0, 500).select((col("id") % 7).as("g"),
+          ((col("id") * 37) % 11).cast("double").as("score"), col("id")),
+        Seq("g"), "score", "id", 3).orderBy("g", "rank"))
+    assert(top(spark.newSession()) === top(spark))
+  }
+
+  test("SketchMaintenance refresh and probe run on a fresh session") {
+    val base = tmpDir("sketch-fresh")
+    val fresh = spark.newSession()
+    def keys(s: SparkSession, lo: Long, hi: Long) =
+      s.range(lo, hi).select((col("id") % 37).as("k"))
+    // a probe frame from another session than the sketch table's, as a
+    // foreachBatch micro-batch's is
+    SketchMaintenance.refresh(spark, s"$base/shared", keys(spark, 0, 500), "k")
+    def probeShared(s: SparkSession) = rows(SketchMaintenance.probe(spark,
+      s"$base/shared", keys(s, 0, 40).distinct(), "k").orderBy("k"))
+    assert(probeShared(fresh) === probeShared(spark))
+    // the whole refresh (with a merge) and probe cycle on one session
+    def cycle(s: SparkSession, path: String) = {
+      SketchMaintenance.refresh(s, path, keys(s, 0, 500), "k")
+      SketchMaintenance.refresh(s, path, keys(s, 500, 900), "k")
+      rows(SketchMaintenance.probe(s, path, keys(s, 0, 40).distinct(), "k")
+        .orderBy("k"))
+    }
+    assert(cycle(fresh, s"$base/f") === cycle(spark, s"$base/s"))
+  }
+
+  test("graft-function registry entries match on a fresh session") {
+    val fresh = spark.newSession()
+    Seq("x_sim_topk", "x_ann_multiprobe", "j7_bloom_prejoin", "a8_cms_freq",
+      "x_cms_join_estimate").foreach { name =>
+      val q = SparkEntry.queries(name)
+      assert(rows(q(fresh, sf)) === rows(q(spark, sf)), name)
+    }
   }
 
   test("w4 moving average window agrees with a hand-rolled frame") {

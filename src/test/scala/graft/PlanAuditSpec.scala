@@ -194,9 +194,9 @@ class PlanAuditSpec extends SparkSpec {
     // x_capture_recapture posture); both rank passes and the scalar
     // count re-read it instead of re-scanning lineitem
     "x_rank_biased_overlap",
-    // x_tsb_backtest checkpoints the same two bounded frames as
-    // x_croston_backtest (shared backtestDaily/holdoutScore builders):
-    // the (brand, day) grain and the O(brands) estimate table
+    // x_tsb_backtest checkpoints one bounded frame, shared with
+    // x_croston_backtest through bktScored: the (brand, day) demand
+    // grain, O(brands × demand days), never fact rows
     "x_tsb_backtest",
     // r19 additions, reviewed: x_dunn_posthoc checkpoints the
     // (grp, cent-value) grouped histogram — the x_kruskal_wallis site

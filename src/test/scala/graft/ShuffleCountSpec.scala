@@ -30,7 +30,6 @@ class ShuffleCountSpec extends SparkSpec {
   private lazy val planSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.functions.topK
 
 /** graft_topk bounded-heap aggregate: exact equivalence with the rank
   * window it replaces, across repartitionings (partial-merge path). */
@@ -27,9 +27,8 @@ class TopKAggSpec extends SparkSpec {
   }
 
   private def viaAgg(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    GraftFunctions.register(spark)
     df.groupBy("g")
-      .agg(expr(s"graft_topk(score, id, $k)").as("top"))
+      .agg(topK(col("score"), col("id"), k).as("top"))
       .select(col("g"), posexplode(col("top")))
       .select(col("g"), col("col.id").as("id"), col("col.score").as("score"),
         (col("pos") + 1).cast("int").as("rank"))
