@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,21 +42,18 @@ object StatsOps {
   private def brownQW(i: Int): Long =
     math.floor(brownW(i) * 1e9 + 0.5).toLong
 
-  // Shared lag-ladder builders for the Brown smoothing pair
-  // (x_holt_forecast on y, x_holt_winters on the deseasonalized yd —
-  // identical arithmetic, different input column): truncated weighted
-  // sum over the present lags, each term 1e9-quantized before the
-  // row-local sum, present-lag quantized weights as the normalizer.
-  // One definition per engine so a quantizer change cannot drift the
-  // two ops apart (r15 review).
-  private def brownNum(lg: Int => org.apache.spark.sql.Column,
-      w: Int => Double): org.apache.spark.sql.Column =
+  /** Lag/weight ladder over lags 1..40: the numerator is the weighted
+    * sum of the present lags `lg(i)`, each term 1e9-quantized before the
+    * row-local sum; [[ladderDen]] is the present-lag sum of the quantized
+    * weights, its normalizer. Every one-step ladder forecast (EWMA,
+    * Brown, damped trend, SES) is `ladderNum / ladderDen`; the SQL twins
+    * are [[brownNumSql]]/[[brownDenSql]]. */
+  private[graft] def ladderNum(lg: Int => Column, w: Int => Double): Column =
     (1 to EwmaLags).map(i =>
       when(lg(i).isNotNull,
         floor(lg(i) * lit(w(i)) * 1e9 + 0.5).cast("long"))
         .otherwise(0L)).reduce(_ + _)
-  private def brownDen(lg: Int => org.apache.spark.sql.Column,
-      qw: Int => Long): org.apache.spark.sql.Column =
+  private[graft] def ladderDen(lg: Int => Column, qw: Int => Long): Column =
     (1 to EwmaLags).map(i =>
       when(lg(i).isNotNull, lit(qw(i))).otherwise(0L)).reduce(_ + _)
   private def brownNumSql(e: String, wLit: Int => String): String =
@@ -175,7 +172,6 @@ object StatsOps {
   // bisection reference: |rel err| ≤ 4e-6 over p2 ∈ [1e-5, 0.05],
   // df ∈ [1, 2400]; ≤ 3e-10 in the small-p/large-df regime Grubbs
   // lives in (validated offline, pinned in the spec).
-  import org.apache.spark.sql.Column
   private def polyCol(cs: Seq[Double], x: Column): Column =
     cs.tail.foldLeft(lit(cs.head): Column)((acc, ci) => acc * x + lit(ci))
   private def polySql(cs: Seq[Double], x: String): String =
@@ -218,7 +214,7 @@ object StatsOps {
   }
 
   /** Two-tailed Student-t quantile t(p2, n): P(|T_n| > t) = p2.
-    * df < 1 yields NULL (r16 advice): Hill's general branch computes
+    * df < 1 yields NULL: Hill's general branch computes
     * sqrt(t_a·π/2) with t_a = 1/(df−0.5), negative for df ≤ 0 — Spark
     * would return NaN while DuckDB sqrt(<0) THROWS, killing the whole
     * oracle query. Internals run on df clamped to ≥ 1 (throw-free in
@@ -251,7 +247,7 @@ object StatsOps {
       (nd + 1.0) / (nd + 2.0) + lit(1.0) / y0
     val yGen = when(y0 > lit(0.05) + a, yExp).otherwise(ySm)
     val p1 = p2 * lit(math.Pi) / 2.0
-    // explicit NULL-df arm (r17 advice #1): greatest() skips NULLs, so
+    // explicit NULL-df arm: greatest() skips NULLs, so
     // a NULL df would clamp nd to 1.0 and fall through every when-arm
     // into the general branch, silently returning a df=1 value where
     // the documented contract says NULL — gate it ahead of n < 1
@@ -335,11 +331,10 @@ object StatsOps {
     * with a localCheckpoint after the Acklam stage so each Catalyst
     * analyze/optimize/codegen unit stays LINEAR in the stage count.
     * The single tQuantileCol tree duplicates every intermediate
-    * subtree at every reference (the Column analogue of the 474 KB SQL
-    * blow-up the CTE chain fixed) and costs ~9 s of pure, input-size-
-    * independent plan/codegen — BENCH_r17 put x_grubbs_outlier over
-    * its 20 s member budget on that constant alone, and
-    * x_generalized_esd paid it ×5 (47.8 s standalone). Arithmetic here
+    * subtree at every reference (the Column analogue of the SQL
+    * blow-up the CTE chain avoids) and costs ~9 s of pure, input-size-
+    * independent plan/codegen — enough to push x_grubbs_outlier over
+    * its 20 s member budget, and ×5 for x_generalized_esd. Arithmetic here
     * mirrors tQuantileCol operation-for-operation (same ops, same
     * order), so the staged value is bit-identical and both oracles
     * stay hash-green. Caller contract: `df` must be BOUNDED (the
@@ -426,7 +421,7 @@ object StatsOps {
   // priority series (x_generalized_esd).
   private val EsdR = 5
 
-  // ---- rank-biased overlap constants (r18) -------------------------------
+  // ---- rank-biased overlap constants -------------------------------------
   // Truncation depth and persistence for x_rank_biased_overlap. The
   // per-depth weights (1−p)·p^(d−1)/d are driver-computed ONCE and
   // embedded in both engines as 1e15 fixed-point longs (the
@@ -439,19 +434,14 @@ object StatsOps {
       .toLong
   private val rboTail: Double = math.pow(RboP, RboDepth)
 
-  // ---- shared monthly-revenue-in-millions series (r18) -------------------
-  // One definition per engine for the forecast-evaluation pair
-  // (x_theil_u_forecast, x_mase_forecast): the monthly grouped revenue
-  // series normalized to MILLIONS, so the shared 1e9 fixed-point
-  // ladder terms stay inside BIGINT at any corpus size (raw monthly
-  // revenue crosses the long range near sf≈3) — both U₂ and MASE are
-  // scale-invariant ratios, and the divided series is the same exact
-  // double in both engines.
-  // r20 optimization: checkpointed — every consumer (theil_u, mase,
-  // theta, mincer_zarnowitz) forks it into 2-3 aggregate subplans, each
-  // of which used to re-run the fact scan + month groupBy; the grain is
-  // O(months), so the barrier is trivially cheap and the fact pass runs
-  // once per query.
+  // ---- shared monthly-revenue-in-millions series -------------------------
+  // The monthly grouped revenue series normalized to MILLIONS, so the
+  // 1e9 fixed-point ladder terms stay inside BIGINT at any corpus size
+  // (raw monthly revenue crosses the long range near sf≈3) — U₂, MASE
+  // and the other consumers are scale-invariant, and the divided series
+  // is the same exact double in both engines. Checkpointed: every
+  // consumer forks it into 2-3 aggregate subplans, and the O(months)
+  // barrier keeps the fact pass to once per query.
   private def monthlyRevMil(s: SparkSession, d: String): DataFrame =
     t(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mth"))
@@ -466,17 +456,13 @@ object StatsOps {
        FROM orders GROUP BY 1"""
 
   // ---- shared daily OLS-trend machinery (x_durbin_watson /
-  // x_breusch_pagan — hoisted when the second consumer appeared, the
-  // shared-block-spine discipline): the pooled day grain with a row
-  // index and the closed-form trend fit from exact integer sums.
+  // x_breusch_pagan): the pooled day grain with a row index and the
+  // closed-form trend fit from exact integer sums.
   // Returns (rn0(day, y, rn) checkpointed, ols(n, sx, sxx, b, a)). ---------
   private def dailyTrend(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val wD = Window.orderBy("day")
-    val daily = t(s, d, "orders")
-      .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-      .agg(count(lit(1)).cast("long").as("y"))
-      .localCheckpoint()
+    val daily = pooledDaily(s, d)
     val rn0 = daily.withColumn("rn", row_number().over(wD).cast("long"))
     val ols = rn0.agg(count(lit(1)).cast("long").as("n"),
       sum(col("rn")).cast("long").as("sx"),
@@ -524,19 +510,14 @@ object StatsOps {
          FROM ols1)"""
 
   // ---- shared pooled-daily change-point spine (x_snht_changepoint /
-  // x_buishand_range / x_chow_test — hoisted at the third consumer,
-  // pre-seal review r19; the shared-block-spine discipline): the pooled
-  // (day, y) grain with integer cumsum + row index, the moment stats
-  // (mean, guarded sd) broadcast alongside, and the cumulative
-  // deviation S_k = cumY − rn·ȳ every member reads. One copy means a
-  // tie-break or quantization fix cannot drift between the three. -------
+  // x_buishand_range / x_chow_test): the pooled (day, y) grain with
+  // integer cumsum + row index, the moment stats (mean, guarded sd)
+  // broadcast alongside, and the cumulative deviation S_k = cumY − rn·ȳ
+  // every member reads. ----------------------------------------------------
   /** cum(day, y, cumy, rn, n, sy, mean, sd, sk); daily checkpointed. */
   private def dailyCum(s: SparkSession, d: String): DataFrame = {
     val wD = Window.orderBy("day")
-    val daily = t(s, d, "orders")
-      .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-      .agg(count(lit(1)).cast("long").as("y"))
-      .localCheckpoint()
+    val daily = pooledDaily(s, d)
     val st = daily.agg(count(lit(1)).cast("long").as("n"),
       sum(col("y")).cast("long").as("sy"),
       sum(col("y") * col("y")).cast("long").as("syy"))
@@ -610,9 +591,7 @@ object StatsOps {
          WHERE pk = 1)"""
 
   // ---- shared 3-regressor OLS solver (x_granger_causality /
-  // x_dickey_fuller — hoisted BEFORE the second copy existed, the
-  // dailyCum dedup-at-the-spine discipline applied proactively per the
-  // r19 backlog's shared-solver note): Cramer's rule on the 3×3 normal
+  // x_dickey_fuller): Cramer's rule on the 3×3 normal
   // equations [[m,s1,s2],[s1,s11,s12],[s2,s12,s22]]·[a,b,c]ᵀ =
   // [sy,s1y,s2y]ᵀ over EXACT sufficient sums. ------------------------------
 
@@ -683,8 +662,8 @@ object StatsOps {
   // ---- forward normal CDF (x_anderson_darling) -----------------------------
   // Abramowitz–Stegun 7.1.26 rational erf approximation (|ε| < 1.5e-7
   // — three orders under the 1e6 per-term quantizer; drift vs exact
-  // erf pinned at 2.1e-6 on the fixture statistic, PERFORMANCE.md r20
-  // backlog) as the dual Column/SQL builder pattern of invNormCol:
+  // erf pinned at 2.1e-6 on the fixture statistic) as the dual
+  // Column/SQL builder pattern of invNormCol:
   // Anderson–Darling needs Φ itself, not Φ⁻¹, so the embed-a-literal
   // trick cannot serve (z is data-decided per distinct value). Both
   // engines spell the identical arithmetic; every constant is a lit17
@@ -721,16 +700,15 @@ object StatsOps {
   // α = 0.3 one-step SES as the lag-1..40 normalized weight ladder
   // (w_i = α(1−α)^(i−1); w₄₀ ≈ 2.8e−7, the truncated-normalized EWMA
   // convention of the EwmaAlpha ladder). Weights computed ONCE here,
-  // embedded in both engines via the brownNum/brownDen shared builders.
+  // embedded in both engines through the shared ladder builders.
   private val MzAlpha = 0.3
   private def mzW(i: Int): Double = MzAlpha * math.pow(1.0 - MzAlpha, i - 1)
   private def mzWLit(i: Int): String = graft.util.Num.lit17(mzW(i))
   private def mzQW(i: Int): Long = math.floor(mzW(i) * 1e9 + 0.5).toLong
 
-  // ---- complete-block machinery (pre-seal review r17: friedman /
-  // page / cochran_q / kendalls_w briefly carried four copies of the
-  // same block spine in BOTH engines; one builder + one CTE prefix
-  // now serve the family, the coPurchaseEdges/demandDaily precedent) --------
+  // ---- complete-block machinery: one builder + one CTE prefix per engine
+  // for the block family (friedman, page, quade, cochran_q, kendalls_w,
+  // nemenyi, friedman_aligned) ----------------------------------------------
 
   /** Month×priority revenue cells — the continuous-response cells the
     * rank-based members (friedman, page, kendalls_w) rank. */
@@ -812,17 +790,15 @@ object StatsOps {
   //   r = (exclusive cumsum of per-value counts over the DISTINCT-value
   //        table) + (row_number within the value group by the tiebreaker)
   // so the only unpartitioned window runs over |distinct values| rows
-  // (already grouped — the x_auc_roc / x_ks_statistic posture) and the
-  // only per-row window is PARTITIONED by the value itself. The start
-  // offsets rejoin on the value — the same key the within-group window
-  // hash-partitioned on, so the join reuses that exchange. Output is
-  // bit-identical to row_number().over(Window.orderBy(value, ties...)).
+  // and the only per-row window is PARTITIONED by the value itself. The
+  // start offsets rejoin on the value — the same key the within-group
+  // window hash-partitioned on, so the join reuses that exchange. Output
+  // is bit-identical to row_number().over(Window.orderBy(value, ties...)).
   private def globalRank(df: DataFrame, valueCol: String,
       tieCols: Seq[String], out: String): DataFrame = {
-    val wS = Window.orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val starts = df.groupBy(col(valueCol)).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__s0", coalesce(sum(col("__cnt")).over(wS), lit(0L)))
+    val starts = exclusiveCum(
+        df.groupBy(col(valueCol)).agg(count(lit(1)).as("__cnt")),
+        valueCol, "__cnt", "__s0")
       .select(col(valueCol), col("__s0"))
     val wIn = Window.partitionBy(col(valueCol))
       .orderBy(tieCols.map(col): _*)
@@ -832,21 +808,294 @@ object StatsOps {
       .drop("__rw", "__s0")
   }
 
-  // Scale-safe lower-median selection per group: the value at rank
-  // (n+1) div 2 of the (value, ties) total order equals the MIN value
-  // whose per-group cumulative count reaches that rank — so the whole
-  // selection runs on the grouped (group, value) histogram and the only
-  // window is partitioned by the group over its distinct values.
-  private def lowerMedianBy(df: DataFrame, grp: String, vCol: String,
-      counts: DataFrame, out: String): DataFrame = {
-    val wCum = Window.partitionBy(grp).orderBy(vCol)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    df.groupBy(col(grp), col(vCol)).agg(count(lit(1)).as("__c"))
-      .withColumn("__cum", sum(col("__c")).over(wCum))
-      .join(broadcast(counts), grp)
-      .filter(col("__cum") >= expr("(n + 1) div 2"))
-      .groupBy(col(grp)).agg(min(col(vCol)).as(out))
+  // ---- shared statistical kernels -----------------------------------------
+  // Each kernel is one derivation — a grain, a sufficient statistic or a
+  // shared finisher — that several tests use; a test is kernels plus
+  // its closed-form finisher. The oracle twins in `oracleSql` stay
+  // independent handwritten SQL.
+
+  /** Exclusive running total: `out` = Σ `cnt` over the rows strictly
+    * before this one in `order` (within `part`), 0 on the first row. On a
+    * value histogram this is the count of smaller values — the only
+    * window rank statistics need, and it runs over distinct values, never
+    * over fact rows. */
+  private[graft] def exclusiveCum(df: DataFrame, order: String, cnt: String,
+      out: String, part: String*): DataFrame =
+    df.withColumn(out, coalesce(sum(col(cnt)).over(
+      Window.partitionBy(part.map(col): _*).orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+
+  /** Twice the average rank of a value tied t times above s0 smaller
+    * values: 2·s0 + t + 1, an exact integer under any tie pattern. */
+  private[graft] def doubledRank: Column =
+    lit(2L) * col("s0") + col("t") + 1L
+
+  /** Pooled doubled ranks over a grouped (grp, v, c) histogram. Returns
+    * vts(v, t, s0) per value (see [[doubledRank]]), gsum(grp, ng, r2g)
+    * with r2g = Σ c·r2 per group, and ties(st3) with st3 = Σ(t³ − t),
+    * the tie-correction term. */
+  private[graft] def doubledRanks(hist: DataFrame, grp: String, v: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val vt = hist.groupBy(v).agg(sum(col("c")).cast("long").as("t"))
+    val vts = exclusiveCum(vt, v, "t", "s0")
+    val gsum = hist.join(vts, v)
+      .groupBy(grp)
+      .agg(sum(col("c")).cast("long").as("ng"),
+        sum((col("c") * doubledRank).cast("decimal(38,0)")).as("r2g"))
+    val ties = vt.agg(
+      sum((col("t") * col("t") * col("t") - col("t"))
+        .cast("decimal(38,0)")).as("st3"))
+    (vts, gsum, ties)
   }
+
+  /** Lower median per group off a grouped (grp, v, c) histogram: the
+    * value at rank (n+1) div 2 is the MIN value whose per-group
+    * cumulative count reaches that rank, so the only window is
+    * partitioned by group over its distinct values. `counts(grp, n)`
+    * carries the group sizes. (x_brown_forsythe's `2·cum ≥ n+1` pick is
+    * the UPPER median for even n and deliberately not this kernel.) */
+  private[graft] def lowerMedianBy(hist: DataFrame, grp: String, v: String,
+      c: String, counts: DataFrame, n: String, out: String): DataFrame = {
+    val wCum = Window.partitionBy(grp).orderBy(v)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    hist
+      .withColumn("__cum", sum(col(c)).over(wCum))
+      .join(broadcast(counts), grp)
+      .filter(col("__cum") >= expr(s"($n + 1) div 2"))
+      .groupBy(col(grp)).agg(min(col(v)).as(out))
+  }
+
+  /** The two-arm experiment coin: an order's arm is the first hex digit
+    * of md5(o_orderkey) below 8, a split both engines compute alike. */
+  private[graft] def armCoin: Column =
+    substring(md5(col("o_orderkey").cast("string")), 1, 1) < "8"
+
+  /** Two-arm cent-value histogram hist(qv, c1, c0, s0) — c1/c0 the arm
+    * counts at order value qv (cents), s0 the arm-0 count below qv — and
+    * the arm sizes tot(n1, n0). */
+  private[graft] def armCentHist(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val hist = t(s, d, "orders")
+      .select(armCoin.as("tr"),
+        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("qv"))
+      .groupBy("qv")
+      .agg(sum(when(col("tr"), 1L).otherwise(0L)).as("c1"),
+        sum(when(!col("tr"), 1L).otherwise(0L)).as("c0"))
+    val tot = hist.agg(sum(col("c1")).cast("long").as("n1"),
+      sum(col("c0")).cast("long").as("n0"))
+    (exclusiveCum(hist, "qv", "c0", "s0"), tot)
+  }
+
+  /** Per-priority two-arm order-value moments: per arm (suffix 1/0) n,
+    * Σy as DECIMAL(18,4) and Σy² as 1e4-fixed-point DECIMAL(38,0), kept
+    * where both arms have n > 1, with means m1/m0 and unbiased variances
+    * v1/v0 in double from the exact sums. */
+  private[graft] def armMoments(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders")
+      .select(col("o_orderpriority").as("grp"), armCoin.as("tr"),
+        col("o_totalprice").as("y"))
+      .groupBy("grp")
+      .agg(
+        sum(when(col("tr"), 1L).otherwise(0L)).as("n1"),
+        sum(when(col("tr"), col("y").cast("decimal(18,4)"))
+          .otherwise(lit(0).cast("decimal(18,4)"))).as("sy1"),
+        sum(when(col("tr"), floor(col("y") * col("y") * 1e4 + 0.5))
+          .otherwise(0.0).cast("decimal(38,0)")).as("syy1"),
+        sum(when(!col("tr"), 1L).otherwise(0L)).as("n0"),
+        sum(when(!col("tr"), col("y").cast("decimal(18,4)"))
+          .otherwise(lit(0).cast("decimal(18,4)"))).as("sy0"),
+        sum(when(!col("tr"), floor(col("y") * col("y") * 1e4 + 0.5))
+          .otherwise(0.0).cast("decimal(38,0)")).as("syy0"))
+      .filter(col("n1") > 1 && col("n0") > 1)
+      .withColumn("m1", col("sy1").cast("double") / col("n1"))
+      .withColumn("m0", col("sy0").cast("double") / col("n0"))
+      .withColumn("v1",
+        (col("syy1").cast("double") / 1e4
+          - col("sy1").cast("double") * col("sy1").cast("double")
+            / col("n1")) / (col("n1") - 1))
+      .withColumn("v0",
+        (col("syy0").cast("double") / 1e4
+          - col("sy0").cast("double") * col("sy0").cast("double")
+            / col("n0")) / (col("n0") - 1))
+
+  /** Per-priority order-value moment grain (grp, n, sy, syy): Σy as
+    * DECIMAL(18,4), Σy² as a DECIMAL sum of 1e4-quantized per-row
+    * squares — a per-term double square is identical in both engines,
+    * the sum must be exact because float addition order is not. */
+  private[graft] def priceMoments(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders")
+      .groupBy(col("o_orderpriority").as("grp"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("o_totalprice").cast("decimal(18,4)")).as("sy"),
+        sum(floor(col("o_totalprice") * col("o_totalprice") * 1e4 + 0.5)
+          .cast("decimal(38,0)")).as("syy"))
+
+  /** Per-priority histogram of order value in cents, (grp, qv, c),
+    * checkpointed: the value domain, not the corpus, bounds its size. */
+  private[graft] def priorityCentHist(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders")
+      .select(col("o_orderpriority").as("grp"),
+        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("qv"))
+      .groupBy("grp", "qv").agg(count(lit(1)).as("c"))
+      .localCheckpoint()
+
+  /** One-way ANOVA across priorities on the absolute deviations of order
+    * value from a per-group centre `center(grp, c)`. Each |y − c| is
+    * 1e6-quantized (its square 1e4) before DECIMAL sums; per-group terms
+    * are 1e4-quantized before the cross-group sums, so the F statistic
+    * is double arithmetic on exact statistics. Returns
+    * per(grp, n, zm, ...) checkpointed and the one-row F named `stat`. */
+  private[graft] def absDevAnova(s: SparkSession, d: String,
+      center: DataFrame, c: String, stat: String): (DataFrame, DataFrame) = {
+    val z = t(s, d, "orders")
+      .select(col("o_orderpriority").as("grp"),
+        col("o_totalprice").as("y"))
+      .join(broadcast(center), "grp")
+      .select(col("grp"),
+        floor(abs(col("y") - col(c)) * 1e6 + 0.5).as("qz"),
+        floor(abs(col("y") - col(c)) * abs(col("y") - col(c))
+          * 1e4 + 0.5).as("qz2"))
+    val g = z.groupBy("grp")
+      .agg(count(lit(1)).as("n"),
+        sum(col("qz").cast("decimal(38,0)")).as("sz"),
+        sum(col("qz2").cast("decimal(38,0)")).as("szz"))
+      .localCheckpoint()
+    val tot = g.agg(count(lit(1)).as("k"),
+      sum(col("n")).cast("long").as("nn"), sum(col("sz")).as("gz"))
+    val per = g.crossJoin(broadcast(tot))
+      .withColumn("zm", col("sz").cast("double") / 1e6 / col("n"))
+      .withColumn("gm", col("gz").cast("double") / 1e6 / col("nn"))
+      .withColumn("ssw_g",
+        col("szz").cast("double") / 1e4
+          - (col("sz").cast("double") / 1e6)
+            * (col("sz").cast("double") / 1e6) / col("n"))
+      .withColumn("ssb_g",
+        col("n") * (col("zm") - col("gm")) * (col("zm") - col("gm")))
+      .localCheckpoint()
+    val w = per.groupBy(col("k"), col("nn"))
+      .agg(
+        sum(floor(col("ssw_g") * 1e4 + 0.5).cast("decimal(38,0)"))
+          .as("qssw"),
+        sum(floor(col("ssb_g") * 1e4 + 0.5).cast("decimal(38,0)"))
+          .as("qssb"))
+      .withColumn(stat,
+        (col("qssb").cast("double") / 1e4 / (col("k") - 1))
+          / (col("qssw").cast("double") / 1e4 / (col("nn") - col("k"))))
+      .select(col(stat))
+    (per, w)
+  }
+
+  /** Per-treatment doubled rank sums over a [[rankedR2]] frame:
+    * (trt, k, r2j, nb), nb the number of complete blocks. */
+  private[graft] def blockRankSums(ranked: DataFrame): DataFrame =
+    ranked.groupBy(col("trt"), col("k"))
+      .agg(sum(col("r2")).cast("long").as("r2j"),
+        count(lit(1)).cast("long").as("nb"))
+
+  /** Within-block tie term over a [[completeBlocks]] frame: one row,
+    * st3 = Σ(t³ − t) over the runs of equal revenue in each block. */
+  private[graft] def blockTies(full: DataFrame): DataFrame =
+    full.groupBy(col("blk"), col("rev"))
+      .agg(count(lit(1)).cast("long").as("tt"))
+      .agg(sum(col("tt") * col("tt") * col("tt") - col("tt"))
+        .cast("long").as("st3"))
+
+  /** χ² 0.05 critical value for k groups, df = k − 1 in 1..5; NULL for
+    * any other k, so a verdict outside the table is NULL, never a wrong
+    * one — the data decides k, not the fixture. */
+  private[graft] def chi2Crit05(k: Column): Column =
+    when(k === 2, lit(3.841459))
+      .when(k === 3, lit(5.991465))
+      .when(k === 4, lit(7.814728))
+      .when(k === 5, lit(9.487729))
+      .when(k === 6, lit(11.070498))
+
+  /** Pooled daily order count (day, y), checkpointed: O(days) rows that
+    * every consumer forks more than once. */
+  private[graft] def pooledDaily(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders")
+      .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
+      .agg(count(lit(1)).cast("long").as("y"))
+      .localCheckpoint()
+
+  /** Per-supplier revenue (suppkey, rev, rq), rq the revenue in 1e4
+    * fixed-point BIGINT units, so sums and prefixes over it are exact. */
+  private[graft] def supplierRevenue(s: SparkSession, d: String): DataFrame =
+    t(s, d, "lineitem")
+      .groupBy(col("l_suppkey").cast("long").as("suppkey"))
+      .agg(sum(graft.types.Coercions.revenue(
+        col("l_extendedprice"), col("l_discount")))
+        .cast("double").as("rev"))
+      .withColumn("rq", floor(col("rev") * 1e4 + 0.5).cast("long"))
+
+  /** Per-nation order counts n and fulfilled counts k (nation, n, k).
+    * The orders⋈customer join strategy is left to AQE: customer grows
+    * with the data, so a forced broadcast would not scale (PlanAuditSpec
+    * enforces this). */
+  private[graft] def nationFulfilled(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders")
+      .join(t(s, d, "customer")
+        .select(col("c_custkey"), col("c_nationkey")),
+        col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_nationkey").as("nation"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L))
+          .as("k"))
+
+  /** Two-proportion z of each nation's rate k/n against the pooled rate
+    * p0 = tk/tn, ranked rnk = 1, 2, ... by |z| descending (nation breaks
+    * ties); the window runs over the bounded per-nation table. */
+  private[graft] def rankedRateZ(df: DataFrame): DataFrame =
+    df.withColumn("p0", col("tk").cast("double") / col("tn").cast("double"))
+      .withColumn("rate", col("k").cast("double") / col("n").cast("double"))
+      .withColumn("z", (col("rate") - col("p0")) /
+        sqrt(col("p0") * (lit(1.0) - col("p0")) /
+          col("n").cast("double")))
+      .withColumn("absz", abs(col("z")))
+      .withColumn("rnk", row_number().over(
+        Window.orderBy(desc("absz"), asc("nation"))))
+
+  /** Step-up cut over ranked tests with a critical value `crit` per rank:
+    * imax is the largest rank whose |z| reaches its crit (0 if none), and
+    * every rank ≤ imax is rejected. */
+  private[graft] def stepUp(scored: DataFrame): DataFrame = {
+    val passed = scored.withColumn("passes", col("absz") >= col("crit"))
+    passed.crossJoin(broadcast(passed
+      .agg(coalesce(max(when(col("passes"), col("rnk"))), lit(0))
+        .as("imax"))))
+  }
+
+  /** Per-priority moments of a (priority, day, y) series: n, Σy, Σy²
+    * as exact longs, the mean and the unbiased variance vr in double,
+    * and sd, NULL unless vr > 0. */
+  private[graft] def seriesMoments(daily: DataFrame): DataFrame =
+    daily.groupBy("priority")
+      .agg(count(lit(1)).cast("long").as("n"),
+        sum(col("y")).cast("long").as("sy"),
+        sum(col("y") * col("y")).cast("long").as("syy"))
+      .withColumn("mean", col("sy").cast("double") / col("n"))
+      .withColumn("vr",
+        (col("syy").cast("double") -
+          col("sy").cast("double") * col("sy") / col("n"))
+          / (col("n") - 1))
+      .withColumn("sd", when(col("vr") > 0, sqrt(col("vr"))))
+
+  /** Each priority's most extreme day of `daily` against its
+    * [[seriesMoments]] `st`: the row with the largest |y − mean| (adev),
+    * the earliest day on ties. */
+  private[graft] def extremeDay(daily: DataFrame, st: DataFrame): DataFrame =
+    daily.join(broadcast(st), "priority")
+      .withColumn("adev", abs(col("y").cast("double") - col("mean")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("priority").orderBy(desc("adev"), asc("day"))))
+      .filter(col("rn") === 1)
+
+  /** Daily order count per priority: (priority, day, y). */
+  private[graft] def priorityDaily(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders")
+      .groupBy(col("o_orderpriority").as("priority"),
+        date_trunc("day", col("o_orderdate")).as("day"))
+      .agg(count(lit(1)).as("y"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -919,11 +1168,14 @@ object StatsOps {
         .select(col("event_id"), col("event_type"), col("value"))
         .localCheckpoint()
       val n = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
-      val med = lowerMedianBy(ev, "event_type", "value", n, "med")
+      def lowerMedian(df: DataFrame, v: String, out: String) =
+        lowerMedianBy(df.groupBy(col("event_type"), col(v))
+          .agg(count(lit(1)).as("__c")), "event_type", v, "__c", n, "n", out)
+      val med = lowerMedian(ev, "value", "med")
       val withDev = ev.join(broadcast(med), "event_type")
         .withColumn("ad", abs(col("value") - col("med")))
         .localCheckpoint()
-      val mad = lowerMedianBy(withDev, "event_type", "ad", n, "mad")
+      val mad = lowerMedian(withDev, "ad", "mad")
       withDev.join(broadcast(mad), "event_type")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -952,10 +1204,7 @@ object StatsOps {
       // THIS series, measured, not assumed.
       val w = Window.partitionBy("priority").orderBy("day")
       val wDesc = Window.partitionBy("priority").orderBy(desc("day"))
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
       val feat = daily
         .withColumn("l1", lag(col("y"), 1).over(w))
         .withColumn("l7", lag(col("y"), 7).over(w))
@@ -1002,10 +1251,7 @@ object StatsOps {
       // ~2.4k days, just bigger y's), so the quadratic pair table stays
       // a few million rows forever while the orders scan underneath
       // aggregates map-side to one row per (priority, day) first.
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
       val pairs = daily.alias("a").join(daily.alias("b"),
           col("a.priority") === col("b.priority") &&
             col("a.day") < col("b.day"))
@@ -1051,10 +1297,7 @@ object StatsOps {
       // the pairwise self-join is O(Σ_s n_s²) per series — ~12× FEWER
       // pairs than plain MK on the same calendar (each season is ~n/12
       // long), still bounded by the calendar, never by row volume.
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
         .withColumn("ssn", month(col("day")))
         .localCheckpoint()
       val pairs = daily.alias("a").join(daily.alias("b"),
@@ -1158,10 +1401,7 @@ object StatsOps {
       // which is also why it scales: the statistics partial-aggregate
       // map-side, the closed form runs on k rows. x is days since the
       // corpus start, y the day's order count.
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
       val mn = daily.agg(min(col("day")).as("d0"))
       val xy = daily.crossJoin(broadcast(mn))
         .withColumn("x", datediff(col("day"), col("d0")).cast("long"))
@@ -1210,26 +1450,16 @@ object StatsOps {
       // ladder on y², z = (y − ewma)/sqrt(var + 1) (+1 ridge so constant
       // histories don't divide by zero). Top-10 |z| days reported.
       val w = Window.partitionBy("priority").orderBy("day")
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
       def lagY(i: Int) = lag(col("y"), i).over(w)
-      val num = (1 to EwmaLags).map(i =>
-        when(lagY(i).isNotNull,
-          floor(lagY(i) * lit(ewmaW(i)) * 1e9 + 0.5).cast("long"))
-          .otherwise(0L)).reduce(_ + _)
       val num2 = (1 to EwmaLags).map(i =>
         when(lagY(i).isNotNull,
           floor(lagY(i).cast("double") * lagY(i) * lit(ewmaW(i)) * 1e9
             + 0.5).cast("long"))
           .otherwise(0L)).reduce(_ + _)
-      val den = (1 to EwmaLags).map(i =>
-        when(lagY(i).isNotNull, lit(ewmaQW(i))).otherwise(0L))
-        .reduce(_ + _)
       daily
-        .withColumn("nq", num).withColumn("nq2", num2)
-        .withColumn("dq", den)
+        .withColumn("nq", ladderNum(lagY, ewmaW)).withColumn("nq2", num2)
+        .withColumn("dq", ladderDen(lagY, ewmaQW))
         .filter(col("dq") > 0)
         .withColumn("ewma",
           col("nq").cast("double") / col("dq").cast("double"))
@@ -1262,13 +1492,10 @@ object StatsOps {
       // days are where the trend-adjusted model was most surprised —
       // flagged ramps-breaks rather than the EWMA chart's level spikes.
       val w = Window.partitionBy("priority").orderBy("day")
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
       def lagY(i: Int) = lag(col("y"), i).over(w)
-      val (num1, den1) = (brownNum(lagY, ewmaW), brownDen(lagY, ewmaQW))
-      val (num2, den2) = (brownNum(lagY, brownW), brownDen(lagY, brownQW))
+      val (num1, den1) = (ladderNum(lagY, ewmaW), ladderDen(lagY, ewmaQW))
+      val (num2, den2) = (ladderNum(lagY, brownW), ladderDen(lagY, brownQW))
       val trendGain = (1.0 - EwmaAlpha) / EwmaAlpha // α/β with β = decay
       daily
         .withColumn("n1", num1).withColumn("d1", den1)
@@ -1296,7 +1523,7 @@ object StatsOps {
       // naive is the bar every published forecast comparison uses, and
       // none of the ladder family ops (ewma/holt/croston) report it.
       // The forecast is the same truncated 40-lag EwmaAlpha ladder as
-      // x_ewma_anomaly (shared brownNum/brownDen builders, per-term 1e9
+      // x_ewma_anomaly (ladderNum/ladderDen, per-term 1e9
       // quantization), applied to the O(months) grouped revenue series
       // IN MILLIONS — U₂ is scale-invariant and the normalization keeps
       // the shared ladder's y·w·1e9 fixed-point terms inside BIGINT at
@@ -1311,8 +1538,8 @@ object StatsOps {
       def lagR(i: Int) = lag(col("r"), i).over(w)
       val nm = monthly.agg(count(lit(1)).cast("long").as("n_months"))
       val scored = monthly
-        .withColumn("nq", brownNum(lagR, ewmaW))
-        .withColumn("dq", brownDen(lagR, ewmaQW))
+        .withColumn("nq", ladderNum(lagR, ewmaW))
+        .withColumn("dq", ladderDen(lagR, ewmaQW))
         .withColumn("prev", lag(col("r"), 1).over(w))
         .withColumn("rnd", row_number().over(Window.orderBy(desc("mth"))))
         .filter(col("rnd") <= 12 && col("dq") > 0 && col("prev").isNotNull)
@@ -1349,16 +1576,16 @@ object StatsOps {
       // U₂ = 0.88 (beats naive on squared out-of-sample error) while
       // MASE > 1 (loses on absolute error against the calmer train
       // steps) — a model verdict one metric alone would get wrong.
-      // Same shared monthly-millions series and brownNum/brownDen
-      // ladder; |e| terms 1e6-quantized before their DECIMAL sums;
-      // windows over the O(months) grouped table only.
+      // Same shared monthly-millions series and ladderNum/ladderDen;
+      // |e| terms 1e6-quantized before their DECIMAL sums; windows over
+      // the O(months) grouped table only.
       val w = Window.orderBy("mth")
       val monthly = monthlyRevMil(s, d)
       def lagR(i: Int) = lag(col("r"), i).over(w)
       val nm = monthly.agg(count(lit(1)).cast("long").as("n_months"))
       val base = monthly
-        .withColumn("nq", brownNum(lagR, ewmaW))
-        .withColumn("dq", brownDen(lagR, ewmaQW))
+        .withColumn("nq", ladderNum(lagR, ewmaW))
+        .withColumn("dq", ladderDen(lagR, ewmaQW))
         .withColumn("prev", lag(col("r"), 1).over(w))
         .withColumn("rnd", row_number().over(Window.orderBy(desc("mth"))))
       val sc = base
@@ -1409,10 +1636,7 @@ object StatsOps {
       // (integer sums divided once), so both engines floor identical
       // terms.
       val w = Window.partitionBy("priority").orderBy("day")
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
         .withColumn("dow",
           pmod(datediff(col("day"), to_date(lit("1995-01-01"))), lit(7)))
       val sIdx = daily.groupBy("priority", "dow")
@@ -1426,8 +1650,8 @@ object StatsOps {
           - col("sa").cast("double") / col("na"))
         .withColumn("yd", col("y") - col("sdow"))
       def lagYd(i: Int) = lag(col("yd"), i).over(w)
-      val (num1, den1) = (brownNum(lagYd, ewmaW), brownDen(lagYd, ewmaQW))
-      val (num2, den2) = (brownNum(lagYd, brownW), brownDen(lagYd, brownQW))
+      val (num1, den1) = (ladderNum(lagYd, ewmaW), ladderDen(lagYd, ewmaQW))
+      val (num2, den2) = (ladderNum(lagYd, brownW), ladderDen(lagYd, brownQW))
       val trendGain = (1.0 - EwmaAlpha) / EwmaAlpha
       des
         .withColumn("n1", num1).withColumn("d1", den1)
@@ -1488,12 +1712,7 @@ object StatsOps {
       // C after. The running sum is over fixed-point BIGINT revenue
       // units, so every prefix is exact — no float accumulation order.
       // One grouped pass + one global window over |suppliers| rows.
-      val rev = t(s, d, "lineitem")
-        .groupBy(col("l_suppkey").cast("long").as("suppkey"))
-        .agg(sum(graft.types.Coercions.revenue(
-          col("l_extendedprice"), col("l_discount")))
-          .cast("double").as("rev"))
-        .withColumn("rq", floor(col("rev") * 1e4 + 0.5).cast("long"))
+      val rev = supplierRevenue(s, d)
       val w = Window.orderBy(desc("rq"), asc("suppkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val tot = rev.agg(sum(col("rq")).cast("long").as("tq"))
@@ -1559,10 +1778,8 @@ object StatsOps {
       // takes the 2,300 possible triples to the frequent few dozen.
       // Complements x_market_basket, which SCORES given supplier pairs
       // (confidence/lift); this op MINES the levels.
-      // r16 scale-safety rework (r15 verdict's one weak grade): the old
-      // form counted pairs/triples with oid self-joins on the fact-grain
-      // (oid, item) table — a 466 MB shuffle at sf0.1 growing linearly
-      // (4.7 GB at 10×). The counting joins are now GONE: each basket's
+      // No counting self-joins on the fact-grain (oid, item) table (a
+      // 466 MB shuffle at sf0.1, growing linearly): each basket's
       // distinct-item set is collected into ONE sorted array (a single
       // fact-scale shuffle with map-side partial collect_set dedup), and
       // pair/triple combinations are generated PER ROW with higher-order
@@ -1758,12 +1975,7 @@ object StatsOps {
       // stats are the ANOVA's exact DECIMAL sufficient statistics from
       // one grouped pass; MSW sums 1e4-quantized per-group SSW; the
       // pairwise grid is k² = 25 rows.
-      val g = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("grp"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,4)")).as("sy"),
-          sum(floor(col("o_totalprice") * col("o_totalprice") * 1e4
-            + 0.5).cast("decimal(38,0)")).as("syy"))
+      val g = priceMoments(s, d)
         .withColumn("ssw_g", col("syy").cast("double") / 1e4
           - col("sy").cast("double") * col("sy").cast("double")
             / col("n"))
@@ -1805,12 +2017,7 @@ object StatsOps {
       // order is not). SSB/SSW then run in double on the exact statistics
       // — identical IEEE ops on identical inputs. Map-side partial
       // aggregation all the way; k rows of state.
-      val g = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("grp"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,4)")).as("sy"),
-          sum(floor(col("o_totalprice") * col("o_totalprice") * 1e4 + 0.5)
-            .cast("decimal(38,0)")).as("syy"))
+      val g = priceMoments(s, d)
       val tot = g.agg(count(lit(1)).as("k"),
         sum(col("n")).cast("long").as("nn"),
         sum(col("sy")).as("gy"))
@@ -1860,12 +2067,7 @@ object StatsOps {
       // everything after is k rows. df2 = (k²−1)/(3λ), Welch's own
       // approximation. Zero-information guard: k ≤ 1 or λ = 0 emits
       // NULL stats (the x_rate_ratio discipline).
-      val g = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("grp"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,4)")).as("sy"),
-          sum(floor(col("o_totalprice") * col("o_totalprice") * 1e4 + 0.5)
-            .cast("decimal(38,0)")).as("syy"))
+      val g = priceMoments(s, d)
         .filter(col("n") > 1)
         .withColumn("m", col("sy").cast("double") / col("n"))
         .withColumn("v",
@@ -2092,19 +2294,8 @@ object StatsOps {
       // (2U = Σ c1·(2·below₀ + c0)), and the tie term Σ(t³−t) comes
       // from the same histogram — the only window is the exclusive
       // cumsum over distinct values (the x_ks_statistic posture).
-      val hist = t(s, d, "orders")
-        .select(
-          (substring(md5(col("o_orderkey").cast("string")), 1, 1) < "8")
-            .as("tr"),
-          floor(col("o_totalprice") * 100 + 0.5).cast("long").as("qv"))
-        .groupBy("qv")
-        .agg(sum(when(col("tr"), 1L).otherwise(0L)).as("c1"),
-          sum(when(!col("tr"), 1L).otherwise(0L)).as("c0"))
-      val w = Window.orderBy("qv").rowsBetween(Window.unboundedPreceding, -1)
-      val tot = hist.agg(sum(col("c1")).cast("long").as("n1"),
-        sum(col("c0")).cast("long").as("n0"))
+      val (hist, tot) = armCentHist(s, d)
       hist
-        .withColumn("s0", coalesce(sum(col("c0")).over(w), lit(0L)))
         .withColumn("t", col("c1") + col("c0"))
         .crossJoin(broadcast(tot))
         .groupBy("n1", "n0")
@@ -2137,23 +2328,9 @@ object StatsOps {
       // DECIMAL; per-group H terms quantize at 1e4 before the 5-term
       // sum (the x_pagerank discipline). Windows run only over the
       // grouped value histogram.
-      val hist = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          floor(col("o_totalprice") * 100 + 0.5).cast("long").as("qv"))
-        .groupBy("grp", "qv").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
-      val vt = hist.groupBy("qv").agg(sum(col("c")).cast("long").as("t"))
-      val w = Window.orderBy("qv").rowsBetween(Window.unboundedPreceding, -1)
-      val vts = vt.withColumn("s0", coalesce(sum(col("t")).over(w), lit(0L)))
-      val gsum = hist.join(vts, "qv")
-        .groupBy("grp")
-        .agg(sum(col("c")).cast("long").as("ng"),
-          sum((col("c") * (lit(2L) * col("s0") + col("t") + 1L))
-            .cast("decimal(38,0)")).as("r2g"))
-        .localCheckpoint()
-      val ties = vt.agg(
-        sum((col("t") * col("t") * col("t") - col("t"))
-          .cast("decimal(38,0)")).as("st3"))
+      val hist = priorityCentHist(s, d)
+      val (_, sums, ties) = doubledRanks(hist, "grp", "qv")
+      val gsum = sums.localCheckpoint()
       val tot = gsum.agg(count(lit(1)).as("k"),
         sum(col("ng")).cast("long").as("nn"))
       val terms = gsum.crossJoin(broadcast(tot))
@@ -2187,19 +2364,8 @@ object StatsOps {
       // #(x<y) = Σ c1·above₀, both exact DECIMAL sums, with the
       // Romano et al. magnitude bands. O(distinct values) after the
       // one grouped count.
-      val hist = t(s, d, "orders")
-        .select(
-          (substring(md5(col("o_orderkey").cast("string")), 1, 1) < "8")
-            .as("tr"),
-          floor(col("o_totalprice") * 100 + 0.5).cast("long").as("qv"))
-        .groupBy("qv")
-        .agg(sum(when(col("tr"), 1L).otherwise(0L)).as("c1"),
-          sum(when(!col("tr"), 1L).otherwise(0L)).as("c0"))
-      val w = Window.orderBy("qv").rowsBetween(Window.unboundedPreceding, -1)
-      val tot = hist.agg(sum(col("c1")).cast("long").as("n1"),
-        sum(col("c0")).cast("long").as("n0"))
+      val (hist, tot) = armCentHist(s, d)
       hist
-        .withColumn("s0", coalesce(sum(col("c0")).over(w), lit(0L)))
         .crossJoin(broadcast(tot))
         .withColumn("a0", col("n0") - col("s0") - col("c0"))
         .groupBy("n1", "n0")
@@ -2310,34 +2476,7 @@ object StatsOps {
       // statistics as the t-test, plus Hedges' g small-sample
       // correction g = d·(1 − 3/(4N−9)) and the conventional magnitude
       // band. One fact-table groupBy, O(segments) after.
-      val g = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          (substring(md5(col("o_orderkey").cast("string")), 1, 1) < "8")
-            .as("tr"),
-          col("o_totalprice").as("y"))
-        .groupBy("grp")
-        .agg(
-          sum(when(col("tr"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("tr"), col("y").cast("decimal(18,4)"))
-            .otherwise(lit(0).cast("decimal(18,4)"))).as("sy1"),
-          sum(when(col("tr"), floor(col("y") * col("y") * 1e4 + 0.5))
-            .otherwise(0.0).cast("decimal(38,0)")).as("syy1"),
-          sum(when(!col("tr"), 1L).otherwise(0L)).as("n0"),
-          sum(when(!col("tr"), col("y").cast("decimal(18,4)"))
-            .otherwise(lit(0).cast("decimal(18,4)"))).as("sy0"),
-          sum(when(!col("tr"), floor(col("y") * col("y") * 1e4 + 0.5))
-            .otherwise(0.0).cast("decimal(38,0)")).as("syy0"))
-        .filter(col("n1") > 1 && col("n0") > 1)
-        .withColumn("m1", col("sy1").cast("double") / col("n1"))
-        .withColumn("m0", col("sy0").cast("double") / col("n0"))
-        .withColumn("v1",
-          (col("syy1").cast("double") / 1e4
-            - col("sy1").cast("double") * col("sy1").cast("double")
-              / col("n1")) / (col("n1") - 1))
-        .withColumn("v0",
-          (col("syy0").cast("double") / 1e4
-            - col("sy0").cast("double") * col("sy0").cast("double")
-              / col("n0")) / (col("n0") - 1))
+      val g = armMoments(s, d)
         .withColumn("sp", sqrt(
           ((col("n1") - 1) * col("v1") + (col("n0") - 1) * col("v0")) /
             (col("n1") + col("n0") - 2)))
@@ -2538,34 +2677,7 @@ object StatsOps {
       // partials, shuffle = O(segments)); significance vs 1.96 is the
       // large-sample normal approximation (df here is in the
       // thousands, where t and z agree to 3+ decimals).
-      val g = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          (substring(md5(col("o_orderkey").cast("string")), 1, 1) < "8")
-            .as("tr"),
-          col("o_totalprice").as("y"))
-        .groupBy("grp")
-        .agg(
-          sum(when(col("tr"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("tr"), col("y").cast("decimal(18,4)"))
-            .otherwise(lit(0).cast("decimal(18,4)"))).as("sy1"),
-          sum(when(col("tr"), floor(col("y") * col("y") * 1e4 + 0.5))
-            .otherwise(0.0).cast("decimal(38,0)")).as("syy1"),
-          sum(when(!col("tr"), 1L).otherwise(0L)).as("n0"),
-          sum(when(!col("tr"), col("y").cast("decimal(18,4)"))
-            .otherwise(lit(0).cast("decimal(18,4)"))).as("sy0"),
-          sum(when(!col("tr"), floor(col("y") * col("y") * 1e4 + 0.5))
-            .otherwise(0.0).cast("decimal(38,0)")).as("syy0"))
-        .filter(col("n1") > 1 && col("n0") > 1)
-        .withColumn("m1", col("sy1").cast("double") / col("n1"))
-        .withColumn("m0", col("sy0").cast("double") / col("n0"))
-        .withColumn("v1",
-          (col("syy1").cast("double") / 1e4
-            - col("sy1").cast("double") * col("sy1").cast("double")
-              / col("n1")) / (col("n1") - 1))
-        .withColumn("v0",
-          (col("syy0").cast("double") / 1e4
-            - col("sy0").cast("double") * col("sy0").cast("double")
-              / col("n0")) / (col("n0") - 1))
+      val g = armMoments(s, d)
         .withColumn("se2", col("v1") / col("n1") + col("v0") / col("n0"))
         .withColumn("tt", (col("m1") - col("m0")) / sqrt(col("se2")))
         .withColumn("df",
@@ -2600,41 +2712,7 @@ object StatsOps {
           sum(col("o_totalprice").cast("decimal(18,4)")).as("sy"))
         .withColumn("m", col("sy").cast("double") / col("n"))
         .select("grp", "m")
-      val z = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          col("o_totalprice").as("y"))
-        .join(broadcast(means), "grp")
-        .select(col("grp"),
-          floor(abs(col("y") - col("m")) * 1e6 + 0.5).as("qz"),
-          floor(abs(col("y") - col("m")) * abs(col("y") - col("m"))
-            * 1e4 + 0.5).as("qz2"))
-      val g = z.groupBy("grp")
-        .agg(count(lit(1)).as("n"),
-          sum(col("qz").cast("decimal(38,0)")).as("sz"),
-          sum(col("qz2").cast("decimal(38,0)")).as("szz"))
-        .localCheckpoint()
-      val tot = g.agg(count(lit(1)).as("k"),
-        sum(col("n")).cast("long").as("nn"), sum(col("sz")).as("gz"))
-      val per = g.crossJoin(broadcast(tot))
-        .withColumn("zm", col("sz").cast("double") / 1e6 / col("n"))
-        .withColumn("gm", col("gz").cast("double") / 1e6 / col("nn"))
-        .withColumn("ssw_g",
-          col("szz").cast("double") / 1e4
-            - (col("sz").cast("double") / 1e6)
-              * (col("sz").cast("double") / 1e6) / col("n"))
-        .withColumn("ssb_g",
-          col("n") * (col("zm") - col("gm")) * (col("zm") - col("gm")))
-        .localCheckpoint()
-      val w = per.groupBy(col("k"), col("nn"))
-        .agg(
-          sum(floor(col("ssw_g") * 1e4 + 0.5).cast("decimal(38,0)"))
-            .as("qssw"),
-          sum(floor(col("ssb_g") * 1e4 + 0.5).cast("decimal(38,0)"))
-            .as("qssb"))
-        .withColumn("lw",
-          (col("qssb").cast("double") / 1e4 / (col("k") - 1))
-            / (col("qssw").cast("double") / 1e4 / (col("nn") - col("k"))))
-        .select(col("lw"))
+      val (per, w) = absDevAnova(s, d, means, "m", "lw")
       per.crossJoin(broadcast(w))
         .select(col("grp"), col("n"),
           detRound(col("zm"), 4).as("mean_absdev"),
@@ -2656,9 +2734,8 @@ object StatsOps {
       // the x_newsvendor_quantile integer-cum pick — selected off the
       // (group, price-cents) histogram, which is bounded by the VALUE
       // DOMAIN (groups × distinct cent values), not the corpus: the
-      // cumsum window never sorts fact rows. Downstream is the Levene
-      // machinery unchanged: per-row |y − med| quantized 1e6 (and its
-      // square 1e4) before exact DECIMAL sums, F on exact statistics.
+      // cumsum window never sorts fact rows. The ANOVA on |y − med| is
+      // the shared absDevAnova kernel.
       val hist = t(s, d, "orders")
         .groupBy(col("o_orderpriority").as("grp"),
           floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")
@@ -2674,41 +2751,7 @@ object StatsOps {
         .groupBy("grp").agg(min(col("yc")).as("medc"))
         .withColumn("med", col("medc").cast("double") / 100.0)
         .select("grp", "med")
-      val z = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          col("o_totalprice").as("y"))
-        .join(broadcast(meds), "grp")
-        .select(col("grp"),
-          floor(abs(col("y") - col("med")) * 1e6 + 0.5).as("qz"),
-          floor(abs(col("y") - col("med")) * abs(col("y") - col("med"))
-            * 1e4 + 0.5).as("qz2"))
-      val g = z.groupBy("grp")
-        .agg(count(lit(1)).as("n"),
-          sum(col("qz").cast("decimal(38,0)")).as("sz"),
-          sum(col("qz2").cast("decimal(38,0)")).as("szz"))
-        .localCheckpoint()
-      val tot = g.agg(count(lit(1)).as("k"),
-        sum(col("n")).cast("long").as("nn"), sum(col("sz")).as("gz"))
-      val per = g.crossJoin(broadcast(tot))
-        .withColumn("zm", col("sz").cast("double") / 1e6 / col("n"))
-        .withColumn("gm", col("gz").cast("double") / 1e6 / col("nn"))
-        .withColumn("ssw_g",
-          col("szz").cast("double") / 1e4
-            - (col("sz").cast("double") / 1e6)
-              * (col("sz").cast("double") / 1e6) / col("n"))
-        .withColumn("ssb_g",
-          col("n") * (col("zm") - col("gm")) * (col("zm") - col("gm")))
-        .localCheckpoint()
-      val w = per.groupBy(col("k"), col("nn"))
-        .agg(
-          sum(floor(col("ssw_g") * 1e4 + 0.5).cast("decimal(38,0)"))
-            .as("qssw"),
-          sum(floor(col("ssb_g") * 1e4 + 0.5).cast("decimal(38,0)"))
-            .as("qssb"))
-        .withColumn("bw",
-          (col("qssb").cast("double") / 1e4 / (col("k") - 1))
-            / (col("qssw").cast("double") / 1e4 / (col("nn") - col("k"))))
-        .select(col("bw"))
+      val (per, w) = absDevAnova(s, d, meds, "med", "bw")
       per.join(broadcast(meds), "grp").crossJoin(broadcast(w))
         .select(col("grp"), col("n"),
           detRound(col("med"), 2).as("median"),
@@ -2728,9 +2771,7 @@ object StatsOps {
       // undefined; Haldane's +0.5 would silently change the estimand).
       // One grouped count — shuffle is O(segments).
       val cells = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          (substring(md5(col("o_orderkey").cast("string")), 1, 1) < "8")
-            .as("tr"),
+        .select(col("o_orderpriority").as("grp"), armCoin.as("tr"),
           (col("o_orderstatus") === "F").as("y"))
         .groupBy("grp")
         .agg(
@@ -2881,12 +2922,7 @@ object StatsOps {
       // term an integer over fixed-point revenue units, one final
       // division. One grouped pass + one global rank window over
       // |suppliers| rows.
-      val rev = t(s, d, "lineitem")
-        .groupBy(col("l_suppkey").cast("long").as("suppkey"))
-        .agg(sum(graft.types.Coercions.revenue(
-          col("l_extendedprice"), col("l_discount")))
-          .cast("double").as("rev"))
-        .withColumn("rq", floor(col("rev") * 1e4 + 0.5).cast("long"))
+      val rev = supplierRevenue(s, d)
         .withColumn("i", row_number().over(
           Window.orderBy(asc("rq"), asc("suppkey"))).cast("long"))
       rev.agg(count(lit(1)).as("n"),
@@ -2911,15 +2947,10 @@ object StatsOps {
       // in exact 1e4 fixed-point longs until the two final divisions.
       // Scale: one fact groupBy to O(suppliers), windows over distinct
       // revenue values / 10 decile rows only.
-      // r20: the O(suppliers) grain is checkpointed — globalRank forks
-      // it twice and the totals fork it again, which re-ran the fact
-      // pass 3-4x; the barrier is supplier-sized and cheap
-      val rev = t(s, d, "lineitem")
-        .groupBy(col("l_suppkey").cast("long").as("suppkey"))
-        .agg(sum(graft.types.Coercions.revenue(
-          col("l_extendedprice"), col("l_discount")))
-          .cast("double").as("rev"))
-        .withColumn("rq", floor(col("rev") * 1e4 + 0.5).cast("long"))
+      // The O(suppliers) grain is checkpointed: globalRank forks it twice
+      // and the totals fork it again; the barrier keeps the fact pass to
+      // one and is supplier-sized.
+      val rev = supplierRevenue(s, d)
         .localCheckpoint()
       val ranked = globalRank(rev, "rq", Seq("suppkey"), "i")
       val tot = ranked.agg(count(lit(1)).cast("long").as("n"),
@@ -3254,37 +3285,14 @@ object StatsOps {
       // largest i with |z|_(i) ≥ crit_i, where crit_i = Φ⁻¹(1 −
       // (i·α/m)/2) is PRECOMPUTED in Scala (Acklam) and embedded in
       // both engines as decimal literals — no special function at query
-      // time. Plan: orders⋈customer on the key projection with the join
-      // strategy LEFT TO AQE — customer grows with data volume, so a
-      // forced broadcast would be a 100 TB OOM (PlanAuditSpec enforces
-      // this); at small SF AQE still picks broadcast on its own.
-      val per = t(s, d, "orders")
-        .join(t(s, d, "customer")
-          .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey").as("nation"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L))
-            .as("k"))
+      // time.
+      val per = nationFulfilled(s, d)
       val tot = per.agg(sum(col("n")).as("tn"), sum(col("k")).as("tk"))
       val critCase = (1 to FdrM).map(i =>
         s"WHEN rnk = $i THEN CAST(${fdrCritLit(i)} AS DOUBLE)")
         .mkString("CASE ", " ", " ELSE 9e99 END")
-      val w = Window.orderBy(desc("absz"), asc("nation"))
-      val scored = per.crossJoin(broadcast(tot))
-        .withColumn("p0", col("tk").cast("double") / col("tn").cast("double"))
-        .withColumn("rate", col("k").cast("double") / col("n").cast("double"))
-        .withColumn("z", (col("rate") - col("p0")) /
-          sqrt(col("p0") * (lit(1.0) - col("p0")) /
-            col("n").cast("double")))
-        .withColumn("absz", abs(col("z")))
-        .withColumn("rnk", row_number().over(w)) // 25-row bounded table
-        .withColumn("crit", expr(critCase))
-        .withColumn("passes", col("absz") >= col("crit"))
-      val imax = scored
-        .agg(coalesce(max(when(col("passes"), col("rnk"))), lit(0))
-          .as("imax"))
-      scored.crossJoin(broadcast(imax))
+      stepUp(rankedRateZ(per.crossJoin(broadcast(tot)))
+          .withColumn("crit", expr(critCase)))
         .select(col("nation"), col("n"), col("k"),
           detRound(col("rate"), 6).as("rate"),
           detRound(col("z"), 6).as("z_stat"),
@@ -3310,14 +3318,7 @@ object StatsOps {
       // convention: a changed nation universe yields NULL verdicts,
       // never silently wrong ones). Plan shape identical to x_fdr_bh:
       // AQE-decided join, O(nations) everything downstream.
-      val per = t(s, d, "orders")
-        .join(t(s, d, "customer")
-          .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey").as("nation"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L))
-            .as("k"))
+      val per = nationFulfilled(s, d)
         .localCheckpoint()
       val tot = per.agg(sum(col("n")).as("tn"), sum(col("k")).as("tk"))
       // harmonic ladder over the actual hypothesis count (explicit
@@ -3333,23 +3334,9 @@ object StatsOps {
       val critCase = (1 to FdrM).map(i =>
         s"WHEN rnk = $i THEN CAST(${byCritLit(i)} AS DOUBLE)")
         .mkString("CASE ", " ", " ELSE 9e99 END")
-      val w = Window.orderBy(desc("absz"), asc("nation"))
-      val scored = per.crossJoin(broadcast(tot))
-        .crossJoin(broadcast(hm))
-        .withColumn("p0", col("tk").cast("double") / col("tn").cast("double"))
-        .withColumn("rate", col("k").cast("double") / col("n").cast("double"))
-        .withColumn("z", (col("rate") - col("p0")) /
-          sqrt(col("p0") * (lit(1.0) - col("p0")) /
-            col("n").cast("double")))
-        .withColumn("absz", abs(col("z")))
-        .withColumn("rnk", row_number().over(w)) // bounded nation table
-        .withColumn("crit",
-          when(col("m") === FdrM, expr(critCase)))
-        .withColumn("passes", col("absz") >= col("crit"))
-      val imax = scored
-        .agg(coalesce(max(when(col("passes"), col("rnk"))), lit(0))
-          .as("imax"))
-      scored.crossJoin(broadcast(imax))
+      stepUp(rankedRateZ(per.crossJoin(broadcast(tot))
+          .crossJoin(broadcast(hm)))
+          .withColumn("crit", when(col("m") === FdrM, expr(critCase))))
         .select(col("nation"), col("n"), col("k"),
           detRound(col("rate"), 6).as("rate"),
           detRound(col("z"), 6).as("z_stat"),
@@ -3381,24 +3368,11 @@ object StatsOps {
           date_trunc("day", col("o_orderdate")).as("day"))
         .agg(count(lit(1)).cast("long").as("y"))
         .localCheckpoint()
-      val st = daily.groupBy("priority")
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(col("y")).cast("long").as("sy"),
-          sum(col("y") * col("y")).cast("long").as("syy"))
-        .withColumn("mean", col("sy").cast("double") / col("n"))
-        .withColumn("vr",
-          (col("syy").cast("double") -
-            col("sy").cast("double") * col("sy") / col("n"))
-            / (col("n") - 1))
-        .withColumn("sd", when(col("vr") > 0, sqrt(col("vr"))))
+      val st = seriesMoments(daily)
       // the O(priorities) pick rows are checkpointed BEFORE the
-      // t-quantile so the staged evaluation (r18: the BENCH_r17
-      // over-budget fix) runs on a materialized 5-row frame
-      val pick = daily.join(broadcast(st), "priority")
-        .withColumn("adev", abs(col("y").cast("double") - col("mean")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("priority").orderBy(desc("adev"), asc("day"))))
-        .filter(col("rn") === 1)
+      // t-quantile so the staged evaluation runs on a materialized
+      // 5-row frame
+      val pick = extremeDay(daily, st)
         .withColumn("g_stat", when(col("sd") > 0, col("adev") / col("sd")))
         .withColumn("p2", lit(0.05) / col("n"))
         .localCheckpoint()
@@ -3446,28 +3420,15 @@ object StatsOps {
         .localCheckpoint()
       var rem = daily
       val rounds = (1 to EsdR).map { i =>
-        val st = rem.groupBy("priority")
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("y")).cast("long").as("sy"),
-            sum(col("y") * col("y")).cast("long").as("syy"))
-          .withColumn("mean", col("sy").cast("double") / col("n"))
-          .withColumn("vr",
-            (col("syy").cast("double") -
-              col("sy").cast("double") * col("sy") / col("n"))
-              / (col("n") - 1))
-          .withColumn("sd", when(col("vr") > 0, sqrt(col("vr"))))
+        val st = seriesMoments(rem)
         // the t-quantile does NOT enter the pick: which day is most
         // extreme depends only on |y − mean|, so each round's winner is
         // decided (and checkpointed, feeding the next round's anti-join)
         // before any t arithmetic — all five rounds' tq then run as ONE
         // staged pass over the unioned O(5 × priorities) pick rows,
         // paying the Hill-396 plan/codegen constant once instead of
-        // five times (the BENCH_r17 x_generalized_esd 47.8 s fix)
-        val pick = rem.join(broadcast(st), "priority")
-          .withColumn("adev", abs(col("y").cast("double") - col("mean")))
-          .withColumn("rn", row_number().over(Window
-            .partitionBy("priority").orderBy(desc("adev"), asc("day"))))
-          .filter(col("rn") === 1)
+        // five times
+        val pick = extremeDay(rem, st)
           .withColumn("r_stat",
             when(col("sd") > 0, col("adev") / col("sd")))
           .withColumn("p2", lit(0.05) / col("n"))
@@ -3615,8 +3576,8 @@ object StatsOps {
           .cast("long").as("qwg"))
         .agg(sum(col("qwg").cast("decimal(38,0)")).as("qq"))
         .select((col("qq").cast("double") / 1e12).as("theil_within"))
-      // n_customers rides off the tot aggregate already in the plan
-      // (review r17: a separate count re-aggregated the checkpoint)
+      // n_customers rides off the tot aggregate already in the plan (a
+      // separate count would re-aggregate the checkpoint)
       val nn = tot.select(col("n").as("n_customers"))
       val nnat = ng.agg(count(lit(1)).as("n_nations"))
       nn.crossJoin(broadcast(nnat)).crossJoin(broadcast(totalT))
@@ -3643,7 +3604,7 @@ object StatsOps {
       val pc = t(s, d, "orders")
         .groupBy(col("o_custkey").as("ck"))
         .agg(sum(col("o_totalprice").cast("decimal(18,4)")).as("revd"))
-        .localCheckpoint() // r20: grain forked by tot + qsum — scan once
+        .localCheckpoint() // grain forked by tot + qsum — scan once
       val tot = pc.agg(count(lit(1)).as("n"), sum(col("revd")).as("td"))
         .select(col("n"), col("td").cast("double").as("tt"))
       val qsum = pc.crossJoin(broadcast(tot))
@@ -3703,8 +3664,8 @@ object StatsOps {
       // ((4n) div 10 and n − n div 10 — never percentile floats);
       // revenue stays in exact 1e4 fixed-point longs until the three
       // final divisions.
-      // r20: customer grain checkpointed — globalRank + totals forked it
-      // into three fact passes (same fix as x_lorenz_curve)
+      // customer grain checkpointed — globalRank + totals fork it three
+      // ways, and the barrier keeps the fact pass to one
       val rev = t(s, d, "orders")
         .groupBy(col("o_custkey").cast("long").as("ck"))
         .agg(sum(col("o_totalprice").cast("decimal(18,4)"))
@@ -3817,13 +3778,7 @@ object StatsOps {
         .select(col("b").as("n_blocks"), col("k").as("k_treatments"),
           col("nt").as("n_success_total"),
           detRound(col("q"), 4).as("q_stat"),
-          (col("q") >
-            when(col("k") === 2, lit(3.841459))
-              .when(col("k") === 3, lit(5.991465))
-              .when(col("k") === 4, lit(7.814728))
-              .when(col("k") === 5, lit(9.487729))
-              .when(col("k") === 6, lit(11.070498)))
-            .as("reject_05"))
+          (col("q") > chi2Crit05(col("k"))).as("reject_05"))
     }),
 
     "x_hill_tail_index" -> ((s, d) => {
@@ -3962,9 +3917,9 @@ object StatsOps {
       // 1e9-quantized i-ladder, so the two-sided rule "sum p_k over
       // tables with qlp_k ≤ qlp_obs" compares exact integers. Each
       // probability is exp() of an identical double, 1e15-quantized
-      // before the final sum (r15 advice: at 1e12 every term below
-      // 5e-13 truncated to 0, understating p by up to n_tables·5e-13 —
-      // at 1e15 the bound is n_tables·5e-16, below the 1e-8 output
+      // before the final sum (at 1e12 every term below 5e-13 would
+      // truncate to 0, understating p by up to n_tables·5e-13 — at
+      // 1e15 the bound is n_tables·5e-16, below the 1e-8 output
       // rounding even at millions of tables; the sum stays ≤ 1e21,
       // far inside DECIMAL(38,0)/HUGEINT). Requires kmin =
       // max(0, r1+c1−n) = 0 (guaranteed while the rare margin is under
@@ -4050,13 +4005,8 @@ object StatsOps {
       // run over the O(months×k) cell table only.
       val full = completeBlocks(revBlockCells(s, d))
       val ranked = rankedR2(full)
-      val rsums = ranked.groupBy(col("trt"), col("k"))
-        .agg(sum(col("r2")).cast("long").as("r2j"),
-          count(lit(1)).cast("long").as("nb"))
-      val ties = full.groupBy(col("blk"), col("rev"))
-        .agg(count(lit(1)).cast("long").as("tt"))
-        .agg(sum(col("tt") * col("tt") * col("tt") - col("tt"))
-          .cast("long").as("st3"))
+      val rsums = blockRankSums(ranked)
+      val ties = blockTies(full)
       rsums
         .groupBy(col("k"), col("nb"))
         .agg(sum(col("r2j") * col("r2j")).cast("decimal(38,0)").as("sr2"))
@@ -4071,7 +4021,7 @@ object StatsOps {
         // cc = 0 when every revenue ties within every block (st3 =
         // nb·k·(k²−1)): Spark double-div-by-zero yields Inf/NaN while
         // DuckDB differs — the degenerate case returns NULL like the
-        // rest of this family (r15 advice)
+        // rest of this family
         .withColumn("qc", when(col("cc") > 0, col("q") / col("cc")))
         .select(col("nb").as("n_blocks"), col("k").as("k_treatments"),
           detRound(col("q"), 4).as("q_stat"),
@@ -4080,13 +4030,7 @@ object StatsOps {
           // data decides k, so a hardcoded fixture value would silently
           // mis-flag a different treatment count); k outside the table
           // emits NULL rather than a wrong verdict
-          (col("qc") >
-            when(col("k") === 2, lit(3.841459))
-              .when(col("k") === 3, lit(5.991465))
-              .when(col("k") === 4, lit(7.814728))
-              .when(col("k") === 5, lit(9.487729))
-              .when(col("k") === 6, lit(11.070498)))
-            .as("reject_05"))
+          (col("qc") > chi2Crit05(col("k"))).as("reject_05"))
     }),
 
     "x_kendalls_w" -> ((s, d) => {
@@ -4106,18 +4050,13 @@ object StatsOps {
       // cell table only.
       val full = completeBlocks(revBlockCells(s, d))
       val ranked = rankedR2(full)
-      val rsums = ranked.groupBy(col("trt"), col("k"))
-        .agg(sum(col("r2")).cast("long").as("r2j"),
-          count(lit(1)).cast("long").as("nb"))
-      val ties = full.groupBy(col("blk"), col("rev"))
-        .agg(count(lit(1)).cast("long").as("tt"))
-        .agg(sum(col("tt") * col("tt") * col("tt") - col("tt"))
-          .cast("long").as("st3"))
+      val rsums = blockRankSums(ranked)
+      val ties = blockTies(full)
       rsums.groupBy(col("k"), col("nb"))
-        // promote the deviation BEFORE squaring (review r17): a
-        // post-multiply cast would let the LONG product wrap first on
-        // exactly the b-scale the promotion exists for; the SQL twin
-        // multiplies in HUGEINT, so this is also the parity form
+        // promote the deviation BEFORE squaring: a post-multiply cast
+        // would let the LONG product wrap first on exactly the b-scale
+        // the promotion exists for; the SQL twin multiplies in HUGEINT,
+        // so this is also the parity form
         .agg(sum((col("r2j") - col("nb") * (col("k") + 1))
           .cast("decimal(38,0)")
           * (col("r2j") - col("nb") * (col("k") + 1))).as("s4"))
@@ -4133,13 +4072,7 @@ object StatsOps {
         .select(col("nb").as("n_blocks"), col("k").as("k_treatments"),
           detRound(col("w"), 6).as("kendalls_w"),
           detRound(col("chi2w"), 4).as("chi2_from_w"),
-          (col("chi2w") >
-            when(col("k") === 2, lit(3.841459))
-              .when(col("k") === 3, lit(5.991465))
-              .when(col("k") === 4, lit(7.814728))
-              .when(col("k") === 5, lit(9.487729))
-              .when(col("k") === 6, lit(11.070498)))
-            .as("reject_05"))
+          (col("chi2w") > chi2Crit05(col("k"))).as("reject_05"))
     }),
 
     "x_quade_test" -> ((s, d) => {
@@ -4177,7 +4110,7 @@ object StatsOps {
         .agg(sum(col("s4")).cast("long").as("sj4"),
           count(lit(1)).cast("long").as("nb"))
         .groupBy(col("k"), col("nb"))
-        // promote BEFORE multiplying (the kendalls_w review lesson)
+        // promote BEFORE multiplying, as in x_kendalls_w
         .agg(sum(col("sj4").cast("decimal(38,0)") * col("sj4")).as("b16"))
         .crossJoin(broadcast(a16))
         .withColumn("fden",
@@ -4195,12 +4128,7 @@ object StatsOps {
           (col("k") - 1).cast("long").as("df1"),
           col("df2").cast("long").as("df2"),
           when(col("df2") >= 120, col("f") >
-            when(col("k") === 2, lit(3.841459))
-              .when(col("k") === 3, lit(5.991465))
-              .when(col("k") === 4, lit(7.814728))
-              .when(col("k") === 5, lit(9.487729))
-              .when(col("k") === 6, lit(11.070498))
-              / (col("k") - 1).cast("double"))
+            chi2Crit05(col("k")) / (col("k") - 1).cast("double"))
             .as("reject_05"))
     }),
 
@@ -4219,9 +4147,7 @@ object StatsOps {
       // friedman lookup convention). Output k(k−1)/2 pair rows off the
       // O(k) rank-sum table — every join a broadcast of an aggregate.
       val full = completeBlocks(revBlockCells(s, d))
-      val rsums = rankedR2(full).groupBy(col("trt"), col("k"))
-        .agg(sum(col("r2")).cast("long").as("r2j"),
-          count(lit(1)).cast("long").as("nb"))
+      val rsums = blockRankSums(rankedR2(full))
       val a = rsums.select(col("trt").as("trt_a"), col("k"), col("nb"),
         col("r2j").as("r2ja"))
       val bb = rsums.select(col("trt").as("trt_b"),
@@ -4277,7 +4203,7 @@ object StatsOps {
         .withColumn("qqn", -floor(col("qty") * 1e4 + 0.5).cast("long"))
         .localCheckpoint()
       val n = base.agg(count(lit(1)).cast("long").as("n_suppliers"))
-      // r21 optimization (guide §2.4): only ranks ≤ RboDepth can ever
+      // Only ranks ≤ RboDepth can ever
       // contribute (the histogram filters m = max(ra, rb) ≤ depth), so
       // each full global rank collapses to a bounded top-k —
       // orderBy(value, sk).limit(depth) plans as TakeOrderedAndProject
@@ -4342,13 +4268,8 @@ object StatsOps {
         .crossJoin(hist.select("v").distinct())
         .join(hist, Seq("g", "v"), "left")
         .withColumn("c", coalesce(col("c"), lit(0L)))
-      val wg = Window.partitionBy("v").orderBy("g")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wv = Window.partitionBy("g").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val jt2 = grid
-        .withColumn("lowv", coalesce(sum(col("c")).over(wg), lit(0L)))
-        .withColumn("below", coalesce(sum(col("lowv")).over(wv), lit(0L)))
+      val jt2 = exclusiveCum(exclusiveCum(grid, "g", "c", "lowv", "v"),
+          "v", "lowv", "below", "g")
         .select((col("c").cast("decimal(19,0)")
           * (lit(2L) * col("below") + col("lowv")).cast("decimal(19,0)"))
           .as("t2"))
@@ -4388,7 +4309,7 @@ object StatsOps {
         // sqrt only on a strictly positive variance: the three terms
         // cancel exactly at k = 1 and float error can land tiny-negative
         // — DuckDB sqrt(<0) THROWS while Spark returns NaN, so both
-        // engines guard BEFORE the sqrt (r15 review)
+        // engines guard BEFORE the sqrt
         .withColumn("sg", when(col("va") + col("vb") + col("vc") > 0,
           sqrt(col("va") + col("vb") + col("vc"))))
         .withColumn("z", when(col("sg") > 0,
@@ -4482,8 +4403,6 @@ object StatsOps {
         .orderBy("priority")
     }),
 
-    // ---- r19 wave ---------------------------------------------------------
-
     "x_jarque_bera" -> ((s, d) => {
       // Jarque–Bera normality test (Jarque & Bera 1980) on the daily
       // order-count series per priority — the ASSUMPTION CHECK the two
@@ -4553,22 +4472,8 @@ object StatsOps {
       // Output k(k−1)/2 pair rows off the O(k) rank-sum table — every
       // join a broadcast of an aggregate; windows only over the grouped
       // value histogram.
-      val hist = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          floor(col("o_totalprice") * 100 + 0.5).cast("long").as("qv"))
-        .groupBy("grp", "qv").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
-      val vt = hist.groupBy("qv").agg(sum(col("c")).cast("long").as("t"))
-      val w = Window.orderBy("qv").rowsBetween(Window.unboundedPreceding, -1)
-      val vts = vt.withColumn("s0", coalesce(sum(col("t")).over(w), lit(0L)))
-      val gsum = hist.join(vts, "qv")
-        .groupBy("grp")
-        .agg(sum(col("c")).cast("long").as("ng"),
-          sum((col("c") * (lit(2L) * col("s0") + col("t") + 1L))
-            .cast("decimal(38,0)")).as("r2g"))
-      val ties = vt.agg(
-        sum((col("t") * col("t") * col("t") - col("t"))
-          .cast("decimal(38,0)")).as("st3"))
+      val hist = priorityCentHist(s, d)
+      val (_, gsum, ties) = doubledRanks(hist, "grp", "qv")
       val tot = gsum.agg(count(lit(1)).as("k"),
         sum(col("ng")).cast("long").as("nn"))
       val a = gsum.select(col("grp").as("grp_a"), col("ng").as("na"),
@@ -4634,17 +4539,13 @@ object StatsOps {
         dailyP.groupBy("day").agg(sum(col("y")).cast("long").as("y"))
           .withColumn("series", lit("ALL"))
           .select("series", "day", "y"))
-      val vt = daily.groupBy("series", "y")
-        .agg(count(lit(1)).cast("long").as("t"))
-      val wS = Window.partitionBy("series").orderBy("y")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val vts = vt.withColumn("s0",
-        coalesce(sum(col("t")).over(wS), lit(0L)))
+      val vts = exclusiveCum(daily.groupBy("series", "y")
+        .agg(count(lit(1)).cast("long").as("t")), "y", "t", "s0", "series")
       val nn = daily.groupBy("series")
         .agg(count(lit(1)).cast("long").as("n"))
       val wD = Window.partitionBy("series").orderBy("day")
       val cum = daily.join(vts, Seq("series", "y"))
-        .withColumn("r2", lit(2L) * col("s0") + col("t") + 1L)
+        .withColumn("r2", doubledRank)
         .withColumn("su2", sum(col("r2")).over(
           wD.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("rn", row_number().over(wD).cast("long"))
@@ -4682,14 +4583,11 @@ object StatsOps {
       // sum; top-10 |residual| days are where the damped-trend model
       // was most surprised. Same scale posture as x_ewma_anomaly.
       val w = Window.partitionBy("priority").orderBy("day")
-      val daily = t(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("priority"),
-          date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("y"))
+      val daily = priorityDaily(s, d)
       def lagY(i: Int) = lag(col("y"), i).over(w)
       daily
-        .withColumn("nq", brownNum(lagY, dampedW))
-        .withColumn("dq", brownDen(lagY, dampedQW))
+        .withColumn("nq", ladderNum(lagY, dampedW))
+        .withColumn("dq", ladderDen(lagY, dampedQW))
         .filter(col("dq") > 0)
         .withColumn("f",
           col("nq").cast("double") / col("dq").cast("double"))
@@ -4806,10 +4704,7 @@ object StatsOps {
       // derives from the exact integer cumY (no float window sums).
       // Verdict vs the published 5% asymptotic critical value 0.463.
       val QMax = 12
-      val daily = t(s, d, "orders")
-        .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).cast("long").as("y"))
-        .localCheckpoint()
+      val daily = pooledDaily(s, d)
       val st = daily.agg(count(lit(1)).cast("long").as("n"),
         sum(col("y")).cast("long").as("sy"))
         .withColumn("mean", col("sy").cast("double") / col("n"))
@@ -4850,10 +4745,10 @@ object StatsOps {
       }.reduce(_ + _)
       agg
         // q > QMax would silently truncate the Bartlett kernel at lag
-        // QMax (unreachable below n ≈ 8100 days, but the no-silent-caps
-        // rule applies to exports, not just reachable ones — r19
-        // advice): gate s2lr on the same q ≤ QMax arm as eta so BOTH
-        // exported statistics go NULL together when the ladder is short.
+        // QMax (unreachable below n ≈ 8100 days, but no export may be
+        // silently capped): gate s2lr on the same q ≤ QMax arm as eta so
+        // BOTH exported statistics go NULL together when the ladder is
+        // short.
         .withColumn("s2lr", when(col("q") <= QMax,
           col("g0").cast("double") / 1e6 / col("n") + lrTerms))
         .withColumn("eta", when(col("q") <= QMax && col("s2lr") > 0,
@@ -4882,30 +4777,17 @@ object StatsOps {
       // histogram. The fixture verdict is the interesting kind: FK
       // lands just BELOW the critical value — the three variance
       // tests agree the priority variances are homogeneous.
-      val hist = t(s, d, "orders")
-        .select(col("o_orderpriority").as("grp"),
-          floor(col("o_totalprice") * 100 + 0.5).cast("long").as("qv"))
-        .groupBy("grp", "qv").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+      val hist = priorityCentHist(s, d)
       val counts = hist.groupBy("grp")
         .agg(sum(col("c")).cast("long").as("ng"))
-      // weighted lower median per group off the histogram
-      val wCum = Window.partitionBy("grp").orderBy("qv")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val med = hist
-        .withColumn("cum", sum(col("c")).over(wCum))
-        .join(broadcast(counts), "grp")
-        .filter(col("cum") >= expr("(ng + 1) div 2"))
-        .groupBy("grp").agg(min(col("qv")).as("med"))
+      val med = lowerMedianBy(hist, "grp", "qv", "c", counts, "ng", "med")
       val dev = hist.join(broadcast(med), "grp")
         .select(col("grp"), abs(col("qv") - col("med")).as("dv"), col("c"))
         .groupBy("grp", "dv").agg(sum(col("c")).cast("long").as("c"))
-      val vt = dev.groupBy("dv").agg(sum(col("c")).cast("long").as("t"))
-      val wS = Window.orderBy("dv").rowsBetween(Window.unboundedPreceding, -1)
+      val (vts, _, _) = doubledRanks(dev, "grp", "dv")
       val nn = dev.agg(sum(col("c")).cast("long").as("nn"))
-      val scored = vt
-        .withColumn("s0", coalesce(sum(col("t")).over(wS), lit(0L)))
-        .withColumn("r2", lit(2L) * col("s0") + col("t") + 1L)
+      val scored = vts
+        .withColumn("r2", doubledRank)
         .crossJoin(broadcast(nn))
         .withColumn("p", lit(0.5)
           + col("r2").cast("double") / (lit(4.0) * (col("nn") + 1)))
@@ -5057,17 +4939,12 @@ object StatsOps {
       val theta = monthly.crossJoin(broadcast(ols))
         .withColumn("lt", col("a") + col("b") * col("rn"))
         .withColumn("qq", lit(2.0) * col("r") - col("lt"))
+      // ladder term i reads lag i − 1, so the ladder covers lags 0..39
       def lagQ(i: Int) =
-        if (i == 0) col("qq") else lag(col("qq"), i).over(wM)
-      val num = (0 until EwmaLags).map(i =>
-        when(lagQ(i).isNotNull,
-          floor(lagQ(i) * lit(ewmaW(i)) * 1e9 + 0.5).cast("long"))
-          .otherwise(0L)).reduce(_ + _)
-      val den = (0 until EwmaLags).map(i =>
-        when(lagQ(i).isNotNull, lit(ewmaQW(i))).otherwise(0L))
-        .reduce(_ + _)
+        if (i == 1) col("qq") else lag(col("qq"), i - 1).over(wM)
       theta
-        .withColumn("nq", num).withColumn("dq", den)
+        .withColumn("nq", ladderNum(lagQ, i => ewmaW(i - 1)))
+        .withColumn("dq", ladderDen(lagQ, i => ewmaQW(i - 1)))
         .filter(col("rn") === col("n") && col("dq") > 0)
         .withColumn("ses",
           col("nq").cast("double") / col("dq").cast("double"))
@@ -5251,13 +5128,9 @@ object StatsOps {
           floor((col("rev").cast("double") - col("bmean")) * 1e4 + 0.5)
             .cast("long"))
         .localCheckpoint()
-      val vt = aligned.groupBy("av")
-        .agg(count(lit(1)).cast("long").as("t"))
-      val wS = Window.orderBy("av")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val vts = vt.withColumn("s0",
-        coalesce(sum(col("t")).over(wS), lit(0L)))
-        .withColumn("r2", lit(2L) * col("s0") + col("t") + 1L)
+      val vts = exclusiveCum(aligned.groupBy("av")
+          .agg(count(lit(1)).cast("long").as("t")), "av", "t", "s0")
+        .withColumn("r2", doubledRank)
       val withR = aligned.join(vts.select("av", "r2"), "av")
       val tsum = withR.groupBy("trt")
         .agg(sum(col("r2").cast("decimal(38,0)")).as("r2j"))
@@ -5412,7 +5285,7 @@ object StatsOps {
       // shared cramer3 on the dailyTrend spine's (day, y, rn) grain;
       // se(γ) = √(s²·C₂₂/D) with C₂₂ = m·Σt² − (Σt)² the γ-cofactor
       // and s² = SSR/(m−3) from a 1e9-quantized residual pass.
-      // Fixture pins (PERFORMANCE.md r20 backlog #7): γ = −1.009151,
+      // Fixture pins: γ = −1.009151,
       // τ = −49.3857 — implied ρ = 1 + γ ≈ the lag-1 ACF, the
       // internally consistent picture. O(days) after the fact groupBy.
       val wD = Window.orderBy("day")
@@ -5475,8 +5348,8 @@ object StatsOps {
       // prediction-variance denominator (NULL propagates through the
       // later levels in both engines). The unrolled closed form was
       // CONFIRMED against the direct recursion at the fixture pins
-      // (PERFORMANCE.md r20 backlog #2: φ₁₁..₅₅ all inside the
-      // ±1.96/√n white-noise band — consistent with DW = 2.0157).
+      // (φ₁₁..₅₅ all inside the ±1.96/√n white-noise band — consistent
+      // with DW = 2.0157).
       // O(days) after the fact groupBy.
       val wD = Window.orderBy("day")
       val cum = dailyCum(s, d)
@@ -5548,19 +5421,17 @@ object StatsOps {
       // beat naive and still be systematically improvable. Scored on
       // the monthly revenue series (where U₂ = 0.88 says the ladder
       // earns its keep) against the α = 0.3 calibration SES as the
-      // lag-1..40 normalized weight ladder (the brownNum/brownDen
-      // shared builders, per-term 1e9 fixed point).
+      // lag-1..40 normalized weight ladder (ladderNum/ladderDen).
       // F = ((SSR_r − SSR_u)/2)/(SSR_u/(n−2)) vs F(2, ∞) = 2.9957.
-      // Fixture verdict (the designed contrast, PERFORMANCE.md r20
-      // backlog #3, re-pinned against THIS ladder replay): F = 4.4683
+      // Fixture verdict (the designed contrast): F = 4.4683
       // REJECTS with b < 0 — even where the ladder beats naive, the
       // joint test finds it over-reacting to the stub-month dip.
       // O(months) grain, one fact groupBy; the scored frame is
       // checkpointed (calendar-bounded at any corpus size).
       val wM = Window.orderBy("mth")
       val scored = monthlyRevMil(s, d)
-        .withColumn("nq", brownNum(i => lag(col("r"), i).over(wM), mzW))
-        .withColumn("dq", brownDen(i => lag(col("r"), i).over(wM), mzQW))
+        .withColumn("nq", ladderNum(i => lag(col("r"), i).over(wM), mzW))
+        .withColumn("dq", ladderDen(i => lag(col("r"), i).over(wM), mzQW))
         .filter(col("dq") > 0)
         .withColumn("f",
           col("nq").cast("double") / col("dq").cast("double"))
@@ -5613,16 +5484,15 @@ object StatsOps {
       // ln(1−Φ(z_(n+1−i)))]/n needs Φ at data-decided z, so the
       // Abramowitz–Stegun 7.1.26 erf builder evaluates IN-ENGINE
       // (drift vs exact erf 2.1e−6 on the fixture statistic — three
-      // orders under the 1e6 per-term quantizer; PERFORMANCE.md r20
-      // backlog #4). Tie order is FREE (tied values share Φ), so the
+      // orders under the 1e6 per-term quantizer). Tie order is FREE
+      // (tied values share Φ), so the
       // rank sums collapse onto the VALUE HISTOGRAM: a run of c tied
       // values after r smaller ones contributes c(2r+c)·ln Φ +
       // c(2n−2r−c)·ln(1−Φ) — exact integer weights off the doubled-
       // rank cumsum, O(scopes × distinct counts) rows after two fact
-      // passes (pooled + per-priority; the jarque_bera two-scan
-      // precedent). ln arguments are gated PER TERM and a bad-term
-      // count NULLs the statistic — a NULL term would silently vanish
-      // from SUM in both engines (the r18 NULL-in-sinks lesson).
+      // passes (pooled + per-priority). ln arguments are gated PER TERM
+      // and a bad-term count NULLs the statistic — a NULL term would
+      // silently vanish from SUM in both engines.
       // Small-sample factor A²* = A²(1 + 0.75/n + 2.25/n²) (Stephens
       // 1974), verdict vs the 5% critical value 0.752. Fixture pins:
       // pooled A² = 21.392367, per-priority 152..163 — the small-
@@ -5651,10 +5521,7 @@ object StatsOps {
             - col("sy").cast("double") * col("sy") / col("n"))
             / (col("n") - 1)))
         .withColumn("sd", when(col("vr") > 0, sqrt(col("vr"))))
-      val wS = Window.partitionBy("scope").orderBy("y")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ranked = hist
-        .withColumn("r0", coalesce(sum(col("c")).over(wS), lit(0L)))
+      val ranked = exclusiveCum(hist, "y", "c", "r0", "scope")
         .join(broadcast(st.select("scope", "n", "mean", "sd")), "scope")
         .withColumn("z", when(col("sd") > 0,
           (col("y").cast("double") - col("mean")) / col("sd")))

@@ -77,10 +77,6 @@ object Coercions {
     floor(c * k + lit(0.5)) / k
   }
 
-  /** DuckDB text of detRound for the oracle side. */
-  def detRoundSql(e: String, digits: Int): String =
-    s"floor(($e) * 1e$digits + 0.5) / 1e$digits"
-
   /** t9: defensive JSON field extraction (string-typed result). */
   def jsonField(c: Column, path: String): Column = get_json_object(c, path)
 

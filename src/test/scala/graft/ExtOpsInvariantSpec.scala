@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.to_date
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+import graft.ext.StatsOps
 
 /** Structural invariants of the r8 extension ops — properties the DuckDB
   * hash-compare cannot express (it proves value equality, not that the
@@ -2417,5 +2421,96 @@ class ExtOpsInvariantSpec extends SparkSpec {
       assert(r.getAs[Boolean]("normal_05") ==
         (r.getAs[Double]("a2_star") <= 0.752))
     }
+  }
+
+  // ---- shared StatsOps kernels on degenerate inputs -----------------------
+  // Tie-heavy (grp, value) frames drawn from a small value range, plus the
+  // shapes the registry run never produces: one group, every value tied,
+  // a single row.
+
+  private def sample[A](gen: Gen[A], n: Int): List[A] =
+    (0 until n).flatMap(i =>
+      gen.apply(Gen.Parameters.default, Seed(31L + i))).toList
+
+  private val tieFrames: List[Seq[(String, Long)]] = {
+    val row = for {
+      g <- Gen.oneOf("a", "b", "c")
+      v <- Gen.chooseNum(0L, 6L)
+    } yield (g, v)
+    val gen = Gen.chooseNum(1, 40).flatMap(n => Gen.listOfN(n, row))
+    List(Seq("a" -> 5L), Seq.fill(7)("a" -> 3L),
+      Seq("a" -> 1L, "b" -> 1L, "c" -> 1L),
+      Seq("a" -> 2L, "a" -> 9L, "a" -> 2L, "a" -> 4L)) ++ sample(gen, 20)
+  }
+
+  test("doubledRanks: per-group r2g and the tie term equal a plain-Scala " +
+      "average-rank recompute") {
+    import org.apache.spark.sql.functions.{count, lit}
+    import spark.implicits._
+    tieFrames.foreach { rows =>
+      val hist = rows.toDF("grp", "v").groupBy("grp", "v")
+        .agg(count(lit(1)).as("c"))
+      val (_, gsum, ties) = StatsOps.doubledRanks(hist, "grp", "v")
+      // average rank of a value = mean of its 1-based sorted positions
+      val sorted = rows.map(_._2).sorted.zipWithIndex
+      val r2 = sorted.groupBy(_._1).map { case (v, ps) =>
+        val twice = 2 * ps.map(_._2 + 1L).sum
+        assert(twice % ps.size == 0)
+        v -> twice / ps.size
+      }
+      val expect = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> (rs.size.toLong, BigDecimal(rs.map(r => r2(r._2)).sum))
+      }
+      val got = gsum.collect().map(r => r.getString(0) ->
+        (r.getLong(1), BigDecimal(r.getDecimal(2)))).toMap
+      assert(got == expect, s"rows $rows")
+      val st3 = rows.groupBy(_._2).values
+        .map(ts => ts.size.toLong * ts.size * ts.size - ts.size).sum
+      assert(BigDecimal(ties.collect().head.getDecimal(0)) == BigDecimal(st3),
+        s"rows $rows")
+    }
+  }
+
+  test("exclusiveCum: equals a plain-Scala exclusive prefix sum, pooled " +
+      "and per partition") {
+    import org.apache.spark.sql.functions.sum
+    import spark.implicits._
+    tieFrames.foreach { rows =>
+      // a histogram has one row per (part, key): exactly the kernel's input
+      val hist = rows.groupBy(identity).map { case ((g, v), rs) =>
+        (g, v, rs.size.toLong)
+      }.toSeq
+      val df = hist.toDF("p", "k", "c")
+      def prefix(xs: Seq[(String, Long, Long)]) = {
+        val byK = xs.sortBy(_._2)
+        byK.map(_._3).scanLeft(0L)(_ + _).zip(byK)
+          .map { case (s0, (g, v, _)) => (g, v) -> s0 }
+      }
+      val perPart = hist.groupBy(_._1).values.flatMap(prefix).toMap
+      val gotPart = StatsOps.exclusiveCum(df, "k", "c", "s0", "p").collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+      assert(gotPart == perPart, s"rows $rows")
+      val pooledHist = hist.groupBy(_._2).map { case (v, xs) =>
+        ("", v, xs.map(_._3).sum)
+      }.toSeq
+      val pooled = prefix(pooledHist).map { case ((_, v), s0) => v -> s0 }
+      val gotPooled = StatsOps.exclusiveCum(
+          df.groupBy("k").agg(sum("c").as("c")), "k", "c", "s0").collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(gotPooled == pooled.toMap, s"rows $rows")
+    }
+  }
+
+  test("chi2Crit05: the table for k = 2..6 groups (df 1..5), NULL for " +
+      "any other k") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val got = (-1L to 9L).toDF("k")
+      .select(col("k"), StatsOps.chi2Crit05(col("k")).as("crit"))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    val table = Map(2L -> 3.841459, 3L -> 5.991465, 4L -> 7.814728,
+      5L -> 9.487729, 6L -> 11.070498)
+    (-1L to 9L).foreach(k => assert(got(k) == table.get(k), s"k=$k"))
   }
 }
