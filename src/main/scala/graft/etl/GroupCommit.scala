@@ -1,10 +1,10 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import scala.jdk.CollectionConverters._
+
+import graft.util.Fs
 
 /** Group commit: bound the number of downstream merges to one per K pages
   * while keeping the reference's per-page durability
@@ -16,7 +16,8 @@ import scala.jdk.CollectionConverters._
   * of the step, and on recovery at the start of the next run) the staged
   * pages are collapsed to the latest version per record (`p` ascending =
   * page order, later pages win — exactly what replaying the per-page
-  * upserts would produce) and handed to `merge` ONCE.
+  * upserts would produce; duplicates within one page fall to
+  * `Upsert.dedupe`'s tie rule) and handed to `merge` ONCE.
   *
   * Cost: per-page work drops from O(table) merge to O(page) append; the
   * merge runs P/K times instead of P (with the bucket-partitioned merge it
@@ -28,39 +29,24 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
                   merge: DataFrame => Long) {
   require(every >= 1, s"group size must be >=1, got $every")
 
-  private def stagedPages(): Seq[Long] = {
-    val root = Paths.get(stagingDir)
-    if (!Files.exists(root)) Seq.empty
-    else {
-      val s = Files.list(root)
-      val dirs = try s.iterator().asScala.toList finally s.close()
-      dirs.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("p=") => n.drop(2).toLong }
-        .sorted
-    }
-  }
+  private val root = Paths.get(stagingDir)
+
+  private def stagedPages(): Seq[Long] =
+    Fs.list(root).map(_.getFileName.toString)
+      .collect { case n if n.startsWith("p=") => n.drop(2).toLong }
+      .sorted
 
   /** Durable per-page commit; triggers a merge every K pages. Returns the
     * page's row count (the step's progress accounting, ref :208).
     *
     * The page number is claimed by atomically creating its directory
-    * (`Files.createDirectory` fails if it exists) rather than
-    * read-max-plus-one alone — the same protocol as PartitionedMerge's
-    * `_seq` markers, so an accidentally overlapping stager skips to the
-    * next slot instead of colliding mid-write. */
+    * (`Fs.claimNext`), so an overlapping stager skips to the next slot
+    * instead of colliding mid-write. */
   def stage(batch: DataFrame): Long = {
     val pages = stagedPages()
-    var next = if (pages.isEmpty) 1L else pages.max + 1L
-    var claimed = false
-    while (!claimed) {
-      try {
-        Files.createDirectories(Paths.get(stagingDir))
-        Files.createDirectory(Paths.get(s"$stagingDir/p=$next"))
-        claimed = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => next += 1
-      }
-    }
+    Files.createDirectories(root)
+    val next = Fs.claimNext(pages.lastOption.getOrElse(0L) + 1L)(n =>
+      Files.createDirectory(Paths.get(s"$stagingDir/p=$n")))
     // Write AROUND the claim, not over it: Overwrite semantics would delete
     // the claimed directory before the committer recreates it, and in that
     // window a concurrent stager could re-claim the same page number. Stage
@@ -71,7 +57,7 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
     val tmp = Paths.get(s"$stagingDir/.tmp_p=$next")
     batch.write.mode("overwrite").parquet(tmp.toString)
     Files.move(tmp, Paths.get(s"$stagingDir/p=$next"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      StandardCopyOption.ATOMIC_MOVE)
     // count from the staged parquet footers — never re-runs decode lineage
     val n = spark.read.parquet(s"$stagingDir/p=$next").count()
     if (pages.size + 1 >= every) flush()
@@ -84,61 +70,31 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
     * so a crash between merge and clear just re-merges the same rows on
     * recovery.
     *
-    * Concurrent-stager safety (r7): the pre-r7 clear was a recursive
-    * delete of the WHOLE staging dir, so a page committed by an
-    * overlapping stager between this flush's listing and its delete was
-    * destroyed unmerged — a lost acknowledged page, in exactly the
-    * multi-stager scenario the r6 claim protocol added support for. Now
-    * (1) flushers mutually exclude via a try-lock (busy → return 0; the
-    * running flusher merges what it listed, later pages wait for the
-    * next flush or recover()); (2) the read covers EXACTLY the listed
-    * page dirs; (3) only those dirs are deleted. A page landing
+    * Concurrent stagers: flushers mutually exclude via a try-lock (busy →
+    * return 0; the running flusher merges what it listed, later pages
+    * wait for the next flush or recover(); a lock older than 10 min is a
+    * crashed flusher's and is broken). The read covers EXACTLY the listed
+    * page dirs and only those dirs are deleted, so a page landing
     * mid-flush is neither read nor touched. */
-  def flush(): Long = {
-    val root = Paths.get(stagingDir)
-    if (!Files.exists(root)) return 0L
-    val lock = root.resolve("_flush_lock")
-    def tryLock(): Boolean =
-      try { Files.createFile(lock); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (!tryLock()) {
-      // same stale-break protocol as PartitionedMerge.compact: tolerate
-      // the holder releasing mid-stat, break >10-min locks atomically
-      val age =
-        try System.currentTimeMillis -
-          Files.getLastModifiedTime(lock).toMillis
-        catch { case _: java.nio.file.NoSuchFileException => -1L }
-      if (age >= 0 && age < 10 * 60 * 1000L) return 0L
-      if (age >= 10 * 60 * 1000L) {
-        val tomb = root.resolve(s"_flush_lock.stale-${System.nanoTime}")
-        try { Files.move(lock, tomb); Files.deleteIfExists(tomb): Unit }
-        catch { case _: java.nio.file.NoSuchFileException => () }
-      }
-      if (!tryLock()) return 0L
-    }
-    try {
-      val pages = stagedPages()
-      if (pages.isEmpty) return 0L
+  def flush(): Long =
+    if (!Files.exists(root)) 0L
+    else Fs.withLock(root.resolve("_flush_lock"), 10 * 60 * 1000L) {
       // a claimed-but-empty dir is a stage() mid-write (claim placed,
       // data not yet renamed in): not this flush's to read OR delete
-      val dirs = pages.map(p => s"$stagingDir/p=$p").filter { d =>
-        val s = Files.list(Paths.get(d))
-        try s.iterator().asScala
-          .exists(_.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
+      val dirs = stagedPages().map(p => s"$stagingDir/p=$p")
+        .filter(d => PartitionedMerge.dataFiles(Paths.get(d)).nonEmpty)
+      if (dirs.isEmpty) 0L
+      else {
+        // explicit page paths + basePath (→ `p` partition column), so a
+        // page committed after the listing is out of scope; mergeSchema so
+        // pages staged across an additive schema change still union
+        val all = spark.read.option("mergeSchema", "true")
+          .option("basePath", stagingDir).parquet(dirs: _*)
+        val n = merge(Upsert.dedupe(all, Seq(key), Seq("p")).drop("p"))
+        dirs.foreach(d => Fs.deleteRec(Paths.get(d)))
+        n
       }
-      if (dirs.isEmpty) return 0L
-      // explicit page paths + basePath (→ `p` partition column), so a
-      // page committed after the listing is out of scope; mergeSchema so
-      // pages staged across an additive schema change still union
-      val all = spark.read.option("mergeSchema", "true")
-        .option("basePath", stagingDir).parquet(dirs: _*)
-      val latest = Upsert.latestPerKey(all, Seq(key), Seq("p")).drop("p")
-      val n = merge(latest)
-      dirs.foreach(d => graft.util.Fs.deleteRec(Paths.get(d)))
-      n
-    } finally { Files.deleteIfExists(lock): Unit }
-  }
+    }.getOrElse(0L)
 
   /** Run at step start: merge any pages a previous run staged but did not
     * flush (crash between stage and flush, or a Failed/BudgetExhausted

@@ -108,45 +108,39 @@ object IncrementalJoin {
     // the critical section (a concurrent refresh may have won since the
     // optimistic check at entry), then atomically replace the pointer
     Files.createDirectories(Paths.get(base))
-    val lock = Paths.get(base, "_refresh.lock")
-    val locked = try { Files.createFile(lock); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (!locked) sys.error(
-      s"IncrementalJoin: concurrent refresh detected at $base " +
-        "(single-writer contract violated; stale _refresh.lock?)")
-    try {
+    // a held lock is never broken (staleMs = MaxValue): single writer,
+    // so a leftover lock needs an operator, not a takeover
+    graft.util.Fs.withLock(Paths.get(base, "_refresh.lock"), Long.MaxValue) {
       // fresh read inside the critical section: both the lost-race check
       // AND the GC keep-set below must see the epoch committed by any
       // refresh that won between our optimistic entry read and the lock —
       // building keep from the stale entry-time `committed` would delete
       // the immediately-previous version and break the delete-lag of 1
       val cur = committedEpoch(base)
-      cur.foreach { e =>
-        if (epoch <= e) {
-          // lost the race: a concurrent refresh committed ≥ our epoch.
-          // Abort without touching the pointer; drop our orphan version —
-          // unless the winner committed this exact epoch (its v-dir is live)
-          if (epoch < e) graft.util.Fs.deleteRec(Paths.get(base, s"v$epoch"))
-          return false
-        }
-      }
-      val tmp = Paths.get(base, "_current.tmp")
-      Files.writeString(tmp, epoch.toString)
-      Files.move(tmp, pointer(base), StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE): Unit
-      // GC with a delete-lag of 1: keep the new AND the previous committed
-      // version so in-flight readers of the old pointer finish cleanly
-      val keep = Set(s"v$epoch") ++ cur.map(e => s"v$e")
-      val s = Files.list(Paths.get(base))
-      val stale = try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toList.filter { p =>
+      if (cur.exists(epoch <= _)) {
+        // lost the race: a concurrent refresh committed ≥ our epoch.
+        // Abort without touching the pointer; drop our orphan version —
+        // unless the winner committed this exact epoch (its v-dir is live)
+        if (cur.exists(epoch < _))
+          graft.util.Fs.deleteRec(Paths.get(base, s"v$epoch"))
+        false
+      } else {
+        val tmp = Paths.get(base, "_current.tmp")
+        Files.writeString(tmp, epoch.toString)
+        Files.move(tmp, pointer(base), StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+        // GC with a delete-lag of 1: keep the new AND the previous
+        // committed version so in-flight readers of the old pointer
+        // finish cleanly
+        val keep = Set(s"v$epoch") ++ cur.map(e => s"v$e")
+        graft.util.Fs.list(Paths.get(base)).filter { p =>
           val n = p.getFileName.toString
           n.startsWith("v") && !keep.contains(n)
-        }
-      } finally s.close()
-      stale.foreach(graft.util.Fs.deleteRec)
-    } finally Files.deleteIfExists(lock): Unit
-    true
+        }.foreach(graft.util.Fs.deleteRec)
+        true
+      }
+    }.getOrElse(sys.error(
+      s"IncrementalJoin: concurrent refresh detected at $base " +
+        "(single-writer contract violated; stale _refresh.lock?)"))
   }
 }

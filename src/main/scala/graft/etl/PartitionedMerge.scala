@@ -1,12 +1,12 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.SchemaEvolution
+import graft.util.Fs
 
 /** Bucket-partitioned merge: the bounded-cost realization of the
   * reference's per-page `INSERT ... ON CONFLICT DO UPDATE` commit
@@ -19,9 +19,9 @@ import graft.model.SchemaEvolution
   * ONLY those bucket directories. Untouched buckets see zero I/O, so the
   * per-batch cost is O(touched buckets × bucket size), not O(table) — at
   * 100 TB with thousands of buckets an incremental page rewrites a few
-  * buckets, where the plain merge-by-union (round 1, PERFORMANCE.md
-  * "honest cost note") rewrote everything, and the write itself runs one
-  * task per touched bucket instead of a single coalesce(1) task.
+  * buckets, and the write itself runs one task per touched bucket instead
+  * of a single coalesce(1) task. A missing table is an empty existing
+  * side: the first merge creates it through the same rewrite.
   *
   * The same deterministic key→bucket function every batch means a key
   * always lives in exactly one bucket directory — merge correctness needs
@@ -36,7 +36,7 @@ object PartitionedMerge {
   def bucketExpr(keys: Seq[String], numBuckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(numBuckets))
 
-  // ---- table metadata (round 4) ---------------------------------------
+  // ---- table metadata -------------------------------------------------
   //
   // The bucket count is a TABLE property, not a call-site parameter: an
   // append hashing with a different count than the base puts the same key
@@ -62,12 +62,87 @@ object PartitionedMerge {
   private def resolveBuckets(path: String, requested: Int): Int =
     persistedBuckets(path).getOrElse(requested)
 
+  /** Called after a write has created the table root. */
   private def stampMeta(path: String, numBuckets: Int): Unit =
-    if (persistedBuckets(path).isEmpty) {
-      Files.createDirectories(Paths.get(path))
+    if (persistedBuckets(path).isEmpty)
       Files.write(metaFile(path),
         s"""{"numBuckets":$numBuckets}""".getBytes("UTF-8")): Unit
+
+  // ---- bucket directories (driver-side listings, never a Spark job) ----
+
+  private def bucketDir(path: String, b: Int): Path =
+    Paths.get(s"$path/$BucketCol=$b")
+
+  /** Bucket numbers present under a table (or tmp table) root. */
+  private def buckets(path: String): Seq[Int] =
+    Fs.list(Paths.get(path)).map(_.getFileName.toString)
+      .collect { case d if d.startsWith(s"$BucketCol=") =>
+        d.stripPrefix(s"$BucketCol=").toInt }
+      .sorted
+
+  /** Parquet data files in one directory. */
+  private[etl] def dataFiles(dir: Path): List[Path] =
+    Fs.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+
+  /** Move the data files of `from` into the live directory `to` under
+    * fresh names `<prefix>-<i>.parquet`: the directory never vanishes, and
+    * concurrent writers' files never collide. */
+  private def moveDataFiles(from: Path, to: Path, prefix: String): Unit = {
+    Files.createDirectories(to)
+    dataFiles(from).zipWithIndex.foreach { case (f, i) =>
+      Files.move(f, to.resolve(s"$prefix-$i.parquet")): Unit
     }
+  }
+
+  // ---- reads and writes (Spark jobs stay in this file) ------------------
+
+  private def scan(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(path)
+
+  /** The table's rows, bucket column included; a missing table is an
+    * empty frame shaped like `like`. */
+  private def existing(spark: SparkSession, path: String,
+                       like: DataFrame): DataFrame =
+    if (Files.exists(Paths.get(path))) scan(spark, path) else like.limit(0)
+
+  /** Distinct buckets of `df`: a ≤numBuckets-int driver collect, never
+    * data rows. */
+  private def touchedBuckets(df: DataFrame): Seq[Int] =
+    df.select(col(BucketCol)).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
+
+  /** Partition pruning keeps the scan to the touched directories only. */
+  private def inBuckets(df: DataFrame, touched: Seq[Int]): DataFrame =
+    df.filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
+
+  /** The one bucketed writer: rows laid out as `dir/gbucket=N/`, one
+    * task (so one file) per bucket. */
+  private def writeBuckets(rows: DataFrame, dir: String): Unit =
+    rows.repartition(col(BucketCol))
+      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(dir)
+
+  /** Replace the `touched` buckets of the table at `path` with `rows`:
+    * write them to a tmp table, swap each touched bucket directory in
+    * (`Fs.swapInto`), delete the tmp table. A touched bucket `rows` leaves
+    * empty becomes an empty directory (kept so the partitioned read keeps
+    * working). A missing table is created. */
+  private def rewrite(path: String, rows: DataFrame, touched: Seq[Int],
+                      numBuckets: Int): Unit = {
+    if (touched.isEmpty) return
+    val tmp = path + ".tmp"
+    writeBuckets(rows, tmp)
+    Files.createDirectories(Paths.get(path))
+    touched.foreach { b =>
+      if (Files.exists(bucketDir(tmp, b)))
+        Fs.swapInto(bucketDir(tmp, b), bucketDir(path, b))
+      else {
+        Fs.deleteRec(bucketDir(path, b))
+        Files.createDirectories(bucketDir(path, b)): Unit
+      }
+    }
+    Fs.deleteRec(Paths.get(tmp))
+    stampMeta(path, numBuckets) // also migrates pre-metadata tables
+  }
 
   /** Read a bucketed table with the engine-internal bucket column dropped.
     * `mergeSchema` because additive evolution only rewrites touched
@@ -77,7 +152,7 @@ object PartitionedMerge {
     * cost goes away by pinning the table schema from the catalog
     * (model/Schemas) instead. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path).drop(BucketCol)
+    scan(spark, path).drop(BucketCol)
 
   /** Merge `updates` into the bucketed table at `path` by natural key,
     * rewriting only the buckets the batch touches. Applies additive schema
@@ -92,48 +167,17 @@ object PartitionedMerge {
     if (n == 0) return 0L
     val nb = resolveBuckets(path, numBuckets)
     val batch = flat.withColumn(BucketCol, bucketExpr(keys, nb))
-    val root = Paths.get(path)
-
-    if (!Files.exists(root)) {
-      // collapse within-batch duplicate keys with the SAME rule the merge
-      // path applies (Upsert.merge) — without this, duplicates in the very
-      // first batch would survive creation (found by the model-based spec)
-      val nonKey = flat.columns.filterNot(keys.contains).toSeq
-      val uniq =
-        if (nonKey.isEmpty) batch.distinct()
-        else Upsert.latestPerKey(batch, keys, nonKey)
-      uniq.repartition(col(BucketCol))
-        .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(path)
-      stampMeta(path, nb)
-      return n
-    }
-
-    // touched buckets: a ≤numBuckets-int driver collect, never data rows
-    val touched = batch.select(col(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val existing = spark.read.option("mergeSchema", "true").parquet(path)
-    val evolved = SchemaEvolution.mergeAdditive(
-      existing.schema, batch.schema)
-    // partition pruning keeps the scan to the touched directories only
-    val existingTouched = SchemaEvolution
-      .conform(existing, evolved)
-      .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
+    val touched = touchedBuckets(batch)
+    val table = existing(spark, path, batch)
+    val evolved = SchemaEvolution.mergeAdditive(table.schema, batch.schema)
     val merged = Upsert.merge(
-      existingTouched, SchemaEvolution.conform(batch, evolved), keys)
-
-    val tmp = path + ".tmp"
-    merged.repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(tmp)
-    touched.foreach { b =>
-      graft.util.Fs.swapInto(
-        Paths.get(s"$tmp/$BucketCol=$b"), Paths.get(s"$path/$BucketCol=$b"))
-    }
-    graft.util.Fs.deleteRec(Paths.get(tmp))
-    stampMeta(path, nb) // migrate pre-metadata tables on their next write
+      inBuckets(SchemaEvolution.conform(table, evolved), touched),
+      SchemaEvolution.conform(batch, evolved), keys)
+    rewrite(path, merged, touched, nb)
     n
   }
 
-  // ---- delta-append commit + per-bucket compaction (round 3) ----------
+  // ---- delta-append commit + per-bucket compaction ----------------------
   //
   // mergeInto bounds each commit to the touched buckets, but a touched
   // bucket is REWRITTEN whole — over weeks of cron runs against a grown
@@ -141,8 +185,7 @@ object PartitionedMerge {
   // page. The LSM-shaped alternative: append the batch as per-bucket
   // DELTA files (O(page) per commit, flat forever), resolve
   // latest-per-key at read time, and run a per-bucket compaction on a
-  // schedule to bound the file count the reader merges. This is the
-  // "staged append files need a compaction step" answer: growth is
+  // schedule to bound the file count the reader merges. Growth is
   // bounded by compaction cadence, and compaction itself rewrites one
   // bucket at a time (independently parallelizable, never the table).
 
@@ -150,79 +193,43 @@ object PartitionedMerge {
     * resolve as version 0 (oldest). */
   val SeqCol = "gseq"
 
-  /** Pre-r4 allocator state: a plain counter file (read-increment-write —
-    * racy under concurrent appenders). Kept read-only as the migration
-    * floor for the marker-based allocator below. */
-  private def legacySeqFile(path: String) = Paths.get(path, "_delta_seq")
-
-  private def legacySeq(path: String): Long = {
-    val f = legacySeqFile(path)
-    if (Files.exists(f)) new String(Files.readAllBytes(f), "UTF-8").trim.toLong
-    else 0L
-  }
-
   private def seqDir(path: String) = Paths.get(path, "_seq")
 
-  private def maxMarker(path: String): Long = {
-    val dir = seqDir(path)
-    if (!Files.exists(dir)) return 0L
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong }
-      .foldLeft(0L)(math.max)
-    finally s.close()
-  }
+  /** Claim markers `_seq/<n>` by number. */
+  private def markers(path: String): Map[Long, Path] =
+    Fs.list(seqDir(path)).map(p => p.getFileName.toString -> p)
+      .collect { case (n, p) if n.nonEmpty && n.forall(_.isDigit) =>
+        n.toLong -> p }
+      .toMap
 
-  /** Atomically allocate the next batch version: claim `_seq/<n>` via
-    * `Files.createFile`, whose create-if-absent is atomic on POSIX (and an
-    * object-store port would use a put-if-absent conditional write). Two
-    * concurrent appenders can no longer read the same counter and stamp
-    * the same gseq on different batches — the race the plain counter file
-    * had. Allocation happens BEFORE the data write, so a crash mid-append
-    * burns a seq number (a gap — harmless) instead of ever reusing one. */
+  /** Atomically allocate the next batch version by claiming `_seq/<n>`
+    * (`Fs.claimNext` over `Files.createFile`): two concurrent appenders
+    * never stamp the same gseq on different batches. Allocation happens
+    * BEFORE the data write, so a crash mid-append burns a seq number (a
+    * gap — harmless) instead of ever reusing one. */
   private def allocSeq(path: String): Long = {
-    val dir = seqDir(path)
-    Files.createDirectories(dir)
-    var cand = math.max(maxMarker(path), legacySeq(path)) + 1
-    var got = -1L
-    while (got < 0) {
-      try { Files.createFile(dir.resolve(cand.toString)); got = cand }
-      catch { case _: java.nio.file.FileAlreadyExistsException => cand += 1 }
-    }
-    got
+    Files.createDirectories(seqDir(path))
+    Fs.claimNext(markers(path).keys.maxOption.getOrElse(0L) + 1L)(n =>
+      Files.createFile(seqDir(path).resolve(n.toString)))
   }
 
   /** Delete claim markers strictly below the current max (compaction
     * housekeeping — the max stays so allocation remains monotone). */
   private def pruneMarkers(path: String): Unit = {
-    val dir = seqDir(path)
-    if (!Files.exists(dir)) return
-    val keep = maxMarker(path)
-    val s = Files.list(dir)
-    val old = try s.iterator().asScala.toList.filter { p =>
-      val n = p.getFileName.toString
-      n.nonEmpty && n.forall(_.isDigit) && n.toLong < keep
-    } finally s.close()
-    old.foreach(Files.deleteIfExists(_))
+    val ms = markers(path)
+    ms.keys.maxOption.foreach(keep =>
+      ms.foreach { case (n, p) => if (n < keep) Files.deleteIfExists(p) })
   }
 
-  /** Data-file count per bucket directory — a driver-side metadata
-    * listing, never a Spark job. */
-  private def bucketFileCounts(path: String): Seq[(Int, Int)] = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) return Seq.empty
-    val s = Files.list(root)
-    val dirs = try s.iterator().asScala.toList finally s.close()
-    dirs.filter(_.getFileName.toString.startsWith(s"$BucketCol="))
-      .map { d =>
-        val fs = Files.list(d)
-        val n =
-          try fs.iterator().asScala
-            .count(_.getFileName.toString.endsWith(".parquet"))
-          finally fs.close()
-        d.getFileName.toString.stripPrefix(s"$BucketCol=").toInt -> n
-      }.sortBy(_._1)
-  }
+  /** A scan of base and delta files with every row's version in `gseq`. */
+  private def versioned(all: DataFrame): DataFrame =
+    all.withColumn(SeqCol,
+      if (all.columns.contains(SeqCol)) coalesce(col(SeqCol), lit(0L))
+      else lit(0L))
+
+  /** Latest version per key (merge-on-read), `gseq` dropped. */
+  private def latest(versioned: DataFrame, keys: Seq[String]): DataFrame =
+    Upsert.dedupe(versioned, keys, Seq(SeqCol)).drop(SeqCol)
 
   /** Append `updates` as delta files into the bucket layout at `path` —
     * cost O(batch), independent of table size. Batches must be key-unique
@@ -230,16 +237,13 @@ object PartitionedMerge {
     * Composes with a mergeInto-created base: base rows have no gseq and
     * lose to any delta. Returns the batch row count.
     *
-    * Auto-compaction (round 4): after the append, any bucket whose
-    * data-file count reached `compactThreshold` is compacted in place —
-    * the commit path itself bounds merge-on-read cost, so weeks of
-    * unattended cron appends can no longer degrade readers (the r3 stress
-    * measured resolved reads growing 0.17 → 1.34 s over 1,000 uncompacted
-    * pages). Amortized cost per append stays O(page + bucket/threshold);
-    * pass `compactThreshold = 0` to disable and schedule `compact`
-    * manually. Single-writer per table is assumed for the rewrite paths
-    * (compact/mergeInto swap bucket directories); the marker-based seq
-    * keeps versioning correct even if appenders accidentally overlap. */
+    * Auto-compaction: after the append, any bucket whose data-file count
+    * reached `compactThreshold` is compacted in place, so the commit path
+    * itself bounds merge-on-read cost and unattended cron appends cannot
+    * degrade readers. Amortized cost per append stays
+    * O(page + bucket/threshold); pass `compactThreshold = 0` to disable
+    * and schedule `compact` manually. Single-writer per table is assumed
+    * for the mergeInto rewrite; appends and compactions may overlap. */
   def appendInto(spark: SparkSession, path: String, updates: DataFrame,
                  keys: Seq[String], numBuckets: Int = 16,
                  compactThreshold: Int = 32): Long = {
@@ -249,41 +253,25 @@ object PartitionedMerge {
     val nb = resolveBuckets(path, numBuckets)
     val seq = allocSeq(path)
     // Stage in a PRIVATE per-append dir, then move files into the live
-    // bucket dirs (r7): a direct SaveMode.Append from two JVMs shares
-    // one FileOutputCommitter `_temporary/0` under the table root, and
-    // whichever job commits first deletes the other's staging — the
-    // multi-process spec caught exactly that. Per-file moves into the
-    // live dirs carry the allocated seq in the name and never collide.
+    // bucket dirs: a direct SaveMode.Append from two JVMs shares one
+    // FileOutputCommitter `_temporary/0` under the table root, and
+    // whichever job commits first deletes the other's staging. Per-file
+    // moves carry the allocated seq in the name and never collide.
     // Crash model: before any move, only an unreferenced unique tmp
-    // remains (the seq number burns, as documented on allocSeq); a crash
-    // MID-move leaves a torn, UNACKNOWLEDGED batch visible — harmless
-    // under the step driver's retry contract (CrashRecoverySpec): the
-    // re-run re-appends the same page under a higher seq, whose rows win
-    // per key over the torn remnant at read time.
+    // remains (the seq number burns); a crash MID-move leaves a torn,
+    // UNACKNOWLEDGED batch visible — harmless under the step driver's
+    // retry contract (CrashRecoverySpec): the re-run re-appends the same
+    // page under a higher seq, whose rows win per key at read time.
     val tmp = path + s".tmp-append-$seq"
-    flat.withColumn(BucketCol, bucketExpr(keys, nb))
-      .withColumn(SeqCol, lit(seq))
-      .repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(tmp)
-    val troot = Paths.get(tmp)
-    val s = Files.list(troot)
-    val bdirs = try s.iterator().asScala.toList finally s.close()
-    bdirs.filter(_.getFileName.toString.startsWith(s"$BucketCol="))
-      .foreach { bd =>
-        val target = Paths.get(path).resolve(bd.getFileName.toString)
-        Files.createDirectories(target)
-        val fs = Files.list(bd)
-        val files = try fs.iterator().asScala.toList finally fs.close()
-        files.filter(_.getFileName.toString.endsWith(".parquet"))
-          .zipWithIndex.foreach { case (f, i) =>
-            Files.move(f, target.resolve(s"delta-$seq-$i.parquet")): Unit
-          }
-      }
-    graft.util.Fs.deleteRec(troot)
+    writeBuckets(flat.withColumn(BucketCol, bucketExpr(keys, nb))
+      .withColumn(SeqCol, lit(seq)), tmp)
+    buckets(tmp).foreach(b =>
+      moveDataFiles(bucketDir(tmp, b), bucketDir(path, b), s"delta-$seq"))
+    Fs.deleteRec(Paths.get(tmp))
     stampMeta(path, nb)
     if (compactThreshold > 0) {
-      val frag = bucketFileCounts(path)
-        .collect { case (b, files) if files >= compactThreshold => b }
+      val frag = buckets(path)
+        .filter(b => dataFiles(bucketDir(path, b)).size >= compactThreshold)
       if (frag.nonEmpty)
         compact(spark, path, keys, only = Some(frag.toSet)): Unit
     }
@@ -293,28 +281,8 @@ object PartitionedMerge {
   /** Read a delta-append table resolved to the latest version per key
     * (merge-on-read). Engine-internal bucket/version columns dropped. */
   def readResolved(spark: SparkSession, path: String,
-                   keys: Seq[String]): DataFrame = {
-    val all = spark.read.option("mergeSchema", "true").parquet(path)
-    val withSeq =
-      if (all.columns.contains(SeqCol))
-        all.withColumn(SeqCol, coalesce(col(SeqCol), lit(0L)))
-      else all.withColumn(SeqCol, lit(0L))
-    Upsert.latestPerKey(withSeq, keys, Seq(SeqCol))
-      .drop(SeqCol).drop(BucketCol)
-  }
-
-  /** Data-file names in one bucket directory — the compaction guard's
-    * snapshot unit (driver-side listing, never a Spark job). */
-  private def bucketFiles(path: String, b: Int): Set[String] = {
-    val d = Paths.get(s"$path/$BucketCol=$b")
-    if (!Files.exists(d)) Set.empty
-    else {
-      val s = Files.list(d)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).toSet
-      finally s.close()
-    }
-  }
+                   keys: Seq[String]): DataFrame =
+    latest(versioned(read(spark, path)), keys)
 
   /** Per-bucket compaction: every bucket directory holding more than one
     * data file (restricted to `only` when given) is collapsed to its
@@ -323,13 +291,10 @@ object PartitionedMerge {
     * buckets it rewrote. Idempotent, and read results are unchanged by
     * construction — the spec asserts both.
     *
-    * Concurrent-append protocol (r7 — replaces the r6 directory swap,
-    * which the multi-process spec caught failing: between "rename live
-    * dir aside" and "rename rewrite in", the bucket directory did not
-    * EXIST, and a concurrent appender's output-commit listing of the
-    * table died on the vanished path). The rewrite now never moves a
-    * directory at all: (1) the bucket's data files are SNAPSHOTTED and
-    * exactly those files are read and resolved — a delta landing later
+    * Concurrent appends: the rewrite never moves a directory (a bucket
+    * directory that briefly does not exist breaks a concurrent appender's
+    * listing of the table). (1) The bucket's data files are SNAPSHOTTED
+    * and exactly those files are read and resolved — a delta landing later
     * is simply not part of this compaction; (2) the resolved base FILE
     * is moved into the live directory under a fresh name; (3) the
     * snapshot files are deleted in increasing version order (base files
@@ -342,44 +307,18 @@ object PartitionedMerge {
     * crash at any step leaves base + leftover snapshot files — readers
     * stay correct and the next compaction folds again. This is also the
     * object-store-shaped commit: per-file puts and deletes, no atomic
-    * directory rename required. */
+    * directory rename required.
+    *
+    * Compactors mutually exclude via `Fs.withLock` (two appenders crossing
+    * the auto-compact threshold together must not both rewrite): busy →
+    * empty result, the running compactor covers the work. A lock older
+    * than `staleLockMs` is a crashed compactor's and is broken. */
   def compact(spark: SparkSession, path: String, keys: Seq[String],
               only: Option[Set[Int]] = None,
-              staleLockMs: Long = 10 * 60 * 1000L): Seq[(Int, Int)] = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) return Seq.empty
-    // Compactors mutually exclude via a try-lock (two appenders crossing
-    // the auto-compact threshold together must not both rewrite): busy →
-    // return empty, the running compactor covers the work. A lock older
-    // than `staleLockMs` (default 10 min) is a crashed compactor — break
-    // it and take over (the crash-recovery spec lowers the threshold to
-    // exercise the takeover without the wall-clock wait).
-    val lock = root.resolve("_compact_lock")
-    def tryLock(): Boolean =
-      try { Files.createFile(lock); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (!tryLock()) {
-      // the holder may delete the lock between our failed tryLock and the
-      // stat — treat a vanished lock as "just released" and retry below
-      val age =
-        try System.currentTimeMillis -
-          Files.getLastModifiedTime(lock).toMillis
-        catch { case _: java.nio.file.NoSuchFileException => -1L }
-      if (age >= 0 && age < staleLockMs) return Seq.empty
-      if (age >= staleLockMs) {
-        // break the stale lock ATOMICALLY: rename it aside, so of two
-        // processes both seeing a >10-min lock only the mover that wins
-        // the rename proceeds — a bare delete+create pair here let both
-        // delete each other's fresh lock and run concurrent rewrites
-        val tomb = root.resolve(s"_compact_lock.stale-${System.nanoTime}")
-        try { Files.move(lock, tomb); Files.deleteIfExists(tomb): Unit }
-        catch { case _: java.nio.file.NoSuchFileException => () }
-      }
-      if (!tryLock()) return Seq.empty
-    }
-    try compactLocked(spark, path, keys, only)
-    finally { Files.deleteIfExists(lock): Unit }
-  }
+              staleLockMs: Long = 10 * 60 * 1000L): Seq[(Int, Int)] =
+    if (!Files.exists(Paths.get(path))) Seq.empty
+    else Fs.withLock(Paths.get(path, "_compact_lock"), staleLockMs)(
+      compactLocked(spark, path, keys, only)).getOrElse(Seq.empty)
 
   private def compactLocked(spark: SparkSession, path: String,
                             keys: Seq[String],
@@ -387,32 +326,18 @@ object PartitionedMerge {
     // under the compactor lock: sweep tmp dirs of dead runs (crashed
     // before their own cleanup) — unique names make them unreferenced
     val abs = Paths.get(path).toAbsolutePath
-    val tmpPrefix = abs.getFileName.toString + ".tmp-compact-"
-    if (abs.getParent != null && Files.exists(abs.getParent)) {
-      val s = Files.list(abs.getParent)
-      val dead = try s.iterator().asScala.toList
-        .filter(_.getFileName.toString.startsWith(tmpPrefix))
-      finally s.close()
-      dead.foreach(graft.util.Fs.deleteRec)
-    }
-    val frag = bucketFileCounts(path).filter { case (b, n) =>
-      n > 1 && only.forall(_.contains(b))
-    }
-    if (frag.isEmpty) return Seq.empty
-    val touched = frag.map(_._1)
+    Fs.list(abs.getParent)
+      .filter(_.getFileName.toString.startsWith(s"${abs.getFileName}.tmp-compact-"))
+      .foreach(Fs.deleteRec)
     // snapshot the exact file set this compaction owns; deltas landing
     // after this listing are neither read nor deleted
-    val snapshot = touched.map(b => b -> bucketFiles(path, b)).toMap
-    val snapPaths = snapshot.toSeq.flatMap { case (b, fs) =>
-      fs.map(f => s"$path/$BucketCol=$b/$f")
-    }
-    if (snapPaths.isEmpty) return Seq.empty
-    val all = spark.read.option("mergeSchema", "true")
-      .option("basePath", path).parquet(snapPaths: _*)
-    val withSeq =
-      if (all.columns.contains(SeqCol))
-        all.withColumn(SeqCol, coalesce(col(SeqCol), lit(0L)))
-      else all.withColumn(SeqCol, lit(0L))
+    val snapshot = buckets(path).filter(b => only.forall(_.contains(b)))
+      .map(b => b -> dataFiles(bucketDir(path, b)))
+      .filter(_._2.size > 1)
+    if (snapshot.isEmpty) return Seq.empty
+    val withSeq = versioned(spark.read.option("mergeSchema", "true")
+      .option("basePath", path)
+      .parquet(snapshot.flatMap(_._2).map(_.toString): _*))
     // per-file max version — the DELETION ORDER below depends on it
     val fileRe = (java.util.regex.Pattern.quote(s"$BucketCol=") +
       "(\\d+)/([^/]+)$").r.unanchored
@@ -425,39 +350,24 @@ object PartitionedMerge {
           case _ => None
         }
       }.toMap
-    val resolved = Upsert.latestPerKey(withSeq, keys, Seq(SeqCol))
-      .drop(SeqCol)
     // unique per-run tmp dir: a crashed run's leftovers are inert to
     // every later run (and cleaned up by the next locked compactor)
     val tmp = path + s".tmp-compact-${System.nanoTime}"
-    resolved.repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(tmp)
-    touched.foreach { b =>
-      val target = Paths.get(s"$path/$BucketCol=$b")
-      val rewritten = Paths.get(s"$tmp/$BucketCol=$b")
-      // 1. commit the new base file(s) into the LIVE directory under
-      //    fresh names — the directory never vanishes, and concurrent
-      //    appenders' UUID part files can never collide
-      if (Files.exists(rewritten)) {
-        val s = Files.list(rewritten)
-        val bs = try s.iterator().asScala.toList finally s.close()
-        bs.filter(_.getFileName.toString.endsWith(".parquet"))
-          .zipWithIndex.foreach { case (f, i) =>
-            Files.move(f,
-              target.resolve(s"base-${System.nanoTime}-$i.parquet")): Unit
-          }
-      }
+    writeBuckets(latest(withSeq, keys), tmp)
+    snapshot.foreach { case (b, files) =>
+      // 1. commit the new base file(s) into the LIVE directory
+      moveDataFiles(bucketDir(tmp, b), bucketDir(path, b),
+        s"base-${System.nanoTime}")
       // 2. delete this compaction's snapshot files, lowest version first
       //    (see scaladoc invariant); files a concurrent appender landed
       //    meanwhile are not in the snapshot and are untouched
-      snapshot(b).toSeq
+      files.map(_.getFileName.toString)
         .sortBy(f => (fileVer.getOrElse((b, f), 0L), f))
-        .foreach(f =>
-          Files.deleteIfExists(Paths.get(s"$path/$BucketCol=$b/$f")): Unit)
+        .foreach(f => Files.deleteIfExists(bucketDir(path, b).resolve(f)): Unit)
     }
-    graft.util.Fs.deleteRec(Paths.get(tmp))
+    Fs.deleteRec(Paths.get(tmp))
     pruneMarkers(path)
-    frag
+    snapshot.map { case (b, files) => b -> files.size }
   }
 
   /** Replace-children merge for header-detail fan-out (ref FK CASCADE,
@@ -466,45 +376,20 @@ object PartitionedMerge {
     * `parents` is passed explicitly — a parent updated to ZERO children
     * must still have its stale children cleared. Buckets on the PARENT key
     * so a parent's children co-locate in one bucket, and only the buckets
-    * whose parents appear in the batch are rewritten. A touched bucket
-    * whose rows all disappear becomes an empty directory (kept so the
-    * partitioned read keeps working). */
+    * whose parents appear in the batch are rewritten. */
   def replaceChildren(spark: SparkSession, path: String, children: DataFrame,
                       parents: DataFrame, parentKey: String,
                       numBuckets: Int = 16): Unit = {
     val nb = resolveBuckets(path, numBuckets)
     val batch = children.localCheckpoint()
       .withColumn(BucketCol, bucketExpr(Seq(parentKey), nb))
-    val root = Paths.get(path)
-    if (!Files.exists(root)) {
-      batch.repartition(col(BucketCol))
-        .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(path)
-      stampMeta(path, nb)
-      return
-    }
     val parentKeys = parents.select(col(parentKey))
       .withColumn(BucketCol, bucketExpr(Seq(parentKey), nb))
       .distinct().localCheckpoint()
-    val touched = parentKeys.select(col(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val existing = spark.read.option("mergeSchema", "true").parquet(path)
-      .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-    val kept = existing.join(parentKeys.select(parentKey),
-      Seq(parentKey), "left_anti")
-    val merged = kept.unionByName(batch, allowMissingColumns = true)
-    val tmp = path + ".tmp"
-    merged.repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(tmp)
-    touched.foreach { b =>
-      val src = Paths.get(s"$tmp/$BucketCol=$b")
-      val dst = Paths.get(s"$path/$BucketCol=$b")
-      if (Files.exists(src)) graft.util.Fs.swapInto(src, dst)
-      else { // all rows of this bucket were deleted
-        graft.util.Fs.deleteRec(dst)
-        Files.createDirectories(dst): Unit
-      }
-    }
-    graft.util.Fs.deleteRec(Paths.get(tmp))
-    stampMeta(path, nb)
+    val touched = touchedBuckets(parentKeys)
+    val kept = inBuckets(existing(spark, path, batch), touched)
+      .join(parentKeys.select(parentKey), Seq(parentKey), "left_anti")
+    rewrite(path, kept.unionByName(batch, allowMissingColumns = true),
+      touched, nb)
   }
 }

@@ -23,17 +23,24 @@ object Upsert {
   /** Last-writer-wins merge: every key present in `updates` takes the update
     * row; all other existing rows pass through. Idempotent: merging the same
     * updates twice yields the same table. The updates batch is first
-    * collapsed to ONE row per key (API pages can duplicate records under
-    * concurrent source writes) — deterministically, ordering ties by every
-    * non-key column, matching the reference's ON CONFLICT single-row
-    * outcome. */
+    * collapsed to ONE row per key by `dedupe` (API pages can duplicate
+    * records under concurrent source writes). */
   def merge(existing: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
-    val nonKey = updates.columns.filterNot(keys.contains).toSeq
-    val uniq =
-      if (nonKey.isEmpty) updates.distinct()
-      else latestPerKey(updates, keys, nonKey)
+    val uniq = dedupe(updates, keys)
     val updateKeys = uniq.select(keys.map(col): _*).distinct()
     uniq.unionByName(existing.join(updateKeys, keys, "left_anti"))
+  }
+
+  /** The ETL layer's one dedupe rule: one row per key, the one with the
+    * highest `versions` (descending significance); ties are broken by every
+    * other non-key column, descending, so the pick never depends on row
+    * order — the reference's ON CONFLICT single-row outcome. A frame of
+    * keys only is made distinct. */
+  def dedupe(df: DataFrame, keys: Seq[String],
+             versions: Seq[String] = Nil): DataFrame = {
+    val order = versions ++
+      df.columns.filterNot(c => keys.contains(c) || versions.contains(c))
+    if (order.isEmpty) df.distinct() else latestPerKey(df, keys, order)
   }
 
   /** w2_latest_per_key: collapse a versioned changelog to the latest row per

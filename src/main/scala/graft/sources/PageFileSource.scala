@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -64,21 +63,14 @@ object PageFileSource {
     * (page, path) order wins, so `page-01.json` vs `page-1.json` can't
     * yield two rows); out-of-Int-range numbers are skipped, not fatal. */
   def listPages(dir: String): Seq[PageEntry] =
-    if (!Files.exists(Paths.get(dir))) Seq.empty
-    else {
-      val stream = Files.list(Paths.get(dir))
-      val all =
-        try stream.iterator().asScala.flatMap { p =>
-          p.getFileName.toString match {
-            case PageFile(n, dt) =>
-              n.toIntOption.map(pn => (pn, p.toString, Option(dt)))
-            case _ => None
-          }
-        }.toSeq
-        finally stream.close()
-      all.sorted.distinctBy(_._1)
-        .map { case (pn, path, dt) => PageEntry(pn, dt, path) }
-    }
+    graft.util.Fs.list(Paths.get(dir)).flatMap { p =>
+      p.getFileName.toString match {
+        case PageFile(n, dt) =>
+          n.toIntOption.map(pn => (pn, p.toString, Option(dt)))
+        case _ => None
+      }
+    }.sorted.distinctBy(_._1)
+      .map { case (pn, path, dt) => PageEntry(pn, dt, path) }
 }
 
 class PageTable(path: String) extends Table with SupportsRead {

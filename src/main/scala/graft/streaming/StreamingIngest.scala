@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -2023,10 +2021,9 @@ object StreamingIngest {
       // housekeeping, not correctness)
       Option(Paths.get(tmp).getParent).foreach { parent =>
         val base = Paths.get(tmp).getFileName.toString + ".displaced-"
-        val s = Files.list(parent)
-        val stale = try s.iterator().asScala.toList.filter(
-          _.getFileName.toString.startsWith(base)) finally s.close()
-        stale.foreach(graft.util.Fs.deleteRec)
+        graft.util.Fs.list(parent)
+          .filter(_.getFileName.toString.startsWith(base))
+          .foreach(graft.util.Fs.deleteRec)
       }
       graft.etl.PartitionedMerge.appendInto(spark, tmp, live, keys,
         numBuckets): Unit

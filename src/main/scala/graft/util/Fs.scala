@@ -1,28 +1,31 @@
 package graft.util
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path}
 import scala.jdk.CollectionConverters._
 
-/** Shared filesystem helpers for the write-temp-then-swap pattern. */
+/** Shared filesystem helpers: directory listing, the write-temp-then-swap
+  * pattern, and the create-if-absent primitives the table commits use. */
 object Fs {
-  /** Recursive delete that CLOSES the directory stream (Files.list leaks
-    * an fd per call otherwise — one per page merge adds up fast). */
+  /** Entries of directory `dir`; none if it does not exist. The stream
+    * is closed before returning (an unclosed `Files.list` leaks an fd per
+    * call, one per page merge). */
+  def list(dir: Path): List[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toList finally s.close()
+    }
+
+  /** Recursive delete; an absent path is a no-op. */
   def deleteRec(p: Path): Unit =
     if (Files.exists(p)) {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        val children = try s.iterator().asScala.toList finally s.close()
-        children.foreach(deleteRec)
-      }
+      list(p).foreach(deleteRec)
       Files.delete(p)
     }
 
-  /** Swap `tmp` into `target` without ever exposing a torn table (r8).
+  /** Swap `tmp` into `target` without ever exposing a torn table.
     *
-    * The old delete-then-move protocol had two crash defects: a crash
-    * MID-deleteRec left a torn-but-readable live table (silent partial
-    * data), and a crash after the delete lost the old state entirely.
-    * Now the live table is MOVED aside first (rename — atomic on one
+    * The live table is MOVED aside first (rename — atomic on one
     * filesystem), the replacement moved in, and only then is the old
     * state deleted; a failed move-in restores the original. Every state
     * visible at `target` is either the complete old table, absent (the
@@ -48,5 +51,43 @@ object Fs {
       throw e
     }
     deleteRec(aside)
+  }
+
+  /** False when `create` fails because its file already exists. */
+  private def created(create: => Any): Boolean =
+    try { create; true } catch { case _: FileAlreadyExistsException => false }
+
+  /** Claim the first integer ≥ `from` whose `create(n)` succeeds. `create`
+    * must be an atomic create-if-absent (`Files.createFile`,
+    * `Files.createDirectory`; an object store would use a put-if-absent
+    * write), so two concurrent claimers never get the same number. */
+  def claimNext(from: Long)(create: Long => Any): Long = {
+    var n = from
+    while (!created(create(n))) n += 1
+    n
+  }
+
+  /** Run `body` holding the try-lock file `lock`; None, without running
+    * it, while another holder has the lock. A lock older than `staleMs`
+    * is a crashed holder's and is broken ATOMICALLY by renaming it aside,
+    * so of two processes that both see it stale only the one whose rename
+    * wins goes on (a delete+create pair let both delete each other's
+    * fresh lock). A lock that vanishes between the failed create and the
+    * stat was just released, and is retried once. */
+  def withLock[T](lock: Path, staleMs: Long)(body: => T): Option[T] = {
+    def take() = created(Files.createFile(lock))
+    val held = take() || {
+      val age =
+        try System.currentTimeMillis - Files.getLastModifiedTime(lock).toMillis
+        catch { case _: NoSuchFileException => -1L }
+      if (age >= staleMs) {
+        val tomb = lock.resolveSibling(s"${lock.getFileName}.stale-${System.nanoTime}")
+        try { Files.move(lock, tomb); Files.deleteIfExists(tomb): Unit }
+        catch { case _: NoSuchFileException => () }
+      }
+      (age < 0 || age >= staleMs) && take()
+    }
+    if (!held) None
+    else try Some(body) finally { Files.deleteIfExists(lock): Unit }
   }
 }

@@ -158,8 +158,7 @@ class CompactionSpec extends SparkSpec {
     assert(got === Seq((7, "delta7"), (8, "merge8")))
   }
 
-  test("seq allocation is marker-atomic, survives compaction, migrates " +
-      "the legacy counter") {
+  test("seq allocation is marker-atomic and survives compaction") {
     val path = tmpDir("seq") + "/t"
     def seqs(): Seq[Long] =
       spark.read.option("mergeSchema", "true").parquet(path)
@@ -185,17 +184,6 @@ class CompactionSpec extends SparkSpec {
     val resolved = PartitionedMerge.readResolved(spark, path, Seq("id"))
       .orderBy("id").as[(Int, String)].collect().toSeq
     assert(resolved === Seq((1, "a2"), (2, "b"), (3, "c")))
-    // legacy table: a pre-r4 _delta_seq counter floors the new allocator
-    val legacy = tmpDir("seq-legacy") + "/t"
-    PartitionedMerge.appendInto(spark, legacy,
-      Seq((1, "x")).toDF("id", "name"), Seq("id"), 4)
-    graft.util.Fs.deleteRec(Paths.get(legacy, "_seq"))
-    Files.write(Paths.get(legacy, "_delta_seq"), "9".getBytes("UTF-8"))
-    PartitionedMerge.appendInto(spark, legacy,
-      Seq((1, "y")).toDF("id", "name"), Seq("id"), 4)
-    val lg = spark.read.parquet(legacy).select("gseq").distinct()
-      .as[Long].collect().toSeq.sorted
-    assert(lg === Seq(1L, 10L))
   }
 
   test("crashed-run leftovers are inert: orphan tmp dirs never surface " +

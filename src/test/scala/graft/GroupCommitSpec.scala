@@ -1,13 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
-import graft.etl.{GroupCommit, PartitionedMerge}
+import graft.etl.{GroupCommit, PartitionedMerge, Upsert}
 
-/** Group commit (round 2): per-page durability with one merge per K pages. */
+/** Group commit: per-page durability with one merge per K pages. */
 class GroupCommitSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,6 +17,10 @@ class GroupCommitSpec extends SparkSpec {
       PartitionedMerge.read(spark, path)
         .orderBy("id").as[(String, String)].collect().toSeq
     else Seq.empty
+
+  private def pages(staging: String): Seq[String] =
+    graft.util.Fs.list(Paths.get(staging)).map(_.getFileName.toString)
+      .filter(_.startsWith("p=")).sorted
 
   private def gc(staging: String, path: String, every: Int): GroupCommit =
     new GroupCommit(spark, staging, every, "id",
@@ -35,8 +40,8 @@ class GroupCommitSpec extends SparkSpec {
     assert(g.stage(Seq(("3", "c")).toDF("id", "v")) === 1L)
     // 3rd page triggers the merge; page order wins for key 2
     assert(table(s"$root/t") === Seq(("1", "a"), ("2", "b2"), ("3", "c")))
-    // cleared: no PAGE dirs remain (since the r7 concurrent-flush fix the
-    // staging root itself persists — flush deletes exactly what it merged)
+    // cleared: no PAGE dirs remain (the staging root itself persists —
+    // flush deletes exactly what it merged)
     val s = Files.list(Paths.get(s"$root/staging"))
     val left = try s.iterator().asScala
       .count(_.getFileName.toString.startsWith("p="))
@@ -106,5 +111,47 @@ class GroupCommitSpec extends SparkSpec {
     val g1 = gc(s"$root/staging1", s"$root/t1", 1)
     g1.stage(Seq(("9", "z")).toDF("id", "v"))
     assert(table(s"$root/t1") === Seq(("9", "z"))) // merged immediately
+  }
+
+  test("duplicate ids in one page: the winner does not depend on row " +
+      "order and is Upsert.merge's") {
+    val rows = Seq(("1", "a"), ("2", "b"), ("1", "z"), ("2", "c"))
+    // one file per page keeps the row order into the flush's window
+    val got = Seq(rows, rows.reverse).map { page =>
+      val root = tmpDir("gcdup")
+      gc(s"$root/staging", s"$root/t", 1).stage(page.toDF("id", "v").coalesce(1))
+      table(s"$root/t")
+    }
+    val want = Upsert.merge(Seq.empty[(String, String)].toDF("id", "v"),
+      rows.toDF("id", "v"), Seq("id"))
+      .orderBy("id").as[(String, String)].collect().toSeq
+    assert(want === Seq(("1", "z"), ("2", "c")))
+    assert(got === Seq(want, want))
+  }
+
+  test("flush leaves the pages staged while another flusher holds the lock") {
+    val root = tmpDir("gclock")
+    val g = gc(s"$root/staging", s"$root/t", 10)
+    g.stage(Seq(("1", "a")).toDF("id", "v"))
+    val lock = Paths.get(s"$root/staging/_flush_lock")
+    Files.createFile(lock)
+    assert(g.flush() === 0L)
+    assert(table(s"$root/t").isEmpty)
+    assert(pages(s"$root/staging") === Seq("p=1"))
+    assert(Files.exists(lock), "a live holder's lock must not be removed")
+  }
+
+  test("flush breaks a lock older than 10 min and merges") {
+    val root = tmpDir("gclock")
+    val g = gc(s"$root/staging", s"$root/t", 10)
+    g.stage(Seq(("1", "a")).toDF("id", "v"))
+    val lock = Paths.get(s"$root/staging/_flush_lock")
+    Files.createFile(lock)
+    Files.setLastModifiedTime(lock,
+      FileTime.fromMillis(System.currentTimeMillis - 11 * 60 * 1000L))
+    assert(g.flush() === 1L)
+    assert(table(s"$root/t") === Seq(("1", "a")))
+    assert(pages(s"$root/staging").isEmpty)
+    assert(!Files.exists(lock))
   }
 }

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** One session factory and no function registration: scans `src/main` for
-  * the setup paths `Sessions.local` and the typed `graft.functions`
-  * builders replaced, and pins the factory's session settings. */
+/** One session factory, no function registration and one directory
+  * listing: scans `src/main` for the setup paths `Sessions.local` and the
+  * typed `graft.functions` builders replaced and for inline `Files.list`
+  * calls, and pins the factory's session settings. */
 class SessionsSpec extends SparkSpec {
 
   private lazy val mainSources: Seq[Path] = {
@@ -37,6 +38,14 @@ class SessionsSpec extends SparkSpec {
     // spelled in pieces so this file does not match its own scan
     val hits = offenders(Seq("createOrReplace" + "TempFunction",
       "inject" + "Function", "\"graft" + "_[a-z_]+\\(").mkString("|"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("Files.list appears only in util/Fs.scala") {
+    // Fs.list closes the directory stream; an inline Files.list that is
+    // not closed leaks one file descriptor per call
+    val hits = offenders("""Files\.list\(""",
+      _.endsWith(Paths.get("util", "Fs.scala")))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
