@@ -17,7 +17,7 @@ import graft.util.Fs
   * pages are collapsed to the latest version per record (`p` ascending =
   * page order, later pages win — exactly what replaying the per-page
   * upserts would produce; duplicates within one page fall to
-  * `Upsert.dedupe`'s tie rule) and handed to `merge` ONCE.
+  * `Upsert.dedupe`'s tie rule), pinned, and handed to `merge` ONCE.
   *
   * Cost: per-page work drops from O(table) merge to O(page) append; the
   * merge runs P/K times instead of P (with the bucket-partitioned merge it
@@ -58,8 +58,9 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
     batch.write.mode("overwrite").parquet(tmp.toString)
     Files.move(tmp, Paths.get(s"$stagingDir/p=$next"),
       StandardCopyOption.ATOMIC_MOVE)
-    // count from the staged parquet footers — never re-runs decode lineage
-    val n = spark.read.parquet(s"$stagingDir/p=$next").count()
+    // count the staged files (never the decode lineage) under the batch's
+    // own schema: no schema-inference job
+    val n = spark.read.schema(batch.schema).parquet(s"$stagingDir/p=$next").count()
     if (pages.size + 1 >= every) flush()
     n
   }
@@ -90,7 +91,9 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
         // pages staged across an additive schema change still union
         val all = spark.read.option("mergeSchema", "true")
           .option("basePath", stagingDir).parquet(dirs: _*)
-        val n = merge(Upsert.dedupe(all, Seq(key), Seq("p")).drop("p"))
+        // pinned: a callback that reads the batch more than once (pedidos:
+        // headers, items, parent keys) must not re-run the dedupe
+        val n = merge(Upsert.dedupe(all, Seq(key), Seq("p")).drop("p").localCheckpoint())
         dirs.foreach(d => Fs.deleteRec(Paths.get(d)))
         n
       }

@@ -48,7 +48,7 @@ object IngestStress {
       Files.writeString(Paths.get(s"$src/produtos/page-$p.json"), env): Unit
     }
 
-    val store = new graft.state.StateStore(spark, s"$tgt/_state")
+    val store = new graft.state.StateStore(s"$tgt/_state")
     val table = s"$tgt/produtos"
     def mapped(batch: org.apache.spark.sql.DataFrame) =
       batch.selectExpr("cast(id as int) as id_produto",

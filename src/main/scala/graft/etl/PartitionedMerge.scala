@@ -105,11 +105,13 @@ object PartitionedMerge {
                        like: DataFrame): DataFrame =
     if (Files.exists(Paths.get(path))) scan(spark, path) else like.limit(0)
 
-  /** Distinct buckets of `df`: a ≤numBuckets-int driver collect, never
-    * data rows. */
-  private def touchedBuckets(df: DataFrame): Seq[Int] =
-    df.select(col(BucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+  /** Row count and sorted distinct buckets of `df` from one aggregate: a
+    * ≤numBuckets-int driver collect, never data rows. */
+  private def countAndBuckets(df: DataFrame): (Long, Seq[Int]) = {
+    val r = df.agg(count(lit(1)), sort_array(collect_set(col(BucketCol))))
+      .head()
+    (r.getLong(0), r.getSeq[Int](1))
+  }
 
   /** Partition pruning keeps the scan to the touched directories only. */
   private def inBuckets(df: DataFrame, touched: Seq[Int]): DataFrame =
@@ -160,20 +162,20 @@ object PartitionedMerge {
     * row count. Idempotent: re-merging the same batch is a no-op. */
   def mergeInto(spark: SparkSession, path: String, updates: DataFrame,
                 keys: Seq[String], numBuckets: Int = 16): Long = {
-    // referenced multiple times (count, distinct buckets, merge union):
-    // pin once so the decode lineage doesn't re-run per reference
-    val flat = updates.localCheckpoint()
-    val n = flat.count()
-    if (n == 0) return 0L
+    // referenced three times (count and buckets, anti-join keys, merge
+    // union): pin once so the caller's lineage doesn't re-run per reference
     val nb = resolveBuckets(path, numBuckets)
-    val batch = flat.withColumn(BucketCol, bucketExpr(keys, nb))
-    val touched = touchedBuckets(batch)
+    val batch = updates.withColumn(BucketCol, bucketExpr(keys, nb))
+      .localCheckpoint()
+    val (n, touched) = countAndBuckets(batch)
+    if (n == 0) return 0L
     val table = existing(spark, path, batch)
     val evolved = SchemaEvolution.mergeAdditive(table.schema, batch.schema)
-    val merged = Upsert.merge(
+    val conformed = SchemaEvolution.conform(batch, evolved)
+    // the key set comes from the pinned batch, so the dedupe runs once
+    rewrite(path, Upsert.replaceKeys(
       inBuckets(SchemaEvolution.conform(table, evolved), touched),
-      SchemaEvolution.conform(batch, evolved), keys)
-    rewrite(path, merged, touched, nb)
+      Upsert.dedupe(conformed, keys), conformed, keys), touched, nb)
     n
   }
 
@@ -381,12 +383,13 @@ object PartitionedMerge {
                       parents: DataFrame, parentKey: String,
                       numBuckets: Int = 16): Unit = {
     val nb = resolveBuckets(path, numBuckets)
-    val batch = children.localCheckpoint()
-      .withColumn(BucketCol, bucketExpr(Seq(parentKey), nb))
+    // children are read once (the write); the parent keys twice (touched
+    // buckets, anti join), so only they are pinned
+    val batch = children.withColumn(BucketCol, bucketExpr(Seq(parentKey), nb))
     val parentKeys = parents.select(col(parentKey))
       .withColumn(BucketCol, bucketExpr(Seq(parentKey), nb))
-      .distinct().localCheckpoint()
-    val touched = touchedBuckets(parentKeys)
+      .localCheckpoint()
+    val touched = countAndBuckets(parentKeys)._2
     val kept = inBuckets(existing(spark, path, batch), touched)
       .join(parentKeys.select(parentKey), Seq(parentKey), "left_anti")
     rewrite(path, kept.unionByName(batch, allowMissingColumns = true),

@@ -103,7 +103,7 @@ object Pipeline {
     * run every K pages (K=1 ⇒ the reference's literal per-page commit). */
   def run(spark: SparkSession, sourceDir: String, targetDir: String,
           now: Instant, groupCommitPages: Int = 1): RunReport = {
-    val store = new StateStore(spark, s"$targetDir/_state")
+    val store = new StateStore(s"$targetDir/_state")
     Files.createDirectories(Paths.get(targetDir))
     val steps = scala.collection.mutable.ArrayBuffer[StepReport]()
 
@@ -225,15 +225,16 @@ object Pipeline {
         sink, now)
     })
 
-    // audit: COUNT(*) per loaded table (ref :395-402)
+    // audit: COUNT(*) per loaded table (ref :395-402), every table in one
+    // grouped count; a table with no rows has no group and counts 0
     val tables = Seq("categorias", "produtos", "produto_estoque_total",
       "produto_estoque_depositos", "pedidos", "pedido_itens")
-    val audit = tables.flatMap { tbl =>
-      val p = s"$targetDir/$tbl"
-      if (Files.exists(Paths.get(p)))
-        Some(tbl -> readTable(spark, p).count())
-      else None
-    }.toMap
-    RunReport(steps.toSeq, audit)
+      .filter(t => Files.exists(Paths.get(s"$targetDir/$t")))
+    val counts = tables
+      .map(t => readTable(spark, s"$targetDir/$t").select(lit(t).as("t")))
+      .reduceOption(_ union _).toSeq
+      .flatMap(_.groupBy("t").count().collect())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    RunReport(steps.toSeq, tables.map(t => t -> counts.getOrElse(t, 0L)).toMap)
   }
 }

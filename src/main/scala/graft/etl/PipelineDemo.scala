@@ -16,7 +16,7 @@ object PipelineDemo {
     report.steps.foreach(s => println(s"[step] ${s.process}: ${s.outcome}"))
     report.audit.toSeq.sortBy(_._1)
       .foreach { case (t, n) => println(s"[audit] $t: $n rows") }
-    val store = new graft.state.StateStore(spark, s"$targetDir/_state")
+    val store = new graft.state.StateStore(s"$targetDir/_state")
     Seq("produtos", "estoques", "pedidos").foreach { p =>
       println(s"[state] $p watermark=${store.rawWatermark(p)} " +
         s"progress=${store.getProgress(p)}")

@@ -27,9 +27,16 @@ object Upsert {
     * records under concurrent source writes). */
   def merge(existing: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
     val uniq = dedupe(updates, keys)
-    val updateKeys = uniq.select(keys.map(col): _*).distinct()
-    uniq.unionByName(existing.join(updateKeys, keys, "left_anti"))
+    replaceKeys(existing, uniq, uniq.select(keys.map(col): _*).distinct(), keys)
   }
+
+  /** `rows` plus every `existing` row whose key does not occur in `keyed`.
+    * `keyed` only supplies the key set and may repeat keys (the anti join
+    * tests membership), so a caller holding its batch pinned passes the
+    * batch itself: no second dedupe, no distinct shuffle. */
+  def replaceKeys(existing: DataFrame, rows: DataFrame, keyed: DataFrame,
+                  keys: Seq[String]): DataFrame =
+    rows.unionByName(existing.join(keyed.select(keys.map(col): _*), keys, "left_anti"))
 
   /** The ETL layer's one dedupe rule: one row per key, the one with the
     * highest `versions` (descending significance); ties are broken by every

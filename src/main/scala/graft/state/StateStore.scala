@@ -1,30 +1,39 @@
 package graft.state
 
-import java.nio.file.{Files, Path, Paths}
-import java.sql.Timestamp
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
-import scala.util.Try
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
-/** Pipeline state tables (SURVEY.md §2.7 s1/s2/s5): the Spark re-expression
-  * of the reference's `script_ultima_execucao` (watermarks, one row per
+/** Pipeline state tables (SURVEY.md §2.7 s1/s2/s5): the re-expression of
+  * the reference's `script_ultima_execucao` (watermarks, one row per
   * process, tiny_api_v2_cliente.py:90) and `script_progresso_paginas` (page
   * checkpoints, :91).
   *
-  * Storage: single-partition parquet directories rewritten per update via
-  * write-temp-then-swap (the local-FS stand-in for an atomic table-format
-  * commit; at cluster scale this is a Delta/Iceberg MERGE — SURVEY.md §7.4).
-  * State is O(#processes) rows, so driver-side read-modify-write is correct
-  * by design — the 100 TB posture keeps *data* distributed, not these
-  * few-row control tables.
+  * State is O(#processes) rows, so it is read and written on the driver
+  * and never launches a Spark job: each table is one JSON-lines file under
+  * `dir`, one object per row keyed by the `wmSchema`/`pgSchema` column
+  * names. A timestamp is stored as microseconds since the epoch, the
+  * precision of Spark's `TimestampType`, so a watermark round-trips exactly
+  * as it did through a parquet column (sub-microsecond nanos truncate).
+  *
+  * Commit: every update writes the whole table to `<file>.tmp` and renames
+  * it over the live file (rename(2) — atomic on one filesystem), so a
+  * reader sees the complete old table or the complete new one. A `.tmp`
+  * left by a crashed writer is never read and the next write replaces it.
+  * At cluster scale this is a catalog table's atomic commit (SURVEY.md
+  * §7.4); the 100 TB posture keeps *data* distributed, not these few-row
+  * control tables.
   */
-class StateStore(spark: SparkSession, dir: String) {
+class StateStore(dir: String) {
   import StateStore._
 
-  private val wmPath = s"$dir/watermarks"
-  private val pgPath = s"$dir/progress"
+  private val wmFile = Paths.get(dir, "watermarks.jsonl")
+  private val pgFile = Paths.get(dir, "progress.jsonl")
 
   // ---- s1/s2: watermark store -----------------------------------------
 
@@ -36,46 +45,50 @@ class StateStore(spark: SparkSession, dir: String) {
 
   /** The stored value itself (no +1 s) — what s2 wrote. */
   def rawWatermark(process: String): Option[Instant] =
-    readKv(wmPath, wmSchema)
-      .filter(_.getString(0) == process)
-      .map(r => r.getTimestamp(1).toInstant)
-      .headOption
+    rows(wmFile, wmSchema).find(_.get(0) == process).map(_.getAs[Instant](1))
 
   /** s2_watermark_write: upsert the watermark. The caller passes the step
     * START time, never the end time (ref :326,363) — records modified
     * mid-run get re-fetched next run instead of lost. */
-  def setWatermark(process: String, ts: Instant): Unit = {
-    val rest = readKv(wmPath, wmSchema).filterNot(_.getString(0) == process)
-    writeKv(wmPath, wmSchema, rest :+ Row(process, Timestamp.from(ts)))
-  }
+  def setWatermark(process: String, ts: Instant): Unit =
+    upsert(wmFile, wmSchema, Row(process, ts))
 
   // ---- s5: page-checkpoint store --------------------------------------
 
   def getProgress(process: String): Option[Progress] =
-    readKv(pgPath, pgSchema).find(_.getString(0) == process).map { r =>
-      Progress(r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
-        r.getLong(4), r.getString(5))
+    rows(pgFile, pgSchema).find(_.get(0) == process).map(r => Progress(
+      r.getString(0), r.getString(1), r.getInt(2), r.getInt(3), r.getLong(4),
+      r.getString(5)))
+
+  def upsertProgress(p: Progress): Unit =
+    upsert(pgFile, pgSchema, Row.fromTuple(p))
+
+  // ---- driver-side JSON-lines tables, keyed on column 0 ----------------
+
+  private val json = new ObjectMapper()
+
+  private def rows(file: Path, schema: StructType): Seq[Row] =
+    if (!Files.exists(file)) Nil
+    else Files.readAllLines(file).asScala.toSeq.map { line =>
+      val obj = json.readTree(line)
+      Row.fromSeq(schema.map(f => (f.dataType, obj.required(f.name)) match {
+        case (TimestampType, v) => DateTimeUtils.microsToInstant(v.asLong)
+        case (IntegerType, v) => v.asInt
+        case (LongType, v) => v.asLong
+        case (_, v) => v.asText
+      }))
     }
 
-  def upsertProgress(p: Progress): Unit = {
-    val rest = readKv(pgPath, pgSchema).filterNot(_.getString(0) == p.process)
-    writeKv(pgPath, pgSchema, rest :+ Row(p.process, p.filter, p.page,
-      p.totalPages, p.records, p.status))
-  }
-
-  // ---- tiny-kv parquet plumbing ---------------------------------------
-
-  private def readKv(path: String, schema: StructType): Seq[Row] =
-    if (Files.exists(Paths.get(path)))
-      spark.read.schema(schema).parquet(path).collect().toSeq
-    else Seq.empty
-
-  private def writeKv(path: String, schema: StructType, rows: Seq[Row]): Unit = {
-    val tmp = path + ".tmp"
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    graft.util.Fs.swapInto(Paths.get(tmp), Paths.get(path))
+  private def upsert(file: Path, schema: StructType, row: Row): Unit = {
+    val lines = (rows(file, schema).filterNot(_.get(0) == row.get(0)) :+ row)
+      .map(r => json.writeValueAsString(schema.names.zip(r.toSeq.map {
+        case ts: Instant => DateTimeUtils.instantToMicros(ts)
+        case v => v
+      }).toMap.asJava))
+    val tmp = file.resolveSibling(s"${file.getFileName}.tmp")
+    Files.createDirectories(file.getParent)
+    Files.write(tmp, lines.asJava) // UTF-8
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE): Unit
   }
 }
 

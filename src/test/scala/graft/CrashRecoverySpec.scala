@@ -35,7 +35,7 @@ class CrashRecoverySpec extends SparkSpec {
     }
 
   private def runToCompletion(root: String, failAt: Set[(Int, Int)]): Long = {
-    val store = new StateStore(spark, s"$root/_state")
+    val store = new StateStore(s"$root/_state")
     val attempts = scala.collection.mutable.Map[Int, Int]()
     val now = Instant.parse("2024-06-15T08:00:00Z")
     var outcome: IncrementalStep.Outcome = null

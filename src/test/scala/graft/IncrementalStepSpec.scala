@@ -28,7 +28,7 @@ class IncrementalStepSpec extends SparkSpec {
       else Right(Some(FetchedPage(page(p), pages)))
 
   test("complete run: CONCLUIDO + watermark = step START time") {
-    val store = new StateStore(spark, tmpDir("step"))
+    val store = new StateStore(tmpDir("step"))
     var sunk = Vector.empty[Int]
     val out = IncrementalStep.run(store, "produtos", fetcherOf(3),
       b => { sunk :+= b.count().toInt; b.count() }, now)
@@ -40,7 +40,7 @@ class IncrementalStepSpec extends SparkSpec {
   }
 
   test("failure mid-run: ERRO recorded, watermark NOT advanced") {
-    val store = new StateStore(spark, tmpDir("step"))
+    val store = new StateStore(tmpDir("step"))
     val out = IncrementalStep.run(store, "pedidos", fetcherOf(5, failAt = 3),
       _.count(), now)
     assert(out === Failed(3, "boom at page 3"))
@@ -49,7 +49,7 @@ class IncrementalStepSpec extends SparkSpec {
   }
 
   test("resume: same filter + ERRO resumes at saved page + 1") {
-    val store = new StateStore(spark, tmpDir("step"))
+    val store = new StateStore(tmpDir("step"))
     assert(IncrementalStep.run(store, "pedidos", fetcherOf(5, failAt = 3),
       _.count(), now).isInstanceOf[Failed])
     // second run, same now => same filter => resume at page 3
@@ -61,7 +61,7 @@ class IncrementalStepSpec extends SparkSpec {
   }
 
   test("reset: a different filter restarts from page 1") {
-    val store = new StateStore(spark, tmpDir("step"))
+    val store = new StateStore(tmpDir("step"))
     assert(IncrementalStep.run(store, "pedidos", fetcherOf(5, failAt = 3),
       _.count(), now).isInstanceOf[Failed])
     // watermark-less second run at a later 'now' => different filter => reset
@@ -74,7 +74,7 @@ class IncrementalStepSpec extends SparkSpec {
   }
 
   test("empty result set completes immediately and still advances watermark") {
-    val store = new StateStore(spark, tmpDir("step"))
+    val store = new StateStore(tmpDir("step"))
     val out = IncrementalStep.run(store, "estoques", (_, _) => Right(None),
       _.count(), now, fixedWindowDays = Some(29))
     assert(out === Completed(0, 0L))
@@ -84,7 +84,7 @@ class IncrementalStepSpec extends SparkSpec {
   test("budget is per-RUN: resume past maxPages still gets a fresh budget") {
     // regression: bounding the absolute page number instead of pages
     // processed this run made any resume past maxPages a permanent no-op
-    val store = new StateStore(spark, tmpDir("step"))
+    val store = new StateStore(tmpDir("step"))
     assert(IncrementalStep.run(store, "produtos", fetcherOf(10),
       _.count(), now, maxPages = 4) === BudgetExhausted(4, 4L))
     var fetched = Vector.empty[Int]
@@ -100,7 +100,7 @@ class IncrementalStepSpec extends SparkSpec {
   }
 
   test("page budget exhaustion leaves EM_ANDAMENTO for next-run resume") {
-    val store = new StateStore(spark, tmpDir("step"))
+    val store = new StateStore(tmpDir("step"))
     val out = IncrementalStep.run(store, "produtos", fetcherOf(100),
       _.count(), now, maxPages = 4)
     assert(out === BudgetExhausted(4, 4L))

@@ -2,7 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.time.Instant
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.etl.{IncrementalStep, Pipeline}
 
@@ -64,7 +70,7 @@ class PipelineSpec extends SparkSpec {
     assert(r2.steps.forall(_.outcome.isInstanceOf[IncrementalStep.Completed]))
     assert(r2.audit === r1.audit) // same keys re-upserted, no duplicates
 
-    val store = new graft.state.StateStore(spark, s"$tgt/_state")
+    val store = new graft.state.StateStore(s"$tgt/_state")
     assert(store.rawWatermark("produtos") === Some(now2)) // start-time semantics
     assert(store.rawWatermark("pedidos") === Some(now2))
     assert(store.getProgress("produtos").get.status
@@ -98,4 +104,68 @@ class PipelineSpec extends SparkSpec {
       assert(left === 0)
     }
   }
+
+  /** Call site of every job started while registered: the SQL
+    * execution's description when the job belongs to one (adaptive
+    * execution submits stage jobs from its own threads), else the result
+    * stage's name — `count at Pipeline.scala:236`. */
+  private class JobSites extends SparkListener {
+    private val execs = mutable.Map[Long, String]()
+    private val started = mutable.ArrayBuffer[(Int, String)]()
+    private val ended = mutable.Set[Int]()
+    @volatile private var last = System.nanoTime()
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => synchronized {
+        last = System.nanoTime(); execs(x.executionId) = x.description }
+      case _ =>
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      last = System.nanoTime()
+      val exec = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => execs.get(id.toLong))
+      started += e.jobId -> exec.getOrElse(
+        e.stageInfos.maxBy(_.stageId).name)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      last = System.nanoTime(); ended += e.jobId }
+
+    /** The sites of the jobs seen so far, once every started job has ended
+      * and the (asynchronous) bus has been quiet for 300 ms. */
+    def drain(): Seq[String] = {
+      val deadline = System.nanoTime() + 30000000000L
+      def quiet = synchronized(started.forall(j => ended(j._1)) &&
+        System.nanoTime() - last > 300000000L)
+      while (!quiet && System.nanoTime() < deadline) Thread.sleep(20)
+      synchronized { val s = started.map(_._2).toSeq; started.clear(); s }
+    }
+  }
+
+  test("job budget: state launches no Spark job; a re-run stays within its pin") {
+    val src = stageSource()
+    val tgt = tmpDir("pipe-jobs")
+    val now = Instant.parse("2024-06-15T08:00:00Z")
+    val sites = new JobSites
+    spark.sparkContext.addSparkListener(sites)
+    try {
+      sites.drain()
+      Pipeline.run(spark, src, tgt, now)
+      val first = sites.drain()
+      val r2 = Pipeline.run(spark, src, tgt, now.plusSeconds(86400))
+      val second = sites.drain()
+      assert(r2.steps.forall(_.outcome.isInstanceOf[IncrementalStep.Completed]))
+      val state = (first ++ second).filter(_.contains("StateStore.scala"))
+      assert(state.isEmpty, state.mkString("\n"))
+      // Pinned job count of the second (incremental) run. Before the state
+      // tables moved to the driver and each merge batch was evaluated once,
+      // this run took 157 jobs (34 of them state reads and writes). Re-pin
+      // only together with the plan change that moves it.
+      assert(second.size <= JobBudget,
+        second.groupBy(identity).view.mapValues(_.size).toSeq
+          .sortBy(-_._2).mkString("\n"))
+    } finally spark.sparkContext.removeSparkListener(sites)
+  }
+
+  private val JobBudget = 91
 }
