@@ -1,8 +1,7 @@
 #!/usr/bin/env python3
 """Attribute a Spark event log's wall time to call sites.
 
-Usage: python3 scripts/eventlog_sites.py <eventlog> [--spans FILE [--span NAME]]
-                                          [--top N]
+Usage: python3 scripts/eventlog_sites.py <eventlog> [--spans FILE]
 
 <eventlog> is a Spark event log: a plain JSON-lines file, a `.zstd` file
 (decompressed with `zstd -dc`), or a rolling event-log directory
@@ -17,10 +16,11 @@ between Spark calls), so the per-site milliseconds add up to the wall time
 of the window. Prints, per call site: units, jobs, ms (gap included) and
 the gap share, busiest first.
 
---spans restricts the walk to the intervals of the spans named NAME
-(default `run`) in a perfbench spans file (`perfbench/out/spans-*.jsonl`,
-written with `--trace 1`); the counts are then totals over those spans and
-a last line gives the number of spans. Without it the whole log is walked.
+--spans restricts the walk to the intervals of the `run` spans (one
+`Pipeline.run` each) in a perfbench spans file
+(`perfbench/out/spans-etl_incremental-*.jsonl`, written with `--trace 1`);
+the counts are then totals over those spans and a last line gives the
+number of spans. Without it the whole log is walked.
 """
 import argparse
 import glob
@@ -84,12 +84,12 @@ def units(path):
     return sorted(out)
 
 
-def windows(spans_path, name):
+def windows(spans_path):
     ws = []
     with open(spans_path, encoding="utf-8") as f:
         for line in f:
             s = json.loads(line)
-            if s["name"] == name:
+            if s["name"] == "run":
                 ws.append((s["start_ms"], s["end_ms"]))
     return sorted(ws)
 
@@ -116,26 +116,19 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("eventlog")
     ap.add_argument("--spans")
-    ap.add_argument("--span", default="run")
-    ap.add_argument("--top", type=int, default=40)
     a = ap.parse_args()
     us = units(a.eventlog)
     if not us:
         sys.exit("no completed jobs in the event log")
-    ws = windows(a.spans, a.span) if a.spans else [(us[0][0], max(u[1] for u in us))]
+    ws = windows(a.spans) if a.spans else [(us[0][0], max(u[1] for u in us))]
     if not ws:
-        sys.exit(f"no span named {a.span!r} in {a.spans}")
+        sys.exit(f"no run span in {a.spans}")
     acc = defaultdict(lambda: [0, 0, 0.0, 0.0])
     wall = sum(attribute(us, lo, hi, acc) for lo, hi in ws)
     rows = sorted(acc.items(), key=lambda kv: -kv[1][2])
     print(f"{'call site':<58} {'units':>5} {'jobs':>5} {'ms':>9} {'gap ms':>8}")
-    for site, (u, j, ms, gap) in rows[:a.top]:
+    for site, (u, j, ms, gap) in rows:
         print(f"{site[:58]:<58} {u:>5} {j:>5} {ms:>9.0f} {gap:>8.0f}")
-    if len(rows) > a.top:
-        rest = rows[a.top:]
-        print(f"{'(%d more sites)' % len(rest):<58} "
-              f"{sum(r[1][0] for r in rest):>5} {sum(r[1][1] for r in rest):>5} "
-              f"{sum(r[1][2] for r in rest):>9.0f} {sum(r[1][3] for r in rest):>8.0f}")
     tu = sum(v[0] for v in acc.values())
     tj = sum(v[1] for v in acc.values())
     tms = sum(v[2] for v in acc.values())

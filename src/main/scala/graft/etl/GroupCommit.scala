@@ -17,7 +17,7 @@ import graft.util.Fs
   * pages are collapsed to the latest version per record (`p` ascending =
   * page order, later pages win — exactly what replaying the per-page
   * upserts would produce; duplicates within one page fall to
-  * `Upsert.dedupe`'s tie rule), pinned, and handed to `merge` ONCE.
+  * `Upsert.dedupe`'s tie rule) and handed to `merge` ONCE.
   *
   * Cost: per-page work drops from O(table) merge to O(page) append; the
   * merge runs P/K times instead of P (with the bucket-partitioned merge it
@@ -91,9 +91,7 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
         // pages staged across an additive schema change still union
         val all = spark.read.option("mergeSchema", "true")
           .option("basePath", stagingDir).parquet(dirs: _*)
-        // pinned: a callback that reads the batch more than once (pedidos:
-        // headers, items, parent keys) must not re-run the dedupe
-        val n = merge(Upsert.dedupe(all, Seq(key), Seq("p")).drop("p").localCheckpoint())
+        val n = merge(Upsert.dedupe(all, Seq(key), Seq("p")).drop("p"))
         dirs.foreach(d => Fs.deleteRec(Paths.get(d)))
         n
       }

@@ -163,7 +163,10 @@ object Pipeline {
     })
 
     // PASSO 3: estoques (ref :388) — fixed 29 d window, no watermark read
-    safeStep("estoques")(grouped("estoques")(batch => {
+    // the batch feeds two merges: pinned, so the staging read and the
+    // flush's dedupe run once
+    safeStep("estoques")(grouped("estoques")(staged => {
+      val batch = staged.localCheckpoint()
       val n = mergeInto(spark, s"$targetDir/produto_estoque_total",
         batch.select(col("id").cast("int").as("id_produto"),
           Coercions.coerceBrFloat(col("saldo")).as("saldo_total_api"),
@@ -191,7 +194,9 @@ object Pipeline {
     })
 
     // PASSO 4: pedidos + fan-out itens (ref :392; header-detail j1)
-    safeStep("pedidos")(grouped("pedidos")(batch => {
+    // headers, items and parent keys all read the batch: pinned once
+    safeStep("pedidos")(grouped("pedidos")(staged => {
+        val batch = staged.localCheckpoint()
         val headers = batch.select(col("id").cast("int").as("id_pedido"),
           col("numero").as("numero_pedido"),
           col("data_pedido"),
@@ -225,16 +230,15 @@ object Pipeline {
         sink, now)
     })
 
-    // audit: COUNT(*) per loaded table (ref :395-402), every table in one
-    // grouped count; a table with no rows has no group and counts 0
+    // audit: COUNT(*) per loaded table (ref :395-402)
     val tables = Seq("categorias", "produtos", "produto_estoque_total",
       "produto_estoque_depositos", "pedidos", "pedido_itens")
-      .filter(t => Files.exists(Paths.get(s"$targetDir/$t")))
-    val counts = tables
-      .map(t => readTable(spark, s"$targetDir/$t").select(lit(t).as("t")))
-      .reduceOption(_ union _).toSeq
-      .flatMap(_.groupBy("t").count().collect())
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    RunReport(steps.toSeq, tables.map(t => t -> counts.getOrElse(t, 0L)).toMap)
+    val audit = tables.flatMap { tbl =>
+      val p = s"$targetDir/$tbl"
+      if (Files.exists(Paths.get(p)))
+        Some(tbl -> readTable(spark, p).count())
+      else None
+    }.toMap
+    RunReport(steps.toSeq, audit)
   }
 }

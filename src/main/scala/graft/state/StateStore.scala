@@ -4,9 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils.{instantToMicros, microsToInstant}
 import org.apache.spark.sql.types._
 
 /** Pipeline state tables (SURVEY.md §2.7 s1/s2/s5): the re-expression of
@@ -28,6 +27,15 @@ import org.apache.spark.sql.types._
   * At cluster scale this is a catalog table's atomic commit (SURVEY.md
   * §7.4); the 100 TB posture keeps *data* distributed, not these few-row
   * control tables.
+  *
+  * Earlier layout: a target whose `dir` holds the parquet directories
+  * `watermarks/` and `progress/` of the previous store reads as an empty
+  * store, since those directories are not read. Its next run therefore
+  * fetches each process's full safety window
+  * (`FilterResolver.SafetyWindowDays`, 60 days) instead of resuming from
+  * the old watermark, and a step that stopped with ERRO restarts at page
+  * 1. No row is lost (the merge is an idempotent upsert); delete the two
+  * directories after that run.
   */
 class StateStore(dir: String) {
   import StateStore._
@@ -45,49 +53,42 @@ class StateStore(dir: String) {
 
   /** The stored value itself (no +1 s) — what s2 wrote. */
   def rawWatermark(process: String): Option[Instant] =
-    rows(wmFile, wmSchema).find(_.get(0) == process).map(_.getAs[Instant](1))
+    row(wmFile, wmSchema, process).map(r => microsToInstant(r(1).asLong))
 
   /** s2_watermark_write: upsert the watermark. The caller passes the step
     * START time, never the end time (ref :326,363) — records modified
     * mid-run get re-fetched next run instead of lost. */
   def setWatermark(process: String, ts: Instant): Unit =
-    upsert(wmFile, wmSchema, Row(process, ts))
+    upsert(wmFile, wmSchema, Seq(process, instantToMicros(ts)))
 
   // ---- s5: page-checkpoint store --------------------------------------
 
   def getProgress(process: String): Option[Progress] =
-    rows(pgFile, pgSchema).find(_.get(0) == process).map(r => Progress(
-      r.getString(0), r.getString(1), r.getInt(2), r.getInt(3), r.getLong(4),
-      r.getString(5)))
+    row(pgFile, pgSchema, process).map(r => Progress(r(0).asText, r(1).asText,
+      r(2).asInt, r(3).asInt, r(4).asLong, r(5).asText))
 
   def upsertProgress(p: Progress): Unit =
-    upsert(pgFile, pgSchema, Row.fromTuple(p))
+    upsert(pgFile, pgSchema, p.productIterator.toSeq)
 
   // ---- driver-side JSON-lines tables, keyed on column 0 ----------------
 
   private val json = new ObjectMapper()
 
-  private def rows(file: Path, schema: StructType): Seq[Row] =
-    if (!Files.exists(file)) Nil
-    else Files.readAllLines(file).asScala.toSeq.map { line =>
-      val obj = json.readTree(line)
-      Row.fromSeq(schema.map(f => (f.dataType, obj.required(f.name)) match {
-        case (TimestampType, v) => DateTimeUtils.microsToInstant(v.asLong)
-        case (IntegerType, v) => v.asInt
-        case (LongType, v) => v.asLong
-        case (_, v) => v.asText
-      }))
-    }
+  private def lines(file: Path): Seq[String] =
+    if (Files.exists(file)) Files.readAllLines(file).asScala.toSeq else Nil
 
-  private def upsert(file: Path, schema: StructType, row: Row): Unit = {
-    val lines = (rows(file, schema).filterNot(_.get(0) == row.get(0)) :+ row)
-      .map(r => json.writeValueAsString(schema.names.zip(r.toSeq.map {
-        case ts: Instant => DateTimeUtils.instantToMicros(ts)
-        case v => v
-      }).toMap.asJava))
+  /** The fields, in schema order, of the row whose column 0 is `key`. */
+  private def row(file: Path, schema: StructType, key: String): Option[Seq[JsonNode]] =
+    lines(file).map { l => val o = json.readTree(l); schema.names.toSeq.map(o.required(_)) }
+      .find(_.head.asText == key)
+
+  private def upsert(file: Path, schema: StructType, row: Seq[Any]): Unit = {
+    val kept = lines(file)
+      .filterNot(l => json.readTree(l).required(schema.names(0)).asText == row.head)
     val tmp = file.resolveSibling(s"${file.getFileName}.tmp")
     Files.createDirectories(file.getParent)
-    Files.write(tmp, lines.asJava) // UTF-8
+    Files.write(tmp, (kept :+ json.writeValueAsString(
+      schema.names.zip(row).toMap.asJava)).asJava) // UTF-8
     Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE): Unit
   }
 }

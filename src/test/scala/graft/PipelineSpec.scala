@@ -108,7 +108,7 @@ class PipelineSpec extends SparkSpec {
   /** Call site of every job started while registered: the SQL
     * execution's description when the job belongs to one (adaptive
     * execution submits stage jobs from its own threads), else the result
-    * stage's name — `count at Pipeline.scala:236`. */
+    * stage's name — `count at Pipeline.scala:239`. */
   private class JobSites extends SparkListener {
     private val execs = mutable.Map[Long, String]()
     private val started = mutable.ArrayBuffer[(Int, String)]()
@@ -167,5 +167,5 @@ class PipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(sites)
   }
 
-  private val JobBudget = 91
+  private val JobBudget = 99
 }
