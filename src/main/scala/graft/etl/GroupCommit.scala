@@ -58,9 +58,10 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
     batch.write.mode("overwrite").parquet(tmp.toString)
     Files.move(tmp, Paths.get(s"$stagingDir/p=$next"),
       StandardCopyOption.ATOMIC_MOVE)
-    // count the staged files (never the decode lineage) under the batch's
-    // own schema: no schema-inference job
-    val n = spark.read.schema(batch.schema).parquet(s"$stagingDir/p=$next").count()
+    // count the staged files (never the decode lineage) from their
+    // footers: no Spark job
+    val n = PartitionedMerge.footerRows(
+      PartitionedMerge.dataFiles(Paths.get(s"$stagingDir/p=$next")))
     if (pages.size + 1 >= every) flush()
     n
   }

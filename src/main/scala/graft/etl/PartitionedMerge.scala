@@ -1,31 +1,38 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.{ByteArrayInputStream, RandomAccessFile}
+import java.nio.file.{DirectoryNotEmptyException, Files, Path, Paths,
+  StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.parquet.format.Util
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 import graft.model.SchemaEvolution
 import graft.util.Fs
 
-/** Bucket-partitioned merge: the bounded-cost realization of the
+/** Bucketed, versioned table: the bounded-cost realization of the
   * reference's per-page `INSERT ... ON CONFLICT DO UPDATE` commit
-  * (tiny_api_v2_cliente.py:122-123,198) for tables too large to rewrite
-  * per batch.
+  * (tiny_api_v2_cliente.py:122-123,198), shaped like a log-structured
+  * merge tree (O'Neil et al. 1996).
   *
-  * Layout: `path/gbucket=N/part-*.parquet`, N = pmod(hash(keys), buckets).
-  * A merge computes the buckets its update batch touches, reads ONLY those
-  * partitions (directory-pruned scan), merges by natural key, and swaps
-  * ONLY those bucket directories. Untouched buckets see zero I/O, so the
-  * per-batch cost is O(touched buckets × bucket size), not O(table) — at
-  * 100 TB with thousands of buckets an incremental page rewrites a few
-  * buckets, and the write itself runs one task per touched bucket instead
-  * of a single coalesce(1) task. A missing table is an empty existing
-  * side: the first merge creates it through the same rewrite.
+  * Layout: `path/gbucket=N/<file>.parquet`, N = pmod(hash(partition key),
+  * buckets). There is one commit protocol: every write (`mergeInto`,
+  * `replaceChildren`, `appendInto`) claims the next version number `gseq`
+  * and adds its rows as one delta file per bucket it touches, so a commit
+  * costs O(batch) however large the table is. Reads resolve: per partition
+  * key (the natural key of an upsert table, the parent key of a child
+  * table) they keep the rows of the key's newest version. A bucket that
+  * reaches `compactThreshold` files is folded back to one resolved base
+  * file by `compact`, on the commit path, so read cost stays bounded.
   *
-  * The same deterministic key→bucket function every batch means a key
-  * always lives in exactly one bucket directory — merge correctness needs
-  * no cross-bucket reconciliation.
+  * The same deterministic key→bucket function every commit means a key
+  * always lives in exactly one bucket directory: resolution and compaction
+  * never reconcile across buckets.
   */
 object PartitionedMerge {
 
@@ -33,40 +40,60 @@ object PartitionedMerge {
     * column; `read` drops it so downstream schemas are unchanged. */
   val BucketCol = "gbucket"
 
+  /** Version column of every delta row; rows without one (compacted base
+    * files, tables written before versioned commits) resolve as version 0,
+    * the oldest. */
+  val SeqCol = "gseq"
+
+  /** Set (true) only on the one marker row a `replaceChildren` commit
+    * writes per batch parent: it makes the parent's new version exist even
+    * when it has no children, and the resolved read drops it. */
+  val MarkCol = "gmark"
+
   def bucketExpr(keys: Seq[String], numBuckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(numBuckets))
 
   // ---- table metadata -------------------------------------------------
   //
-  // The bucket count is a TABLE property, not a call-site parameter: an
-  // append hashing with a different count than the base puts the same key
-  // in two bucket directories, and compaction (which drops gseq) then
-  // silently breaks latest-wins. First write persists the count in
-  // `_graft_meta.json`; every later write resolves against it and IGNORES
-  // a mismatched caller parameter — the persisted layout is the truth.
+  // Bucket count, partition key and stored schema are TABLE properties,
+  // kept in `_graft_meta.json`. An append hashing with a different count
+  // than the base would put one key in two bucket directories, so every
+  // later write uses the persisted count and IGNORES a mismatched caller
+  // parameter. `read(spark, path)` takes no keys: it resolves by the
+  // recorded key, and reads under the recorded schema, so neither a read
+  // nor a commit infers a schema with a Spark job. Tables written before a
+  // field existed lack it: no key reads unresolved (they were rewritten
+  // per commit, one row per key), no schema reads by footer inference.
 
   private def metaFile(path: String) = Paths.get(path, "_graft_meta.json")
 
+  private val Json = new ObjectMapper()
+
+  private case class Meta(numBuckets: Int, keys: Seq[String],
+                          schema: Option[StructType])
+
+  private def meta(path: String): Option[Meta] =
+    Some(metaFile(path)).filter(Files.exists(_)).map { f =>
+      val j = Json.readTree(Files.readAllBytes(f))
+      Meta(j.get("numBuckets").asInt,
+        Option(j.get("keys")).toSeq.flatMap(_.elements.asScala.map(_.asText)),
+        Option(j.get("schema")).map(s =>
+          DataType.fromJson(s.toString).asInstanceOf[StructType]))
+    }
+
   /** Bucket count recorded in the table's metadata file, if any. */
-  def persistedBuckets(path: String): Option[Int] = {
-    val f = metaFile(path)
-    if (!Files.exists(f)) None
-    else "\"numBuckets\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(new String(Files.readAllBytes(f), "UTF-8"))
-      .map(_.group(1).toInt)
+  def persistedBuckets(path: String): Option[Int] = meta(path).map(_.numBuckets)
+
+  /** Replace the metadata file atomically (write a hidden temp file, rename
+    * over): a concurrent reader sees the old or the new record. */
+  private def writeMeta(path: String, numBuckets: Int, keys: Seq[String],
+                        schema: StructType): Unit = {
+    val tmp = Paths.get(path, s"_graft_meta.json.tmp-${System.nanoTime}")
+    Files.writeString(tmp, s"""{"numBuckets":$numBuckets,"keys":""" +
+      s"""${Json.writeValueAsString(keys.asJava)},"schema":${schema.json}}""")
+    Files.move(tmp, metaFile(path), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING): Unit
   }
-
-  /** Persisted count wins over the requested parameter; tables created
-    * before metadata existed fall back to the parameter (unchanged
-    * behavior) and get the file stamped on their next write. */
-  private def resolveBuckets(path: String, requested: Int): Int =
-    persistedBuckets(path).getOrElse(requested)
-
-  /** Called after a write has created the table root. */
-  private def stampMeta(path: String, numBuckets: Int): Unit =
-    if (persistedBuckets(path).isEmpty)
-      Files.write(metaFile(path),
-        s"""{"numBuckets":$numBuckets}""".getBytes("UTF-8")): Unit
 
   // ---- bucket directories (driver-side listings, never a Spark job) ----
 
@@ -84,6 +111,20 @@ object PartitionedMerge {
   private[etl] def dataFiles(dir: Path): List[Path] =
     Fs.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
 
+  /** Row count of parquet files, summed from their footers on the driver:
+    * no Spark job. A file ends in its thrift-encoded footer, the footer's
+    * 4-byte little-endian length and the magic `PAR1`. */
+  private[etl] def footerRows(files: Seq[Path]): Long = files.map { p =>
+    val f = new RandomAccessFile(p.toFile, "r")
+    try {
+      f.seek(f.length - 8)
+      val footer = new Array[Byte](Integer.reverseBytes(f.readInt()))
+      f.seek(f.length - 8 - footer.length)
+      f.readFully(footer)
+      Util.readFileMetaData(new ByteArrayInputStream(footer), true).getNum_rows
+    } finally f.close()
+  }.sum
+
   /** Move the data files of `from` into the live directory `to` under
     * fresh names `<prefix>-<i>.parquet`: the directory never vanishes, and
     * concurrent writers' files never collide. */
@@ -96,104 +137,181 @@ object PartitionedMerge {
 
   // ---- reads and writes (Spark jobs stay in this file) ------------------
 
-  private def scan(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** The table's rows, bucket column included; a missing table is an
-    * empty frame shaped like `like`. */
-  private def existing(spark: SparkSession, path: String,
-                       like: DataFrame): DataFrame =
-    if (Files.exists(Paths.get(path))) scan(spark, path) else like.limit(0)
-
-  /** Row count and sorted distinct buckets of `df` from one aggregate: a
-    * ≤numBuckets-int driver collect, never data rows. */
-  private def countAndBuckets(df: DataFrame): (Long, Seq[Int]) = {
-    val r = df.agg(count(lit(1)), sort_array(collect_set(col(BucketCol))))
-      .head()
-    (r.getLong(0), r.getSeq[Int](1))
-  }
-
-  /** Partition pruning keeps the scan to the touched directories only. */
-  private def inBuckets(df: DataFrame, touched: Seq[Int]): DataFrame =
-    df.filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-
-  /** The one bucketed writer: rows laid out as `dir/gbucket=N/`, one
-    * task (so one file) per bucket. */
-  private def writeBuckets(rows: DataFrame, dir: String): Unit =
-    rows.repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(dir)
-
-  /** Replace the `touched` buckets of the table at `path` with `rows`:
-    * write them to a tmp table, swap each touched bucket directory in
-    * (`Fs.swapInto`), delete the tmp table. A touched bucket `rows` leaves
-    * empty becomes an empty directory (kept so the partitioned read keeps
-    * working). A missing table is created. */
-  private def rewrite(path: String, rows: DataFrame, touched: Seq[Int],
-                      numBuckets: Int): Unit = {
-    if (touched.isEmpty) return
-    val tmp = path + ".tmp"
-    writeBuckets(rows, tmp)
-    Files.createDirectories(Paths.get(path))
-    touched.foreach { b =>
-      if (Files.exists(bucketDir(tmp, b)))
-        Fs.swapInto(bucketDir(tmp, b), bucketDir(path, b))
-      else {
-        Fs.deleteRec(bucketDir(path, b))
-        Files.createDirectories(bucketDir(path, b)): Unit
-      }
+  /** Every stored row with its bucket column, of the whole table or of
+    * `files` only: under the recorded schema (plus `gseq`) when there is
+    * one, else by footer inference (`mergeSchema`: a table written before
+    * the schema was recorded may hold files of several additive schemas).
+    * A column a file lacks reads as NULL. */
+  private def scan(spark: SparkSession, path: String,
+                   files: Seq[Path] = Nil): DataFrame = {
+    val r = meta(path).flatMap(_.schema) match {
+      case Some(s) => spark.read.schema(
+        s.add(SeqCol, LongType).add(BucketCol, IntegerType))
+      case None => spark.read.option("mergeSchema", "true")
     }
-    Fs.deleteRec(Paths.get(tmp))
-    stampMeta(path, numBuckets) // also migrates pre-metadata tables
+    if (files.isEmpty) r.parquet(path)
+    else r.option("basePath", path).parquet(files.map(_.toString): _*)
   }
 
-  /** Read a bucketed table with the engine-internal bucket column dropped.
-    * `mergeSchema` because additive evolution only rewrites touched
-    * buckets — after an evolving merge, untouched bucket files still carry
-    * the old schema and their rows surface the new columns as NULL (same
-    * observable result as the flat rewrite). At 100 TB the footer-sampling
-    * cost goes away by pinning the table schema from the catalog
-    * (model/Schemas) instead. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    scan(spark, path).drop(BucketCol)
+  /** A scan with every row's version in `gseq`. */
+  private def versioned(all: DataFrame): DataFrame =
+    all.withColumn(SeqCol,
+      if (all.columns.contains(SeqCol)) coalesce(col(SeqCol), lit(0L))
+      else lit(0L))
 
-  /** Merge `updates` into the bucketed table at `path` by natural key,
-    * rewriting only the buckets the batch touches. Applies additive schema
-    * evolution (SchemaEvolution) like the flat merge. Returns the batch
-    * row count. Idempotent: re-merging the same batch is a no-op. */
+  /** The one resolution rule: per partition key, the rows of its newest
+    * version — the highest `gseq`, and of that version one file. Two files
+    * hold the same version only between a compaction's base move-in and
+    * its delete of the older copy (or after a crash there); both copies
+    * carry the same rows, so taking the rows of one keeps a parent's child
+    * set whole and never doubles it. Parent markers, `gseq` and `gmark`
+    * are dropped; the bucket column is kept. */
+  private def latest(stored: DataFrame, keys: Seq[String]): DataFrame = {
+    val top = versioned(stored)
+      .withColumn("__v", struct(col(SeqCol), xxhash64(input_file_name())))
+      .withColumn("__top",
+        max(col("__v")).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("__v") === col("__top"))
+    val live =
+      if (stored.columns.contains(MarkCol)) top.filter(col(MarkCol).isNull)
+      else top
+    live.drop("__v", "__top", SeqCol, MarkCol)
+  }
+
+  /** The table resolved to its newest version per recorded key, bucket
+    * column dropped. A table without a recorded key is read as stored. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    readResolved(spark, path, Nil)
+
+  /** `read`, resolving by `keys` when the table records no key (a delta
+    * table written before the key was recorded). */
+  def readResolved(spark: SparkSession, path: String,
+                   keys: Seq[String]): DataFrame = {
+    val k = meta(path).map(_.keys).filter(_.nonEmpty).getOrElse(keys)
+    val all = scan(spark, path)
+    (if (k.isEmpty) all else latest(all, k)).drop(BucketCol)
+  }
+
+  /** Upsert `updates` into the table at `path` by natural key: the batch,
+    * collapsed to one row per key by `Upsert.dedupe` inside the write plan,
+    * becomes the keys' newest version. Additive schema evolution
+    * (SchemaEvolution): new columns land, older rows read them as NULL, a
+    * type change is rejected. Returns the number of rows written.
+    * Idempotent: re-merging the same batch changes no resolved row. */
   def mergeInto(spark: SparkSession, path: String, updates: DataFrame,
-                keys: Seq[String], numBuckets: Int = 16): Long = {
-    // referenced three times (count and buckets, anti-join keys, merge
-    // union): pin once so the caller's lineage doesn't re-run per reference
-    val nb = resolveBuckets(path, numBuckets)
-    val batch = updates.withColumn(BucketCol, bucketExpr(keys, nb))
-      .localCheckpoint()
-    val (n, touched) = countAndBuckets(batch)
-    if (n == 0) return 0L
-    val table = existing(spark, path, batch)
-    val evolved = SchemaEvolution.mergeAdditive(table.schema, batch.schema)
-    val conformed = SchemaEvolution.conform(batch, evolved)
-    // the key set comes from the pinned batch, so the dedupe runs once
-    rewrite(path, Upsert.replaceKeys(
-      inBuckets(SchemaEvolution.conform(table, evolved), touched),
-      Upsert.dedupe(conformed, keys), conformed, keys), touched, nb)
+                keys: Seq[String], numBuckets: Int = 16): Long =
+    appendInto(spark, path, updates, keys, numBuckets)
+
+  /** `mergeInto` with the compaction threshold exposed (see `commit`). */
+  def appendInto(spark: SparkSession, path: String, updates: DataFrame,
+                 keys: Seq[String], numBuckets: Int = 16,
+                 compactThreshold: Int = 32): Long =
+    commit(spark, path, updates, keys, numBuckets, compactThreshold,
+      dedupe = true)
+
+  /** Replace-children commit for header-detail fan-out (ref FK CASCADE,
+    * tiny_api_v2_cliente.py:89): the children of every parent in `parents`
+    * become `children`; other parents' children are untouched. The table is
+    * bucketed and resolved on the PARENT key, so a parent's version is its
+    * whole child set. Each batch parent also gets one marker row (NULL
+    * child columns, `gmark` true): a parent updated to ZERO children still
+    * has a new, empty version that shadows its old children. */
+  def replaceChildren(spark: SparkSession, path: String, children: DataFrame,
+                      parents: DataFrame, parentKey: String,
+                      numBuckets: Int = 16): Unit =
+    commit(spark, path,
+      children.unionByName(
+        parents.select(col(parentKey), lit(true).as(MarkCol)),
+        allowMissingColumns = true),
+      Seq(parentKey), numBuckets, compactThreshold = 32, dedupe = false): Unit
+
+  /** The one commit: append `rows` as version `gseq` of the table at
+    * `path`, one delta file per touched bucket — cost O(batch), independent
+    * of table size. `dedupe` collapses the batch to one row per key in the
+    * write plan (an upsert); without it every row of a key is its version (a
+    * child set). Returns the row count, summed from the written files'
+    * footers.
+    *
+    * Auto-compaction: after the append, any bucket whose data-file count
+    * reached `compactThreshold` is compacted in place, so the commit path
+    * itself bounds merge-on-read cost and unattended cron appends cannot
+    * degrade readers. Amortized cost per append stays
+    * O(page + bucket/threshold); pass `compactThreshold = 0` to disable
+    * and schedule `compact` manually. Appends and compactions may overlap,
+    * from any number of processes; an additive schema change assumes one
+    * writer at a time (two writers adding columns at once may lose one
+    * addition from the recorded schema). */
+  private def commit(spark: SparkSession, path: String, rows: DataFrame,
+                     keys: Seq[String], numBuckets: Int,
+                     compactThreshold: Int, dedupe: Boolean): Long = {
+    val m0 = meta(path)
+    m0.map(_.keys).filter(_.nonEmpty).foreach(k => require(k == keys,
+      s"table $path is keyed on ${k.mkString(",")}, not ${keys.mkString(",")}"))
+    val nb = m0.map(_.numBuckets).getOrElse(numBuckets)
+    // a table stored before its schema was recorded: infer it once
+    val known = m0.flatMap(_.schema).orElse(
+      if (buckets(path).isEmpty) None
+      else Some(scan(spark, path).drop(BucketCol, SeqCol).schema))
+    val schema = StructType(known.fold(rows.schema)(
+      SchemaEvolution.mergeAdditive(_, rows.schema))
+      .map(_.copy(nullable = true)))
+    val seq = allocSeq(path)
+    // Stage in a PRIVATE per-append dir, then move files into the live
+    // bucket dirs: a direct SaveMode.Append from two JVMs shares one
+    // FileOutputCommitter `_temporary/0` under the table root, and
+    // whichever job commits first deletes the other's staging. Per-file
+    // moves carry the allocated seq in the name and never collide.
+    // Crash model: before any move, only an unreferenced unique tmp
+    // remains (the seq number burns); a crash MID-move leaves a torn,
+    // UNACKNOWLEDGED batch visible — harmless under the step driver's
+    // retry contract (CrashRecoverySpec): the re-run re-appends the same
+    // page under a higher seq, whose rows win per key at read time.
+    val tmp = path + s".tmp-append-$seq"
+    writeBuckets(rows.withColumn(SeqCol, lit(seq))
+      .withColumn(BucketCol, bucketExpr(keys, nb)), tmp,
+      dedupeOn = if (dedupe) keys else Nil)
+    val staged = buckets(tmp)
+    val n = footerRows(staged.flatMap(b => dataFiles(bucketDir(tmp, b))))
+    if (n == 0) {
+      // an empty batch leaves no trace: no version, and no table root if
+      // it would have created the table
+      Fs.deleteRec(Paths.get(tmp))
+      Seq(seqDir(path).resolve(seq.toString), seqDir(path), Paths.get(path))
+        .foreach(p => try Files.deleteIfExists(p)
+          catch { case _: DirectoryNotEmptyException => false })
+      return 0L
+    }
+    // the schema is recorded before any file of this version is visible
+    if (!m0.contains(Meta(nb, keys, Some(schema))))
+      writeMeta(path, nb, keys, schema)
+    staged.foreach(b =>
+      moveDataFiles(bucketDir(tmp, b), bucketDir(path, b), s"delta-$seq"))
+    Fs.deleteRec(Paths.get(tmp))
+    if (compactThreshold > 0) {
+      val frag = buckets(path)
+        .filter(b => dataFiles(bucketDir(path, b)).size >= compactThreshold)
+      if (frag.nonEmpty)
+        compact(spark, path, keys, only = Some(frag.toSet)): Unit
+    }
     n
   }
 
-  // ---- delta-append commit + per-bucket compaction ----------------------
-  //
-  // mergeInto bounds each commit to the touched buckets, but a touched
-  // bucket is REWRITTEN whole — over weeks of cron runs against a grown
-  // table, per-commit cost creeps toward O(bucket size) even for a tiny
-  // page. The LSM-shaped alternative: append the batch as per-bucket
-  // DELTA files (O(page) per commit, flat forever), resolve
-  // latest-per-key at read time, and run a per-bucket compaction on a
-  // schedule to bound the file count the reader merges. Growth is
-  // bounded by compaction cadence, and compaction itself rewrites one
-  // bucket at a time (independently parallelizable, never the table).
+  /** The one bucketed writer: rows laid out as `dir/gbucket=N/`, one
+    * task (so one file) per bucket. The partition count is explicit so a
+    * small batch is still written by every core, not coalesced into one
+    * task that writes every bucket's file in turn. `dedupeOn` keys are
+    * deduped (`Upsert.dedupe`) after that one shuffle: a key's rows share
+    * its bucket, so they already share a task. */
+  private def writeBuckets(rows: DataFrame, dir: String,
+                           dedupeOn: Seq[String] = Nil): Unit = {
+    val spread = rows.repartition(
+      rows.sparkSession.sparkContext.defaultParallelism, col(BucketCol))
+    (if (dedupeOn.isEmpty) spread
+     else Upsert.dedupe(spread, BucketCol +: dedupeOn))
+      .write.partitionBy(BucketCol).mode(SaveMode.Overwrite).parquet(dir)
+  }
 
-  /** Version column embedded in delta files; base files carry none and
-    * resolve as version 0 (oldest). */
-  val SeqCol = "gseq"
+  // ---- version numbers -------------------------------------------------
 
   private def seqDir(path: String) = Paths.get(path, "_seq")
 
@@ -223,75 +341,15 @@ object PartitionedMerge {
       ms.foreach { case (n, p) => if (n < keep) Files.deleteIfExists(p) })
   }
 
-  /** A scan of base and delta files with every row's version in `gseq`. */
-  private def versioned(all: DataFrame): DataFrame =
-    all.withColumn(SeqCol,
-      if (all.columns.contains(SeqCol)) coalesce(col(SeqCol), lit(0L))
-      else lit(0L))
-
-  /** Latest version per key (merge-on-read), `gseq` dropped. */
-  private def latest(versioned: DataFrame, keys: Seq[String]): DataFrame =
-    Upsert.dedupe(versioned, keys, Seq(SeqCol)).drop(SeqCol)
-
-  /** Append `updates` as delta files into the bucket layout at `path` —
-    * cost O(batch), independent of table size. Batches must be key-unique
-    * (GroupCommit.flush hands exactly that); later appends win per key.
-    * Composes with a mergeInto-created base: base rows have no gseq and
-    * lose to any delta. Returns the batch row count.
-    *
-    * Auto-compaction: after the append, any bucket whose data-file count
-    * reached `compactThreshold` is compacted in place, so the commit path
-    * itself bounds merge-on-read cost and unattended cron appends cannot
-    * degrade readers. Amortized cost per append stays
-    * O(page + bucket/threshold); pass `compactThreshold = 0` to disable
-    * and schedule `compact` manually. Single-writer per table is assumed
-    * for the mergeInto rewrite; appends and compactions may overlap. */
-  def appendInto(spark: SparkSession, path: String, updates: DataFrame,
-                 keys: Seq[String], numBuckets: Int = 16,
-                 compactThreshold: Int = 32): Long = {
-    val flat = updates.localCheckpoint()
-    val n = flat.count()
-    if (n == 0) return 0L
-    val nb = resolveBuckets(path, numBuckets)
-    val seq = allocSeq(path)
-    // Stage in a PRIVATE per-append dir, then move files into the live
-    // bucket dirs: a direct SaveMode.Append from two JVMs shares one
-    // FileOutputCommitter `_temporary/0` under the table root, and
-    // whichever job commits first deletes the other's staging. Per-file
-    // moves carry the allocated seq in the name and never collide.
-    // Crash model: before any move, only an unreferenced unique tmp
-    // remains (the seq number burns); a crash MID-move leaves a torn,
-    // UNACKNOWLEDGED batch visible — harmless under the step driver's
-    // retry contract (CrashRecoverySpec): the re-run re-appends the same
-    // page under a higher seq, whose rows win per key at read time.
-    val tmp = path + s".tmp-append-$seq"
-    writeBuckets(flat.withColumn(BucketCol, bucketExpr(keys, nb))
-      .withColumn(SeqCol, lit(seq)), tmp)
-    buckets(tmp).foreach(b =>
-      moveDataFiles(bucketDir(tmp, b), bucketDir(path, b), s"delta-$seq"))
-    Fs.deleteRec(Paths.get(tmp))
-    stampMeta(path, nb)
-    if (compactThreshold > 0) {
-      val frag = buckets(path)
-        .filter(b => dataFiles(bucketDir(path, b)).size >= compactThreshold)
-      if (frag.nonEmpty)
-        compact(spark, path, keys, only = Some(frag.toSet)): Unit
-    }
-    n
-  }
-
-  /** Read a delta-append table resolved to the latest version per key
-    * (merge-on-read). Engine-internal bucket/version columns dropped. */
-  def readResolved(spark: SparkSession, path: String,
-                   keys: Seq[String]): DataFrame =
-    latest(versioned(read(spark, path)), keys)
+  // ---- per-bucket compaction --------------------------------------------
 
   /** Per-bucket compaction: every bucket directory holding more than one
     * data file (restricted to `only` when given) is collapsed to its
-    * resolved rows (latest gseq per key) in a single base file; buckets
-    * already compact see zero I/O. Returns (bucket, filesBefore) for the
-    * buckets it rewrote. Idempotent, and read results are unchanged by
-    * construction — the spec asserts both.
+    * resolved rows in a single base file; buckets already compact see zero
+    * I/O. Resolves by the recorded key (`keys` for a table that records
+    * none). Returns (bucket, filesBefore) for the buckets it rewrote.
+    * Idempotent, and read results are unchanged by construction — the
+    * spec asserts both.
     *
     * Concurrent appends: the rewrite never moves a directory (a bucket
     * directory that briefly does not exist breaks a concurrent appender's
@@ -302,14 +360,15 @@ object PartitionedMerge {
     * snapshot files are deleted in increasing version order (base files
     * first, then deltas oldest-gseq-first). Every intermediate state
     * resolves correctly at read time: until a key's newest snapshot
-    * delta is deleted it keeps winning over the new base (same value,
+    * delta is deleted it keeps winning over the new base (same rows,
     * higher gseq), and once it is deleted every older carrier of that
-    * key is already gone, so the base's folded value wins; deltas landed
-    * mid-compaction are never deleted and resolve above the base. A
-    * crash at any step leaves base + leftover snapshot files — readers
-    * stay correct and the next compaction folds again. This is also the
-    * object-store-shaped commit: per-file puts and deletes, no atomic
-    * directory rename required.
+    * key is already gone, so the base's folded rows win; an older base
+    * still present holds the same version as the new one, and the read
+    * takes one file's copy; deltas landed mid-compaction are never deleted
+    * and resolve above the base. A crash at any step leaves base +
+    * leftover snapshot files — readers stay correct and the next
+    * compaction folds again. This is also the object-store-shaped commit:
+    * per-file puts and deletes, no atomic directory rename required.
     *
     * Compactors mutually exclude via `Fs.withLock` (two appenders crossing
     * the auto-compact threshold together must not both rewrite): busy →
@@ -320,7 +379,9 @@ object PartitionedMerge {
               staleLockMs: Long = 10 * 60 * 1000L): Seq[(Int, Int)] =
     if (!Files.exists(Paths.get(path))) Seq.empty
     else Fs.withLock(Paths.get(path, "_compact_lock"), staleLockMs)(
-      compactLocked(spark, path, keys, only)).getOrElse(Seq.empty)
+      compactLocked(spark, path,
+        meta(path).map(_.keys).filter(_.nonEmpty).getOrElse(keys), only))
+      .getOrElse(Seq.empty)
 
   private def compactLocked(spark: SparkSession, path: String,
                             keys: Seq[String],
@@ -337,13 +398,11 @@ object PartitionedMerge {
       .map(b => b -> dataFiles(bucketDir(path, b)))
       .filter(_._2.size > 1)
     if (snapshot.isEmpty) return Seq.empty
-    val withSeq = versioned(spark.read.option("mergeSchema", "true")
-      .option("basePath", path)
-      .parquet(snapshot.flatMap(_._2).map(_.toString): _*))
+    val stored = scan(spark, path, snapshot.flatMap(_._2))
     // per-file max version — the DELETION ORDER below depends on it
     val fileRe = (java.util.regex.Pattern.quote(s"$BucketCol=") +
       "(\\d+)/([^/]+)$").r.unanchored
-    val fileVer: Map[(Int, String), Long] = withSeq
+    val fileVer: Map[(Int, String), Long] = versioned(stored)
       .groupBy(input_file_name().as("f"))
       .agg(max(col(SeqCol)).as("v"))
       .collect().flatMap { r =>
@@ -355,7 +414,7 @@ object PartitionedMerge {
     // unique per-run tmp dir: a crashed run's leftovers are inert to
     // every later run (and cleaned up by the next locked compactor)
     val tmp = path + s".tmp-compact-${System.nanoTime}"
-    writeBuckets(latest(withSeq, keys), tmp)
+    writeBuckets(latest(stored, keys), tmp)
     snapshot.foreach { case (b, files) =>
       // 1. commit the new base file(s) into the LIVE directory
       moveDataFiles(bucketDir(tmp, b), bucketDir(path, b),
@@ -370,29 +429,5 @@ object PartitionedMerge {
     Fs.deleteRec(Paths.get(tmp))
     pruneMarkers(path)
     snapshot.map { case (b, files) => b -> files.size }
-  }
-
-  /** Replace-children merge for header-detail fan-out (ref FK CASCADE,
-    * tiny_api_v2_cliente.py:89): all detail rows of the `parents` in this
-    * batch are replaced by `children`, other parents' rows are kept.
-    * `parents` is passed explicitly — a parent updated to ZERO children
-    * must still have its stale children cleared. Buckets on the PARENT key
-    * so a parent's children co-locate in one bucket, and only the buckets
-    * whose parents appear in the batch are rewritten. */
-  def replaceChildren(spark: SparkSession, path: String, children: DataFrame,
-                      parents: DataFrame, parentKey: String,
-                      numBuckets: Int = 16): Unit = {
-    val nb = resolveBuckets(path, numBuckets)
-    // children are read once (the write); the parent keys twice (touched
-    // buckets, anti join), so only they are pinned
-    val batch = children.withColumn(BucketCol, bucketExpr(Seq(parentKey), nb))
-    val parentKeys = parents.select(col(parentKey))
-      .withColumn(BucketCol, bucketExpr(Seq(parentKey), nb))
-      .localCheckpoint()
-    val touched = countAndBuckets(parentKeys)._2
-    val kept = inBuckets(existing(spark, path, batch), touched)
-      .join(parentKeys.select(parentKey), Seq(parentKey), "left_anti")
-    rewrite(path, kept.unionByName(batch, allowMissingColumns = true),
-      touched, nb)
   }
 }

@@ -42,23 +42,54 @@ object Pipeline {
   case class StepReport(process: String, outcome: IncrementalStep.Outcome)
   case class RunReport(steps: Seq[StepReport], audit: Map[String, Long])
 
-  /** Target tables are bucket-partitioned on their natural key (round 2 —
-    * bounds the per-commit rewrite to the touched buckets instead of the
-    * whole table; see PartitionedMerge). Small ERP-scale bucket count; at
+  /** Target tables are bucket-partitioned on their natural key (parent key
+    * for pedido_itens), and each commit appends a versioned delta file per
+    * touched bucket (PartitionedMerge). Small ERP-scale bucket count; at
     * 100 TB raise it so a bucket stays executor-memory-sized. */
   val TableBuckets = 16
 
-  /** Merge a page batch into a bucket-partitioned parquet table by natural
-    * key, rewriting only touched buckets. Applies additive schema
-    * evolution on the way in — the load-time analog of the reference's
+  /** Upsert a page batch into a bucket-partitioned parquet table by natural
+    * key, as one versioned delta append. Applies additive schema evolution
+    * on the way in — the load-time analog of the reference's
     * `ADD COLUMN IF NOT EXISTS` migration (ref :93,:97-99). */
   def mergeInto(spark: SparkSession, path: String, updates: DataFrame,
                 keys: Seq[String]): Long =
     PartitionedMerge.mergeInto(spark, path, updates, keys, TableBuckets)
 
-  /** Read a target table with the engine-internal bucket column dropped. */
+  /** Read a target table resolved to the newest version of every key, with
+    * the engine-internal bucket and version columns dropped. The stored
+    * files hold every committed version: read them only through here. */
   def readTable(spark: SparkSession, path: String): DataFrame =
     PartitionedMerge.read(spark, path)
+
+  /** The pedidos step's commit of one flushed batch: the headers are
+    * upserted into `pedidos`, then their items become the orders' new
+    * child sets in `pedido_itens` (FK CASCADE analog), bucketed and
+    * resolved on the PARENT key. Both appends read the batch: it is pinned
+    * once. Returns the header count. */
+  def commitPedidos(spark: SparkSession, targetDir: String,
+                    staged: DataFrame): Long = {
+    val batch = staged.localCheckpoint()
+    val headers = batch.select(col("id").cast("int").as("id_pedido"),
+      col("numero").as("numero_pedido"),
+      col("data_pedido"),
+      col("nome").as("nome_cliente"),
+      Coercions.coerceBrFloat(col("valor")).as("valor_pedido"),
+      col("nome_vendedor"), col("situacao").as("situacao_pedido"))
+    val n = mergeInto(spark, s"$targetDir/pedidos", headers, Seq("id_pedido"))
+    val items = batch
+      .select(col("id").cast("int").as("id_pedido"),
+        explode(col("itens")).as("it"))
+      .select(col("id_pedido"),
+        col("it.item.id_produto").cast("int").as("id_produto_tiny"),
+        col("it.item.codigo").as("codigo_produto"),
+        Coercions.coerceBrFloat(col("it.item.quantidade")).as("quantidade"),
+        Coercions.coerceBrFloat(col("it.item.valor_unitario"))
+          .as("valor_unitario_pedido"))
+    PartitionedMerge.replaceChildren(spark, s"$targetDir/pedido_itens",
+      items, headers.select("id_pedido"), "id_pedido", TableBuckets)
+    n
+  }
 
   /** Page fetcher over page-N.json envelope files. Missing page-1 file ⇒
     * empty result; envelope errors run through RetryPolicy exactly like
@@ -194,35 +225,8 @@ object Pipeline {
     })
 
     // PASSO 4: pedidos + fan-out itens (ref :392; header-detail j1)
-    // headers, items and parent keys all read the batch: pinned once
-    safeStep("pedidos")(grouped("pedidos")(staged => {
-        val batch = staged.localCheckpoint()
-        val headers = batch.select(col("id").cast("int").as("id_pedido"),
-          col("numero").as("numero_pedido"),
-          col("data_pedido"),
-          col("nome").as("nome_cliente"),
-          Coercions.coerceBrFloat(col("valor")).as("valor_pedido"),
-          col("nome_vendedor"), col("situacao").as("situacao_pedido"))
-        val n = mergeInto(spark, s"$targetDir/pedidos", headers,
-          Seq("id_pedido"))
-        val items = batch
-          .select(col("id").cast("int").as("id_pedido"),
-            explode(col("itens")).as("it"))
-          .select(col("id_pedido"),
-            col("it.item.id_produto").cast("int").as("id_produto_tiny"),
-            col("it.item.codigo").as("codigo_produto"),
-            Coercions.coerceBrFloat(col("it.item.quantidade"))
-              .as("quantidade"),
-            Coercions.coerceBrFloat(col("it.item.valor_unitario"))
-              .as("valor_unitario_pedido"))
-        // detail rows follow their header's upsert (FK CASCADE analog):
-        // replace all items of the orders present in this batch — bucketed
-        // on the PARENT key, so only buckets with updated orders rewrite
-        PartitionedMerge.replaceChildren(spark,
-          s"$targetDir/pedido_itens", items, headers.select("id_pedido"),
-          "id_pedido", TableBuckets)
-        n
-    }) { sink =>
+    safeStep("pedidos")(grouped("pedidos")(
+        commitPedidos(spark, targetDir, _)) { sink =>
       IncrementalStep.run(
         store, "pedidos",
         filePageFetcher(spark, s"$sourceDir/pedidos", "pedidos", "pedido",
@@ -230,7 +234,7 @@ object Pipeline {
         sink, now)
     })
 
-    // audit: COUNT(*) per loaded table (ref :395-402)
+    // audit: COUNT(*) per loaded table over its resolved rows (ref :395-402)
     val tables = Seq("categorias", "produtos", "produto_estoque_total",
       "produto_estoque_depositos", "pedidos", "pedido_itens")
     val audit = tables.flatMap { tbl =>

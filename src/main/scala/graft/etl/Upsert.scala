@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference upserts with `INSERT ... ON CONFLICT (k) DO UPDATE`
   * (tiny_api_v2_cliente.py:122-123,198 and inferred entity loads per
-  * README.md:12). Without a transactional table format in this harness the
-  * equivalent is merge-by-union: updates win, untouched existing rows are
-  * kept via an anti join on the natural key.
+  * README.md:12). Over DataFrames the equivalent is merge-by-union:
+  * updates win, untouched existing rows are kept via an anti join on the
+  * natural key. The ETL tables commit versioned deltas instead and resolve
+  * on read (PartitionedMerge); they share `dedupe`.
   *
   * Scale posture: the anti join only ships the update-side KEY columns
   * (projected before the join), so the shuffle is keys-only; when the update
@@ -27,16 +28,9 @@ object Upsert {
     * records under concurrent source writes). */
   def merge(existing: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
     val uniq = dedupe(updates, keys)
-    replaceKeys(existing, uniq, uniq.select(keys.map(col): _*).distinct(), keys)
+    uniq.unionByName(existing.join(uniq.select(keys.map(col): _*).distinct(),
+      keys, "left_anti"))
   }
-
-  /** `rows` plus every `existing` row whose key does not occur in `keyed`.
-    * `keyed` only supplies the key set and may repeat keys (the anti join
-    * tests membership), so a caller holding its batch pinned passes the
-    * batch itself: no second dedupe, no distinct shuffle. */
-  def replaceKeys(existing: DataFrame, rows: DataFrame, keyed: DataFrame,
-                  keys: Seq[String]): DataFrame =
-    rows.unionByName(existing.join(keyed.select(keys.map(col): _*), keys, "left_anti"))
 
   /** The ETL layer's one dedupe rule: one row per key, the one with the
     * highest `versions` (descending significance); ties are broken by every

@@ -1,7 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** Additive schema evolution (SURVEY.md §2.1 sink_ddl_bootstrap): the Spark
@@ -11,21 +10,6 @@ import org.apache.spark.sql.types.StructType
   * never dropped or retyped (a type change is an error, not a migration).
   */
 object SchemaEvolution {
-
-  /** Align a batch to the union of (table schema ∪ batch schema): missing
-    * declared columns are added as NULLs; columns unknown to the catalog
-    * are kept (additive drift, landed for forward-compat). */
-  def conform(batch: DataFrame, declared: StructType): DataFrame = {
-    val have = batch.schema.fieldNames.toSet
-    val added = declared.fields.filterNot(f => have(f.name))
-      .foldLeft(batch)((df, f) =>
-        df.withColumn(f.name, lit(null).cast(f.dataType)))
-    // stable column order: declared first, then drift columns
-    val declaredNames = declared.fieldNames.filter(n =>
-      added.schema.fieldNames.contains(n))
-    val driftNames = added.schema.fieldNames.filterNot(declared.fieldNames.contains)
-    added.select((declaredNames ++ driftNames).map(col): _*)
-  }
 
   /** Check evolution legality between an existing table schema and an
     * incoming one: additions OK, type changes rejected. Returns the merged

@@ -15,7 +15,7 @@ import graft.etl.{EnvelopeReader, Pipeline}
   *   reference concept               → streaming equivalent
   *   watermark table (+1 s excl.)    → source offsets in checkpointLocation
   *   page checkpoint / resume        → file-source offset log
-  *   per-page commit (ref :352-353)  → foreachBatch + merge-by-union sink
+  *   per-page commit (ref :352-353)  → foreachBatch + versioned upsert sink
   *   60 d late-data window           → withWatermark delayThreshold
   *
   * At scale the file source is swapped for Kafka/event-hub; every transform
@@ -35,9 +35,12 @@ object StreamingIngest {
       .select(explode(col(s"retorno.$entityField")).as("it"))
       .select(col(s"it.$itemWrapper.*"))
 
-  /** Idempotent incremental sink: each micro-batch merge-upserts into the
-    * target parquet table by natural key. Re-delivered batches are no-ops
-    * (same keys, same rows) — the foreachBatch exactly-once recipe. */
+  /** Idempotent incremental sink: each micro-batch is upserted into the
+    * target table by natural key through `Pipeline.mergeInto` — deduped
+    * per key inside the write plan (a micro-batch is not key-unique), then
+    * committed as one versioned delta append; read the target with
+    * `Pipeline.readTable`. Re-delivered batches change no resolved row —
+    * the foreachBatch exactly-once recipe. */
   def incrementalSink(stream: DataFrame, spark: SparkSession,
                       targetPath: String, keys: Seq[String],
                       checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
@@ -1807,13 +1810,12 @@ object StreamingIngest {
     * as a duplicate). */
   private def chunkFingerprints(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), col("ts"), split(col("text"), " ").as("toks"))
-    .withColumn("n", size(col("toks")))
-    .select(col("doc_id"), col("ts"), col("toks"),
-      explode(expr(
-        "sequence(0, CAST(greatest(0, ceil((n - 25) / 25.0) - 1) AS INT))"))
-        .as("chunk_id"))
-    .withColumn("text",
-      expr("array_join(slice(toks, chunk_id * 25 + 1, 50), ' ')"))
+    // chunk strings are built inside the array, so each exploded row
+    // carries one 50-token chunk, not the doc's whole token array
+    .select(col("doc_id"), col("ts"), explode(expr(
+      "transform(sequence(0, CAST(greatest(0, " +
+        "ceil((size(toks) - 25) / 25.0) - 1) AS INT)), " +
+        "i -> array_join(slice(toks, i * 25 + 1, 50), ' '))")).as("text"))
     .withColumn("sw", expr(graft.ext.DedupOps.simhashRowFoldSql))
     .select(col("doc_id"), col("ts"),
       graft.ext.DedupOps.simhashRowHalf(0).as("fp0"),

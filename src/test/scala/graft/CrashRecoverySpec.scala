@@ -1,13 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
 
-import graft.etl.{GroupCommit, IncrementalStep, PartitionedMerge}
+import graft.etl.{GroupCommit, IncrementalStep, PartitionedMerge, Pipeline}
 import graft.state.StateStore
+import graft.util.Fs
 
 /** Crash-consistency property: a paged run that fails at random pages and
   * resumes (ERRO → resume at saved+1, ref :194-196) must converge to the
@@ -76,6 +79,83 @@ class CrashRecoverySpec extends SparkSpec {
       val runs = runToCompletion(dir, fails)
       assert(runs > 1, s"trial $trial: failures $fails did not interrupt")
       assert(table(dir) === expected, s"trial $trial diverged (fails=$fails)")
+    }
+  }
+
+  // ---- the pedidos step's flush: two appends, then the page delete ----
+
+  /** A decoded pedidos page: (order id, its items' product ids). */
+  private def pedidosPage(dir: String, orders: Seq[(Int, Seq[Int])]): DataFrame = {
+    val lines = orders.map { case (id, items) =>
+      val its = items.map(p => s"""{"item": {"id_produto": "$p", """ +
+        s""""codigo": "C$p", "quantidade": "$id,00", "valor_unitario": "1,00"}}""")
+      s"""{"id": "$id", "numero": "$id", "valor": "$id,50", "nome": "C$id", """ +
+        s""""itens": [${its.mkString(", ")}]}"""
+    }
+    Files.write(Paths.get(dir, "page.json"), lines.asJava)
+    spark.read.schema(Pipeline.pedidoSchema).json(s"$dir/page.json")
+  }
+
+  private def pedidosTables(root: String): Seq[Seq[String]] =
+    Seq("pedidos", "pedido_itens").map(t =>
+      Pipeline.readTable(spark, s"$root/$t").collect().map(_.toString).sorted.toSeq)
+
+  private class Killed extends RuntimeException("killed")
+
+  test("pedidos flush killed between its appends or before the page " +
+      "delete: recover converges to the clean run, and a re-run of the " +
+      "batch changes no resolved row") {
+    val base = pedidosPage(tmpDir("ped-base"),
+      Seq(1 -> Seq(10, 11), 2 -> Seq(12), 3 -> Seq(13, 14)))
+    // order 1 drops to zero items, 2 changes, 3 loses its last item, 4 is new
+    val refresh = pedidosPage(tmpDir("ped-refresh"),
+      Seq(1 -> Nil, 2 -> Seq(15), 3 -> Seq(13), 4 -> Seq(16, 17)))
+    def load(root: String): Unit =
+      Pipeline.commitPedidos(spark, root, base): Unit
+    def gc(root: String, merge: DataFrame => Long) =
+      new GroupCommit(spark, s"$root/_staging/pedidos", 1, "id", merge)
+    def commit(root: String): DataFrame => Long =
+      Pipeline.commitPedidos(spark, root, _)
+    def staged(root: String): Int =
+      Fs.list(Paths.get(s"$root/_staging/pedidos"))
+        .count(_.getFileName.toString.startsWith("p="))
+
+    val clean = tmpDir("ped-clean")
+    load(clean)
+    gc(clean, commit(clean)).stage(refresh)
+    val expected = pedidosTables(clean)
+    assert(expected(1).size === 4) // items of orders 2, 3 and 4
+
+    // kill 1: the header append lands, the items append fails (its
+    // version-number directory is unwritable), the page stays staged
+    val k1 = tmpDir("ped-kill1")
+    load(k1)
+    val seqDir = Paths.get(k1, "pedido_itens", "_seq")
+    val aside = Paths.get(k1, "seq-aside")
+    Files.move(seqDir, aside)
+    Files.createFile(seqDir)
+    intercept[Exception](gc(k1, commit(k1)).stage(refresh))
+    assert(Pipeline.readTable(spark, s"$k1/pedidos").count() === 4L)
+    assert(staged(k1) === 1)
+    Files.delete(seqDir)
+    Files.move(aside, seqDir)
+    gc(k1, commit(k1)).recover()
+
+    // kill 2: both appends land, the process dies before the flush
+    // deletes the staged page
+    val k2 = tmpDir("ped-kill2")
+    load(k2)
+    intercept[Killed](gc(k2, b => { commit(k2)(b); throw new Killed })
+      .stage(refresh))
+    assert(staged(k2) === 1)
+    gc(k2, commit(k2)).recover()
+
+    for (root <- Seq(k1, k2)) {
+      assert(pedidosTables(root) === expected, s"$root diverged from the clean run")
+      assert(staged(root) === 0, s"$root: page left staged")
+      // idempotence: the same batch committed again changes no resolved row
+      commit(root)(refresh): Unit
+      assert(pedidosTables(root) === expected, s"$root: re-run changed rows")
     }
   }
 }

@@ -76,6 +76,19 @@ class PartitionedMergeSpec extends SparkSpec {
     assert(t.count() === 50)
   }
 
+  test("a type change is rejected before anything is written; the " +
+      "table stays readable") {
+    val path = tmpDir("pm") + "/t"
+    PartitionedMerge.mergeInto(spark, path,
+      Seq((1, "a"), (2, "b")).toDF("id", "name"), Seq("id"), 8)
+    val e = intercept[IllegalArgumentException](
+      PartitionedMerge.mergeInto(spark, path,
+        Seq((1, 3.5)).toDF("id", "name"), Seq("id"), 8))
+    assert(e.getMessage.contains("illegal schema evolution"))
+    assert(PartitionedMerge.read(spark, path).orderBy("id")
+      .as[(Int, String)].collect().toSeq === Seq((1, "a"), (2, "b")))
+  }
+
   test("replaceChildren swaps a parent's children, clears zero-child parents") {
     val path = tmpDir("pm") + "/items"
     val base = Seq((10, "i1"), (10, "i2"), (20, "i3"), (30, "i4"))

@@ -105,6 +105,60 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  /** A one-page pedidos envelope: (order id, its items as
+    * (id_produto, quantidade)). */
+  private def pedidosPage(orders: Seq[(Int, Seq[(Int, String)])]): String = {
+    val ps = orders.map { case (id, items) =>
+      val its = items.map { case (prod, q) =>
+        s"""{"item": {"id_produto": "$prod", "codigo": "C$prod", """ +
+          s""""descricao": "d", "quantidade": "$q", "valor_unitario": "1,00"}}"""
+      }.mkString(", ")
+      s"""{"pedido": {"id": "$id", "numero": "$id", "data_pedido": """ +
+        s""""01/04/2024", "nome": "C", "valor": "10,00", "id_vendedor": "7", """ +
+        s""""nome_vendedor": "V", "situacao": "Aberto", """ +
+        s""""codigo_rastreamento": "", "itens": [$its]}}"""
+    }.mkString(", ")
+    s"""{"retorno": {"status_processamento": "3", "status": "OK", "pagina": """ +
+      s""""1", "numero_paginas": "1", "pedidos": [$ps]}}"""
+  }
+
+  test("refresh: an order dropped to zero items and an order that lost its " +
+      "last item resolve to their new item sets") {
+    val src = stageSource()
+    val tgt = tmpDir("pipe-zero")
+    val page = Paths.get(src, "pedidos", "page-1.json")
+    val now = Instant.parse("2024-06-15T08:00:00Z")
+    Files.writeString(page, pedidosPage(Seq(
+      9001 -> Seq(101 -> "1,00", 102 -> "2,00"),
+      9002 -> Seq(101 -> "3,00", 102 -> "4,00", 103 -> "5,00"),
+      9003 -> Seq(103 -> "6,00"))))
+    val r1 = Pipeline.run(spark, src, tgt, now)
+    assert(r1.audit("pedidos") === 3L && r1.audit("pedido_itens") === 6L)
+    // 9001 now has no items, 9002 lost its last one, 9003 is not in the
+    // refresh and keeps its item
+    Files.writeString(page, pedidosPage(Seq(
+      9001 -> Seq(),
+      9002 -> Seq(101 -> "3,00", 102 -> "4,00"))))
+    val r2 = Pipeline.run(spark, src, tgt, now.plusSeconds(86400))
+    assert(r2.steps.forall(_.outcome.isInstanceOf[IncrementalStep.Completed]),
+      r2.steps.toString)
+    def itens() = Pipeline.readTable(spark, s"$tgt/pedido_itens")
+      .orderBy("id_pedido", "id_produto_tiny").collect()
+      .map(r => (r.getAs[Int]("id_pedido"), r.getAs[Int]("id_produto_tiny"),
+        r.getAs[Double]("quantidade"))).toSeq
+    val want = Seq((9002, 101, 3.0), (9002, 102, 4.0), (9003, 103, 6.0))
+    assert(itens() === want)
+    assert(Pipeline.readTable(spark, s"$tgt/pedido_itens").columns.toSeq ===
+      Seq("id_pedido", "id_produto_tiny", "codigo_produto", "quantidade",
+        "valor_unitario_pedido"))
+    assert(Pipeline.readTable(spark, s"$tgt/pedidos").count() === 3L)
+    assert(r2.audit("pedidos") === 3L && r2.audit("pedido_itens") === 3L)
+    // the same refresh again changes no resolved row
+    val r3 = Pipeline.run(spark, src, tgt, now.plusSeconds(2 * 86400))
+    assert(r3.audit === r2.audit)
+    assert(itens() === want)
+  }
+
   /** Call site of every job started while registered: the SQL
     * execution's description when the job belongs to one (adaptive
     * execution submits stage jobs from its own threads), else the result
@@ -159,13 +213,14 @@ class PipelineSpec extends SparkSpec {
       assert(state.isEmpty, state.mkString("\n"))
       // Pinned job count of the second (incremental) run. Before the state
       // tables moved to the driver and each merge batch was evaluated once,
-      // this run took 157 jobs (34 of them state reads and writes). Re-pin
-      // only together with the plan change that moves it.
+      // this run took 157 jobs (34 of them state reads and writes); with
+      // the touched-bucket rewrite in place of versioned delta appends it
+      // took 99. Re-pin only together with the plan change that moves it.
       assert(second.size <= JobBudget,
         second.groupBy(identity).view.mapValues(_.size).toSeq
           .sortBy(-_._2).mkString("\n"))
     } finally spark.sparkContext.removeSparkListener(sites)
   }
 
-  private val JobBudget = 99
+  private val JobBudget = 50
 }

@@ -18,19 +18,6 @@ class SchemaSpec extends SparkSpec {
     }
   }
 
-  test("conform adds missing declared columns as NULLs, keeps drift") {
-    import spark.implicits._
-    val batch = Seq((1, "x", "extra")).toDF("id_produto", "nome_produto", "novo_campo")
-    val declared = StructType.fromDDL(
-      "id_produto INT, nome_produto STRING, preco DOUBLE")
-    val out = SchemaEvolution.conform(batch, declared)
-    assert(out.schema.fieldNames.toSeq
-      === Seq("id_produto", "nome_produto", "preco", "novo_campo"))
-    val row = out.collect()(0)
-    assert(row.isNullAt(2)) // preco added as NULL
-    assert(row.getString(3) === "extra")
-  }
-
   test("mergeAdditive accepts additions and rejects type changes") {
     val base = StructType.fromDDL("a INT, b STRING")
     val add = StructType.fromDDL("b STRING, c DOUBLE")

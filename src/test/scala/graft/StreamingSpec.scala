@@ -32,19 +32,19 @@ class StreamingSpec extends SparkSpec {
 
     land("page-1.json")
     runOnce()
-    assert(spark.read.parquet(tgt).count() === 2)
+    assert(Pipeline.readTable(spark, tgt).count() === 2)
 
     // second page lands; the checkpoint's offset log (s5 analog) must make
     // the next run process ONLY the new file, and the merge stays idempotent
     land("page-2.json")
     runOnce()
-    val rows = spark.read.parquet(tgt).orderBy("id").collect()
+    val rows = Pipeline.readTable(spark, tgt).orderBy("id").collect()
     assert(rows.length === 3)
     assert(rows.map(_.getAs[String]("id")).toSeq === Seq("101", "102", "103"))
 
     // re-run with nothing new: no-op
     runOnce()
-    assert(spark.read.parquet(tgt).count() === 3)
+    assert(Pipeline.readTable(spark, tgt).count() === 3)
   }
 
   test("event-time tumbling window with watermark aggregates by hour") {
