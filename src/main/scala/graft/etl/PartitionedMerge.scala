@@ -1,8 +1,7 @@
 package graft.etl
 
 import java.io.{ByteArrayInputStream, RandomAccessFile}
-import java.nio.file.{DirectoryNotEmptyException, Files, Path, Paths,
-  StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -22,7 +21,7 @@ import graft.util.Fs
   *
   * Layout: `path/gbucket=N/<file>.parquet`, N = pmod(hash(partition key),
   * buckets). There is one commit protocol: every write (`mergeInto`,
-  * `replaceChildren`, `appendInto`) claims the next version number `gseq`
+  * `replaceChildren`) claims the next version number `gseq`
   * and adds its rows as one delta file per bucket it touches, so a commit
   * costs O(batch) however large the table is. Reads resolve: per partition
   * key (the natural key of an upsert table, the parent key of a child
@@ -41,8 +40,7 @@ object PartitionedMerge {
   val BucketCol = "gbucket"
 
   /** Version column of every delta row; rows without one (compacted base
-    * files, tables written before versioned commits) resolve as version 0,
-    * the oldest. */
+    * files) resolve as version 0, the oldest. */
   val SeqCol = "gseq"
 
   /** Set (true) only on the one marker row a `replaceChildren` commit
@@ -61,39 +59,59 @@ object PartitionedMerge {
   // later write uses the persisted count and IGNORES a mismatched caller
   // parameter. `read(spark, path)` takes no keys: it resolves by the
   // recorded key, and reads under the recorded schema, so neither a read
-  // nor a commit infers a schema with a Spark job. Tables written before a
-  // field existed lack it: no key reads unresolved (they were rewritten
-  // per commit, one row per key), no schema reads by footer inference.
+  // nor a commit infers a schema with a Spark job. A table whose data has
+  // no such record (written before versioned commits) is rejected.
 
   private def metaFile(path: String) = Paths.get(path, "_graft_meta.json")
 
   private val Json = new ObjectMapper()
 
   private case class Meta(numBuckets: Int, keys: Seq[String],
-                          schema: Option[StructType])
+                          schema: StructType)
+
+  private def unrecorded(path: String) = new IllegalStateException(
+    s"table $path records no bucket count, key and schema in " +
+      "_graft_meta.json: it was written before versioned commits; " +
+      "rebuild it with a full run into an empty target")
 
   private def meta(path: String): Option[Meta] =
     Some(metaFile(path)).filter(Files.exists(_)).map { f =>
       val j = Json.readTree(Files.readAllBytes(f))
+      if (!j.has("keys") || !j.has("schema")) throw unrecorded(path)
       Meta(j.get("numBuckets").asInt,
-        Option(j.get("keys")).toSeq.flatMap(_.elements.asScala.map(_.asText)),
-        Option(j.get("schema")).map(s =>
-          DataType.fromJson(s.toString).asInstanceOf[StructType]))
+        j.get("keys").elements.asScala.map(_.asText).toSeq,
+        DataType.fromJson(j.get("schema").toString).asInstanceOf[StructType])
     }
+
+  private def recorded(path: String): Meta =
+    meta(path).getOrElse(throw unrecorded(path))
 
   /** Bucket count recorded in the table's metadata file, if any. */
   def persistedBuckets(path: String): Option[Int] = meta(path).map(_.numBuckets)
 
-  /** Replace the metadata file atomically (write a hidden temp file, rename
-    * over): a concurrent reader sees the old or the new record. */
-  private def writeMeta(path: String, numBuckets: Int, keys: Seq[String],
-                        schema: StructType): Unit = {
-    val tmp = Paths.get(path, s"_graft_meta.json.tmp-${System.nanoTime}")
-    Files.writeString(tmp, s"""{"numBuckets":$numBuckets,"keys":""" +
-      s"""${Json.writeValueAsString(keys.asJava)},"schema":${schema.json}}""")
-    Files.move(tmp, metaFile(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  /** Record `schema`'s columns in the table's metadata. Under the
+    * metadata lock the record is re-read, merged and replaced atomically
+    * (hidden temp file, rename over), so two writers that each add a column
+    * both land, and a concurrent reader sees the old or the new record. */
+  private def recordSchema(path: String, numBuckets: Int, keys: Seq[String],
+                           schema: StructType): Unit =
+    while (Fs.withLock(Paths.get(path, "_meta_lock"), 60 * 1000L) {
+      val cur = meta(path)
+      cur.foreach(m => require(m.numBuckets == numBuckets && m.keys == keys,
+        s"table $path was concurrently created with another layout"))
+      val merged = cur.fold(schema)(m =>
+        nullable(SchemaEvolution.mergeAdditive(m.schema, schema)))
+      if (!cur.exists(_.schema == merged)) {
+        val tmp = Paths.get(path, s"_graft_meta.json.tmp-${System.nanoTime}")
+        Files.writeString(tmp, s"""{"numBuckets":$numBuckets,"keys":""" +
+          s"""${Json.writeValueAsString(keys.asJava)},"schema":${merged.json}}""")
+        Files.move(tmp, metaFile(path), StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING): Unit
+      }
+    }.isEmpty) Thread.sleep(10)
+
+  private def nullable(s: StructType) =
+    StructType(s.map(_.copy(nullable = true)))
 
   // ---- bucket directories (driver-side listings, never a Spark job) ----
 
@@ -138,26 +156,18 @@ object PartitionedMerge {
   // ---- reads and writes (Spark jobs stay in this file) ------------------
 
   /** Every stored row with its bucket column, of the whole table or of
-    * `files` only: under the recorded schema (plus `gseq`) when there is
-    * one, else by footer inference (`mergeSchema`: a table written before
-    * the schema was recorded may hold files of several additive schemas).
-    * A column a file lacks reads as NULL. */
-  private def scan(spark: SparkSession, path: String,
+    * `files` only, under the recorded `schema` plus `gseq`: a column a
+    * file lacks reads as NULL. */
+  private def scan(spark: SparkSession, path: String, schema: StructType,
                    files: Seq[Path] = Nil): DataFrame = {
-    val r = meta(path).flatMap(_.schema) match {
-      case Some(s) => spark.read.schema(
-        s.add(SeqCol, LongType).add(BucketCol, IntegerType))
-      case None => spark.read.option("mergeSchema", "true")
-    }
+    val r = spark.read.schema(
+      schema.add(SeqCol, LongType).add(BucketCol, IntegerType))
     if (files.isEmpty) r.parquet(path)
     else r.option("basePath", path).parquet(files.map(_.toString): _*)
   }
 
-  /** A scan with every row's version in `gseq`. */
-  private def versioned(all: DataFrame): DataFrame =
-    all.withColumn(SeqCol,
-      if (all.columns.contains(SeqCol)) coalesce(col(SeqCol), lit(0L))
-      else lit(0L))
+  /** A row's version: its `gseq`, 0 for a compacted base row. */
+  private val version: Column = coalesce(col(SeqCol), lit(0L))
 
   /** The one resolution rule: per partition key, the rows of its newest
     * version — the highest `gseq`, and of that version one file. Two files
@@ -167,8 +177,8 @@ object PartitionedMerge {
     * set whole and never doubles it. Parent markers, `gseq` and `gmark`
     * are dropped; the bucket column is kept. */
   private def latest(stored: DataFrame, keys: Seq[String]): DataFrame = {
-    val top = versioned(stored)
-      .withColumn("__v", struct(col(SeqCol), xxhash64(input_file_name())))
+    val top = stored
+      .withColumn("__v", struct(version, xxhash64(input_file_name())))
       .withColumn("__top",
         max(col("__v")).over(Window.partitionBy(keys.map(col): _*)))
       .filter(col("__v") === col("__top"))
@@ -179,17 +189,10 @@ object PartitionedMerge {
   }
 
   /** The table resolved to its newest version per recorded key, bucket
-    * column dropped. A table without a recorded key is read as stored. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    readResolved(spark, path, Nil)
-
-  /** `read`, resolving by `keys` when the table records no key (a delta
-    * table written before the key was recorded). */
-  def readResolved(spark: SparkSession, path: String,
-                   keys: Seq[String]): DataFrame = {
-    val k = meta(path).map(_.keys).filter(_.nonEmpty).getOrElse(keys)
-    val all = scan(spark, path)
-    (if (k.isEmpty) all else latest(all, k)).drop(BucketCol)
+    * column dropped. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val m = recorded(path)
+    latest(scan(spark, path, m.schema), m.keys).drop(BucketCol)
   }
 
   /** Upsert `updates` into the table at `path` by natural key: the batch,
@@ -197,15 +200,11 @@ object PartitionedMerge {
     * becomes the keys' newest version. Additive schema evolution
     * (SchemaEvolution): new columns land, older rows read them as NULL, a
     * type change is rejected. Returns the number of rows written.
-    * Idempotent: re-merging the same batch changes no resolved row. */
+    * Idempotent: re-merging the same batch changes no resolved row.
+    * `compactThreshold`: see `commit`. */
   def mergeInto(spark: SparkSession, path: String, updates: DataFrame,
-                keys: Seq[String], numBuckets: Int = 16): Long =
-    appendInto(spark, path, updates, keys, numBuckets)
-
-  /** `mergeInto` with the compaction threshold exposed (see `commit`). */
-  def appendInto(spark: SparkSession, path: String, updates: DataFrame,
-                 keys: Seq[String], numBuckets: Int = 16,
-                 compactThreshold: Int = 32): Long =
+                keys: Seq[String], numBuckets: Int = 16,
+                compactThreshold: Int = 32): Long =
     commit(spark, path, updates, keys, numBuckets, compactThreshold,
       dedupe = true)
 
@@ -237,24 +236,23 @@ object PartitionedMerge {
     * itself bounds merge-on-read cost and unattended cron appends cannot
     * degrade readers. Amortized cost per append stays
     * O(page + bucket/threshold); pass `compactThreshold = 0` to disable
-    * and schedule `compact` manually. Appends and compactions may overlap,
-    * from any number of processes; an additive schema change assumes one
-    * writer at a time (two writers adding columns at once may lose one
-    * addition from the recorded schema). */
+    * and schedule `compact` manually. Appends, compactions and additive
+    * schema changes may overlap, from any number of processes.
+    *
+    * An empty batch still claims its version (a gap no row carries) and
+    * records the table's schema, so a table first committed empty exists
+    * and reads as empty. */
   private def commit(spark: SparkSession, path: String, rows: DataFrame,
                      keys: Seq[String], numBuckets: Int,
                      compactThreshold: Int, dedupe: Boolean): Long = {
     val m0 = meta(path)
-    m0.map(_.keys).filter(_.nonEmpty).foreach(k => require(k == keys,
-      s"table $path is keyed on ${k.mkString(",")}, not ${keys.mkString(",")}"))
-    val nb = m0.map(_.numBuckets).getOrElse(numBuckets)
-    // a table stored before its schema was recorded: infer it once
-    val known = m0.flatMap(_.schema).orElse(
-      if (buckets(path).isEmpty) None
-      else Some(scan(spark, path).drop(BucketCol, SeqCol).schema))
-    val schema = StructType(known.fold(rows.schema)(
-      SchemaEvolution.mergeAdditive(_, rows.schema))
-      .map(_.copy(nullable = true)))
+    if (m0.isEmpty && buckets(path).nonEmpty) throw unrecorded(path)
+    m0.foreach(m => require(m.keys == keys,
+      s"table $path is keyed on ${m.keys.mkString(",")}, not ${keys.mkString(",")}"))
+    val nb = m0.fold(numBuckets)(_.numBuckets)
+    // a type change is rejected here, before anything is written
+    val schema = nullable(m0.fold(rows.schema)(m =>
+      SchemaEvolution.mergeAdditive(m.schema, rows.schema)))
     val seq = allocSeq(path)
     // Stage in a PRIVATE per-append dir, then move files into the live
     // bucket dirs: a direct SaveMode.Append from two JVMs shares one
@@ -267,31 +265,23 @@ object PartitionedMerge {
     // retry contract (CrashRecoverySpec): the re-run re-appends the same
     // page under a higher seq, whose rows win per key at read time.
     val tmp = path + s".tmp-append-$seq"
-    writeBuckets(rows.withColumn(SeqCol, lit(seq))
-      .withColumn(BucketCol, bucketExpr(keys, nb)), tmp,
-      dedupeOn = if (dedupe) keys else Nil)
-    val staged = buckets(tmp)
-    val n = footerRows(staged.flatMap(b => dataFiles(bucketDir(tmp, b))))
-    if (n == 0) {
-      // an empty batch leaves no trace: no version, and no table root if
-      // it would have created the table
-      Fs.deleteRec(Paths.get(tmp))
-      Seq(seqDir(path).resolve(seq.toString), seqDir(path), Paths.get(path))
-        .foreach(p => try Files.deleteIfExists(p)
-          catch { case _: DirectoryNotEmptyException => false })
-      return 0L
-    }
-    // the schema is recorded before any file of this version is visible
-    if (!m0.contains(Meta(nb, keys, Some(schema))))
-      writeMeta(path, nb, keys, schema)
-    staged.foreach(b =>
-      moveDataFiles(bucketDir(tmp, b), bucketDir(path, b), s"delta-$seq"))
-    Fs.deleteRec(Paths.get(tmp))
-    if (compactThreshold > 0) {
+    val n = try {
+      writeBuckets(rows.withColumn(SeqCol, lit(seq))
+        .withColumn(BucketCol, bucketExpr(keys, nb)), tmp,
+        dedupeOn = if (dedupe) keys else Nil)
+      val staged = buckets(tmp)
+      val written = footerRows(staged.flatMap(b => dataFiles(bucketDir(tmp, b))))
+      // the schema is recorded before any file of this version is visible;
+      // the record only grows, so one already covering `schema` stays
+      if (!m0.exists(_.schema == schema)) recordSchema(path, nb, keys, schema)
+      staged.foreach(b =>
+        moveDataFiles(bucketDir(tmp, b), bucketDir(path, b), s"delta-$seq"))
+      written
+    } finally Fs.deleteRec(Paths.get(tmp))
+    if (compactThreshold > 0 && n > 0) {
       val frag = buckets(path)
         .filter(b => dataFiles(bucketDir(path, b)).size >= compactThreshold)
-      if (frag.nonEmpty)
-        compact(spark, path, keys, only = Some(frag.toSet)): Unit
+      if (frag.nonEmpty) compact(spark, path, only = Some(frag.toSet)): Unit
     }
     n
   }
@@ -346,8 +336,8 @@ object PartitionedMerge {
   /** Per-bucket compaction: every bucket directory holding more than one
     * data file (restricted to `only` when given) is collapsed to its
     * resolved rows in a single base file; buckets already compact see zero
-    * I/O. Resolves by the recorded key (`keys` for a table that records
-    * none). Returns (bucket, filesBefore) for the buckets it rewrote.
+    * I/O. Resolves by the recorded key. Returns (bucket, filesBefore) for
+    * the buckets it rewrote.
     * Idempotent, and read results are unchanged by construction — the
     * spec asserts both.
     *
@@ -374,17 +364,14 @@ object PartitionedMerge {
     * the auto-compact threshold together must not both rewrite): busy →
     * empty result, the running compactor covers the work. A lock older
     * than `staleLockMs` is a crashed compactor's and is broken. */
-  def compact(spark: SparkSession, path: String, keys: Seq[String],
+  def compact(spark: SparkSession, path: String,
               only: Option[Set[Int]] = None,
               staleLockMs: Long = 10 * 60 * 1000L): Seq[(Int, Int)] =
     if (!Files.exists(Paths.get(path))) Seq.empty
     else Fs.withLock(Paths.get(path, "_compact_lock"), staleLockMs)(
-      compactLocked(spark, path,
-        meta(path).map(_.keys).filter(_.nonEmpty).getOrElse(keys), only))
-      .getOrElse(Seq.empty)
+      compactLocked(spark, path, only)).getOrElse(Seq.empty)
 
   private def compactLocked(spark: SparkSession, path: String,
-                            keys: Seq[String],
                             only: Option[Set[Int]]): Seq[(Int, Int)] = {
     // under the compactor lock: sweep tmp dirs of dead runs (crashed
     // before their own cleanup) — unique names make them unreferenced
@@ -398,13 +385,14 @@ object PartitionedMerge {
       .map(b => b -> dataFiles(bucketDir(path, b)))
       .filter(_._2.size > 1)
     if (snapshot.isEmpty) return Seq.empty
-    val stored = scan(spark, path, snapshot.flatMap(_._2))
+    val m = recorded(path)
+    val stored = scan(spark, path, m.schema, snapshot.flatMap(_._2))
     // per-file max version — the DELETION ORDER below depends on it
     val fileRe = (java.util.regex.Pattern.quote(s"$BucketCol=") +
       "(\\d+)/([^/]+)$").r.unanchored
-    val fileVer: Map[(Int, String), Long] = versioned(stored)
+    val fileVer: Map[(Int, String), Long] = stored
       .groupBy(input_file_name().as("f"))
-      .agg(max(col(SeqCol)).as("v"))
+      .agg(max(version).as("v"))
       .collect().flatMap { r =>
         r.getString(0) match {
           case fileRe(b, f) => Some((b.toInt, f) -> r.getLong(1))
@@ -414,7 +402,7 @@ object PartitionedMerge {
     // unique per-run tmp dir: a crashed run's leftovers are inert to
     // every later run (and cleaned up by the next locked compactor)
     val tmp = path + s".tmp-compact-${System.nanoTime}"
-    writeBuckets(latest(stored, keys), tmp)
+    writeBuckets(latest(stored, m.keys), tmp)
     snapshot.foreach { case (b, files) =>
       // 1. commit the new base file(s) into the LIVE directory
       moveDataFiles(bucketDir(tmp, b), bucketDir(path, b),

@@ -1904,7 +1904,7 @@ object StreamingIngest {
 
   /** The scale path the rewrite layout's cost note promises: chunk-dedup
     * with the fingerprint state as a BUCKETED DELTA table
-    * (PartitionedMerge.appendInto on (fp0, fp1)), so the per-trigger
+    * (PartitionedMerge.mergeInto on (fp0, fp1)), so the per-trigger
     * state write is O(batch) — new fingerprints append into their hash
     * buckets — instead of O(state) — the rewrite layout re-writes the
     * whole table every trigger. Use when oversized docs are NOT rare.
@@ -1925,7 +1925,7 @@ object StreamingIngest {
     * rewrite runs only when the watermark has advanced a full delay
     * window past the last prune — O(state) once per window instead of
     * every trigger, with the read filter keeping verdicts exact in
-    * between. Bucket compaction (appendInto's threshold) bounds
+    * between. Bucket compaction (mergeInto's threshold) bounds
     * per-bucket file counts independently. */
   def chunkDedupSinkBucketed(flagged: DataFrame, spark: SparkSession,
                              outPath: String, statePath: String,
@@ -1988,7 +1988,7 @@ object StreamingIngest {
     val wm = readWatermark(statePath)
     val stateAll =
       if (Files.exists(Paths.get(statePath)))
-        graft.etl.PartitionedMerge.readResolved(spark, statePath, keys)
+        graft.etl.PartitionedMerge.read(spark, statePath)
           .select("fp0", "fp1", "ts")
       else emptyFpState(spark)
     // visibility filter = previous trigger's cutoff, mirroring the
@@ -2004,7 +2004,7 @@ object StreamingIngest {
     val newFps = fps.select("fp0", "fp1", "ts")
       .groupBy("fp0", "fp1").agg(min(col("ts")).as("ts"))
       .join(state.select("fp0", "fp1"), keys, "left_anti")
-    graft.etl.PartitionedMerge.appendInto(spark, statePath, newFps, keys,
+    graft.etl.PartitionedMerge.mergeInto(spark, statePath, newFps, keys,
       numBuckets): Unit
     val maxTsMs =
       docs.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime
@@ -2013,8 +2013,8 @@ object StreamingIngest {
     if (lastPrune == Long.MinValue || cutoffMs - lastPrune >= delayMs) {
       // amortized physical prune: filtered rewrite into a fresh bucketed
       // table, then swap — at most once per watermark window
-      val live = graft.etl.PartitionedMerge.readResolved(spark, statePath,
-        keys).filter(col("ts") >= lit(new java.sql.Timestamp(cutoffMs)))
+      val live = graft.etl.PartitionedMerge.read(spark, statePath)
+        .filter(col("ts") >= lit(new java.sql.Timestamp(cutoffMs)))
         .localCheckpoint()
       val tmp = statePath + ".tmp-prune"
       graft.util.Fs.deleteRec(Paths.get(tmp))
@@ -2027,7 +2027,7 @@ object StreamingIngest {
           .filter(_.getFileName.toString.startsWith(base))
           .foreach(graft.util.Fs.deleteRec)
       }
-      graft.etl.PartitionedMerge.appendInto(spark, tmp, live, keys,
+      graft.etl.PartitionedMerge.mergeInto(spark, tmp, live, keys,
         numBuckets): Unit
       graft.util.Fs.swapInto(Paths.get(tmp), Paths.get(statePath))
       writeWatermark(statePath, cutoffMs, cutoffMs)

@@ -22,7 +22,7 @@ object StressGroupCommit {
     val e = every.toInt
     val merge: org.apache.spark.sql.DataFrame => Long =
       if (tableDir == "-") _ => 0L
-      else df => graft.etl.PartitionedMerge.appendInto(spark, tableDir,
+      else df => graft.etl.PartitionedMerge.mergeInto(spark, tableDir,
         df, Seq("k"), numBuckets = 4, compactThreshold = 0)
     val gc = new graft.etl.GroupCommit(spark, stagingDir,
       if (e <= 0) Int.MaxValue else e, "k", merge)
@@ -48,13 +48,13 @@ object StressCompactAppend {
     role match {
       case "append" =>
         (0 until nOps.toInt).foreach { i =>
-          graft.etl.PartitionedMerge.appendInto(spark, tableDir,
+          graft.etl.PartitionedMerge.mergeInto(spark, tableDir,
             Seq((w * 1000 + i % 5, i)).toDF("k", "v"), Seq("k"),
             numBuckets = 2, compactThreshold = 4): Unit
         }
       case "compact" =>
         (0 until nOps.toInt).foreach { _ =>
-          graft.etl.PartitionedMerge.compact(spark, tableDir, Seq("k")): Unit
+          graft.etl.PartitionedMerge.compact(spark, tableDir): Unit
           Thread.sleep(300)
         }
     }

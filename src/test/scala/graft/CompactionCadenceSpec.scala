@@ -15,7 +15,7 @@ class CompactionCadenceSpec extends SparkSpec {
   import spark.implicits._
 
   private val Commits = 64
-  private val Threshold = 32 // appendInto's default, which both commits use
+  private val Threshold = 32 // mergeInto's default, which replaceChildren uses too
 
   private def filesPerBucket(root: String): Map[String, Int] = {
     val s = Files.walk(Paths.get(root))

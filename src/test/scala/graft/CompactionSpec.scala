@@ -32,10 +32,10 @@ class CompactionSpec extends SparkSpec {
         .toDF("id", "name")
     }
     batches.foreach { df =>
-      PartitionedMerge.appendInto(spark, appendT, df, Seq("id"), 8)
+      PartitionedMerge.mergeInto(spark, appendT, df, Seq("id"), 8)
       PartitionedMerge.mergeInto(spark, mergeT, df, Seq("id"), 8)
     }
-    def resolved() = PartitionedMerge.readResolved(spark, appendT, Seq("id"))
+    def resolved() = PartitionedMerge.read(spark, appendT)
       .orderBy("id").as[(Int, String)].collect().toSeq
     val viaMerge = PartitionedMerge.read(spark, mergeT)
       .orderBy("id").as[(Int, String)].collect().toSeq
@@ -44,19 +44,19 @@ class CompactionSpec extends SparkSpec {
     // appends accumulated delta files; compaction collapses each bucket
     val before = parquetFiles(appendT).size
     assert(before > 8, s"expected delta fragmentation, got $before files")
-    val compacted = PartitionedMerge.compact(spark, appendT, Seq("id"))
+    val compacted = PartitionedMerge.compact(spark, appendT)
     assert(compacted.nonEmpty)
     val after = parquetFiles(appendT).size
     assert(after <= 8, s"expected <=1 file per bucket, got $after")
     assert(resolved() === viaMerge) // reads unchanged by compaction
 
     // idempotent: nothing left to compact
-    assert(PartitionedMerge.compact(spark, appendT, Seq("id")).isEmpty)
+    assert(PartitionedMerge.compact(spark, appendT).isEmpty)
 
     // appends after compaction still win over the compacted base
-    PartitionedMerge.appendInto(spark, appendT,
+    PartitionedMerge.mergeInto(spark, appendT,
       Seq((5, "post-compact")).toDF("id", "name"), Seq("id"), 8)
-    val got = PartitionedMerge.readResolved(spark, appendT, Seq("id"))
+    val got = PartitionedMerge.read(spark, appendT)
       .filter($"id" === 5).as[(Int, String)].collect().toSeq
     assert(got === Seq((5, "post-compact")))
   }
@@ -74,7 +74,7 @@ class CompactionSpec extends SparkSpec {
       val path = tmpDir(s"ccomp$i") + "/t"
       // seed enough fragmentation that the first compact has work
       (1 to 3).foreach { s =>
-        PartitionedMerge.appendInto(spark, path,
+        PartitionedMerge.mergeInto(spark, path,
           Seq((100 + s, s"seed$s")).toDF("id", "name"), Seq("id"),
           numBuckets = 1, compactThreshold = 0)
       }
@@ -82,20 +82,20 @@ class CompactionSpec extends SparkSpec {
       @volatile var appending = true
       val appender = new Thread(() =>
         try (1 to 5).foreach { a =>
-          PartitionedMerge.appendInto(spark, path,
+          PartitionedMerge.mergeInto(spark, path,
             Seq((a, s"it$i-a$a")).toDF("id", "name"), Seq("id"),
             numBuckets = 1, compactThreshold = 2): Unit
         } catch { case t: Throwable => errs.add(t): Unit }
         finally appending = false)
       val compactor = new Thread(() =>
         try while (appending) {
-          PartitionedMerge.compact(spark, path, Seq("id")): Unit
+          PartitionedMerge.compact(spark, path): Unit
         } catch { case t: Throwable => errs.add(t): Unit })
       appender.start(); compactor.start()
       appender.join(); compactor.join()
       assert(errs.isEmpty, s"iter $i: ${errs.asScala.map(_.toString)}")
-      PartitionedMerge.compact(spark, path, Seq("id"))
-      val got = PartitionedMerge.readResolved(spark, path, Seq("id"))
+      PartitionedMerge.compact(spark, path)
+      val got = PartitionedMerge.read(spark, path)
         .orderBy("id").as[(Int, String)].collect().toSeq
       val want = (1 to 5).map(a => (a, s"it$i-a$a")) ++
         (1 to 3).map(s => (100 + s, s"seed$s"))
@@ -111,7 +111,7 @@ class CompactionSpec extends SparkSpec {
     (1 to 30).foreach { b =>
       val df = (1 to 20).map(i => (((b + i) % 25) + 1, s"v$b-$i"))
         .groupBy(_._1).map(_._2.last).toSeq.toDF("id", "name")
-      PartitionedMerge.appendInto(spark, path, df, Seq("id"),
+      PartitionedMerge.mergeInto(spark, path, df, Seq("id"),
         numBuckets = 4, compactThreshold = 4)
       val worst = parquetFiles(path)
         .groupBy(_.getParent.getFileName.toString).values.map(_.size).max
@@ -124,7 +124,7 @@ class CompactionSpec extends SparkSpec {
         .groupBy(_._1).map(_._2.last).toSeq.toDF("id", "name")
       PartitionedMerge.mergeInto(spark, mergeT, df, Seq("id"), 4)
     }
-    val got = PartitionedMerge.readResolved(spark, path, Seq("id"))
+    val got = PartitionedMerge.read(spark, path)
       .orderBy("id").as[(Int, String)].collect().toSeq
     val want = PartitionedMerge.read(spark, mergeT)
       .orderBy("id").as[(Int, String)].collect().toSeq
@@ -147,13 +147,13 @@ class CompactionSpec extends SparkSpec {
     // an append that LIES about the bucket count must still land keys in
     // the persisted layout — the mismatch used to split a key across two
     // bucket directories and break latest-wins after compaction
-    PartitionedMerge.appendInto(spark, path,
+    PartitionedMerge.mergeInto(spark, path,
       Seq((7, "delta7")).toDF("id", "name"), Seq("id"), numBuckets = 16)
     PartitionedMerge.mergeInto(spark, path,
       Seq((8, "merge8")).toDF("id", "name"), Seq("id"), numBuckets = 32)
     assert(bucketDirs().size <= 4, "mismatched call created new bucket dirs")
-    PartitionedMerge.compact(spark, path, Seq("id"))
-    val got = PartitionedMerge.readResolved(spark, path, Seq("id"))
+    PartitionedMerge.compact(spark, path)
+    val got = PartitionedMerge.read(spark, path)
       .filter($"id".isin(7, 8)).orderBy("id").as[(Int, String)].collect().toSeq
     assert(got === Seq((7, "delta7"), (8, "merge8")))
   }
@@ -164,36 +164,59 @@ class CompactionSpec extends SparkSpec {
       spark.read.option("mergeSchema", "true").parquet(path)
         .select("gseq").filter($"gseq".isNotNull).distinct()
         .as[Long].collect().toSeq.sorted
-    PartitionedMerge.appendInto(spark, path,
+    PartitionedMerge.mergeInto(spark, path,
       Seq((1, "a")).toDF("id", "name"), Seq("id"), 4)
-    PartitionedMerge.appendInto(spark, path,
+    PartitionedMerge.mergeInto(spark, path,
       Seq((2, "b")).toDF("id", "name"), Seq("id"), 4)
     assert(seqs() === Seq(1L, 2L))
     // a concurrent appender already claimed marker 3 → this writer must
     // skip to 4, never reusing a claimed version
     Files.createFile(Paths.get(path, "_seq", "3"))
-    PartitionedMerge.appendInto(spark, path,
+    PartitionedMerge.mergeInto(spark, path,
       Seq((3, "c")).toDF("id", "name"), Seq("id"), 4)
     assert(seqs() === Seq(1L, 2L, 4L))
     // compaction prunes spent markers but keeps the max: allocation stays
     // monotone afterwards
-    PartitionedMerge.compact(spark, path, Seq("id"))
-    PartitionedMerge.appendInto(spark, path,
+    PartitionedMerge.compact(spark, path)
+    PartitionedMerge.mergeInto(spark, path,
       Seq((1, "a2")).toDF("id", "name"), Seq("id"), 4)
     assert(seqs().max === 5L)
-    val resolved = PartitionedMerge.readResolved(spark, path, Seq("id"))
+    val resolved = PartitionedMerge.read(spark, path)
       .orderBy("id").as[(Int, String)].collect().toSeq
     assert(resolved === Seq((1, "a2"), (2, "b"), (3, "c")))
+  }
+
+  test("an empty commit keeps its claimed marker: pruning around it " +
+      "never restarts the version counter") {
+    val path = tmpDir("seq-empty") + "/t"
+    def marker(n: Int) = Files.exists(Paths.get(path, "_seq", n.toString))
+    PartitionedMerge.mergeInto(spark, path,
+      Seq((1, "a")).toDF("id", "name"), Seq("id"), 4)
+    PartitionedMerge.mergeInto(spark, path,
+      Seq((1, "a2")).toDF("id", "name"), Seq("id"), 4)
+    // the empty batch claims version 3, which is now the max marker
+    assert(PartitionedMerge.mergeInto(spark, path,
+      Seq.empty[(Int, String)].toDF("id", "name"), Seq("id"), 4) === 0L)
+    assert(marker(3), "an empty commit deleted its claimed marker")
+    // a compactor prunes every marker below the max, the empty commit's
+    // among the survivors: the next commit must still stamp version 4
+    PartitionedMerge.compact(spark, path)
+    assert(!marker(1) && !marker(2) && marker(3))
+    PartitionedMerge.mergeInto(spark, path,
+      Seq((1, "a3")).toDF("id", "name"), Seq("id"), 4)
+    assert(marker(4))
+    assert(PartitionedMerge.read(spark, path).as[(Int, String)].collect()
+      .toSeq === Seq((1, "a3")))
   }
 
   test("crashed-run leftovers are inert: orphan tmp dirs never surface " +
       "in reads, and the next locked compaction sweeps dead compact tmps") {
     val dir = tmpDir("compact-orphan") + "/t"
-    PartitionedMerge.appendInto(spark, dir,
+    PartitionedMerge.mergeInto(spark, dir,
       Seq((1, "a"), (2, "b")).toDF("id", "name"), Seq("id"), 4)
-    PartitionedMerge.appendInto(spark, dir,
+    PartitionedMerge.mergeInto(spark, dir,
       Seq((1, "a2"), (3, "c")).toDF("id", "name"), Seq("id"), 4)
-    def resolved() = PartitionedMerge.readResolved(spark, dir, Seq("id"))
+    def resolved() = PartitionedMerge.read(spark, dir)
       .orderBy("id").as[(Int, String)].collect().toSeq
     val want = Seq((1, "a2"), (2, "b"), (3, "c"))
     assert(resolved() === want)
@@ -211,7 +234,7 @@ class CompactionSpec extends SparkSpec {
     // over by definition — unique names are never referenced again) and
     // leaves the append tmp alone (an appender holds no compactor lock,
     // so compaction cannot know the append is dead)
-    PartitionedMerge.compact(spark, dir, Seq("id")): Unit
+    PartitionedMerge.compact(spark, dir): Unit
     assert(!Files.exists(orphanC))
     assert(Files.exists(orphanA))
     assert(resolved() === want)
@@ -221,9 +244,9 @@ class CompactionSpec extends SparkSpec {
     val path = tmpDir("compact2") + "/t"
     val base = (1 to 50).map(i => (i, s"base$i")).toDF("id", "name")
     PartitionedMerge.mergeInto(spark, path, base, Seq("id"), 8)
-    PartitionedMerge.appendInto(spark, path,
+    PartitionedMerge.mergeInto(spark, path,
       Seq((7, "delta7"), (51, "delta51")).toDF("id", "name"), Seq("id"), 8)
-    val got = PartitionedMerge.readResolved(spark, path, Seq("id"))
+    val got = PartitionedMerge.read(spark, path)
     assert(got.count() === 51)
     assert(got.filter($"id" === 7).as[(Int, String)].collect().toSeq
       === Seq((7, "delta7")))

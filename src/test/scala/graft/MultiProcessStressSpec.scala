@@ -74,10 +74,10 @@ class MultiProcessStressSpec extends SparkSpec {
     // mop up what stayed staged, exactly as a step's recover() would
     import org.apache.spark.sql.DataFrame
     val gc = new graft.etl.GroupCommit(spark, staging, Int.MaxValue, "k",
-      (df: DataFrame) => PartitionedMerge.appendInto(spark, table, df,
+      (df: DataFrame) => PartitionedMerge.mergeInto(spark, table, df,
         Seq("k"), numBuckets = 4, compactThreshold = 0))
     gc.recover()
-    val got = PartitionedMerge.readResolved(spark, table, Seq("k"))
+    val got = PartitionedMerge.read(spark, table)
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     val expected = (for { w <- Seq(0, 1); i <- 0 until 10 }
       yield (w * 1000 + i) -> s"w$w-p$i").toMap
@@ -92,11 +92,11 @@ class MultiProcessStressSpec extends SparkSpec {
       val table = tmpDir(s"mp-kill$rep") + "/table"
       // fragment 2 buckets with 12 key-overlapping delta appends
       (0 until 12).foreach { i =>
-        PartitionedMerge.appendInto(spark, table,
+        PartitionedMerge.mergeInto(spark, table,
           Seq((i % 6, s"r$rep-v$i")).toDF("k", "v"), Seq("k"),
           numBuckets = 2, compactThreshold = 0): Unit
       }
-      val expected = PartitionedMerge.readResolved(spark, table, Seq("k"))
+      val expected = PartitionedMerge.read(spark, table)
         .orderBy("k").as[(Int, String)].collect().toSeq
       val p = forkJava("graft.tools.StressCompactAppend",
         Seq(table, "compact", "9", "1"))
@@ -110,15 +110,15 @@ class MultiProcessStressSpec extends SparkSpec {
       Thread.sleep(rep * 700L)
       p.destroyForcibly(); p.waitFor()
       // invariant: a crash at ANY step leaves merge-on-read correct
-      val afterKill = PartitionedMerge.readResolved(spark, table, Seq("k"))
+      val afterKill = PartitionedMerge.read(spark, table)
         .orderBy("k").as[(Int, String)].collect().toSeq
       assert(afterKill === expected, s"rep $rep: reads changed by the kill")
       // the killed run's lock must not fence compaction forever: a new
       // compactor breaks it once stale and completes the fold
-      PartitionedMerge.compact(spark, table, Seq("k"),
+      PartitionedMerge.compact(spark, table,
         staleLockMs = 1L): Unit
       val afterTakeover = PartitionedMerge
-        .readResolved(spark, table, Seq("k"))
+        .read(spark, table)
         .orderBy("k").as[(Int, String)].collect().toSeq
       assert(afterTakeover === expected, s"rep $rep: takeover changed reads")
     }
@@ -174,7 +174,7 @@ class MultiProcessStressSpec extends SparkSpec {
     // the recovered state is a readable bucketed table whose window
     // holds only the final pair's fingerprints
     val minTs = graft.etl.PartitionedMerge
-      .readResolved(spark, state, Seq("fp0", "fp1"))
+      .read(spark, state)
       .agg(org.apache.spark.sql.functions.min(
         org.apache.spark.sql.functions.col("ts")))
       .collect()(0).getTimestamp(0)
@@ -196,7 +196,7 @@ class MultiProcessStressSpec extends SparkSpec {
     // each appender wrote keys w*1000+(0..4) twice (values i and i+5);
     // the second write's gseq is higher, so the resolved value is r+5 —
     // for every key, through whatever compactions interleaved
-    val got = PartitionedMerge.readResolved(spark, table, Seq("k"))
+    val got = PartitionedMerge.read(spark, table)
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     val expected = (for { w <- Seq(1, 2); r <- 0 until 5 }
       yield (w * 1000 + r) -> (r + 5)).toMap

@@ -89,6 +89,46 @@ class PartitionedMergeSpec extends SparkSpec {
       .as[(Int, String)].collect().toSeq === Seq((1, "a"), (2, "b")))
   }
 
+  test("an empty first commit creates an empty table with the batch's " +
+      "schema") {
+    val path = tmpDir("pm") + "/t"
+    assert(PartitionedMerge.mergeInto(spark, path,
+      Seq.empty[(Int, String)].toDF("id", "name"), Seq("id"), 8) === 0L)
+    val t = PartitionedMerge.read(spark, path)
+    assert(t.columns.toSeq === Seq("id", "name"))
+    assert(t.count() === 0)
+  }
+
+  test("concurrent commits that each add a column both land in the " +
+      "table schema") {
+    val path = tmpDir("pm") + "/t"
+    PartitionedMerge.mergeInto(spark, path,
+      Seq((1, "a"), (2, "b")).toDF("id", "name"), Seq("id"), 8)
+    val adds = Seq("c1" -> 1, "c2" -> 2).map { case (c, id) =>
+      val df = Seq((id, "x", s"$c-v")).toDF("id", "name", c)
+      val th = new Thread(() =>
+        PartitionedMerge.mergeInto(spark, path, df, Seq("id"), 8): Unit)
+      th.start(); th
+    }
+    adds.foreach(_.join())
+    val t = PartitionedMerge.read(spark, path)
+    assert(t.columns.toSet === Set("id", "name", "c1", "c2"))
+    assert(t.orderBy("id").select("c1", "c2").as[(Option[String],
+      Option[String])].collect().toSeq ===
+      Seq((Some("c1-v"), None), (None, Some("c2-v"))))
+  }
+
+  test("a table without recorded metadata is rejected, not guessed") {
+    val path = tmpDir("pm") + "/t"
+    Seq((1, "a", 0)).toDF("id", "name", "gbucket")
+      .write.partitionBy("gbucket").parquet(path)
+    val r = intercept[IllegalStateException](
+      PartitionedMerge.read(spark, path))
+    assert(r.getMessage.contains("written before versioned commits"))
+    intercept[IllegalStateException](PartitionedMerge.mergeInto(spark, path,
+      Seq((2, "b")).toDF("id", "name"), Seq("id"), 8))
+  }
+
   test("replaceChildren swaps a parent's children, clears zero-child parents") {
     val path = tmpDir("pm") + "/items"
     val base = Seq((10, "i1"), (10, "i2"), (20, "i3"), (30, "i4"))

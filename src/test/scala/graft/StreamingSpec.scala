@@ -760,7 +760,7 @@ class StreamingSpec extends SparkSpec {
     // amortized prune ran at trigger 4 (cutoff 11:30 >= lastPrune + 1 h):
     // expired g0/g1 fingerprints are physically gone from the state table
     val minTs = graft.etl.PartitionedMerge
-      .readResolved(spark, stateB, Seq("fp0", "fp1"))
+      .read(spark, stateB)
       .agg(org.apache.spark.sql.functions.min(col("ts")))
       .collect()(0).getTimestamp(0)
     assert(minTs.after(Timestamp.valueOf("2024-01-01 11:29:59")),
