@@ -13,8 +13,11 @@ the job's result-stage name (`count at PartitionedMerge.scala:166`). Units
 are walked in start order; each unit is charged its own wall time plus the
 driver gap since the previous unit ended (the time the driver spent
 between Spark calls), so the per-site milliseconds add up to the wall time
-of the window. Prints, per call site: units, jobs, ms (gap included) and
-the gap share, busiest first.
+of the window. Units that overlap (concurrent `Pipeline.run` steps) are
+charged only the time no earlier-started unit already covered. Prints, per
+call site: units, jobs, ms (gap included), the gap share and `own ms`, the
+units' own start-to-end time; with overlapping units the `own ms` column
+sums to more than the wall time. Busiest first.
 
 --spans restricts the walk to the intervals of the `run` spans (one
 `Pipeline.run` each) in a perfbench spans file
@@ -108,6 +111,7 @@ def attribute(us, lo, hi, acc):
         a[1] += n
         a[2] += gap + busy
         a[3] += gap
+        a[4] += max(0.0, min(end, hi) - start)
         reach = max(reach, min(end, hi))
     return hi - lo
 
@@ -123,17 +127,19 @@ def main():
     ws = windows(a.spans) if a.spans else [(us[0][0], max(u[1] for u in us))]
     if not ws:
         sys.exit(f"no run span in {a.spans}")
-    acc = defaultdict(lambda: [0, 0, 0.0, 0.0])
+    acc = defaultdict(lambda: [0, 0, 0.0, 0.0, 0.0])
     wall = sum(attribute(us, lo, hi, acc) for lo, hi in ws)
     rows = sorted(acc.items(), key=lambda kv: -kv[1][2])
-    print(f"{'call site':<58} {'units':>5} {'jobs':>5} {'ms':>9} {'gap ms':>8}")
-    for site, (u, j, ms, gap) in rows:
-        print(f"{site[:58]:<58} {u:>5} {j:>5} {ms:>9.0f} {gap:>8.0f}")
+    print(f"{'call site':<58} {'units':>5} {'jobs':>5} {'ms':>9} {'gap ms':>8}"
+          f" {'own ms':>8}")
+    for site, (u, j, ms, gap, own) in rows:
+        print(f"{site[:58]:<58} {u:>5} {j:>5} {ms:>9.0f} {gap:>8.0f} {own:>8.0f}")
     tu = sum(v[0] for v in acc.values())
     tj = sum(v[1] for v in acc.values())
     tms = sum(v[2] for v in acc.values())
     print(f"{'total':<58} {tu:>5} {tj:>5} {tms:>9.0f} "
-          f"{sum(v[3] for v in acc.values()):>8.0f}")
+          f"{sum(v[3] for v in acc.values()):>8.0f} "
+          f"{sum(v[4] for v in acc.values()):>8.0f}")
     print(f"windows: {len(ws)}, wall {wall:.0f} ms, "
           f"after the last unit {wall - tms:.0f} ms")
 

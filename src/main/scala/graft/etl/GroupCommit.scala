@@ -3,7 +3,9 @@ package graft.etl
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.LongType
 
+import graft.model.SchemaEvolution
 import graft.util.Fs
 
 /** Group commit: bound the number of downstream merges to one per K pages
@@ -83,14 +85,21 @@ class GroupCommit(spark: org.apache.spark.sql.SparkSession,
     else Fs.withLock(root.resolve("_flush_lock"), 10 * 60 * 1000L) {
       // a claimed-but-empty dir is a stage() mid-write (claim placed,
       // data not yet renamed in): not this flush's to read OR delete
-      val dirs = stagedPages().map(p => s"$stagingDir/p=$p")
-        .filter(d => PartitionedMerge.dataFiles(Paths.get(d)).nonEmpty)
+      val pages = stagedPages().map(p => s"$stagingDir/p=$p")
+        .map(d => d -> PartitionedMerge.dataFiles(Paths.get(d)))
+        .filter(_._2.nonEmpty)
+      val dirs = pages.map(_._1)
       if (dirs.isEmpty) 0L
       else {
+        // the read schema is the union of the pages' footer schemas (one
+        // footer per page: a page's files come from one write), so pages
+        // staged across an additive schema change still union, with NULL
+        // where a page lacks a column, and no job infers it
+        val schema = pages.map(pg => PartitionedMerge.footerSchema(pg._2.head))
+          .reduce(SchemaEvolution.mergeAdditive)
         // explicit page paths + basePath (→ `p` partition column), so a
-        // page committed after the listing is out of scope; mergeSchema so
-        // pages staged across an additive schema change still union
-        val all = spark.read.option("mergeSchema", "true")
+        // page committed after the listing is out of scope
+        val all = spark.read.schema(schema.add("p", LongType))
           .option("basePath", stagingDir).parquet(dirs: _*)
         val n = merge(Upsert.dedupe(all, Seq(key), Seq("p")).drop("p"))
         dirs.foreach(d => Fs.deleteRec(Paths.get(d)))

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.parquet.format.Util
+import org.apache.parquet.format.{FileMetaData, KeyValue, Util}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,7 +95,7 @@ object PartitionedMerge {
     * both land, and a concurrent reader sees the old or the new record. */
   private def recordSchema(path: String, numBuckets: Int, keys: Seq[String],
                            schema: StructType): Unit =
-    while (Fs.withLock(Paths.get(path, "_meta_lock"), 60 * 1000L) {
+    Fs.awaitLock(Paths.get(path, "_meta_lock"), 60 * 1000L) {
       val cur = meta(path)
       cur.foreach(m => require(m.numBuckets == numBuckets && m.keys == keys,
         s"table $path was concurrently created with another layout"))
@@ -108,7 +108,7 @@ object PartitionedMerge {
         Files.move(tmp, metaFile(path), StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING): Unit
       }
-    }.isEmpty) Thread.sleep(10)
+    }
 
   private def nullable(s: StructType) =
     StructType(s.map(_.copy(nullable = true)))
@@ -129,19 +129,31 @@ object PartitionedMerge {
   private[etl] def dataFiles(dir: Path): List[Path] =
     Fs.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
 
-  /** Row count of parquet files, summed from their footers on the driver:
-    * no Spark job. A file ends in its thrift-encoded footer, the footer's
-    * 4-byte little-endian length and the magic `PAR1`. */
-  private[etl] def footerRows(files: Seq[Path]): Long = files.map { p =>
+  /** A parquet file's footer, decoded on the driver: no Spark job. A file
+    * ends in its thrift-encoded footer, the footer's 4-byte little-endian
+    * length and the magic `PAR1`. */
+  private def footer(p: Path): FileMetaData = {
     val f = new RandomAccessFile(p.toFile, "r")
     try {
       f.seek(f.length - 8)
-      val footer = new Array[Byte](Integer.reverseBytes(f.readInt()))
-      f.seek(f.length - 8 - footer.length)
-      f.readFully(footer)
-      Util.readFileMetaData(new ByteArrayInputStream(footer), true).getNum_rows
+      val bytes = new Array[Byte](Integer.reverseBytes(f.readInt()))
+      f.seek(f.length - 8 - bytes.length)
+      f.readFully(bytes)
+      Util.readFileMetaData(new ByteArrayInputStream(bytes), true)
     } finally f.close()
-  }.sum
+  }
+
+  /** Row count of parquet files, summed from their footers. */
+  private[etl] def footerRows(files: Seq[Path]): Long =
+    files.map(footer(_).getNum_rows).sum
+
+  /** The Spark schema Spark's parquet writer records in a file's footer. */
+  private[etl] def footerSchema(file: Path): StructType =
+    Option(footer(file).getKey_value_metadata).fold(Seq.empty[KeyValue])(_.asScala.toSeq)
+      .find(_.getKey == "org.apache.spark.sql.parquet.row.metadata")
+      .map(kv => DataType.fromJson(kv.getValue).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"$file records no Spark schema in its footer"))
 
   /** Move the data files of `from` into the live directory `to` under
     * fresh names `<prefix>-<i>.parquet`: the directory never vanishes, and

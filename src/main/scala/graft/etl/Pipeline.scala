@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 import java.time.Instant
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,8 +14,9 @@ import graft.types.Coercions
 
 /** s7_dag_order + per-entity loads (SURVEY.md §2.7/§3.1): the four-step DAG
   * categorias → produtos → estoques → pedidos (dimensions before facts,
-  * ref tiny_api_v2_cliente.py:378-393), each step independently
-  * failure-tolerant, ending in the sink_audit_counts audit (ref :395-402).
+  * ref tiny_api_v2_cliente.py:378-393; the steps are independent and run
+  * concurrently, see `run`), each step independently failure-tolerant,
+  * with the sink_audit_counts audit (ref :395-402).
   *
   * Source layout (the batch stand-in for the paginated REST API):
   *   sourceDir/categorias.json          — tree envelope (FIXTURES.md §3.1)
@@ -128,37 +131,35 @@ object Pipeline {
       }
     }
 
-  /** Full DAG run. Each step catches its own failure (ref :378-393 wraps
-    * every PASSO in try/except and continues). `groupCommitPages` = K in
-    * the GroupCommit staging scheme: pages stay durable per page, merges
-    * run every K pages (K=1 ⇒ the reference's literal per-page commit). */
+  /** Full DAG run: the four steps run concurrently, one driver thread per
+    * step, and `run` returns when all four have.
+    *
+    * Why that is safe: no step reads another step's table, every step
+    * writes only its own tables and its own `_staging/<process>`
+    * directory, and the only cross-table link, `pedido_itens.id_produto_tiny
+    * → produtos`, is a soft FK with no constraint (SURVEY.md §1), so the
+    * order in which the steps commit changes no table. The steps share the
+    * two state tables, whose upserts `StateStore` serializes under a lock.
+    * Why it pays: a refresh is many small Spark jobs with driver planning
+    * between them; while one step plans, another's jobs use the cores.
+    *
+    * Each step catches its own failure (ref :378-393 wraps every PASSO in
+    * try/except and continues): an exception becomes its `Failed` outcome
+    * and never cancels the other steps. When its step returns, each thread
+    * counts the step's tables for the audit (ref :395-402), so the
+    * resolved-table counts overlap with the other steps' work too.
+    * `RunReport.steps` stays in DAG order (categorias → produtos → estoques
+    * → pedidos, ref :378-393). An exception outside a step (an audit
+    * count) is rethrown once every step has finished; the pool is shut
+    * down before `run` returns or throws.
+    *
+    * `groupCommitPages` = K in the GroupCommit staging scheme: pages stay
+    * durable per page, merges run every K pages (K=1 ⇒ the reference's
+    * literal per-page commit). */
   def run(spark: SparkSession, sourceDir: String, targetDir: String,
           now: Instant, groupCommitPages: Int = 1): RunReport = {
     val store = new StateStore(s"$targetDir/_state")
     Files.createDirectories(Paths.get(targetDir))
-    val steps = scala.collection.mutable.ArrayBuffer[StepReport]()
-
-    // PASSO 1: categorias — full tree refresh (ref :379)
-    val catOutcome =
-      try {
-        val cats = TreeFlatten
-          .flattenCategoryTree(spark, s"$sourceDir/categorias.json")
-        val n = mergeInto(spark, s"$targetDir/categorias", cats,
-          Seq("id_categoria"))
-        IncrementalStep.Completed(1, n)
-      } catch {
-        case e: Exception => IncrementalStep.Failed(1, e.getMessage)
-      }
-    steps += StepReport("categorias", catOutcome)
-
-    // each incremental step is failure-isolated like the reference's
-    // try/except per PASSO (ref :378-393) — an uncaught exception becomes
-    // a Failed outcome and the DAG continues
-    def safeStep(name: String)(body: => IncrementalStep.Outcome): Unit =
-      steps += StepReport(name,
-        try body
-        catch { case e: Exception =>
-          IncrementalStep.Failed(-1, s"uncaught: ${e.getMessage}") })
 
     // group-commit wrapper: stage raw pages durably, merge every K pages;
     // raw envelope records key on "id", later pages win per key — the
@@ -174,8 +175,19 @@ object Pipeline {
       outcome
     }
 
+    // PASSO 1: categorias — full tree refresh (ref :379)
+    def categorias(): IncrementalStep.Outcome =
+      try {
+        val cats = TreeFlatten
+          .flattenCategoryTree(spark, s"$sourceDir/categorias.json")
+        IncrementalStep.Completed(1, mergeInto(spark,
+          s"$targetDir/categorias", cats, Seq("id_categoria")))
+      } catch {
+        case e: Exception => IncrementalStep.Failed(1, e.getMessage)
+      }
+
     // PASSO 2: produtos (ref :384) — incremental, 60 d window
-    safeStep("produtos")(grouped("produtos")(batch =>
+    def produtos(): IncrementalStep.Outcome = grouped("produtos")(batch =>
       mergeInto(spark, s"$targetDir/produtos",
         batch.select(col("id").cast("int").as("id_produto"),
           col("nome").as("nome_produto"),
@@ -191,12 +203,12 @@ object Pipeline {
         filePageFetcher(spark, s"$sourceDir/produtos", "produtos", "produto",
           produtoSchema),
         sink, now)
-    })
+    }
 
     // PASSO 3: estoques (ref :388) — fixed 29 d window, no watermark read
     // the batch feeds two merges: pinned, so the staging read and the
     // flush's dedupe run once
-    safeStep("estoques")(grouped("estoques")(staged => {
+    def estoques(): IncrementalStep.Outcome = grouped("estoques")(staged => {
       val batch = staged.localCheckpoint()
       val n = mergeInto(spark, s"$targetDir/produto_estoque_total",
         batch.select(col("id").cast("int").as("id_produto"),
@@ -222,27 +234,50 @@ object Pipeline {
         filePageFetcher(spark, s"$sourceDir/estoques", "produtos", "produto",
           estoqueSchema),
         sink, now, fixedWindowDays = Some(29))
-    })
+    }
 
     // PASSO 4: pedidos + fan-out itens (ref :392; header-detail j1)
-    safeStep("pedidos")(grouped("pedidos")(
+    def pedidos(): IncrementalStep.Outcome = grouped("pedidos")(
         commitPedidos(spark, targetDir, _)) { sink =>
       IncrementalStep.run(
         store, "pedidos",
         filePageFetcher(spark, s"$sourceDir/pedidos", "pedidos", "pedido",
           pedidoSchema),
         sink, now)
-    })
+    }
 
-    // audit: COUNT(*) per loaded table over its resolved rows (ref :395-402)
-    val tables = Seq("categorias", "produtos", "produto_estoque_total",
-      "produto_estoque_depositos", "pedidos", "pedido_itens")
-    val audit = tables.flatMap { tbl =>
-      val p = s"$targetDir/$tbl"
-      if (Files.exists(Paths.get(p)))
-        Some(tbl -> readTable(spark, p).count())
-      else None
-    }.toMap
-    RunReport(steps.toSeq, audit)
+    // (process, its body, the tables it loads), in DAG order
+    val dag: Seq[(String, () => IncrementalStep.Outcome, Seq[String])] = Seq(
+      ("categorias", () => categorias(), Seq("categorias")),
+      ("produtos", () => produtos(), Seq("produtos")),
+      ("estoques", () => estoques(),
+        Seq("produto_estoque_total", "produto_estoque_depositos")),
+      ("pedidos", () => pedidos(), Seq("pedidos", "pedido_itens")))
+
+    val pool = Executors.newFixedThreadPool(dag.size)
+    val done = try {
+      pool.invokeAll(dag.map { case (process, body, tables) =>
+        (() => {
+          // failure isolation per PASSO (ref :378-393): an uncaught
+          // exception is the step's Failed outcome, the others go on
+          val outcome =
+            try body()
+            catch { case e: Exception =>
+              IncrementalStep.Failed(-1, s"uncaught: ${e.getMessage}") }
+          // audit: COUNT(*) per loaded table over its resolved rows
+          // (ref :395-402), whatever the step's outcome
+          val counts = tables.map(t => t -> s"$targetDir/$t")
+            .filter { case (_, p) => Files.exists(Paths.get(p)) }
+            .map { case (t, p) => t -> readTable(spark, p).count() }
+          (StepReport(process, outcome), counts)
+        }): Callable[(StepReport, Seq[(String, Long)])]
+      }.asJava).asScala.toSeq
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS): Unit
+    }
+    val results =
+      done.map(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    RunReport(results.map(_._1), results.flatMap(_._2).toMap)
   }
 }

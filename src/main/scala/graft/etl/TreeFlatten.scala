@@ -1,7 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Paths
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Hierarchy operators (SURVEY.md §2.5 `j4_tree_flatten`).
   *
@@ -19,65 +24,43 @@ import org.apache.spark.sql.functions._
   */
 object TreeFlatten {
 
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.types._
-
-  /** Recursive node schema for the categories tree JSON
-    * (`{"id","descricao","nodes":[...]}`, FIXTURES.md §3.1; árvore endpoint
-    * ref :33). Spark schemas can't be infinitely recursive, so depth is
-    * bounded — the innermost level drops the `nodes` field. */
-  private def nodeSchema(depth: Int): StructType = {
-    val base = StructType(Seq(
-      StructField("id", StringType),
-      StructField("descricao", StringType)))
-    if (depth <= 0) base
-    else StructType(base.fields :+
-      StructField("nodes", ArrayType(nodeSchema(depth - 1))))
-  }
+  private val Json = new ObjectMapper()
 
   /** j4 ingest side: nested tree JSON → adjacency list
-    * (id, descricao, id_pai), the exact shape of the `categorias` DDL
-    * (ref :83). Reads `{"retorno": [ ...roots... ]}` envelopes. */
+    * (id_categoria, descricao_categoria, id_categoria_pai), the exact shape
+    * of the `categorias` DDL (ref :83). Reads `{"retorno": [ ...roots... ]}`
+    * envelopes of `{"id","descricao","nodes":[...]}` nodes (FIXTURES.md
+    * §3.1; árvore endpoint ref :33).
+    *
+    * The tree is a small dimension, so it is parsed with Jackson and walked
+    * on the driver (SURVEY.md §2.5 allows driver-side recursion), level by
+    * level down to `maxDepth` levels below the roots (a guard against
+    * pathological nesting), and comes back as a local DataFrame: no Spark
+    * job and no nested-schema plan to compile. A value is read as its JSON
+    * text and cast to int in Spark, as the earlier Spark JSON read did, so
+    * a non-numeric id becomes NULL. A `retorno` that is missing or not an
+    * array yields no rows; malformed JSON throws. */
   def flattenCategoryTree(spark: SparkSession, path: String,
                           maxDepth: Int = 8): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("retorno", ArrayType(nodeSchema(maxDepth)))))
-    val raw = spark.read.schema(schema).option("multiLine", value = true)
-      .json(path)
-    var level: DataFrame = raw
-      .select(explode(col("retorno")).as("n"))
-      .select(col("n.id").cast("int").as("id_categoria"),
-        col("n.descricao").as("descricao_categoria"),
-        lit(null).cast("int").as("id_categoria_pai"),
-        col("n.nodes").as("nodes"))
-    var out = level.select("id_categoria", "descricao_categoria",
-      "id_categoria_pai")
-    var depth = 0
-    while (depth < maxDepth &&
-           level.schema.fieldNames.contains("nodes")) {
-      val hasChildNodes = level.schema("nodes").dataType match {
-        case ArrayType(st: StructType, _) => st.fieldNames.contains("nodes")
-        case _ => false
-      }
-      val children = level
-        .filter(col("nodes").isNotNull && size(col("nodes")) > 0)
-        .select(col("id_categoria").as("pid"), explode(col("nodes")).as("n"))
-      level =
-        if (hasChildNodes)
-          children.select(col("n.id").cast("int").as("id_categoria"),
-            col("n.descricao").as("descricao_categoria"),
-            col("pid").as("id_categoria_pai"),
-            col("n.nodes").as("nodes"))
-        else
-          children.select(col("n.id").cast("int").as("id_categoria"),
-            col("n.descricao").as("descricao_categoria"),
-            col("pid").as("id_categoria_pai"))
-      out = out.unionByName(
-        level.select("id_categoria", "descricao_categoria", "id_categoria_pai"))
-      depth += 1
-      if (!level.schema.fieldNames.contains("nodes")) depth = maxDepth
-    }
-    out
+    def text(n: JsonNode, field: String): String =
+      Option(n.get(field)).filterNot(_.isNull)
+        .map(v => if (v.isValueNode) v.asText else v.toString).orNull
+    def children(n: JsonNode, field: String): Seq[JsonNode] =
+      Option(n.get(field)).filter(_.isArray)
+        .fold(Seq.empty[JsonNode])(_.elements.asScala.toSeq)
+    // (node, parent id) per level; level 0 holds the roots
+    val roots = children(Json.readTree(Paths.get(path).toFile), "retorno")
+      .map(_ -> (null: String))
+    val rows = Iterator.iterate(roots)(_.flatMap { case (n, _) =>
+        children(n, "nodes").map(_ -> text(n, "id")) })
+      .take(maxDepth + 1).takeWhile(_.nonEmpty).flatten
+      .map { case (n, pid) => Row(text(n, "id"), text(n, "descricao"), pid) }
+      .toSeq
+    spark.createDataFrame(rows.asJava,
+        StructType.fromDDL("id STRING, descricao STRING, pid STRING"))
+      .select(col("id").cast("int").as("id_categoria"),
+        col("descricao").as("descricao_categoria"),
+        col("pid").cast("int").as("id_categoria_pai"))
   }
 
   /** Transitive ancestor closure of an adjacency list.

@@ -8,6 +8,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils.{instantToMicros, microsToInstant}
 import org.apache.spark.sql.types._
 
+import graft.util.Fs
+
 /** Pipeline state tables (SURVEY.md §2.7 s1/s2/s5): the re-expression of
   * the reference's `script_ultima_execucao` (watermarks, one row per
   * process, tiny_api_v2_cliente.py:90) and `script_progresso_paginas` (page
@@ -24,6 +26,12 @@ import org.apache.spark.sql.types._
   * it over the live file (rename(2) — atomic on one filesystem), so a
   * reader sees the complete old table or the complete new one. A `.tmp`
   * left by a crashed writer is never read and the next write replaces it.
+  * Updates are serialized per table under the try-lock `<file>.lock`
+  * (`Fs.awaitLock`; a writer waits while it is held): the concurrent steps
+  * of one `Pipeline.run` share the two tables, and two unserialized
+  * read-modify-write rewrites would drop each other's rows or collide on
+  * the one `.tmp`. A lock older than a minute is a crashed writer's and
+  * is broken. Reads take no lock.
   * At cluster scale this is a catalog table's atomic commit (SURVEY.md
   * §7.4); the 100 TB posture keeps *data* distributed, not these few-row
   * control tables.
@@ -83,13 +91,15 @@ class StateStore(dir: String) {
       .find(_.head.asText == key)
 
   private def upsert(file: Path, schema: StructType, row: Seq[Any]): Unit = {
-    val kept = lines(file)
-      .filterNot(l => json.readTree(l).required(schema.names(0)).asText == row.head)
-    val tmp = file.resolveSibling(s"${file.getFileName}.tmp")
     Files.createDirectories(file.getParent)
-    Files.write(tmp, (kept :+ json.writeValueAsString(
-      schema.names.zip(row).toMap.asJava)).asJava) // UTF-8
-    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE): Unit
+    Fs.awaitLock(file.resolveSibling(s"${file.getFileName}.lock"), 60 * 1000L) {
+      val kept = lines(file)
+        .filterNot(l => json.readTree(l).required(schema.names(0)).asText == row.head)
+      val tmp = file.resolveSibling(s"${file.getFileName}.tmp")
+      Files.write(tmp, (kept :+ json.writeValueAsString(
+        schema.names.zip(row).toMap.asJava)).asJava) // UTF-8
+      Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE): Unit
+    }
   }
 }
 

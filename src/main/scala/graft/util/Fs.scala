@@ -90,4 +90,15 @@ object Fs {
     if (!held) None
     else try Some(body) finally { Files.deleteIfExists(lock): Unit }
   }
+
+  /** `withLock`, retried every millisecond while another holder has the
+    * lock: for short critical sections that every caller must run. */
+  def awaitLock[T](lock: Path, staleMs: Long)(body: => T): T = {
+    var done = withLock(lock, staleMs)(body)
+    while (done.isEmpty) {
+      Thread.sleep(1)
+      done = withLock(lock, staleMs)(body)
+    }
+    done.get
+  }
 }

@@ -158,4 +158,84 @@ class CrashRecoverySpec extends SparkSpec {
       assert(pedidosTables(root) === expected, s"$root: re-run changed rows")
     }
   }
+  // ---- crash and resume across the concurrent steps of Pipeline.run ----
+
+  private val dagTableNames = Seq("categorias", "produtos",
+    "produto_estoque_total", "produto_estoque_depositos", "pedidos",
+    "pedido_itens")
+
+  /** The golden Tiny-API source with pedidos spread over two pages. */
+  private def dagSource(): String = {
+    val src = tmpDir("dag-src")
+    Seq("categorias.json", "produtos/page-1.json", "produtos/page-2.json",
+      "estoques/page-1.json", "pedidos/page-1.json").foreach { rel =>
+      val to = Paths.get(src, rel)
+      Files.createDirectories(to.getParent)
+      Files.copy(Paths.get(resource(s"tinyapi/$rel")), to)
+    }
+    val p1 = Paths.get(src, "pedidos", "page-1.json")
+    val page1 = Files.readString(p1)
+      .replace("\"numero_paginas\": \"1\"", "\"numero_paginas\": \"2\"")
+    Files.writeString(p1, page1)
+    Files.writeString(Paths.get(src, "pedidos", "page-2.json"), page1
+      .replace("\"pagina\": \"1\"", "\"pagina\": \"2\"")
+      .replace("\"id\": \"9001\"", "\"id\": \"9002\""))
+    src
+  }
+
+  private def dagTables(root: String): Map[String, Seq[String]] =
+    dagTableNames.map(t => t -> Pipeline.readTable(spark, s"$root/$t")
+      .collect().map(_.toString).sorted.toSeq).toMap
+
+  /** Watermarks and page checkpoints, without the filter string: a step
+    * that completed before the re-run starts its next window at its new
+    * watermark, so only the filter text differs from a single clean run. */
+  private def dagState(root: String) = {
+    val st = new StateStore(s"$root/_state")
+    Seq("produtos", "estoques", "pedidos").map(p => (p, st.rawWatermark(p),
+      st.getProgress(p).map(g => (g.page, g.totalPages, g.records, g.status))))
+  }
+
+  test("a pedidos page corrupted while the other steps run concurrently: " +
+      "the re-run resumes to the clean run's tables and state, and a " +
+      "further re-run changes no resolved row") {
+    val now = Instant.parse("2024-06-15T08:00:00Z")
+    def completed(r: Pipeline.RunReport) =
+      r.steps.forall(_.outcome.isInstanceOf[IncrementalStep.Completed])
+    val clean = tmpDir("dag-clean")
+    val cleanRun = Pipeline.run(spark, dagSource(), clean, now)
+    assert(completed(cleanRun), cleanRun.steps.toString)
+    val expected = dagTables(clean)
+    assert(expected("pedidos").size === 2)
+
+    val src = dagSource()
+    val page2 = Paths.get(src, "pedidos", "page-2.json")
+    val good = Files.readString(page2)
+    Files.writeString(page2, good.take(good.length / 2)) // torn page
+    val tgt = tmpDir("dag-crash")
+    val r1 = Pipeline.run(spark, src, tgt, now)
+    assert(r1.steps.take(3).forall(_.outcome.isInstanceOf[IncrementalStep.Completed]),
+      r1.steps.toString)
+    assert(r1.steps(3).outcome match {
+      case IncrementalStep.Failed(2, _) => true
+      case _ => false
+    }, r1.steps.toString)
+    assert(new StateStore(s"$tgt/_state").getProgress("pedidos")
+      .map(p => (p.page, p.status)) === Some((1, StateStore.StatusError)))
+
+    Files.writeString(page2, good) // restore, re-run: pedidos resumes at page 2
+    val r2 = Pipeline.run(spark, src, tgt, now)
+    assert(completed(r2), r2.steps.toString)
+    assert(r2.steps(3).outcome === IncrementalStep.Completed(1, 2L))
+    assert(dagTables(tgt) === expected)
+    assert(r2.audit === cleanRun.audit)
+    assert(dagState(tgt) === dagState(clean))
+    assert(Fs.list(Paths.get(s"$tgt/_staging/pedidos"))
+      .count(_.getFileName.toString.startsWith("p=")) === 0)
+
+    val r3 = Pipeline.run(spark, src, tgt, now.plusSeconds(86400))
+    assert(completed(r3), r3.steps.toString)
+    assert(dagTables(tgt) === expected, "the further re-run changed rows")
+    assert(r3.audit === cleanRun.audit)
+  }
 }

@@ -15,7 +15,8 @@ import graft.state.StateStore._
   * exclusive +1 s watermark bound, start-time watermark, 60 d clamp,
   * synthetic bootstrap, fixed estoques window, page-checkpoint state
   * machine; and the store's driver-side commit (absent store, crashed
-  * writer's temp file, atomic replace, timestamp precision). */
+  * writer's temp file, atomic replace, concurrent writers, timestamp
+  * precision). */
 class StateSpec extends SparkSpec {
 
   private val now = Instant.parse("2024-06-15T08:00:00Z")
@@ -156,6 +157,45 @@ class StateSpec extends SparkSpec {
     assert(torn.isEmpty,
       s"${torn.size} of $reads reads saw a torn table, e.g. ${torn.take(2)}")
     assert(reader.getProgress("proc-1").map(_.page) === Some(400))
+  }
+
+  test("store: concurrent writers of distinct processes lose no row") {
+    val dir = tmpDir("state")
+    val threads = 4
+    val perThread = 25
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def proc(t: Int, i: Int) = s"t$t-p$i"
+    val writers = (1 to threads).map { t =>
+      val th = new Thread(() => {
+        // one store per thread, as each step of a run could hold its own
+        val store = new StateStore(dir)
+        start.await()
+        try (1 to perThread).foreach { i =>
+          store.setWatermark(proc(t, i), now.plusSeconds(i.toLong))
+          store.upsertProgress(Progress(proc(t, i), "f", i, perThread,
+            i.toLong, StatusRunning))
+        } catch { case e: Throwable => errors.add(e): Unit }
+      })
+      th.start()
+      th
+    }
+    start.countDown()
+    writers.foreach(_.join())
+    assert(errors.isEmpty, s"writer failed: ${errors.peek()}")
+    val store = new StateStore(dir)
+    val missing = for {
+      t <- 1 to threads; i <- 1 to perThread
+      if store.rawWatermark(proc(t, i)) != Some(now.plusSeconds(i.toLong)) ||
+        store.getProgress(proc(t, i)) != Some(Progress(proc(t, i), "f", i,
+          perThread, i.toLong, StatusRunning))
+    } yield proc(t, i)
+    assert(missing.isEmpty,
+      s"${missing.size} of ${threads * perThread} processes lost a row, e.g. " +
+        missing.take(3).mkString(", "))
+    // no lock or temp file is left behind
+    assert(graft.util.Fs.list(Paths.get(dir)).map(_.getFileName.toString)
+      .sorted === Seq("progress.jsonl", "watermarks.jsonl"))
   }
 
   test("store: a watermark keeps microseconds exactly like a parquet TimestampType") {

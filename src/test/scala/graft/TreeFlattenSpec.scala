@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.etl.TreeFlatten
 
@@ -22,6 +23,25 @@ class TreeFlattenSpec extends SparkSpec {
       (3, "Calcas", Some(1)),
       (4, "Jeans", Some(3)),
       (5, "Acessorios", None)))
+  }
+
+  test("category tree flatten keeps the table's column types") {
+    assert(TreeFlatten
+      .flattenCategoryTree(spark, resource("tinyapi/categorias.json")).schema ===
+      StructType.fromDDL("id_categoria INT, descricao_categoria STRING, " +
+        "id_categoria_pai INT"))
+  }
+
+  test("category tree flatten stops maxDepth levels below the roots") {
+    // a chain 1 → 2 → … → 12, each node the only child of the previous one
+    val chain = (12 to 1 by -1).foldLeft("[]")((kids, i) =>
+      s"""[{"id": "$i", "descricao": "c$i", "nodes": $kids}]""")
+    val path = java.nio.file.Files.createTempFile("deep", ".json")
+    java.nio.file.Files.writeString(path, s"""{"retorno": $chain}""")
+    val got = TreeFlatten.flattenCategoryTree(spark, path.toString, maxDepth = 3)
+      .orderBy("id_categoria").collect()
+      .map(r => (r.getInt(0), Option(r.get(2)))).toSeq
+    assert(got === Seq((1, None), (2, Some(1)), (3, Some(2)), (4, Some(3))))
   }
 
   test("ancestor closure reaches all levels with correct depths") {
