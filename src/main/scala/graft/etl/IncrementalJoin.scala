@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -125,10 +125,7 @@ object IncrementalJoin {
           graft.util.Fs.deleteRec(Paths.get(base, s"v$epoch"))
         false
       } else {
-        val tmp = Paths.get(base, "_current.tmp")
-        Files.writeString(tmp, epoch.toString)
-        Files.move(tmp, pointer(base), StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
+        graft.util.Fs.replace(pointer(base), epoch.toString)
         // GC with a delete-lag of 1: keep the new AND the previous
         // committed version so in-flight readers of the old pointer
         // finish cleanly

@@ -1,7 +1,7 @@
 package graft.etl
 
 import java.io.{ByteArrayInputStream, RandomAccessFile}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -91,8 +91,8 @@ object PartitionedMerge {
 
   /** Record `schema`'s columns in the table's metadata. Under the
     * metadata lock the record is re-read, merged and replaced atomically
-    * (hidden temp file, rename over), so two writers that each add a column
-    * both land, and a concurrent reader sees the old or the new record. */
+    * (`Fs.replace`), so two writers that each add a column both land, and
+    * a concurrent reader sees the old or the new record. */
   private def recordSchema(path: String, numBuckets: Int, keys: Seq[String],
                            schema: StructType): Unit =
     Fs.awaitLock(Paths.get(path, "_meta_lock"), 60 * 1000L) {
@@ -101,13 +101,9 @@ object PartitionedMerge {
         s"table $path was concurrently created with another layout"))
       val merged = cur.fold(schema)(m =>
         nullable(SchemaEvolution.mergeAdditive(m.schema, schema)))
-      if (!cur.exists(_.schema == merged)) {
-        val tmp = Paths.get(path, s"_graft_meta.json.tmp-${System.nanoTime}")
-        Files.writeString(tmp, s"""{"numBuckets":$numBuckets,"keys":""" +
+      if (!cur.exists(_.schema == merged))
+        Fs.replace(metaFile(path), s"""{"numBuckets":$numBuckets,"keys":""" +
           s"""${Json.writeValueAsString(keys.asJava)},"schema":${merged.json}}""")
-        Files.move(tmp, metaFile(path), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING): Unit
-      }
     }
 
   private def nullable(s: StructType) =

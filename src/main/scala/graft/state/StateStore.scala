@@ -1,6 +1,6 @@
 package graft.state
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
 import scala.jdk.CollectionConverters._
 
@@ -22,16 +22,16 @@ import graft.util.Fs
   * precision of Spark's `TimestampType`, so a watermark round-trips exactly
   * as it did through a parquet column (sub-microsecond nanos truncate).
   *
-  * Commit: every update writes the whole table to `<file>.tmp` and renames
-  * it over the live file (rename(2) — atomic on one filesystem), so a
-  * reader sees the complete old table or the complete new one. A `.tmp`
-  * left by a crashed writer is never read and the next write replaces it.
+  * Commit: every update writes the whole table through `Fs.replace` (a
+  * temp sibling renamed over the live file — rename(2), atomic on one
+  * filesystem), so a reader sees the complete old table or the complete
+  * new one. A temp file left by a crashed writer is never read.
   * Updates are serialized per table under the try-lock `<file>.lock`
   * (`Fs.awaitLock`; a writer waits while it is held): the concurrent steps
   * of one `Pipeline.run` share the two tables, and two unserialized
-  * read-modify-write rewrites would drop each other's rows or collide on
-  * the one `.tmp`. A lock older than a minute is a crashed writer's and
-  * is broken. Reads take no lock.
+  * read-modify-write rewrites would drop each other's rows. A lock older
+  * than a minute is a crashed writer's and is broken. Reads take no
+  * lock.
   * At cluster scale this is a catalog table's atomic commit (SURVEY.md
   * §7.4); the 100 TB posture keeps *data* distributed, not these few-row
   * control tables.
@@ -95,10 +95,8 @@ class StateStore(dir: String) {
     Fs.awaitLock(file.resolveSibling(s"${file.getFileName}.lock"), 60 * 1000L) {
       val kept = lines(file)
         .filterNot(l => json.readTree(l).required(schema.names(0)).asText == row.head)
-      val tmp = file.resolveSibling(s"${file.getFileName}.tmp")
-      Files.write(tmp, (kept :+ json.writeValueAsString(
-        schema.names.zip(row).toMap.asJava)).asJava) // UTF-8
-      Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE): Unit
+      Fs.replace(file, (kept :+ json.writeValueAsString(
+        schema.names.zip(row).toMap.asJava)).map(_ + "\n").mkString)
     }
   }
 }

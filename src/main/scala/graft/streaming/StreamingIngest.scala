@@ -1,11 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.etl.{EnvelopeReader, Pipeline}
+import graft.util.Fs
 
 /** Structured Streaming realization of the incremental machinery
   * (SURVEY.md §2.8): the reference's page-checkpoint/watermark tables map
@@ -17,6 +24,10 @@ import graft.etl.{EnvelopeReader, Pipeline}
   *   page checkpoint / resume        → file-source offset log
   *   per-page commit (ref :352-353)  → foreachBatch + versioned upsert sink
   *   60 d late-data window           → withWatermark delayThreshold
+  *
+  * Every sink below is one `drain` trigger over a batch function. The
+  * monitor sinks fold through `cursorFold` into a `JsonState` file; the
+  * dedup sinks through `ownerDedup` into a state directory.
   *
   * At scale the file source is swapped for Kafka/event-hub; every transform
   * below is source-agnostic.
@@ -35,6 +46,106 @@ object StreamingIngest {
       .select(explode(col(s"retorno.$entityField")).as("it"))
       .select(col(s"it.$itemWrapper.*"))
 
+  /** The trigger every sink runs: drain what the source holds now
+    * (AvailableNow), in append mode, through `fold(batch, batchId)`, with
+    * the source offsets in `checkpoint`. */
+  private def drain(stream: DataFrame, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(fold)
+
+  // ---- JSON state files and the cursor-guarded fold -----------------------
+
+  private val Json = new ObjectMapper()
+
+  /** A sink's JSON state file: `fresh` while the file is absent, else the
+    * `decode` of its one object. `write` replaces the file with the object
+    * `encode` fills, atomically (Fs.replace), so a crash leaves the old
+    * state or the new one, never a torn file. */
+  private[graft] final class JsonState[S](fresh: S, decode: JsonNode => S,
+      encode: (ObjectNode, S) => Unit) {
+    def read(path: String): S = {
+      val f = Paths.get(path)
+      if (Files.exists(f)) decode(Json.readTree(f.toFile)) else fresh
+    }
+
+    def write(path: String, s: S): Unit = {
+      val o = Json.createObjectNode()
+      encode(o, s)
+      Fs.replace(Paths.get(path), Json.writeValueAsString(o))
+    }
+  }
+
+  /** A state behind a batch cursor: (lastBatch, state), (-1, fresh) when
+    * the file is absent; the cursor is the object's "lastBatch" field. */
+  private def cursored[S](fresh: S)(decode: JsonNode => S)(
+      encode: (ObjectNode, S) => Unit): JsonState[(Long, S)] =
+    new JsonState[(Long, S)]((-1L, fresh),
+      j => (j.required("lastBatch").asLong, decode(j)),
+      { case (o, (last, s)) => encode(o.put("lastBatch", last), s) })
+
+  /** Per-key states under the array `list`: one object per key, the key
+    * in its field `key`, written in key order. */
+  private def keyed[S](list: String, key: String)(
+      decode: (String, JsonNode) => S)(encode: (ObjectNode, S) => Unit) =
+    cursored(Map.empty[String, S]) { j =>
+      j.required(list).elements.asScala.map { e =>
+        val k = e.required(key).asText
+        k -> decode(k, e)
+      }.toMap
+    } { (o, m) =>
+      val a = o.putArray(list)
+      m.toSeq.sortBy(_._1).foreach { case (k, s) =>
+        encode(a.addObject().put(key, k), s)
+      }
+    }
+
+  /** Per-event-type long vectors: {"t": type, "v": [...]} under "types". */
+  private def longVecs[S](decode: (String, Array[Long]) => S)(
+      encode: S => Seq[Long]) =
+    keyed[S]("types", "t") { (t, e) =>
+      decode(t, e.required("v").elements.asScala.map(_.asLong).toArray)
+    } { (o, s) =>
+      val v = o.putArray("v")
+      encode(s).foreach(x => v.add(x))
+    }
+
+  /** The fields of an all-Long state, in declaration order. */
+  private def longs(s: Product): Seq[Long] =
+    s.productIterator.map(_.asInstanceOf[Long]).toSeq
+
+  /** The cursor-guarded fold every monitor sink runs per micro-batch:
+    * read the state; skip a batch id the cursor already passed (a
+    * replayed trigger); fold the batch into the state and its verdict
+    * rows; append the rows, if any; write the state with the batch id as
+    * the new cursor.
+    *
+    * Ordering contract: the verdict append PRECEDES the state write, so a
+    * crash between the two re-folds the batch on replay from the old
+    * state and appends its verdict rows a SECOND time, bit-identical.
+    * State (and therefore every statistic) is exactly-once by the cursor;
+    * the verdict TABLE is at-least-once, and readers dedupe on the natural
+    * key each sink emits: (batch_id, event_type), or batch_id for the
+    * one-row-per-trigger sinks (ucb, srm). The ordering is deliberate: a
+    * written state with MISSING output would drop a verdict forever, while
+    * a duplicate row is recoverable by its key. Pinned by the
+    * duplicate-verdict replay cases in StreamingSpec. */
+  private def cursorFold[S](state: JsonState[(Long, S)], statePath: String,
+      outPath: String, batchId: Long)(
+      fold: S => (S, Option[DataFrame])): Unit = {
+    val (last, s0) = state.read(statePath)
+    if (batchId > last) {
+      val (s1, verdicts) = fold(s0)
+      verdicts.foreach(_.coalesce(1).write.mode("append").parquet(outPath))
+      state.write(statePath, (batchId, s1))
+    }
+  }
+
+  // ---- table sinks ---------------------------------------------------------
+
   /** Idempotent incremental sink: each micro-batch is upserted into the
     * target table by natural key through `Pipeline.mergeInto` — deduped
     * per key inside the write plan (a micro-batch is not key-unique), then
@@ -43,16 +154,12 @@ object StreamingIngest {
     * the foreachBatch exactly-once recipe. */
   def incrementalSink(stream: DataFrame, spark: SparkSession,
                       targetPath: String, keys: Seq[String],
-                      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Pipeline.mergeInto(spark, targetPath, batch, keys): Unit
-      }
+                      checkpoint: String): DataStreamWriter[Row] =
+    drain(stream, checkpoint) { (batch, _) =>
+      Pipeline.mergeInto(spark, targetPath, batch, keys): Unit
+    }
 
-  /** Streaming data-quality observation (r11) — the streaming twin of
+  /** Streaming data-quality observation — the streaming twin of
     * GovernanceOps.x_dq_expectations' single-scan rule family, attached
     * with `observe()`: Spark evaluates the rule aggregates INSIDE the
     * existing micro-batch pass (no second scan, no state store) and
@@ -109,15 +216,11 @@ object StreamingIngest {
     * effect: the offset log ensures each file folds once. */
   def aggSink(stream: DataFrame, spark: SparkSession, tablePath: String,
               keyCol: String, valueCol: String,
-              checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.etl.IncrementalAgg.refresh(
-          spark, tablePath, batch, keyCol, valueCol): Unit
-      }
+              checkpoint: String): DataStreamWriter[Row] =
+    drain(stream, checkpoint) { (batch, _) =>
+      graft.etl.IncrementalAgg.refresh(
+        spark, tablePath, batch, keyCol, valueCol): Unit
+    }
 
   /** Streaming maintenance of the materialized frequency sketch
     * (SketchMaintenance): each micro-batch's keys fold into the stored
@@ -126,114 +229,76 @@ object StreamingIngest {
     * graft_cms_probe and never rescanning it. */
   def sketchSink(stream: DataFrame, spark: SparkSession, sketchPath: String,
                  keyCol: String,
-                 checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.etl.SketchMaintenance.refresh(spark, sketchPath, batch, keyCol)
-      }
+                 checkpoint: String): DataStreamWriter[Row] =
+    drain(stream, checkpoint) { (batch, _) =>
+      graft.etl.SketchMaintenance.refresh(spark, sketchPath, batch, keyCol)
+    }
+
+  // ---- streaming UCB bandit sink -------------------------------------------
 
   /** Streaming twin of x_ucb_allocation — the form a bandit actually
     * runs in: per micro-batch the arms' pull counts and cent-quantized
     * reward sums fold into an O(arms) cumulative state (JSON beside the
-    * decision table, batchId-guarded so a replayed trigger is a no-op),
-    * and ONE decision row per trigger names the arm UCB1 would allocate
-    * next — mean/qvmax + √(2·ln N/n), the same arithmetic as the batch
-    * op on the same exact integers. Crash contract matches srmSink: the
-    * state write follows the decision append, so a replay appends a
-    * bit-identical duplicate row for the same batch_id; readers take
-    * the last row per batch_id. Arms never expire (a bandit's history
-    * IS its state) but the key space is the event-type enum — bounded
-    * by construction, so no TTL is needed to bound state. */
+    * decision table, behind the `cursorFold` batch cursor), and ONE
+    * decision row per trigger names the arm UCB1 would allocate next —
+    * mean/qvmax + √(2·ln N/n), the same arithmetic as the batch op on the
+    * same exact integers. A crash between the decision append and the
+    * state write appends a bit-identical duplicate row for the same
+    * batch_id on replay; readers take the last row per batch_id. Arms
+    * never expire (a bandit's history IS its state) but the key space is
+    * the event-type enum — bounded by construction, so no TTL is needed
+    * to bound state. */
   def ucbSink(events: DataFrame, spark: SparkSession, outPath: String,
               statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ucbBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(ucbBatch(spark, outPath, statePath, _, _))
 
-  /** (lastBatchId, arm -> (n, qsum, qmax)); (-1, empty) when fresh. */
-  private[graft] def ucbState(statePath: String)
-      : (Long, Map[String, (Long, Long, Long)]) = {
-    val f = java.nio.file.Paths.get(statePath)
-    if (!java.nio.file.Files.exists(f)) (-1L, Map.empty)
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val last = "\"lastBatch\"\\s*:\\s*(-?\\d+)".r
-        .findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
-      val armRx =
-        ("\\{\"arm\"\\s*:\\s*\"([^\"]+)\"\\s*,\\s*\"n\"\\s*:\\s*(\\d+)" +
-          "\\s*,\\s*\"q\"\\s*:\\s*(\\d+)\\s*,\\s*\"mx\"\\s*:\\s*(\\d+)\\}").r
-      val arms = armRx.findAllMatchIn(s).map(m =>
-        m.group(1) -> ((m.group(2).toLong, m.group(3).toLong,
-          m.group(4).toLong))).toMap
-      (last, arms)
-    }
-  }
+  /** (lastBatch, arm -> (n, qsum, qmax)): {"arm", "n", "q", "mx"} objects
+    * under "arms". */
+  private[graft] val ucbState = keyed[(Long, Long, Long)]("arms", "arm") {
+    (_, e) =>
+      (e.required("n").asLong, e.required("q").asLong,
+        e.required("mx").asLong)
+  } { case (o, (n, q, mx)) => o.put("n", n).put("q", q).put("mx", mx): Unit }
 
   private[graft] def ucbBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = ucbState(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    val batchAgg = batch
-      .select(col("event_type").as("arm"),
-        floor(col("value") * 100 + 0.5).cast("long").as("qv"))
-      .groupBy("arm")
-      .agg(count(lit(1)).as("n"), sum(col("qv")).as("q"),
-        max(col("qv")).as("mx"))
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val st1 = (st0.keySet ++ batchAgg.keySet).map { a =>
-      val (n0, q0, m0) = st0.getOrElse(a, (0L, 0L, 0L))
-      val (n1, q1, m1) = batchAgg.getOrElse(a, (0L, 0L, 0L))
-      a -> ((n0 + n1, q0 + q1, math.max(m0, m1)))
-    }.toMap
-    if (st1.isEmpty) {
-      // empty micro-batch on fresh state: no arms to score yet — emit no
-      // decision row but still advance the batch cursor so the replay
-      // guard holds across a restart.
-      ucbWriteState(statePath, batchId, st1)
-      return
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(ucbState, statePath, outPath, batchId) { st0 =>
+      val batchAgg = batch
+        .select(col("event_type").as("arm"),
+          floor(col("value") * 100 + 0.5).cast("long").as("qv"))
+        .groupBy("arm")
+        .agg(count(lit(1)).as("n"), sum(col("qv")).as("q"),
+          max(col("qv")).as("mx"))
+        .collect()
+        .map(r => r.getString(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      val st1 = (st0.keySet ++ batchAgg.keySet).map { a =>
+        val (n0, q0, m0) = st0.getOrElse(a, (0L, 0L, 0L))
+        val (n1, q1, m1) = batchAgg.getOrElse(a, (0L, 0L, 0L))
+        a -> ((n0 + n1, q0 + q1, math.max(m0, m1)))
+      }.toMap
+      // an empty micro-batch on fresh state has no arms to score: no
+      // decision row, but the cursor still advances
+      (st1, Option.when(st1.nonEmpty) {
+        val nn = st1.values.map(_._1).sum
+        val qvmax = st1.values.map(_._3).max
+        val scored = st1.toSeq.map { case (a, (n, q, _)) =>
+          // qvmax == 0 means every observed reward quantized to zero (all
+          // values < 0.005): the empirical means are all 0, not 0/0.
+          val mean = if (qvmax == 0L) 0.0 else q.toDouble / (n * qvmax)
+          (a, n, mean, mean + math.sqrt(2.0 * math.log(nn.toDouble) / n))
+        }
+        // deterministic argmax: highest ucb, ties to the lex-smaller arm
+        val best = scored.minBy { case (a, _, _, u) => (-u, a) }
+        import spark.implicits._
+        Seq((batchId, nn, best._1, best._4, scored.size))
+          .toDF("batch_id", "n_pulls_total", "allocate_arm", "best_ucb",
+            "n_arms")
+      })
     }
-    val nn = st1.values.map(_._1).sum
-    val qvmax = st1.values.map(_._3).max
-    val scored = st1.toSeq.map { case (a, (n, q, _)) =>
-      // qvmax == 0 means every observed reward quantized to zero (all
-      // values < 0.005): the empirical means are all 0, not 0/0.
-      val mean = if (qvmax == 0L) 0.0 else q.toDouble / (n * qvmax)
-      (a, n, mean, mean + math.sqrt(2.0 * math.log(nn.toDouble) / n))
-    }
-    // deterministic argmax: highest ucb, ties to the lex-smaller arm
-    val best = scored.minBy { case (a, _, _, u) => (-u, a) }
-    import spark.implicits._
-    Seq((batchId, nn, best._1, best._4, scored.size))
-      .toDF("batch_id", "n_pulls_total", "allocate_arm", "best_ucb",
-        "n_arms")
-      .coalesce(1).write.mode("append").parquet(outPath)
-    ucbWriteState(statePath, batchId, st1)
-  }
 
-  private def ucbWriteState(statePath: String, batchId: Long,
-      arms: Map[String, (Long, Long, Long)]): Unit = {
-    val armsJson = arms.toSeq.sortBy(_._1).map { case (a, (n, q, m)) =>
-      s"""{"arm": "$a", "n": $n, "q": $q, "mx": $m}"""
-    }.mkString("[", ", ", "]")
-    val tmp = java.nio.file.Paths.get(statePath + ".tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"lastBatch": $batchId, "arms": $armsJson}""")
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(statePath),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-  }
-
-  // ---- streaming Page–Hinkley drift sink (r15) ----------------------------
+  // ---- streaming Page–Hinkley drift sink ------------------------------------
 
   // Same constants as the batch op (EventOps x_page_hinkley): δ = 0.5
   // tolerated per-hour drift, λ = 25 events in 1e9 fixed point.
@@ -264,86 +329,20 @@ object StreamingIngest {
     * (per-hour term x − P/t ∓ δ quantized to 1e9 fixed point before the
     * cumulative sums; running extrema compared as integers), and one
     * verdict row per type is appended per trigger so a monitor sees the
-    * drift flag flip at the alarm hour, not at end-of-day. Crash
-    * contract matches srmSink/ucbSink: the state write follows the
-    * verdict append and the batch cursor makes a replayed trigger a
-    * no-op. State is O(event types); per-batch cost is one grouped
-    * count of the batch. Hours arriving out of order (below the
-    * pending hour) are dropped and counted in late_hours — the
+    * drift flag flip at the alarm hour, not at end-of-day. Crash/replay
+    * contract: `cursorFold`'s. State is O(event types); per-batch cost is
+    * one grouped count of the batch. Hours arriving out of order (below
+    * the pending hour) are dropped and counted in late_hours — the
     * withWatermark drop semantic, made visible. */
   def phDriftSink(events: DataFrame, spark: SparkSession, outPath: String,
                   statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        phBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(phBatch(spark, outPath, statePath, _, _))
 
-  // ---- shared typed-state codec + pending-hour advance --------------------
-  // (r16 review: the PH and CUSUM sinks briefly carried three diverging
-  // copies of the same JSON machinery; one codec, one advance, one
-  // atomic-write now serve every long-vector state file)
-  //
-  // Output-vs-state ordering contract (r16 advice, applies to EVERY
-  // sink on this codec — phDrift, cusum, space-saving, ewma-chart):
-  // the verdict append PRECEDES the state write, so a crash between
-  // the two re-folds the batch on replay and appends its verdict rows
-  // a SECOND time. State (and therefore every statistic) is
-  // exactly-once by the batch-cursor guard; the verdict TABLE is
-  // at-least-once, and readers must dedupe on (batch_id, event_type)
-  // — the natural key every sink emits. The ordering is deliberate:
-  // written state with MISSING output would silently drop a verdict
-  // forever (unrecoverable), while a duplicate row is recoverable by
-  // the stated key. Pinned by the duplicate-verdict replay cases in
-  // StreamingSpec/CrashRecoverySpec.
-
-  /** Atomic write: tmp + ATOMIC_MOVE so a crash never leaves a torn
-    * state file. */
-  private def atomicWrite(path: String, body: String): Unit = {
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-  }
-
-  /** (lastBatchId, type -> long vector); (-1, empty) when fresh.
-    * Escape-aware name capture: event_type is data-driven and may
-    * contain quotes/backslashes — the writer escapes them, and a naive
-    * [^"]+ here would silently drop (reset!) that type's state. */
-  private def readLongVecState(statePath: String)
-      : (Long, Map[String, Array[Long]]) = {
-    val f = java.nio.file.Paths.get(statePath)
-    if (!java.nio.file.Files.exists(f)) (-1L, Map.empty)
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val last = "\"lastBatch\"\\s*:\\s*(-?\\d+)".r
-        .findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
-      val rx = ("\\{\"t\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-        "\"v\"\\s*:\\s*\\[([-0-9, ]+)\\]\\}").r
-      val types = rx.findAllMatchIn(s).map { m =>
-        m.group(1).replaceAll("\\\\(.)", "$1") ->
-          m.group(2).split(",").map(_.trim.toLong)
-      }.toMap
-      (last, types)
-    }
-  }
-
-  private def writeLongVecState(statePath: String, batchId: Long,
-      types: Map[String, Seq[Long]]): Unit = {
-    val body = types.toSeq.sortBy(_._1).map { case (t, v) =>
-      val esc = t.replace("\\", "\\\\").replace("\"", "\\\"")
-      s"""{"t": "$esc", "v": [${v.mkString(", ")}]}"""
-    }.mkString("[", ", ", "]")
-    atomicWrite(statePath, s"""{"lastBatch": $batchId, "types": $body}""")
-  }
-
-  /** Pending-hour advance shared by the PH and CUSUM folds: fill the
-    * pending hour, fold it when a later hour opens, drop (and count)
-    * out-of-order hours — the zero-delay-watermark finalization rule. */
+  /** Pending-hour advance shared by the PH, CUSUM and EWMA-chart folds:
+    * fill the pending hour, fold it when a later hour opens, drop (and
+    * count) out-of-order hours — the zero-delay-watermark finalization
+    * rule. */
   private def advancePending[S](s: S, h: Long, c: Long,
       pend: S => (Long, Long),
       setPend: (S, Long, Long) => S,
@@ -356,14 +355,11 @@ object StreamingIngest {
     else setPend(fold(s, ph, pc), h, c)
   }
 
-  /** Shared hourly collect-and-fold driver for the per-type monitor
-    * sinks (PH / CUSUM / EWMA chart — pre-seal review r17: the third
-    * sink briefly added a third copy of this skeleton right after the
-    * r16 codec consolidation): ONE grouped count of the micro-batch,
-    * then each type's (hour, count) observations fold in ascending
-    * hour order through the sink's advance function. The collect is
-    * O(types × hours-in-batch) — bounded by the trigger interval, not
-    * the corpus. */
+  /** Hourly collect-and-fold driver of the per-type monitor sinks (PH /
+    * CUSUM / EWMA chart): ONE grouped count of the micro-batch, then each
+    * type's (hour, count) observations fold in ascending hour order
+    * through the sink's advance function. The collect is O(types ×
+    * hours-in-batch) — bounded by the trigger interval, not the corpus. */
   private def foldHourly[S](batch: DataFrame, st0: Map[String, S],
       empty: S, advance: (S, Long, Long) => S): Map[String, S] = {
     val hourly = batch
@@ -380,15 +376,11 @@ object StreamingIngest {
     }
   }
 
-  /** (lastBatchId, type -> PhState); (-1, empty) when fresh. */
-  private[graft] def phStates(statePath: String)
-      : (Long, Map[String, PhState]) = {
-    val (last, raw) = readLongVecState(statePath)
-    (last, raw.map { case (t, v) =>
-      t -> PhState(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8),
-        v(9), v(10), v(11), v(12))
-    })
-  }
+  /** (lastBatch, type -> PhState), the fields as one long vector. */
+  private[graft] val phStates = longVecs[PhState] { (_, v) =>
+    PhState(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8), v(9),
+      v(10), v(11), v(12))
+  }(longs)
 
   /** One PH step — the batch op's per-row arithmetic verbatim. */
   private def phFold(s: PhState, h: Long, c: Long): PhState = {
@@ -422,32 +414,22 @@ object StreamingIngest {
       .format(java.time.Instant.ofEpochSecond(micros / 1000000L))
 
   private[graft] def phBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = phStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    val st1 = foldHourly(batch, st0, phEmpty, phAdvance)
-    if (st1.nonEmpty) {
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(phStates, statePath, outPath, batchId) { st0 =>
+      val st1 = foldHourly(batch, st0, phEmpty, phAdvance)
       import spark.implicits._
-      st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
-        (batchId, tpe, s.nh, s.mxi / 1e9, s.mxdc / 1e9,
-          s.mxi > PhQLambda || s.mxdc > PhQLambda,
-          phFmt(s.au), phFmt(s.ad), s.late)
-      }.toDF("batch_id", "event_type", "n_hours", "max_ph_increase",
+      (st1, Option.when(st1.nonEmpty) {
+        st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
+          (batchId, tpe, s.nh, s.mxi / 1e9, s.mxdc / 1e9,
+            s.mxi > PhQLambda || s.mxdc > PhQLambda,
+            phFmt(s.au), phFmt(s.ad), s.late)
+        }.toDF("batch_id", "event_type", "n_hours", "max_ph_increase",
           "max_ph_decrease", "drift_flag", "first_alarm_up",
           "first_alarm_down", "late_hours")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    phWriteState(statePath, batchId, st1)
-  }
 
-  private def phWriteState(statePath: String, batchId: Long,
-      types: Map[String, PhState]): Unit =
-    writeLongVecState(statePath, batchId, types.map { case (t, s) =>
-      t -> Seq(s.nh, s.p, s.ci, s.cd, s.mni, s.mxd, s.mxi, s.mxdc,
-        s.au, s.ad, s.pendH, s.pendC, s.late)
-    })
-
-  // ---- streaming CUSUM level-shift sink (r16) -----------------------------
+  // ---- streaming CUSUM level-shift sink -------------------------------------
 
   // Tabular (decision-interval) CUSUM: the reference mean μ0 is FROZEN
   // after the first CusumBurn folded hours (burn-in estimates only, it
@@ -498,43 +480,29 @@ object StreamingIngest {
       (st, hh, cc) => st.copy(pendH = hh, pendC = cc),
       st => st.copy(late = st.late + 1), csFold)
 
-  /** (lastBatchId, type -> CsState); (-1, empty) when fresh. */
-  private[graft] def csStates(statePath: String)
-      : (Long, Map[String, CsState]) = {
-    val (last, raw) = readLongVecState(statePath)
-    (last, raw.map { case (t, v) =>
-      t -> CsState(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8),
-        v(9), v(10), v(11), v(12))
-    })
-  }
-
-  private def csWriteState(statePath: String, batchId: Long,
-      types: Map[String, CsState]): Unit =
-    writeLongVecState(statePath, batchId, types.map { case (t, s) =>
-      t -> Seq(s.nh, s.bn, s.bs, s.mu0q, s.cu, s.cd, s.mxu, s.mxdn,
-        s.au, s.ad, s.pendH, s.pendC, s.late)
-    })
+  /** (lastBatch, type -> CsState), the fields as one long vector. */
+  private[graft] val csStates = longVecs[CsState] { (_, v) =>
+    CsState(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7), v(8), v(9),
+      v(10), v(11), v(12))
+  }(longs)
 
   private[graft] def csBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = csStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    val st1 = foldHourly(batch, st0, csEmpty, csAdvance)
-    if (st1.nonEmpty) {
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(csStates, statePath, outPath, batchId) { st0 =>
+      val st1 = foldHourly(batch, st0, csEmpty, csAdvance)
       import spark.implicits._
-      st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
-        (batchId, tpe, s.nh,
-          if (s.mu0q >= 0) Some(s.mu0q / 1e9) else None,
-          s.mxu / 1e9, s.mxdn / 1e9,
-          s.mxu > CusumHQ || s.mxdn > CusumHQ,
-          phFmt(s.au), phFmt(s.ad), s.late)
-      }.toDF("batch_id", "event_type", "n_hours", "mu0",
+      (st1, Option.when(st1.nonEmpty) {
+        st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
+          (batchId, tpe, s.nh,
+            if (s.mu0q >= 0) Some(s.mu0q / 1e9) else None,
+            s.mxu / 1e9, s.mxdn / 1e9,
+            s.mxu > CusumHQ || s.mxdn > CusumHQ,
+            phFmt(s.au), phFmt(s.ad), s.late)
+        }.toDF("batch_id", "event_type", "n_hours", "mu0",
           "max_cusum_up", "max_cusum_down", "shift_flag",
           "first_alarm_up", "first_alarm_down", "late_hours")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    csWriteState(statePath, batchId, st1)
-  }
 
   /** Streaming tabular-CUSUM sink (the x_cusum_changepoint family's
     * ONLINE member): per event type, hourly counts fold into an
@@ -549,16 +517,10 @@ object StreamingIngest {
     * contracts are phDriftSink's verbatim. */
   def cusumSink(events: DataFrame, spark: SparkSession, outPath: String,
                 statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        csBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(csBatch(spark, outPath, statePath, _, _))
 
-  // ---- streaming space-saving top-k sink (r16) ----------------------------
+  // ---- streaming space-saving top-k sink ------------------------------------
 
   // Space-Saving (Metwally, Agrawal & El Abbadi, ICDT 2005): k counters
   // per event type; a tracked item's count increments, an untracked
@@ -589,71 +551,47 @@ object StreamingIngest {
     }
   }
 
-  /** (lastBatchId, type -> SsState); (-1, empty) when fresh. */
-  private[graft] def ssStates(statePath: String)
-      : (Long, Map[String, SsState]) = {
-    val f = java.nio.file.Paths.get(statePath)
-    if (!java.nio.file.Files.exists(f)) (-1L, Map.empty)
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val last = "\"lastBatch\"\\s*:\\s*(-?\\d+)".r
-        .findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
-      val rx = ("\\{\"t\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-        "\"n\"\\s*:\\s*(\\d+)\\s*,\\s*\"c\"\\s*:\\s*" +
-        "\\[((?:\\[[-0-9, ]+\\](?:,\\s*)?)*)\\]\\}").r
-      val types = rx.findAllMatchIn(s).map { m =>
-        val cs = "\\[([-0-9, ]+)\\]".r.findAllMatchIn(m.group(3)).map {
-          cm =>
-            val v = cm.group(1).split(",").map(_.trim.toLong)
-            (v(0), v(1), v(2))
-        }.toList
-        m.group(1).replaceAll("\\\\(.)", "$1") ->
-          SsState(m.group(2).toLong, cs)
-      }.toMap
-      (last, types)
+  /** (lastBatch, type -> SsState): {"t", "n", "c": [[user, est, err]..]}
+    * under "types", counters written by descending estimate. */
+  private[graft] val ssStates = keyed[SsState]("types", "t") { (_, e) =>
+    SsState(e.required("n").asLong,
+      e.required("c").elements.asScala.map { c =>
+        (c.get(0).asLong, c.get(1).asLong, c.get(2).asLong)
+      }.toList)
+  } { (o, s) =>
+    val cs = o.put("n", s.n).putArray("c")
+    s.cs.sortBy(x => (-x._2, x._1)).foreach { case (u, c, e) =>
+      cs.addArray().add(u).add(c).add(e)
     }
-  }
-
-  private def ssWriteState(statePath: String, batchId: Long,
-      types: Map[String, SsState]): Unit = {
-    val body = types.toSeq.sortBy(_._1).map { case (t, s) =>
-      val cs = s.cs.sortBy(x => (-x._2, x._1))
-        .map { case (u, c, e) => s"[$u, $c, $e]" }.mkString(", ")
-      val esc = t.replace("\\", "\\\\").replace("\"", "\\\"")
-      s"""{"t": "$esc", "n": ${s.n}, "c": [$cs]}"""
-    }.mkString("[", ", ", "]")
-    atomicWrite(statePath, s"""{"lastBatch": $batchId, "types": $body}""")
   }
 
   private[graft] def ssBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = ssStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    val perUser = batch
-      .groupBy(col("event_type"), col("user_id"))
-      .agg(count(lit(1)).cast("long").as("c"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val st1 = perUser.groupBy(_._1).foldLeft(st0) { case (acc, (tpe, us)) =>
-      val folded = us.sortBy(_._2).foldLeft(
-        acc.getOrElse(tpe, SsState(0L, Nil))) { case (s, (_, u, w)) =>
-        ssUpdate(s, u, w)
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(ssStates, statePath, outPath, batchId) { st0 =>
+      val perUser = batch
+        .groupBy(col("event_type"), col("user_id"))
+        .agg(count(lit(1)).cast("long").as("c"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val st1 = perUser.groupBy(_._1).foldLeft(st0) {
+        case (acc, (tpe, us)) =>
+          val folded = us.sortBy(_._2).foldLeft(
+            acc.getOrElse(tpe, SsState(0L, Nil))) { case (s, (_, u, w)) =>
+            ssUpdate(s, u, w)
+          }
+          acc.updated(tpe, folded)
       }
-      acc.updated(tpe, folded)
-    }
-    if (st1.nonEmpty) {
       import spark.implicits._
-      st1.toSeq.sortBy(_._1).flatMap { case (tpe, s) =>
-        s.cs.sortBy(x => (-x._2, x._1)).zipWithIndex.map {
-          case ((u, c, e), i) =>
-            (batchId, tpe, (i + 1).toLong, u, c, e, c - e, s.n)
-        }
-      }.toDF("batch_id", "event_type", "rank", "user_id", "est_count",
+      (st1, Option.when(st1.nonEmpty) {
+        st1.toSeq.sortBy(_._1).flatMap { case (tpe, s) =>
+          s.cs.sortBy(x => (-x._2, x._1)).zipWithIndex.map {
+            case ((u, c, e), i) =>
+              (batchId, tpe, (i + 1).toLong, u, c, e, c - e, s.n)
+          }
+        }.toDF("batch_id", "event_type", "rank", "user_id", "est_count",
           "err_bound", "guaranteed_min", "n_events")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    ssWriteState(statePath, batchId, st1)
-  }
 
   /** Streaming space-saving heavy-hitter sink: the bounded top-k
     * complement of the batch CMS/top-k gauges — per event type, WHICH
@@ -666,19 +604,13 @@ object StreamingIngest {
     * invariants against an exact batch recount. */
   def spaceSavingSink(events: DataFrame, spark: SparkSession,
       outPath: String, statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ssBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(ssBatch(spark, outPath, statePath, _, _))
 
-  // ---- streaming EWMA control-chart sink (r17) ----------------------------
+  // ---- streaming EWMA control-chart sink ------------------------------------
 
   // EWMA chart (Roberts, Technometrics 1959) over hourly counts per
-  // event type: the level-TRACKING monitor between the two r16
+  // event type: the level-TRACKING monitor between the two other
   // detectors — PH compares against the running prefix mean (adapts
   // slowly, flags sustained drift), tabular CUSUM against a frozen
   // baseline (flags any level shift, never adapts); the EWMA chart
@@ -731,90 +663,66 @@ object StreamingIngest {
       (st, hh, cc) => st.copy(pendH = hh, pendC = cc),
       st => st.copy(late = st.late + 1), ewFold)
 
-  /** (lastBatchId, type -> EwState); (-1, empty) when fresh. */
-  private[graft] def ewStates(statePath: String)
-      : (Long, Map[String, EwState]) = {
-    val (last, raw) = readLongVecState(statePath)
-    (last, raw.map { case (t, v) =>
-      t -> EwState(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7))
-    })
-  }
-
-  private def ewWriteState(statePath: String, batchId: Long,
-      types: Map[String, EwState]): Unit =
-    writeLongVecState(statePath, batchId, types.map { case (t, s) =>
-      t -> Seq(s.nh, s.eq, s.vq, s.na, s.af, s.pendH, s.pendC, s.late)
-    })
+  /** (lastBatch, type -> EwState), the fields as one long vector. */
+  private[graft] val ewStates = longVecs[EwState] { (_, v) =>
+    EwState(v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7))
+  }(longs)
 
   private[graft] def ewBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = ewStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    val st1 = foldHourly(batch, st0, ewEmpty, ewAdvance)
-    if (st1.nonEmpty) {
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(ewStates, statePath, outPath, batchId) { st0 =>
+      val st1 = foldHourly(batch, st0, ewEmpty, ewAdvance)
       import spark.implicits._
-      st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
-        (batchId, tpe, s.nh, s.eq / 1e9, math.sqrt(s.vq / 1e4),
-          s.na, phFmt(s.af), s.late)
-      }.toDF("batch_id", "event_type", "n_hours", "ewma", "sigma",
+      (st1, Option.when(st1.nonEmpty) {
+        st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
+          (batchId, tpe, s.nh, s.eq / 1e9, math.sqrt(s.vq / 1e4),
+            s.na, phFmt(s.af), s.late)
+        }.toDF("batch_id", "event_type", "n_hours", "ewma", "sigma",
           "n_alarms", "first_alarm", "late_hours")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    ewWriteState(statePath, batchId, st1)
-  }
 
   /** Streaming EWMA control-chart sink — x_ewma_anomaly's monitor-side
-    * sibling in the shared foreachBatch skeleton (the mapGroupsWithState
-    * `ewmaAnomalyStream` is the per-KEY daily operator; this is the
-    * per-TYPE hourly chart with the durable O(types) state file the
-    * PH/CUSUM monitors use, so all three detectors read the same
-    * stream with the same crash/replay/pending-hour/late-hour
-    * contracts — phDriftSink's verbatim, including the at-least-once
-    * verdict table documented at the shared codec: dedupe on
-    * (batch_id, event_type)). One verdict row per type per trigger. */
+    * sibling (the mapGroupsWithState `ewmaAnomalyStream` is the per-KEY
+    * daily operator; this is the per-TYPE hourly chart with the durable
+    * O(types) state file the PH/CUSUM monitors use, so all three
+    * detectors read the same stream with the same crash/replay/
+    * pending-hour/late-hour contracts, including the at-least-once
+    * verdict table documented at `cursorFold`: dedupe on (batch_id,
+    * event_type)). One verdict row per type per trigger. */
   def ewmaChartSink(events: DataFrame, spark: SparkSession,
       outPath: String, statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ewBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(ewBatch(spark, outPath, statePath, _, _))
 
-  // ---- streaming histogram-quantile sink (r18) ----------------------------
+  // ---- streaming histogram-quantile sink ------------------------------------
 
   // Per-type fixed cent-bucket histogram of event VALUES — the QUANTILE
   // member of the monitor family (PH/CUSUM/EWMA watch the hourly COUNT
   // level; this watches the value DISTRIBUTION): p50/p90/p99 per
   // trigger as integer-cum rank picks over the folded bucket counts
-  // (the newsvendor pick, online). State is O(bins) longs per type in
-  // the shared codec — bounded forever, any corpus size — and the
-  // picks touch only the O(types × bins) state, never history. Bucket
-  // = 100 cents (one currency unit), 512 buckets with the last as the
-  // clamp bucket; the clamp count is EXPORTED per row (n_overflow, the
-  // no-silent-caps rule) so a monitor sees when the domain outgrows
-  // the grid rather than silently reading a saturated p99.
-  // value→cents and cents→bucket are SEPARATE scales that happened to
-  // both be 100 (r18 advice #4): the multiplier below converts currency
-  // units to integer cents, HqBucketCents is the bucket width IN CENTS.
-  // Deriving both from named constants pins them independently — widen
-  // the buckets without silently skewing the cents quantization.
+  // (the newsvendor pick, online). State is O(bins) longs per type —
+  // bounded forever, any corpus size — and the picks touch only the
+  // O(types × bins) state, never history. Bucket = 100 cents (one
+  // currency unit), 512 buckets with the last as the clamp bucket; the
+  // clamp count is EXPORTED per row (n_overflow, the no-silent-caps
+  // rule) so a monitor sees when the domain outgrows the grid rather
+  // than silently reading a saturated p99. value→cents and
+  // cents→bucket are SEPARATE scales that happen to both be 100: the
+  // multiplier below converts currency units to integer cents,
+  // HqBucketCents is the bucket width IN CENTS, so the buckets can widen
+  // without skewing the cents quantization.
   private val HqCentsPerUnit = 100L
   private val HqBucketCents = 100L
   private val HqBuckets = 512
 
   /** Per-type histogram state: n = folded IN-GRID events; nulls =
-    * dropped NULL-valued events (counted and exported, never folded —
-    * pre-seal review r18: greatest()/least() silently clamp a NULL
-    * value into bucket 0, the exact trap the tQuantileCol NULL-df
-    * advice documents); under = below-grid (negative-cent) events,
-    * the symmetric twin of the exported clamp bucket (r18 advice #2:
-    * overflow was exported but underflow silently folded into bucket
-    * 0); buckets = cumulative per-bucket counts (value-domain
-    * histogram, not hourly — no pending-hour machinery: a value row
-    * folds the moment it arrives, nothing to finalize). */
+    * dropped NULL-valued events (counted and exported, never folded:
+    * greatest()/least() would clamp a NULL value into bucket 0); under =
+    * below-grid (negative-cent) events, the symmetric twin of the
+    * exported clamp bucket; buckets = cumulative per-bucket counts
+    * (value-domain histogram, not hourly — no pending-hour machinery: a
+    * value row folds the moment it arrives, nothing to finalize). */
   private[graft] case class HqState(n: Long, nulls: Long, under: Long,
       buckets: Vector[Long])
 
@@ -836,41 +744,37 @@ object StreamingIngest {
     (buckets.length - 1).toLong
   }
 
-  /** (lastBatchId, type -> HqState); (-1, empty) when fresh. Layout is
-    * checked BEFORE decode: the underflow counter was inserted at index
-    * 2 after the first release of this sink, so a state file written by
-    * the older [n, nulls, b0..] layout read blindly through the current
-    * [n, nulls, under, b0..] one would shift every bucket down by one
-    * (quantile edges silently off) until the next clamp-bucket fold
-    * throws out-of-bounds — exactly the crash/replay-resume path the
-    * sink contracts promise. The legacy length migrates (under = 0, the
-    * value the old layout implied); any other length fails loudly. */
-  private[graft] def hqStates(statePath: String)
-      : (Long, Map[String, HqState]) = {
-    val (last, raw) = readLongVecState(statePath)
-    (last, raw.map { case (t, v) =>
-      if (v.length == 3 + HqBuckets)
-        t -> HqState(v.head, v(1), v(2), v.drop(3).toVector)
-      else if (v.length == 2 + HqBuckets)
-        t -> HqState(v.head, v(1), 0L, v.drop(2).toVector)
-      else sys.error(s"histogram-quantile state for type '$t' has " +
-        s"${v.length} longs; expected ${3 + HqBuckets} " +
-        s"(or legacy ${2 + HqBuckets})")
-    })
-  }
+  /** (lastBatch, type -> HqState), vector [n, nulls, under, b0..]. The
+    * layout is checked BEFORE decode: the underflow counter was inserted
+    * at index 2 after the first release of this sink, so a state file
+    * written by the older [n, nulls, b0..] layout read blindly through
+    * the current one would shift every bucket down by one (quantile edges
+    * silently off) until the next clamp-bucket fold throws out-of-bounds
+    * — exactly the crash/replay-resume path the sink contracts promise.
+    * The legacy length migrates (under = 0, the value the old layout
+    * implied); any other length fails loudly. */
+  private[graft] val hqStates = longVecs[HqState] { (t, v) =>
+    if (v.length == 3 + HqBuckets)
+      HqState(v.head, v(1), v(2), v.drop(3).toVector)
+    else if (v.length == 2 + HqBuckets)
+      HqState(v.head, v(1), 0L, v.drop(2).toVector)
+    else sys.error(s"histogram-quantile state for type '$t' has " +
+      s"${v.length} longs; expected ${3 + HqBuckets} " +
+      s"(or legacy ${2 + HqBuckets})")
+  }(s => s.n +: s.nulls +: s.under +: s.buckets)
 
   /** Output-side layout guard, mirroring the state-side migration in
-    * [[hqStates]] (r19 advice #1): the verdict schema changed when the
-    * underflow counter shipped (n_underflow inserted, quantiles now
-    * nullable), and a stream resumed against a pre-change outPath would
-    * append new-schema parquet into an old-schema directory — a plain
-    * spark.read.parquet then resolves ONE footer and silently drops or
-    * nulls columns unless mergeSchema is set. State files migrate in
-    * place (a counter the old layout implied as 0); the OUTPUT table
-    * cannot (its old rows genuinely lack the column), so the contract
-    * is fail-loudly: resume against a fresh outPath or backfill the
-    * old table first. Checked once per append, a driver-side footer
-    * read of the bounded verdict table. */
+    * [[hqStates]]: the verdict schema changed when the underflow counter
+    * shipped (n_underflow inserted, quantiles now nullable), and a stream
+    * resumed against a pre-change outPath would append new-schema parquet
+    * into an old-schema directory — a plain spark.read.parquet then
+    * resolves ONE footer and silently drops or nulls columns unless
+    * mergeSchema is set. State files migrate in place (a counter the old
+    * layout implied as 0); the OUTPUT table cannot (its old rows
+    * genuinely lack the column), so the contract is fail-loudly: resume
+    * against a fresh outPath or backfill the old table first. Checked
+    * once per append, a driver-side footer read of the bounded verdict
+    * table. */
   private def hqRequireOutLayout(spark: SparkSession,
       outPath: String): Unit = {
     val dir = new java.io.File(outPath)
@@ -886,82 +790,66 @@ object StreamingIngest {
         "resume against a fresh outPath or migrate the old table")
   }
 
-  private def hqWriteState(statePath: String, batchId: Long,
-      types: Map[String, HqState]): Unit =
-    writeLongVecState(statePath, batchId, types.map { case (t, s) =>
-      t -> (s.n +: s.nulls +: s.under +: s.buckets)
-    })
-
   private[graft] def hqBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = hqStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    // one grouped count of the micro-batch onto the bounded bucket
-    // grid — the collect is O(types × bins), never O(rows). NULL
-    // values ride as the sentinel bucket −1 and below-grid (negative-
-    // cent) values as −2; both are COUNTED, never folded:
-    // greatest()/least() would otherwise clamp a NULL or a negative
-    // silently into bucket 0 (pre-seal review r18 + r18 advice #2).
-    val cents = floor(col("value") * HqCentsPerUnit + 0.5)
-    val hist = batch
-      .groupBy(col("event_type"),
-        when(col("value").isNull, lit(-1L))
-          .when(cents < 0, lit(-2L))
-          .otherwise(least(floor(cents / HqBucketCents),
-            lit((HqBuckets - 1).toDouble)).cast("long")).as("b"))
-      .agg(count(lit(1)).cast("long").as("c"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val st1 = hist.foldLeft(st0) { case (acc, (tpe, b, c)) =>
-      val s = acc.getOrElse(tpe, hqEmpty)
-      acc.updated(tpe,
-        if (b == -1L) s.copy(nulls = s.nulls + c)
-        else if (b == -2L) s.copy(under = s.under + c)
-        else HqState(s.n + c, s.nulls, s.under,
-          s.buckets.updated(b.toInt, s.buckets(b.toInt) + c)))
-    }
-    if (st1.nonEmpty) {
-      hqRequireOutLayout(spark, outPath)
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(hqStates, statePath, outPath, batchId) { st0 =>
+      // one grouped count of the micro-batch onto the bounded bucket
+      // grid — the collect is O(types × bins), never O(rows). NULL
+      // values ride as the sentinel bucket −1 and below-grid (negative-
+      // cent) values as −2; both are COUNTED, never folded:
+      // greatest()/least() would otherwise clamp a NULL or a negative
+      // silently into bucket 0.
+      val cents = floor(col("value") * HqCentsPerUnit + 0.5)
+      val hist = batch
+        .groupBy(col("event_type"),
+          when(col("value").isNull, lit(-1L))
+            .when(cents < 0, lit(-2L))
+            .otherwise(least(floor(cents / HqBucketCents),
+              lit((HqBuckets - 1).toDouble)).cast("long")).as("b"))
+        .agg(count(lit(1)).cast("long").as("c"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val st1 = hist.foldLeft(st0) { case (acc, (tpe, b, c)) =>
+        val s = acc.getOrElse(tpe, hqEmpty)
+        acc.updated(tpe,
+          if (b == -1L) s.copy(nulls = s.nulls + c)
+          else if (b == -2L) s.copy(under = s.under + c)
+          else HqState(s.n + c, s.nulls, s.under,
+            s.buckets.updated(b.toInt, s.buckets(b.toInt) + c)))
+      }
       import spark.implicits._
-      st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
-        def edge(p: Long): Double =
-          (p + 1) * HqBucketCents.toDouble / HqCentsPerUnit
-        // n = 0 → no folded values, so a rank pick has nothing to
-        // select: the quantiles are NULL, not bucket 0's edge (r18
-        // advice #1 — a type whose only events so far are NULL-valued
-        // must not read as "p99 ≤ 1.0" on a monitor)
-        def q(num: Long, den: Long): Option[Double] =
-          if (s.n == 0L) None
-          else Some(edge(hqPick(s.buckets, s.n, num, den)))
-        (batchId, tpe, s.n, s.nulls, s.under,
-          q(1L, 2L), q(9L, 10L), q(99L, 100L),
-          s.buckets.last)
-      }.toDF("batch_id", "event_type", "n_events", "n_null",
+      (st1, Option.when(st1.nonEmpty) {
+        hqRequireOutLayout(spark, outPath)
+        st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
+          def edge(p: Long): Double =
+            (p + 1) * HqBucketCents.toDouble / HqCentsPerUnit
+          // n = 0 → no folded values, so a rank pick has nothing to
+          // select: the quantiles are NULL, not bucket 0's edge (a type
+          // whose only events so far are NULL-valued must not read as
+          // "p99 ≤ 1.0" on a monitor)
+          def q(num: Long, den: Long): Option[Double] =
+            if (s.n == 0L) None
+            else Some(edge(hqPick(s.buckets, s.n, num, den)))
+          (batchId, tpe, s.n, s.nulls, s.under,
+            q(1L, 2L), q(9L, 10L), q(99L, 100L),
+            s.buckets.last)
+        }.toDF("batch_id", "event_type", "n_events", "n_null",
           "n_underflow", "p50_le", "p90_le", "p99_le", "n_overflow")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    hqWriteState(statePath, batchId, st1)
-  }
 
   /** Streaming histogram-quantile sink — the distribution monitor
-    * beside the three level monitors, in the shared foreachBatch
-    * skeleton with the SAME crash/replay contracts (phDriftSink's
-    * verbatim: batchId-guarded exactly-once state, at-least-once
-    * verdict rows deduped on (batch_id, event_type)). One row per type
-    * per trigger: running p50/p90/p99 upper edges over ALL folded
-    * values plus the clamp-bucket count. */
+    * beside the three level monitors, with the SAME crash/replay
+    * contracts (`cursorFold`: batchId-guarded exactly-once state,
+    * at-least-once verdict rows deduped on (batch_id, event_type)). One
+    * row per type per trigger: running p50/p90/p99 upper edges over ALL
+    * folded values plus the clamp-bucket count. */
   def histogramQuantileSink(events: DataFrame, spark: SparkSession,
       outPath: String, statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hqBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(hqBatch(spark, outPath, statePath, _, _))
 
-  // ---- streaming HLL cardinality sink (r18) --------------------------------
+  // ---- streaming HLL cardinality sink ---------------------------------------
 
   // HyperLogLog distinct-user monitor per event type (Flajolet et al.
   // 2007) — the CARDINALITY member that completes the monitor family
@@ -972,11 +860,11 @@ object StreamingIngest {
   // per-register max, so micro-batches fold associatively and a replay
   // leaves the REGISTERS (and every estimate read off them) unchanged
   // even before the batch-cursor guard; the n_events/n_null counters
-  // are plain sums, so the guard is what makes THEM exactly-once (r18
-  // advice #3). Hashing is the repo's engine-portable md5 path (first 15
-  // hex chars = 60 bits: low 8 pick the register, the high 52 feed
-  // the leading-zero rank), the per-batch aggregation is one grouped
-  // max onto the O(types × 256) grid — never O(rows) on the driver.
+  // are plain sums, so the guard is what makes THEM exactly-once.
+  // Hashing is the repo's engine-portable md5 path (first 15 hex chars =
+  // 60 bits: low 8 pick the register, the high 52 feed the leading-zero
+  // rank), the per-batch aggregation is one grouped max onto the
+  // O(types × 256) grid — never O(rows) on the driver.
   private val HllB = 8
   private val HllM = 256 // 2^HllB registers
   private val HllWBits = 52 // hash bits above the register index
@@ -996,88 +884,69 @@ object StreamingIngest {
 
   /** Per-type HLL state: n = folded NON-NULL events; nulls = dropped
     * NULL user ids (counted and exported — md5(NULL) would otherwise
-    * propagate a NULL grouping key and crash the fold; pre-seal
-    * review r18); regs = the 256 max-of-rho registers. */
+    * propagate a NULL grouping key and crash the fold); regs = the 256
+    * max-of-rho registers. */
   private[graft] case class HllState(n: Long, nulls: Long,
       regs: Vector[Long])
 
-  /** (lastBatchId, type -> HllState). */
-  private[graft] def hllStates(statePath: String)
-      : (Long, Map[String, HllState]) = {
-    val (last, raw) = readLongVecState(statePath)
-    (last, raw.map { case (t, v) =>
-      t -> HllState(v.head, v(1), v.drop(2).toVector)
-    })
-  }
-
-  private def hllWriteState(statePath: String, batchId: Long,
-      types: Map[String, HllState]): Unit =
-    writeLongVecState(statePath, batchId, types.map { case (t, s) =>
-      t -> (s.n +: s.nulls +: s.regs)
-    })
+  /** (lastBatch, type -> HllState), vector [n, nulls, r0..r255]. */
+  private[graft] val hllStates = longVecs[HllState] { (_, v) =>
+    HllState(v.head, v(1), v.drop(2).toVector)
+  }(s => s.n +: s.nulls +: s.regs)
 
   private[graft] def hllBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = hllStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    // one grouped max onto the bounded register grid; the 60-bit md5
-    // prefix splits into (register, rank word) with integer ops only.
-    // NULL user ids ride as the sentinel register −1, counted not
-    // hashed (md5(NULL) is NULL and would crash the long fold).
-    val hist = batch
-      .select(col("event_type"),
-        conv(substring(md5(col("user_id").cast("string")), 1, 15),
-          16, 10).cast("long").as("h"))
-      .withColumn("reg",
-        coalesce(col("h") % HllM.toLong, lit(-1L)))
-      .withColumn("w", coalesce(expr(s"h div $HllM"), lit(0L)))
-      .withColumn("rho", when(col("w") > 0,
-        lit(HllWBits + 1) - length(bin(col("w"))))
-        .otherwise(lit(HllWBits + 1)).cast("long"))
-      .groupBy(col("event_type"), col("reg"))
-      .agg(max(col("rho")).cast("long").as("mx"),
-        count(lit(1)).cast("long").as("c"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3)))
-    val st1 = hist.foldLeft(st0) { case (acc, (tpe, reg, mx, c)) =>
-      val s = acc.getOrElse(tpe, HllState(0L, 0L, Vector.fill(HllM)(0L)))
-      acc.updated(tpe,
-        if (reg < 0) s.copy(nulls = s.nulls + c)
-        else HllState(s.n + c, s.nulls, s.regs.updated(reg.toInt,
-          math.max(s.regs(reg.toInt), mx))))
-    }
-    if (st1.nonEmpty) {
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(hllStates, statePath, outPath, batchId) { st0 =>
+      // one grouped max onto the bounded register grid; the 60-bit md5
+      // prefix splits into (register, rank word) with integer ops only.
+      // NULL user ids ride as the sentinel register −1, counted not
+      // hashed (md5(NULL) is NULL and would crash the long fold).
+      val hist = batch
+        .select(col("event_type"),
+          conv(substring(md5(col("user_id").cast("string")), 1, 15),
+            16, 10).cast("long").as("h"))
+        .withColumn("reg",
+          coalesce(col("h") % HllM.toLong, lit(-1L)))
+        .withColumn("w", coalesce(expr(s"h div $HllM"), lit(0L)))
+        .withColumn("rho", when(col("w") > 0,
+          lit(HllWBits + 1) - length(bin(col("w"))))
+          .otherwise(lit(HllWBits + 1)).cast("long"))
+        .groupBy(col("event_type"), col("reg"))
+        .agg(max(col("rho")).cast("long").as("mx"),
+          count(lit(1)).cast("long").as("c"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3)))
+      val st1 = hist.foldLeft(st0) { case (acc, (tpe, reg, mx, c)) =>
+        val s = acc.getOrElse(tpe, HllState(0L, 0L, Vector.fill(HllM)(0L)))
+        acc.updated(tpe,
+          if (reg < 0) s.copy(nulls = s.nulls + c)
+          else HllState(s.n + c, s.nulls, s.regs.updated(reg.toInt,
+            math.max(s.regs(reg.toInt), mx))))
+      }
       import spark.implicits._
-      st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
-        val (est, v) = hllEstimate(s.regs)
-        (batchId, tpe, s.n, s.nulls,
-          math.floor(est * 1e6 + 0.5) / 1e6, v, HllM.toLong)
-      }.toDF("batch_id", "event_type", "n_events", "n_null",
+      (st1, Option.when(st1.nonEmpty) {
+        st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
+          val (est, v) = hllEstimate(s.regs)
+          (batchId, tpe, s.n, s.nulls,
+            math.floor(est * 1e6 + 0.5) / 1e6, v, HllM.toLong)
+        }.toDF("batch_id", "event_type", "n_events", "n_null",
           "est_distinct", "n_zero_regs", "m_registers")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    hllWriteState(statePath, batchId, st1)
-  }
 
   /** Streaming HLL cardinality sink — running distinct-user estimate
-    * per event type in O(types × 256) state forever, same
-    * foreachBatch skeleton and crash/replay contracts as the other
-    * monitor sinks (batchId-guarded exactly-once state, at-least-once
-    * verdict rows deduped on (batch_id, event_type)); the register
-    * fold is additionally idempotent by construction (max-merge). */
+    * per event type in O(types × 256) state forever, with the
+    * `cursorFold` crash/replay contracts (batchId-guarded exactly-once
+    * state, at-least-once verdict rows deduped on (batch_id,
+    * event_type)); the register fold is additionally idempotent by
+    * construction (max-merge). */
   def hllCardinalitySink(events: DataFrame, spark: SparkSession,
       outPath: String, statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hllBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(hllBatch(spark, outPath, statePath, _, _))
 
-  // ---- streaming min-k (KMV / bottom-k) sample sink (r19) ------------------
+  // ---- streaming min-k (KMV / bottom-k) sample sink -------------------------
 
   // Deterministic bottom-k distinct-user sample per event type via md5
   // priorities — the KMV sketch (Bar-Yossef et al. RANDOM 2002; the
@@ -1090,18 +959,17 @@ object StreamingIngest {
   // register max, so micro-batches fold in any order and a replay
   // leaves the sample (and the estimate read off it) unchanged even
   // before the batch-cursor guard; the n_events/n_null counters are
-  // plain sums — the guard is what makes them exactly-once. k = 128
-  // per the r19 calibration prototype: the frozen same-hash bias of
-  // the exact md5 path reads +9..14% at k = 128 (inside the 3/√k =
-  // 0.265 theoretical band the spec pins); the HLL sink stays the
-  // authoritative estimate on the same stream.
+  // plain sums — the guard is what makes them exactly-once. At k = 128
+  // the frozen same-hash bias of the exact md5 path reads +9..14%
+  // (inside the 3/√k = 0.265 theoretical band the spec pins); the HLL
+  // sink stays the authoritative estimate on the same stream.
   private val MkK = 128
   private val MkHashSpan = math.pow(2.0, 60.0) // 60-bit md5 prefix
 
   /** Per-type bottom-k state: n = folded NON-NULL events, nulls =
-    * dropped NULL user ids (counted, never hashed — md5(NULL) is the
-    * r18 trap), sample = ≤ k (hash, user) pairs, hash-distinct,
-    * sorted hash ascending. */
+    * dropped NULL user ids (counted, never hashed — md5(NULL) is NULL),
+    * sample = ≤ k (hash, user) pairs, hash-distinct, sorted hash
+    * ascending. */
   private[graft] case class MkState(n: Long, nulls: Long,
       sample: Vector[(Long, Long)])
 
@@ -1121,105 +989,82 @@ object StreamingIngest {
     * (0, 1] over the 60-bit span. h_(k) = 0 (a full sample whose k-th
     * smallest 60-bit hash is exactly zero — ~2^−60 per user, but the
     * family guards EVERY denominator) falls back to the sample length,
-    * the same degraded-but-finite reading the below-k branch gives
-    * (r19 advice #2). */
+    * the same degraded-but-finite reading the below-k branch gives. */
   private[graft] def mkEstimate(sample: Vector[(Long, Long)]): Double =
     if (sample.length < MkK || sample.last._1 == 0L)
       sample.length.toDouble
     else (MkK - 1).toDouble / (sample.last._1.toDouble / MkHashSpan)
 
-  /** (lastBatchId, type -> MkState); vector layout n, nulls, then the
-    * sample pairs flattened (hash, user)*. */
-  private[graft] def mkStates(statePath: String)
-      : (Long, Map[String, MkState]) = {
-    val (last, raw) = readLongVecState(statePath)
-    (last, raw.map { case (t, v) =>
-      val pairs = v.drop(2).grouped(2).collect {
-        case Array(h, u) => (h, u)
-      }.toVector
-      t -> MkState(v.head, v(1), pairs)
-    })
-  }
-
-  private def mkWriteState(statePath: String, batchId: Long,
-      types: Map[String, MkState]): Unit =
-    writeLongVecState(statePath, batchId, types.map { case (t, s) =>
-      t -> (s.n +: s.nulls +: s.sample.flatMap(p => Seq(p._1, p._2)))
-    })
+  /** (lastBatch, type -> MkState), vector [n, nulls, (hash, user)*]. */
+  private[graft] val mkStates = longVecs[MkState] { (_, v) =>
+    MkState(v.head, v(1),
+      v.drop(2).grouped(2).collect { case Array(h, u) => (h, u) }.toVector)
+  }(s => s.n +: s.nulls +: s.sample.flatMap(p => Seq(p._1, p._2)))
 
   private[graft] def mkBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = mkStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    // one grouped count for the exactly-once counters …
-    val counts = batch
-      .groupBy(col("event_type"))
-      .agg(sum(when(col("user_id").isNotNull, 1L).otherwise(0L))
-          .cast("long").as("nv"),
-        sum(when(col("user_id").isNull, 1L).otherwise(0L))
-          .cast("long").as("nl"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    // … and the batch's own bottom-k per type: distinct users, the
-    // 60-bit md5 hash, a per-type rank pick. The window runs over the
-    // micro-batch only and the collect is O(types × k).
-    val bk = batch
-      .filter(col("user_id").isNotNull)
-      .select(col("event_type"), col("user_id").cast("long").as("u"))
-      .distinct()
-      .withColumn("h",
-        conv(substring(md5(col("u").cast("string")), 1, 15), 16, 10)
-          .cast("long"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("event_type").orderBy(col("h"), col("u"))))
-      .filter(col("rn") <= MkK)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(2), r.getLong(1)))
-    val withCounts = counts.foldLeft(st0) { case (acc, (tpe, nv, nl)) =>
-      val s = acc.getOrElse(tpe, mkEmpty)
-      acc.updated(tpe, s.copy(n = s.n + nv, nulls = s.nulls + nl))
-    }
-    val st1 = bk.groupBy(_._1).foldLeft(withCounts) {
-      case (acc, (tpe, adds)) =>
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(mkStates, statePath, outPath, batchId) { st0 =>
+      // one grouped count for the exactly-once counters …
+      val counts = batch
+        .groupBy(col("event_type"))
+        .agg(sum(when(col("user_id").isNotNull, 1L).otherwise(0L))
+            .cast("long").as("nv"),
+          sum(when(col("user_id").isNull, 1L).otherwise(0L))
+            .cast("long").as("nl"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      // … and the batch's own bottom-k per type: distinct users, the
+      // 60-bit md5 hash, a per-type rank pick. The window runs over the
+      // micro-batch only and the collect is O(types × k).
+      val bk = batch
+        .filter(col("user_id").isNotNull)
+        .select(col("event_type"), col("user_id").cast("long").as("u"))
+        .distinct()
+        .withColumn("h",
+          conv(substring(md5(col("u").cast("string")), 1, 15), 16, 10)
+            .cast("long"))
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy("event_type").orderBy(col("h"), col("u"))))
+        .filter(col("rn") <= MkK)
+        .collect()
+        .map(r => (r.getString(0), r.getLong(2), r.getLong(1)))
+      val withCounts = counts.foldLeft(st0) { case (acc, (tpe, nv, nl)) =>
         val s = acc.getOrElse(tpe, mkEmpty)
-        acc.updated(tpe,
-          s.copy(sample = mkMerge(s.sample, adds.map(x => (x._2, x._3)))))
-    }
-    if (st1.nonEmpty) {
+        acc.updated(tpe, s.copy(n = s.n + nv, nulls = s.nulls + nl))
+      }
+      val st1 = bk.groupBy(_._1).foldLeft(withCounts) {
+        case (acc, (tpe, adds)) =>
+          val s = acc.getOrElse(tpe, mkEmpty)
+          acc.updated(tpe,
+            s.copy(sample = mkMerge(s.sample, adds.map(x => (x._2, x._3)))))
+      }
       import spark.implicits._
-      st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
-        val est =
-          if (s.sample.isEmpty) None
-          else Some(math.floor(mkEstimate(s.sample) * 1e6 + 0.5) / 1e6)
-        (batchId, tpe, s.n, s.nulls, s.sample.length.toLong,
-          s.sample.length < MkK, est, s.sample.map(_._2))
-      }.toDF("batch_id", "event_type", "n_events", "n_null",
+      (st1, Option.when(st1.nonEmpty) {
+        st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
+          val est =
+            if (s.sample.isEmpty) None
+            else Some(math.floor(mkEstimate(s.sample) * 1e6 + 0.5) / 1e6)
+          (batchId, tpe, s.n, s.nulls, s.sample.length.toLong,
+            s.sample.length < MkK, est, s.sample.map(_._2))
+        }.toDF("batch_id", "event_type", "n_events", "n_null",
           "n_sample", "sample_is_exact", "kmv_estimate", "sample_users")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    mkWriteState(statePath, batchId, st1)
-  }
 
   /** Streaming min-k sample sink — per event type, a deterministic
     * replay-stable bottom-k distinct-user sample plus the KMV
-    * cardinality estimate, in O(types × k) state forever. Shared
-    * foreachBatch skeleton and crash/replay contracts (batchId-guarded
-    * exactly-once state, at-least-once verdict rows deduped on
-    * (batch_id, event_type)); the sample fold is additionally
-    * idempotent by construction (union-keep-k-smallest). */
+    * cardinality estimate, in O(types × k) state forever, with the
+    * `cursorFold` crash/replay contracts (batchId-guarded exactly-once
+    * state, at-least-once verdict rows deduped on (batch_id,
+    * event_type)); the sample fold is additionally idempotent by
+    * construction (union-keep-k-smallest). */
   def minKSampleSink(events: DataFrame, spark: SparkSession,
       outPath: String, statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mkBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(mkBatch(spark, outPath, statePath, _, _))
 
-  // ---- streaming Bloom novelty sink (r20) ----------------------------------
+  // ---- streaming Bloom novelty sink -----------------------------------------
 
   // Per-type Bloom filter (Bloom, CACM 1970) of users seen so far; per
   // trigger the sink emits the batch's NOVELTY RATE — the share of
@@ -1230,10 +1075,9 @@ object StreamingIngest {
   // the CURRENT batch is genuinely new". m = 2^16 bits per type,
   // k = 4 probes via the Kirsch–Mitzenmacher construction (h1 + i·h2,
   // ESA 2006) over the repo's engine-portable 60-bit md5 path split
-  // 30 + 30 — the r20 calibration prototype measured fill 0.1147 at
-  // n = 2k distinct users (formula 1 − e^(−kn/m) predicts 0.1150)
-  // with false-positive ≈ fill⁴ ≈ 2.0e−4, capacity ≈ 3.2k users at
-  // FP ≤ 1e−3 (PERFORMANCE.md r20 backlog pins). Bit-OR merge is
+  // 30 + 30 — fill 0.1147 measured at n = 2k distinct users (formula
+  // 1 − e^(−kn/m) predicts 0.1150) with false-positive ≈ fill⁴ ≈ 2.0e−4,
+  // capacity ≈ 3.2k users at FP ≤ 1e−3 (PERFORMANCE.md). Bit-OR merge is
   // idempotent like the HLL register max, so a replayed fold leaves
   // the filter unchanged even before the batch cursor; the counters
   // are plain sums — the cursor is what makes THEM exactly-once.
@@ -1249,11 +1093,10 @@ object StreamingIngest {
   private val BnSplit = 1L << 30 // 60-bit hash → (h1, h2) 30 + 30
   private val BnVersion = 1L
 
-  /** Per-type Bloom novelty state, VERSION-TAGGED FROM DAY ONE (the
-    * r19 HqState layout lesson applied proactively): any future
-    * layout change bumps the version and migrates explicitly; a
-    * length or version this decoder does not know fails loudly,
-    * never a silent bit shift. */
+  /** Per-type Bloom novelty state, VERSION-TAGGED in its state vector:
+    * any future layout change bumps the version and migrates explicitly;
+    * a length or version this decoder does not know fails loudly, never
+    * a silent bit shift. */
   private[graft] case class BnState(n: Long, nulls: Long, novel: Long,
       words: Vector[Long])
 
@@ -1265,223 +1108,188 @@ object StreamingIngest {
   private[graft] def bnFill(words: Vector[Long]): Double =
     words.map(w => java.lang.Long.bitCount(w).toLong).sum.toDouble / BnM
 
-  /** (lastBatchId, type -> BnState); vector layout
+  /** (lastBatch, type -> BnState), vector
     * [version, n, nulls, novel, w0..w1023]. */
-  private[graft] def bnStates(statePath: String)
-      : (Long, Map[String, BnState]) = {
-    val (last, raw) = readLongVecState(statePath)
-    (last, raw.map { case (t, v) =>
-      if (v.length == 4 + BnWords && v.head == BnVersion)
-        t -> BnState(v(1), v(2), v(3), v.drop(4).toVector)
-      else sys.error(s"bloom-novelty state for type '$t' has layout " +
-        s"version ${v.headOption.getOrElse(-1L)} at length " +
-        s"${v.length}; this build reads version $BnVersion at length " +
-        s"${4 + BnWords} — refusing a blind decode")
-    })
-  }
-
-  private def bnWriteState(statePath: String, batchId: Long,
-      types: Map[String, BnState]): Unit =
-    writeLongVecState(statePath, batchId, types.map { case (t, s) =>
-      t -> (BnVersion +: s.n +: s.nulls +: s.novel +: s.words)
-    })
+  private[graft] val bnStates = longVecs[BnState] { (t, v) =>
+    if (v.length == 4 + BnWords && v.head == BnVersion)
+      BnState(v(1), v(2), v(3), v.drop(4).toVector)
+    else sys.error(s"bloom-novelty state for type '$t' has layout " +
+      s"version ${v.headOption.getOrElse(-1L)} at length " +
+      s"${v.length}; this build reads version $BnVersion at length " +
+      s"${4 + BnWords} — refusing a blind decode")
+  }(s => BnVersion +: s.n +: s.nulls +: s.novel +: s.words)
 
   private[graft] def bnBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, st0) = bnStates(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    import spark.implicits._
-    // exactly-once event counters: one grouped count of the batch
-    val counts = batch.groupBy(col("event_type"))
-      .agg(sum(when(col("user_id").isNotNull, 1L).otherwise(0L))
-          .cast("long").as("nv"),
-        sum(when(col("user_id").isNull, 1L).otherwise(0L))
-          .cast("long").as("nl"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    // per-user probe positions: distinct users with their in-batch
-    // event counts, the 60-bit md5 priority split into the
-    // Kirsch–Mitzenmacher pair, k = 4 exploded probe rows per user
-    val users = batch
-      .filter(col("user_id").isNotNull)
-      .groupBy(col("event_type"), col("user_id").cast("long").as("u"))
-      .agg(count(lit(1)).cast("long").as("ec"))
-      .withColumn("h",
-        conv(substring(md5(col("u").cast("string")), 1, 15), 16, 10)
-          .cast("long"))
-      .withColumn("h1", expr(s"h div $BnSplit"))
-      .withColumn("h2", col("h") % BnSplit)
-    val pos = users.select(col("event_type"), col("u"), col("ec"),
-        explode(array((0 until BnK).map(i =>
-          (col("h1") + lit(i.toLong) * col("h2")) % BnM.toLong): _*))
-          .as("p"))
-      .withColumn("w", expr("p div 64"))
-      .withColumn("bit", (col("p") % 64L).cast("int"))
-    // membership against the PRE-batch filter: the state is tiny
-    // (types × ≤1024 non-zero words), broadcast onto the probe rows —
-    // a missing word is an unset bit. The novelty test itself is
-    // distributed; only per-type aggregates and the word grid are
-    // ever collected.
-    val wordRows = st0.toSeq.flatMap { case (t, s) =>
-      s.words.zipWithIndex.collect {
-        case (wd, i) if wd != 0L => (t, i.toLong, wd)
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(bnStates, statePath, outPath, batchId) { st0 =>
+      import spark.implicits._
+      // exactly-once event counters: one grouped count of the batch
+      val counts = batch.groupBy(col("event_type"))
+        .agg(sum(when(col("user_id").isNotNull, 1L).otherwise(0L))
+            .cast("long").as("nv"),
+          sum(when(col("user_id").isNull, 1L).otherwise(0L))
+            .cast("long").as("nl"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      // per-user probe positions: distinct users with their in-batch
+      // event counts, the 60-bit md5 priority split into the
+      // Kirsch–Mitzenmacher pair, k = 4 exploded probe rows per user
+      val users = batch
+        .filter(col("user_id").isNotNull)
+        .groupBy(col("event_type"), col("user_id").cast("long").as("u"))
+        .agg(count(lit(1)).cast("long").as("ec"))
+        .withColumn("h",
+          conv(substring(md5(col("u").cast("string")), 1, 15), 16, 10)
+            .cast("long"))
+        .withColumn("h1", expr(s"h div $BnSplit"))
+        .withColumn("h2", col("h") % BnSplit)
+      val pos = users.select(col("event_type"), col("u"), col("ec"),
+          explode(array((0 until BnK).map(i =>
+            (col("h1") + lit(i.toLong) * col("h2")) % BnM.toLong): _*))
+            .as("p"))
+        .withColumn("w", expr("p div 64"))
+        .withColumn("bit", (col("p") % 64L).cast("int"))
+      // membership against the PRE-batch filter: the state is tiny
+      // (types × ≤1024 non-zero words), broadcast onto the probe rows —
+      // a missing word is an unset bit. The novelty test itself is
+      // distributed; only per-type aggregates and the word grid are
+      // ever collected.
+      val wordRows = st0.toSeq.flatMap { case (t, s) =>
+        s.words.zipWithIndex.collect {
+          case (wd, i) if wd != 0L => (t, i.toLong, wd)
+        }
       }
-    }
-    val checked = pos
-      .join(broadcast(wordRows.toDF("event_type", "w", "bits")),
-        Seq("event_type", "w"), "left")
-      .withColumn("setb", coalesce(
-        expr("shiftright(bits, bit) & CAST(1 AS BIGINT)"), lit(0L)))
-    val perUser = checked
-      .groupBy(col("event_type"), col("u"), col("ec"))
-      .agg(sum(col("setb")).cast("long").as("hits"))
-      .withColumn("novel", col("hits") < BnK.toLong)
-    val typeAgg = perUser.groupBy(col("event_type"))
-      .agg(count(lit(1)).cast("long").as("bu"),
-        sum(when(col("novel"), 1L).otherwise(0L)).cast("long").as("bnu"),
-        sum(col("ec")).cast("long").as("be"),
-        sum(when(col("novel"), col("ec")).otherwise(0L)).cast("long")
-          .as("bne"))
-      .collect()
-      .map(r => (r.getString(0),
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-      .toMap
-    // the batch's new bits, OR-folded per word: the collect is
-    // O(types × 1024) — grid-bounded like the HLL registers
-    val newBits = pos.select(col("event_type"), col("w"), col("bit"))
-      .distinct()
-      .groupBy(col("event_type"), col("w"))
-      .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("orw"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val fillPre = st0.map { case (t, s) => t -> bnFill(s.words) }
-    val withCounts = counts.foldLeft(st0) { case (acc, (tpe, nv, nl)) =>
-      val s = acc.getOrElse(tpe, bnEmpty)
-      acc.updated(tpe, s.copy(n = s.n + nv, nulls = s.nulls + nl))
-    }
-    val withNovel = typeAgg.foldLeft(withCounts) {
-      case (acc, (tpe, (_, bnu, _, _))) =>
+      val checked = pos
+        .join(broadcast(wordRows.toDF("event_type", "w", "bits")),
+          Seq("event_type", "w"), "left")
+        .withColumn("setb", coalesce(
+          expr("shiftright(bits, bit) & CAST(1 AS BIGINT)"), lit(0L)))
+      val perUser = checked
+        .groupBy(col("event_type"), col("u"), col("ec"))
+        .agg(sum(col("setb")).cast("long").as("hits"))
+        .withColumn("novel", col("hits") < BnK.toLong)
+      val typeAgg = perUser.groupBy(col("event_type"))
+        .agg(count(lit(1)).cast("long").as("bu"),
+          sum(when(col("novel"), 1L).otherwise(0L)).cast("long").as("bnu"),
+          sum(col("ec")).cast("long").as("be"),
+          sum(when(col("novel"), col("ec")).otherwise(0L)).cast("long")
+            .as("bne"))
+        .collect()
+        .map(r => (r.getString(0),
+          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+        .toMap
+      // the batch's new bits, OR-folded per word: the collect is
+      // O(types × 1024) — grid-bounded like the HLL registers
+      val newBits = pos.select(col("event_type"), col("w"), col("bit"))
+        .distinct()
+        .groupBy(col("event_type"), col("w"))
+        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("orw"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val fillPre = st0.map { case (t, s) => t -> bnFill(s.words) }
+      val withCounts = counts.foldLeft(st0) { case (acc, (tpe, nv, nl)) =>
         val s = acc.getOrElse(tpe, bnEmpty)
-        acc.updated(tpe, s.copy(novel = s.novel + bnu))
-    }
-    val st1 = newBits.foldLeft(withNovel) { case (acc, (tpe, w, orw)) =>
-      val s = acc.getOrElse(tpe, bnEmpty)
-      acc.updated(tpe, s.copy(words =
-        s.words.updated(w.toInt, s.words(w.toInt) | orw)))
-    }
-    if (st1.nonEmpty) {
-      st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
-        val (bu, bnu, be, bne) =
-          typeAgg.getOrElse(tpe, (0L, 0L, 0L, 0L))
-        val rate =
-          if (be > 0L) Some(math.floor(bne.toDouble / be * 1e6 + 0.5) / 1e6)
-          else None
-        val fpre = fillPre.getOrElse(tpe, 0.0)
-        (batchId, tpe, s.n, s.nulls, be, bne, rate, bu, bnu, s.novel,
-          math.floor(bnFill(s.words) * 1e6 + 0.5) / 1e6,
-          math.floor(fpre * fpre * fpre * fpre * 1e9 + 0.5) / 1e9)
-      }.toDF("batch_id", "event_type", "n_events", "n_null",
+        acc.updated(tpe, s.copy(n = s.n + nv, nulls = s.nulls + nl))
+      }
+      val withNovel = typeAgg.foldLeft(withCounts) {
+        case (acc, (tpe, (_, bnu, _, _))) =>
+          val s = acc.getOrElse(tpe, bnEmpty)
+          acc.updated(tpe, s.copy(novel = s.novel + bnu))
+      }
+      val st1 = newBits.foldLeft(withNovel) { case (acc, (tpe, w, orw)) =>
+        val s = acc.getOrElse(tpe, bnEmpty)
+        acc.updated(tpe, s.copy(words =
+          s.words.updated(w.toInt, s.words(w.toInt) | orw)))
+      }
+      (st1, Option.when(st1.nonEmpty) {
+        st1.toSeq.sortBy(_._1).map { case (tpe, s) =>
+          val (bu, bnu, be, bne) =
+            typeAgg.getOrElse(tpe, (0L, 0L, 0L, 0L))
+          val rate =
+            if (be > 0L) Some(math.floor(bne.toDouble / be * 1e6 + 0.5) / 1e6)
+            else None
+          val fpre = fillPre.getOrElse(tpe, 0.0)
+          (batchId, tpe, s.n, s.nulls, be, bne, rate, bu, bnu, s.novel,
+            math.floor(bnFill(s.words) * 1e6 + 0.5) / 1e6,
+            math.floor(fpre * fpre * fpre * fpre * 1e9 + 0.5) / 1e9)
+        }.toDF("batch_id", "event_type", "n_events", "n_null",
           "batch_events", "batch_novel_events", "novelty_rate",
           "batch_users", "batch_novel_users", "novel_users_total",
           "fill_ratio", "fp_bound")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      })
     }
-    bnWriteState(statePath, batchId, st1)
-  }
 
   /** Streaming Bloom novelty sink — per event type, the share of each
     * micro-batch's events coming from never-before-seen users, in
-    * O(types × 8 KB) state forever. Shared foreachBatch skeleton and
-    * crash/replay contracts (batchId-guarded exactly-once state,
-    * at-least-once verdict rows deduped on (batch_id, event_type));
-    * the filter fold is additionally idempotent by construction
-    * (bit OR). Every verdict row carries fill_ratio and the batch's
-    * false-positive bound fill⁴, so a saturating filter is a visible
-    * condition, not a silent novelty collapse. */
+    * O(types × 8 KB) state forever, with the `cursorFold` crash/replay
+    * contracts (batchId-guarded exactly-once state, at-least-once
+    * verdict rows deduped on (batch_id, event_type)); the filter fold is
+    * additionally idempotent by construction (bit OR). Every verdict row
+    * carries fill_ratio and the batch's false-positive bound fill⁴, so a
+    * saturating filter is a visible condition, not a silent novelty
+    * collapse. */
   def bloomNoveltySink(events: DataFrame, spark: SparkSession,
       outPath: String, statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bnBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(events, checkpoint)(bnBatch(spark, outPath, statePath, _, _))
+
+  // ---- streaming SRM gate ---------------------------------------------------
 
   /** Streaming twin of x_srm_check: the sample-ratio-mismatch gate run
     * CONTINUOUSLY over the ingest instead of at end-of-day audit. Per
     * micro-batch, the batch's three arm counts (same md5 coin as the
     * batch op) fold into an O(arms) cumulative state — a tiny JSON
-    * beside the verdict table, batchId-guarded so a replayed trigger is
-    * a no-op for the state — and ONE verdict row (cumulative counts,
-    * df=2 chi-square, flag) is appended per trigger, so the
-    * experimenter sees the flag flip the moment a splitter bias or a
-    * lost partition shows up. Crash contract: the state write follows
-    * the verdict append, so a crash between the two replays the batch
-    * with UNCHANGED prior state — it appends a bit-identical duplicate
-    * verdict row for the same batch_id; readers take the last row per
-    * batch_id. Per-batch cost is one 3-group count of the batch;
-    * state is O(1) regardless of history. */
+    * beside the verdict table, behind the `cursorFold` batch cursor —
+    * and ONE verdict row (cumulative counts, df=2 chi-square, flag) is
+    * appended per trigger, so the experimenter sees the flag flip the
+    * moment a splitter bias or a lost partition shows up. A crash
+    * between the verdict append and the state write appends a
+    * bit-identical duplicate verdict row for the same batch_id on
+    * replay; readers take the last row per batch_id. Per-batch cost is
+    * one 3-group count of the batch; state is O(1) regardless of
+    * history. */
   def srmSink(docs: DataFrame, spark: SparkSession, outPath: String,
               statePath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        srmBatch(spark, outPath, statePath, batch, batchId)
-      }
+      : DataStreamWriter[Row] =
+    drain(docs, checkpoint)(srmBatch(spark, outPath, statePath, _, _))
 
-  /** (lastBatchId, cumTrain, cumValid, cumTest); (-1, 0, 0, 0) fresh. */
-  private[graft] def srmState(statePath: String)
-      : (Long, Long, Long, Long) = {
-    val f = java.nio.file.Paths.get(statePath)
-    if (!java.nio.file.Files.exists(f)) (-1L, 0L, 0L, 0L)
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val rx = ("\"lastBatch\"\\s*:\\s*(-?\\d+).*\"train\"\\s*:\\s*(\\d+)" +
-        ".*\"valid\"\\s*:\\s*(\\d+).*\"test\"\\s*:\\s*(\\d+)").r
-      rx.findFirstMatchIn(s).map(m => (m.group(1).toLong,
-        m.group(2).toLong, m.group(3).toLong, m.group(4).toLong))
-        .getOrElse((-1L, 0L, 0L, 0L))
-    }
+  /** (lastBatch, (train, valid, test)) cumulative arm counts. */
+  private[graft] val srmState = cursored((0L, 0L, 0L)) { j =>
+    (j.required("train").asLong, j.required("valid").asLong,
+      j.required("test").asLong)
+  } { case (o, (t, v, s)) =>
+    o.put("train", t).put("valid", v).put("test", s): Unit
   }
 
   private[graft] def srmBatch(spark: SparkSession, outPath: String,
-      statePath: String, batch: DataFrame, batchId: Long): Unit = {
-    val (last, t0, v0, s0) = srmState(statePath)
-    if (batchId <= last) return // replayed trigger already folded
-    val h = substring(md5(col("doc_id").cast("string")), 1, 2)
-    val counts = batch
-      .select(when(h < "cc", "train").when(h < "e6", "valid")
-        .otherwise("test").as("split"))
-      .groupBy("split").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val t1 = t0 + counts.getOrElse("train", 0L)
-    val v1 = v0 + counts.getOrElse("valid", 0L)
-    val s1 = s0 + counts.getOrElse("test", 0L)
-    val n = (t1 + v1 + s1).toDouble
-    def term(o: Long, share: Double): Double = {
-      val e = n * share
-      (o - e) * (o - e) / e
+      statePath: String, batch: DataFrame, batchId: Long): Unit =
+    cursorFold(srmState, statePath, outPath, batchId) { case (t0, v0, s0) =>
+      val h = substring(md5(col("doc_id").cast("string")), 1, 2)
+      val counts = batch
+        .select(when(h < "cc", "train").when(h < "e6", "valid")
+          .otherwise("test").as("split"))
+        .groupBy("split").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val t1 = t0 + counts.getOrElse("train", 0L)
+      val v1 = v0 + counts.getOrElse("valid", 0L)
+      val s1 = s0 + counts.getOrElse("test", 0L)
+      val n = (t1 + v1 + s1).toDouble
+      def term(o: Long, share: Double): Double = {
+        val e = n * share
+        (o - e) * (o - e) / e
+      }
+      val chi2 =
+        if (n == 0) 0.0
+        else term(t1, 204.0 / 256.0) + term(v1, 26.0 / 256.0) +
+          term(s1, 26.0 / 256.0)
+      import spark.implicits._
+      ((t1, v1, s1), Some(Seq((batchId, t1, v1, s1, chi2,
+        chi2 > 5.991464547107979))
+        .toDF("batch_id", "n_train", "n_valid", "n_test", "chi2",
+          "srm_flag")))
     }
-    val chi2 =
-      if (n == 0) 0.0
-      else term(t1, 204.0 / 256.0) + term(v1, 26.0 / 256.0) +
-        term(s1, 26.0 / 256.0)
-    import spark.implicits._
-    Seq((batchId, t1, v1, s1, chi2, chi2 > 5.991464547107979))
-      .toDF("batch_id", "n_train", "n_valid", "n_test", "chi2", "srm_flag")
-      .coalesce(1).write.mode("append").parquet(outPath)
-    val tmp = java.nio.file.Paths.get(statePath + ".tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"lastBatch": $batchId, "train": $t1, "valid": $v1, "test": $s1}""")
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(statePath),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-  }
+
+  // ---- owner-rule dedup sinks -----------------------------------------------
 
   /** Streaming exact dedup — the streaming twin of DedupOps.x_dedup_exact:
     * content-hash dedup with state bounded by the watermark (duplicates
@@ -1493,129 +1301,153 @@ object StreamingIngest {
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("content_hash")
 
-  /** Stateful streaming exact-dedup SINK (r14) — dedupStream composed
-    * with a PERSISTENT content-hash store maintained foreachBatch, so
-    * the streaming path and the batch dedup pipeline (x_dedup_exact)
-    * share one dedup horizon. dropDuplicatesWithinWatermark alone
-    * forgets everything on checkpoint reset and knows nothing about
-    * docs already accepted by BATCH loads into `outPath`; this sink
-    * closes both gaps: each micro-batch (already within-stream-deduped
-    * by dedupStream upstream) is checked against the durable
-    * (content_hash, ts) store, first-writer-wins within the batch by
-    * (ts, doc_id), survivors append to the doc store, and ALL observed
-    * hashes merge into the state pruned to the TTL window (state rows
-    * <= distinct in-window hashes, by construction of the prune). A
-    * batch loader that appends to the same store can union its hashes
-    * into `statePath` and the stream picks them up next trigger. State
-    * is hash-keyed, so at cluster scale the store buckets by hash
-    * prefix exactly like the batch store (PartitionedMerge) — no skew,
-    * no unbounded growth.
-    *
-    * Replay contract (r14 hardening): survivors land in a per-batch
-    * `batch=<id>` subdirectory with OVERWRITE, the batch cursor rides
-    * INSIDE the atomically-swapped state directory, and a replayed
-    * batchId whose cursor already advanced is a no-op — so a crash at
-    * any point yields exactly-once survivor rows: before the append,
-    * nothing happened; between append and swap, the replay recomputes
-    * the identical survivor set against the unchanged state and
-    * overwrites the same subdirectory; after the swap, the cursor
-    * short-circuits the replay and the earlier append stands. The TTL
-    * is ONE parameter (milliseconds); the watermark string is derived
-    * from it so the two windows cannot be set inconsistently. */
-  def exactDedupSink(docs: DataFrame, spark: SparkSession, outPath: String,
-                     statePath: String, checkpoint: String,
-                     delayMs: Long = 3600L * 1000)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    dedupStream(docs, s"${delayMs / 1000} seconds").writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        exactDedupBatch(spark, outPath, statePath, batch, batchId,
-          checkpoint, delayMs)
-      }
-
-  /** cursor of the last folded batch, stored inside the state dir so it
-    * swaps atomically with the hashes. Keyed by the CHECKPOINT path
-    * (the stream lineage): a restart from the same checkpoint replays
-    * monotone batchIds and must be skipped, while a NEW stream over the
-    * same durable store restarts ids at 0 and must NOT be — the two are
-    * distinguishable only by lineage. Returns (lineageTag, lastBatch);
-    * ("", -1) when fresh. */
   /** Collision-resistant per-lineage directory tag for survivor
     * subdirectories. SHA-256 prefix, not String.hashCode: two
     * checkpoint paths colliding on a 32-bit hash would share a
     * `batch=<tag>_<id>` path and the Overwrite would silently delete
-    * the other stream's committed survivors (r15 ADVICE). */
+    * the other stream's committed survivors. */
   private[graft] def lineageTag(lineage: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(lineage.getBytes("UTF-8")).take(8)
       .map(b => f"$b%02x").mkString
 
+  /** Cursor of the last folded batch, stored inside the state dir so it
+    * swaps atomically with the state. Keyed by the CHECKPOINT path
+    * (the stream lineage): a restart from the same checkpoint replays
+    * monotone batchIds and must be skipped, while a NEW stream over the
+    * same durable store restarts ids at 0 and must NOT be — the two are
+    * distinguishable only by lineage. Returns (lineage, lastBatch);
+    * ("", -1) when fresh. */
   private[graft] def dedupCursor(statePath: String): (String, Long) = {
-    val f = java.nio.file.Paths.get(statePath, "_last_batch")
-    if (!java.nio.file.Files.exists(f)) ("", -1L)
+    val f = Paths.get(statePath, "_last_batch")
+    if (!Files.exists(f)) ("", -1L)
     else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim
+      val s = new String(Files.readAllBytes(f), "UTF-8").trim
       val i = s.lastIndexOf('|')
       (s.substring(0, i), s.substring(i + 1).toLong)
     }
   }
 
-  private[graft] def exactDedupBatch(spark: SparkSession,
-      outPath: String, statePath: String, batch: DataFrame,
-      batchId: Long, lineage: String, delayMs: Long): Unit = {
-    import java.nio.file.{Files, Paths}
+  private def emptyLike(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
+
+  private def maxTsMs(docs: DataFrame): Long =
+    docs.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime
+
+  /** Doc ids the owner rule drops: a doc whose signature (the `keys`
+    * columns of its `sigs` rows, which carry doc_id and ts) is in the
+    * visible state, or is shared with an earlier ((ts, doc_id)-min) doc
+    * of this batch — first writer wins, the stream operator's keep-first
+    * rule. Per signature the owner is a min aggregation with map-side
+    * partials, not a self-join, so a hot signature costs O(rows), never
+    * O(n²). */
+  private def dupDocIds(sigs: DataFrame, state: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val dupVsState = sigs.join(state, keys, "left_semi")
+      .select("doc_id").distinct()
+    val owners = sigs.groupBy(keys.map(col): _*)
+      .agg(min(struct(col("ts"), col("doc_id"))).as("o"))
+      .select(keys.map(col) :+ col("o.doc_id").as("owner_id"): _*)
+    val dupInBatch = sigs.join(owners, keys)
+      .filter(col("doc_id") =!= col("owner_id"))
+      .select("doc_id").distinct()
+    dupVsState.union(dupInBatch).distinct().localCheckpoint()
+  }
+
+  /** The owner-rule dedup batch of the exact, minhash and chunk sinks.
+    * `sigsOf` maps the batch's docs to signature rows (doc_id, ts,
+    * keys…); `dupDocIds` judges them against the (keys…, ts) parquet
+    * state at `statePath`. The state then folds in every observed
+    * signature, or with `survivorsOnly` just the survivors', keeps the
+    * earliest ts per signature and is pruned to the `delayMs` window
+    * behind the batch's newest ts.
+    *
+    * Replay contract: survivors land in a per-batch
+    * `batch=<lineage tag>_<id>` subdirectory of `outPath` with
+    * OVERWRITE, the batch cursor rides INSIDE the atomically-swapped
+    * state directory, and a replayed batchId whose cursor already
+    * advanced is a no-op — so a crash at any point yields exactly-once
+    * survivor rows: before the append, nothing happened; between append
+    * and swap, the replay recomputes the identical survivor set against
+    * the unchanged state and overwrites the same subdirectory; after the
+    * swap, the cursor short-circuits the replay and the earlier append
+    * stands. The lineage tag keeps a NEW stream's batch 0 from
+    * clobbering an old stream's batch 0. */
+  private def ownerDedup(spark: SparkSession, outPath: String,
+      statePath: String, batch: DataFrame, batchId: Long, lineage: String,
+      delayMs: Long, keys: Seq[String], survivorsOnly: Boolean)(
+      sigsOf: DataFrame => DataFrame): Unit = {
     val (curLineage, curId) = dedupCursor(statePath)
     if (curLineage == lineage && batchId <= curId) return // replayed
     val docs = batch.localCheckpoint()
     if (docs.head(1).isEmpty) return
+    val sigs = sigsOf(docs)
+    val stateCols = (keys :+ "ts").map(col)
     val state =
       if (Files.exists(Paths.get(statePath)))
-        spark.read.parquet(statePath).select("content_hash", "ts")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new StructType()
-          .add("content_hash", "string").add("ts", "timestamp"))
-    // verdict: dup vs the durable store, or a later same-hash doc of
-    // this batch ((ts, doc_id)-min owner wins — first writer, matching
-    // the stream operator's keep-first rule)
-    val dupVsState = docs.join(state, Seq("content_hash"), "left_semi")
-      .select("doc_id").distinct()
-    val owners = docs.groupBy("content_hash")
-      .agg(min(struct(col("ts"), col("doc_id"))).as("o"))
-      .select(col("content_hash"), col("o.doc_id").as("owner_id"))
-    val dupInBatch = docs.join(owners, Seq("content_hash"))
-      .filter(col("doc_id") =!= col("owner_id"))
-      .select("doc_id").distinct()
-    val dupIds = dupVsState.union(dupInBatch).distinct().localCheckpoint()
-    // per-(lineage, batch) OVERWRITE target: a replay that reaches this
-    // line has an unchanged state (the cursor check above), recomputes
-    // the identical survivor set, and rewrites the same subdirectory —
-    // idempotent; the lineage tag keeps a NEW stream's batch 0 from
-    // clobbering an old stream's batch 0
+        spark.read.parquet(statePath).select(stateCols: _*)
+      else emptyLike(spark, sigs.select(stateCols: _*))
+    val dupIds = dupDocIds(sigs, state, keys)
+    // a read of `outPath` skips parquet files at its root once batch=
+    // directories sit beside them: refuse such a table, never hide rows
+    require(
+      !Fs.list(Paths.get(outPath)).exists(_.toString.endsWith(".parquet")),
+      s"survivor table $outPath holds parquet files outside its batch= " +
+        s"directories; move them into $outPath/batch=legacy and resume")
     docs.join(dupIds, Seq("doc_id"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite)
       .parquet(s"$outPath/batch=${lineageTag(lineage)}_$batchId")
-    // fold all observed hashes in, prune to the TTL window; the cursor
-    // file joins the tmp dir BEFORE the swap so hashes + cursor become
-    // visible atomically
-    val cutoff = new java.sql.Timestamp(
-      docs.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime - delayMs)
+    val folded =
+      if (survivorsOnly) sigs.join(dupIds, Seq("doc_id"), "left_anti")
+      else sigs
+    val cutoff = new java.sql.Timestamp(maxTsMs(docs) - delayMs)
     val newState = state
-      .unionByName(docs.select("content_hash", "ts"))
-      .groupBy("content_hash").agg(min(col("ts")).as("ts"))
+      .unionByName(folded.select(stateCols: _*))
+      .groupBy(keys.map(col): _*).agg(min(col("ts")).as("ts"))
       .filter(col("ts") >= lit(cutoff))
+    // the cursor joins the tmp dir BEFORE the swap, so state + cursor
+    // become visible together
     val tmp = statePath + ".tmp"
-    newState.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(tmp, "_last_batch"), s"$lineage|$batchId")
-    graft.util.Fs.swapInto(Paths.get(tmp), Paths.get(statePath))
+    newState.write.mode(SaveMode.Overwrite).parquet(tmp)
+    Files.writeString(Paths.get(tmp, "_last_batch"), s"$lineage|$batchId")
+    Fs.swapInto(Paths.get(tmp), Paths.get(statePath))
   }
 
-  /** Stateful streaming MinHash near-dup SINK (r15) — the near-dup twin
-    * of exactDedupSink, closing the flagship batch family's last
-    * streaming gap: banded-LSH dedup (DedupOps.bandTable — the exact
+  /** Stateful streaming exact-dedup SINK — dedupStream composed with a
+    * PERSISTENT content-hash store maintained foreachBatch, so the
+    * streaming path and the batch dedup pipeline (x_dedup_exact) share
+    * one dedup horizon. dropDuplicatesWithinWatermark alone forgets
+    * everything on checkpoint reset and knows nothing about docs already
+    * accepted by BATCH loads into `outPath`; this sink closes both gaps:
+    * each micro-batch (already within-stream-deduped by dedupStream
+    * upstream) is checked against the durable (content_hash, ts) store,
+    * first-writer-wins within the batch by (ts, doc_id), survivors
+    * append to the doc store, and ALL observed hashes merge into the
+    * state pruned to the TTL window (state rows <= distinct in-window
+    * hashes, by construction of the prune). A batch loader that appends
+    * to the same store can union its hashes into `statePath` and the
+    * stream picks them up next trigger. State is hash-keyed, so at
+    * cluster scale the store buckets by hash prefix exactly like the
+    * batch store (PartitionedMerge) — no skew, no unbounded growth.
+    * Replay contract: `ownerDedup`'s. The TTL is ONE parameter
+    * (milliseconds); the watermark string is derived from it so the two
+    * windows cannot be set inconsistently. */
+  def exactDedupSink(docs: DataFrame, spark: SparkSession, outPath: String,
+                     statePath: String, checkpoint: String,
+                     delayMs: Long = 3600L * 1000)
+      : DataStreamWriter[Row] =
+    drain(dedupStream(docs, s"${delayMs / 1000} seconds"), checkpoint)(
+      exactDedupBatch(spark, outPath, statePath, _, _, checkpoint, delayMs))
+
+  private[graft] def exactDedupBatch(spark: SparkSession,
+      outPath: String, statePath: String, batch: DataFrame,
+      batchId: Long, lineage: String, delayMs: Long): Unit =
+    ownerDedup(spark, outPath, statePath, batch, batchId, lineage, delayMs,
+      Seq("content_hash"), survivorsOnly = false)(
+      _.select("doc_id", "ts", "content_hash"))
+
+  /** Stateful streaming MinHash near-dup SINK — the near-dup twin of
+    * exactDedupSink: banded-LSH dedup (DedupOps.bandTable — the exact
     * x_dedup_minhash hash family: 3-token shingles, 8 × 16-bit md5-slice
     * min-hashes, 2 bands of 4) against a PERSISTENT (band_idx, band_val,
     * ts) store maintained foreachBatch.
@@ -1623,97 +1455,46 @@ object StreamingIngest {
     * Semantics: a doc is a duplicate iff any of its bands matches (i)
     * a band in the durable store or (ii) a band of a strictly earlier
     * doc of the same batch (first-writer-wins by (ts, doc_id), the
-    * exactDedupSink owner rule — implemented as a per-band-bucket
-    * min-owner aggregation with map-side partials, NOT a band self-join,
-    * so a hot boilerplate band costs O(band rows), never O(n²)).
-    * Survivor bands only are folded into the store — the keeper's
-    * signature represents its cluster, so state rows ≤ 2 × distinct
-    * in-window survivors (asserted in spec), matching the batch
-    * cluster-keeper rule (x_dedup_pipeline keeps the cluster-min doc).
-    * Docs with < 3 tokens have no shingles, hence no bands: they always
-    * survive and contribute no state — near-dup semantics are undefined
-    * below shingle width (route them to exactDedupSink).
+    * `dupDocIds` owner rule). Survivor bands only are folded into the
+    * store — the keeper's signature represents its cluster, so state
+    * rows ≤ 2 × distinct in-window survivors (asserted in spec),
+    * matching the batch cluster-keeper rule (x_dedup_pipeline keeps the
+    * cluster-min doc). Docs with < 3 tokens have no shingles, hence no
+    * bands: they always survive and contribute no state — near-dup
+    * semantics are undefined below shingle width (route them to
+    * exactDedupSink).
     *
-    * Replay contract: identical to exactDedupBatch — shared batch
-    * cursor inside the atomically-swapped state dir, per-(lineage,
-    * batch) OVERWRITE survivor subdirectories, SHA-256 lineage tag.
-    * Band misses (a true near-dup pair sharing no band — LSH's recall
-    * trade, measured by x_dedup_band_tuning) and TTL expiry both let a
-    * late duplicate survive; both are the documented bounded-state
-    * trades, asserted in spec rather than hidden. */
+    * Replay contract: `ownerDedup`'s. Band misses (a true near-dup pair
+    * sharing no band — LSH's recall trade, measured by
+    * x_dedup_band_tuning) and TTL expiry both let a late duplicate
+    * survive; both are the documented bounded-state trades, asserted in
+    * spec rather than hidden. */
   def minhashDedupSink(docs: DataFrame, spark: SparkSession,
                        outPath: String, statePath: String,
                        checkpoint: String, delayMs: Long = 3600L * 1000)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        minhashDedupBatch(spark, outPath, statePath, batch, batchId,
-          checkpoint, delayMs)
-      }
+      : DataStreamWriter[Row] =
+    drain(docs, checkpoint)(
+      minhashDedupBatch(spark, outPath, statePath, _, _, checkpoint, delayMs))
 
   private[graft] def minhashDedupBatch(spark: SparkSession,
       outPath: String, statePath: String, batch: DataFrame,
-      batchId: Long, lineage: String, delayMs: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    val (curLineage, curId) = dedupCursor(statePath)
-    if (curLineage == lineage && batchId <= curId) return // replayed
-    val docs = batch.localCheckpoint()
-    if (docs.head(1).isEmpty) return
-    // band table of THIS batch, carrying ts for the owner rule; tiny
-    // (2 rows per batch doc), checkpointed because it feeds three joins
-    val bt = graft.ext.DedupOps.bandTable(docs.select("doc_id", "text"))
-      .join(docs.select("doc_id", "ts"), "doc_id")
-      .localCheckpoint()
-    val state =
-      if (Files.exists(Paths.get(statePath)))
-        spark.read.parquet(statePath).select("band_idx", "band_val", "ts")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new StructType().add("band_idx", "integer")
-          .add("band_val", "string").add("ts", "timestamp"))
-    val dupVsState = bt
-      .join(state, Seq("band_idx", "band_val"), "left_semi")
-      .select("doc_id").distinct()
-    // in-batch: per band bucket the (ts, doc_id)-min doc owns it; any
-    // non-owner member is a duplicate. O(band rows) with map-side
-    // partial min — no self-join, no quadratic hot-band blowup.
-    val owners = bt.groupBy("band_idx", "band_val")
-      .agg(min(struct(col("ts"), col("doc_id"))).as("o"))
-    val dupInBatch = bt.join(owners, Seq("band_idx", "band_val"))
-      .filter(struct(col("ts"), col("doc_id")) =!= col("o"))
-      .select("doc_id").distinct()
-    val dupIds = dupVsState.union(dupInBatch).distinct().localCheckpoint()
-    docs.join(dupIds, Seq("doc_id"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$outPath/batch=${lineageTag(lineage)}_$batchId")
-    // fold the SURVIVORS' bands in (keeper-signature-represents-cluster)
-    // and prune to the TTL window; cursor joins the tmp dir BEFORE the
-    // swap so bands + cursor become visible atomically
-    val cutoff = new java.sql.Timestamp(
-      docs.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime - delayMs)
-    val newState = state
-      .unionByName(bt.join(dupIds, Seq("doc_id"), "left_anti")
-        .select("band_idx", "band_val", "ts"))
-      .groupBy("band_idx", "band_val").agg(min(col("ts")).as("ts"))
-      .filter(col("ts") >= lit(cutoff))
-    val tmp = statePath + ".tmp"
-    newState.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(tmp, "_last_batch"), s"$lineage|$batchId")
-    graft.util.Fs.swapInto(Paths.get(tmp), Paths.get(statePath))
-  }
+      batchId: Long, lineage: String, delayMs: Long): Unit =
+    ownerDedup(spark, outPath, statePath, batch, batchId, lineage, delayMs,
+      Seq("band_idx", "band_val"), survivorsOnly = true) { docs =>
+      // band rows of THIS batch, carrying ts for the owner rule;
+      // checkpointed because they feed three joins
+      graft.ext.DedupOps.bandTable(docs.select("doc_id", "text"))
+        .join(docs.select("doc_id", "ts"), "doc_id")
+        .localCheckpoint()
+    }
 
-  /** Streaming NEAR-dup dedup (round 4) — the streaming twin of
-    * x_dedup_simhash: a per-row 64-bit SimHash fingerprint (the
-    * stateless fold twin of the batch SWAR aggregation —
-    * DedupOps.simhashRowFoldSql) followed by watermark-bounded dedup on
-    * the fingerprint. Catches bag-equal duplicates (reordered tokens,
-    * the boilerplate-shuffle case) that exact content hashing misses,
-    * while keeping fingerprinting stateless so the ONLY stateful
-    * operator is the dedup itself.
+  /** Streaming NEAR-dup dedup — the streaming twin of x_dedup_simhash: a
+    * per-row 64-bit SimHash fingerprint (the stateless fold twin of the
+    * batch SWAR aggregation — DedupOps.simhashRowFoldSql) followed by
+    * watermark-bounded dedup on the fingerprint. Catches bag-equal
+    * duplicates (reordered tokens, the boilerplate-shuffle case) that
+    * exact content hashing misses, while keeping fingerprinting
+    * stateless so the ONLY stateful operator is the dedup itself.
     *
     * The SWAR lanes hold 16-bit counters, so a doc of >= 65,536 tokens
     * carries votes across lanes and its fingerprint is garbage. The
@@ -1737,7 +1518,7 @@ object StreamingIngest {
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("fp0", "fp1", "overflow")
 
-  /** The chunker composition nearDupStream's scaladoc promises (r7):
+  /** The chunker composition nearDupStream's scaladoc promises:
     * oversized (`overflow`) docs degrade to exact dedup upstream, so a
     * REORDERED >65,536-token near-dup sails through — its exact hash
     * differs and its SimHash lanes are saturated garbage. This sink
@@ -1747,11 +1528,12 @@ object StreamingIngest {
     * sound again), each chunk is fingerprinted, and a doc is dropped
     * when ANY of its chunk fingerprints was already seen — in the
     * persistent fingerprint state or on an earlier doc of the same
-    * batch ((ts, doc_id) order). Survivors append to `outPath`; ALL
-    * observed fingerprints (kept or dropped docs alike, matching
+    * batch ((ts, doc_id) order). Survivors are written under `outPath`;
+    * ALL observed fingerprints (kept or dropped docs alike, matching
     * dropDuplicatesWithinWatermark's state rule) merge into the state
     * table, pruned to the `delayMs` watermark window so state stays
-    * bounded exactly like the built-in operator's.
+    * bounded exactly like the built-in operator's. Replay contract:
+    * `ownerDedup`'s.
     *
     * Chain it downstream of nearDupStream:
     * `chunkDedupSink(nearDupStream(docs).filter(col("overflow")), …)` —
@@ -1763,21 +1545,16 @@ object StreamingIngest {
     * the state REWRITE is O(state) per trigger — bounded by the
     * watermark window (only fps newer than `delayMs` survive), which is
     * the right trade while overflow docs are rare. If oversized docs
-    * stop being rare, use `chunkDedupSinkBucketed` (r8): the same
-    * verdict logic over a PartitionedMerge bucketed delta state table —
+    * stop being rare, use `chunkDedupSinkBucketed`: the same verdict
+    * logic over a PartitionedMerge bucketed delta state table —
     * O(batch) appends per trigger, physical pruning amortized to once
     * per watermark window. */
   def chunkDedupSink(flagged: DataFrame, spark: SparkSession,
                      outPath: String, statePath: String, checkpoint: String,
                      delayMs: Long = 3600L * 1000)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    flagged.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        chunkDedupBatch(spark, outPath, statePath, batch, delayMs)
-      }
+      : DataStreamWriter[Row] =
+    drain(flagged, checkpoint)(
+      chunkDedupBatch(spark, outPath, statePath, _, _, checkpoint, delayMs))
 
   /** chunkDedupSink with CONTENT-DEFINED chunk boundaries (x_cdc_chunks'
     * rolling-hash recipe at a 1/16 boundary rate, ~16-token expected
@@ -1788,20 +1565,16 @@ object StreamingIngest {
     * local content and resynchronize right after the edit, so all
     * chunks outside the edited one keep their fingerprints and the
     * any-chunk-dup verdict still fires. Same state table, watermark
-    * pruning, and batch semantics — only the chunker differs. */
+    * pruning, replay contract and batch semantics — only the chunker
+    * differs. */
   def cdcChunkDedupSink(flagged: DataFrame, spark: SparkSession,
                         outPath: String, statePath: String,
                         checkpoint: String,
                         delayMs: Long = 3600L * 1000)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    flagged.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        chunkDedupBatch(spark, outPath, statePath, batch, delayMs,
-          cdcChunkFingerprints)
-      }
+      : DataStreamWriter[Row] =
+    drain(flagged, checkpoint)(
+      chunkDedupBatch(spark, outPath, statePath, _, _, checkpoint, delayMs,
+        cdcChunkFingerprints))
 
   /** Chunk fingerprints of a doc batch: the x_doc_chunks recipe (50-token
     * windows, stride 25) → per-chunk SimHash via the same row fold the
@@ -1853,54 +1626,14 @@ object StreamingIngest {
       .localCheckpoint()
   }
 
-  /** Doc verdict = any-chunk-dup: against the visible state, or against
-    * an earlier ((ts, doc_id)-min) doc of this batch owning the same fp. */
-  private def dupDocIds(fps: DataFrame, state: DataFrame): DataFrame = {
-    val dupVsState = fps.join(state, Seq("fp0", "fp1"), "left_semi")
-      .select("doc_id").distinct()
-    val owners = fps.groupBy("fp0", "fp1")
-      .agg(min(struct(col("ts"), col("doc_id"))).as("o"))
-      .select(col("fp0"), col("fp1"), col("o.doc_id").as("owner_id"))
-    val dupInBatch = fps.join(owners, Seq("fp0", "fp1"))
-      .filter(col("doc_id") =!= col("owner_id"))
-      .select("doc_id").distinct()
-    dupVsState.union(dupInBatch).distinct().localCheckpoint()
-  }
+  private val FpKeys = Seq("fp0", "fp1")
 
-  private def emptyFpState(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      new StructType()
-        .add("fp0", "long").add("fp1", "long").add("ts", "timestamp"))
-
-  private[streaming] def chunkDedupBatch(spark: SparkSession, outPath: String,
-                                         statePath: String, batch: DataFrame,
-                                         delayMs: Long,
-                                         chunker: DataFrame => DataFrame =
-                                           chunkFingerprints): Unit = {
-    import java.nio.file.{Files, Paths}
-    val docs = batch.localCheckpoint()
-    if (docs.head(1).isEmpty) return
-    val fps = chunker(docs)
-    val state =
-      if (Files.exists(Paths.get(statePath)))
-        spark.read.parquet(statePath).select("fp0", "fp1", "ts")
-      else emptyFpState(spark)
-    val dupIds = dupDocIds(fps, state)
-    docs.join(dupIds, Seq("doc_id"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-    // fold ALL observed fingerprints in, prune to the watermark window;
-    // tmp + swap so a crash mid-write never truncates the live state
-    val cutoff = new java.sql.Timestamp(
-      docs.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime - delayMs)
-    val newState = state
-      .unionByName(fps.select("fp0", "fp1", "ts"))
-      .groupBy("fp0", "fp1").agg(min(col("ts")).as("ts"))
-      .filter(col("ts") >= lit(cutoff))
-    val tmp = statePath + ".tmp"
-    newState.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-    graft.util.Fs.swapInto(Paths.get(tmp), Paths.get(statePath))
-  }
+  private[streaming] def chunkDedupBatch(spark: SparkSession,
+      outPath: String, statePath: String, batch: DataFrame, batchId: Long,
+      lineage: String, delayMs: Long,
+      chunker: DataFrame => DataFrame = chunkFingerprints): Unit =
+    ownerDedup(spark, outPath, statePath, batch, batchId, lineage, delayMs,
+      FpKeys, survivorsOnly = false)(chunker)
 
   /** The scale path the rewrite layout's cost note promises: chunk-dedup
     * with the fingerprint state as a BUCKETED DELTA table
@@ -1920,6 +1653,7 @@ object StreamingIngest {
     * carrying an OLDER ts than its stored first sighting keeps the
     * stored ts here (the rewrite fold would lower it) — the fingerprint
     * then survives marginally longer, which only widens dup coverage.
+    * Survivors append to `outPath` directly, before the state commit.
     *
     * Physical pruning of expired rows is AMORTIZED: a full filtered
     * rewrite runs only when the watermark has advanced a full delay
@@ -1932,46 +1666,24 @@ object StreamingIngest {
                              checkpoint: String,
                              delayMs: Long = 3600L * 1000,
                              numBuckets: Int = 16)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    flagged.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        chunkDedupBatchBucketed(spark, outPath, statePath, batch, delayMs,
-          numBuckets)
-      }
-
-  private def watermarkFile(statePath: String) =
-    java.nio.file.Paths.get(statePath + "._watermark.json")
-
-  /** (cutoffMs, lastPruneMs) persisted beside the bucketed state table. */
-  private[streaming] def readWatermark(statePath: String): Option[(Long, Long)] = {
-    val f = watermarkFile(statePath)
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val rx = """"cutoff"\s*:\s*(-?\d+).*"lastPrune"\s*:\s*(-?\d+)""".r
-      rx.findFirstMatchIn(s).map(m => (m.group(1).toLong, m.group(2).toLong))
+      : DataStreamWriter[Row] =
+    drain(flagged, checkpoint) { (batch, _) =>
+      chunkDedupBatchBucketed(spark, outPath, statePath, batch, delayMs,
+        numBuckets)
     }
-  }
 
-  private def writeWatermark(statePath: String, cutoffMs: Long,
-                             lastPruneMs: Long): Unit = {
-    val f = watermarkFile(statePath)
-    val tmp = java.nio.file.Paths.get(f.toString + ".tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"cutoff": $cutoffMs, "lastPrune": $lastPruneMs}""")
-    java.nio.file.Files.move(tmp, f,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-  }
+  /** (cutoffMs, lastPruneMs) persisted beside the bucketed state table in
+    * `<statePath>._watermark.json`; None before the first trigger. */
+  private[graft] val watermark = new JsonState[Option[(Long, Long)]](None,
+    j => Some((j.required("cutoff").asLong, j.required("lastPrune").asLong)),
+    (o, w) => w.foreach { case (c, p) =>
+      o.put("cutoff", c).put("lastPrune", p)
+    })
 
   private[streaming] def chunkDedupBatchBucketed(
       spark: SparkSession, outPath: String, statePath: String,
       batch: DataFrame, delayMs: Long, numBuckets: Int): Unit = {
-    import java.nio.file.{Files, Paths}
-    // crash recovery (r8, kill-tested): a kill between the prune swap's
+    // crash recovery (kill-tested): a kill between the prune swap's
     // two renames leaves the live table displaced (inside the tmp
     // tree's sibling) and the COMPLETE pruned table still at tmp-prune
     // — adopt it, otherwise the batch would see an empty state and
@@ -1984,31 +1696,29 @@ object StreamingIngest {
     val docs = batch.localCheckpoint()
     if (docs.head(1).isEmpty) return
     val fps = chunkFingerprints(docs)
-    val keys = Seq("fp0", "fp1")
-    val wm = readWatermark(statePath)
+    val wmPath = statePath + "._watermark.json"
+    val wm = watermark.read(wmPath)
     val stateAll =
       if (Files.exists(Paths.get(statePath)))
         graft.etl.PartitionedMerge.read(spark, statePath)
           .select("fp0", "fp1", "ts")
-      else emptyFpState(spark)
+      else emptyLike(spark, fps.select("fp0", "fp1", "ts"))
     // visibility filter = previous trigger's cutoff, mirroring the
     // rewrite layout's physical prune-at-previous-trigger
     val state = wm.map { case (c, _) =>
       stateAll.filter(col("ts") >= lit(new java.sql.Timestamp(c)))
     }.getOrElse(stateAll).localCheckpoint()
-    val dupIds = dupDocIds(fps, state)
+    val dupIds = dupDocIds(fps, state, FpKeys)
     docs.join(dupIds, Seq("doc_id"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
+      .write.mode(SaveMode.Append).parquet(outPath)
     // O(batch) state write: first sighting per fingerprint this batch,
     // minus keys the visible state already carries
     val newFps = fps.select("fp0", "fp1", "ts")
       .groupBy("fp0", "fp1").agg(min(col("ts")).as("ts"))
-      .join(state.select("fp0", "fp1"), keys, "left_anti")
-    graft.etl.PartitionedMerge.mergeInto(spark, statePath, newFps, keys,
+      .join(state.select("fp0", "fp1"), FpKeys, "left_anti")
+    graft.etl.PartitionedMerge.mergeInto(spark, statePath, newFps, FpKeys,
       numBuckets): Unit
-    val maxTsMs =
-      docs.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime
-    val cutoffMs = maxTsMs - delayMs
+    val cutoffMs = maxTsMs(docs) - delayMs
     val lastPrune = wm.map(_._2).getOrElse(Long.MinValue)
     if (lastPrune == Long.MinValue || cutoffMs - lastPrune >= delayMs) {
       // amortized physical prune: filtered rewrite into a fresh bucketed
@@ -2017,21 +1727,21 @@ object StreamingIngest {
         .filter(col("ts") >= lit(new java.sql.Timestamp(cutoffMs)))
         .localCheckpoint()
       val tmp = statePath + ".tmp-prune"
-      graft.util.Fs.deleteRec(Paths.get(tmp))
+      Fs.deleteRec(Paths.get(tmp))
       // clear crash-leftover asides from earlier interrupted prunes
       // (outside the live path, so they never affect reads — this is
       // housekeeping, not correctness)
       Option(Paths.get(tmp).getParent).foreach { parent =>
         val base = Paths.get(tmp).getFileName.toString + ".displaced-"
-        graft.util.Fs.list(parent)
+        Fs.list(parent)
           .filter(_.getFileName.toString.startsWith(base))
-          .foreach(graft.util.Fs.deleteRec)
+          .foreach(Fs.deleteRec)
       }
-      graft.etl.PartitionedMerge.mergeInto(spark, tmp, live, keys,
+      graft.etl.PartitionedMerge.mergeInto(spark, tmp, live, FpKeys,
         numBuckets): Unit
-      graft.util.Fs.swapInto(Paths.get(tmp), Paths.get(statePath))
-      writeWatermark(statePath, cutoffMs, cutoffMs)
-    } else writeWatermark(statePath, cutoffMs, lastPrune)
+      Fs.swapInto(Paths.get(tmp), Paths.get(statePath))
+      watermark.write(wmPath, Some((cutoffMs, cutoffMs)))
+    } else watermark.write(wmPath, Some((cutoffMs, lastPrune)))
   }
 
   /** Stream-stream interval join: each purchase joins the same user's
@@ -2055,11 +1765,10 @@ object StreamingIngest {
 
   // ---- custom state: flatMapGroupsWithState ---------------------------
   //
-  // LATENESS CONTRACT (ADVICE r10 low #3 — calling the silent-drop
-  // boundary out where callers will see it): every stateful operator
-  // below sits behind `withWatermark(..., lateness)`, so an event
-  // arriving more than `lateness` of event time behind the stream's
-  // maximum seen timestamp is DROPPED BEFORE the operator — it is not
+  // LATENESS CONTRACT: every stateful operator below sits behind
+  // `withWatermark(..., lateness)`, so an event arriving more than
+  // `lateness` of event time behind the stream's maximum seen timestamp
+  // is DROPPED BEFORE the operator — it is not
   // deduplicated, not folded, not counted. That drop is silent in the
   // output but NOT unobservable: Spark counts it per trigger in
   // `StreamingQueryProgress.stateOperators[i].numRowsDroppedByWatermark`;
@@ -2155,7 +1864,7 @@ object StreamingIngest {
             // not since its last (possibly stale/duplicate) sighting: a
             // batch that applied no row — every epochDay <= lastDay —
             // must NOT refresh the deadline, or a key replaying old days
-            // forever would never expire (ADVICE r10 low #4). Only a
+            // forever would never expire. Only a
             // frontier advance re-arms from the new frontier; otherwise
             // the deadline stays where the last real advance put it,
             // clamped just past the watermark (setTimeoutTimestamp
@@ -2238,9 +1947,9 @@ object StreamingIngest {
               else PatSt(ns, e.tsMicros, e.event_id, st.total)
             }
           }
-          // Same frontier-gated re-arm as ewmaAnomalyStream (ADVICE r10
-          // low #4): a batch of only replayed/out-of-order events — none
-          // fresh past (lastTs, lastId) — must not refresh the idle TTL.
+          // Same frontier-gated re-arm as ewmaAnomalyStream: a batch of
+          // only replayed/out-of-order events — none fresh past
+          // (lastTs, lastId) — must not refresh the idle TTL.
           val advanced = (st.lastTs, st.lastId) != prevFrontier
           if (advanced) state.update(st)
           val frontierTs = if (advanced) st.lastTs else prevFrontier._1
@@ -2313,8 +2022,8 @@ object StreamingIngest {
                     z_stat: Double, obf_boundary: Double, crossed: Boolean,
                     stopped: Boolean, closed: Boolean)
 
-  /** Streaming twin of the batch `x_group_sequential` monitor (r12
-    * verdict #5): the O'Brien–Fleming-shaped interim analysis run
+  /** Streaming twin of the batch `x_group_sequential` monitor: the
+    * O'Brien–Fleming-shaped interim analysis run
     * continuously over the ingest instead of at five fixed calendar
     * looks. Each micro-batch is one LOOK per experiment: the batch's
     * per-arm (n, successes) fold into O(arms) cumulative state — four
@@ -2331,7 +2040,7 @@ object StreamingIngest {
     * (an arm still empty, or a pooled rate of exactly 0/1) emit z = 0:
     * no evidence, never a crossing.
     *
-    * State discipline (a3df5bb): per-experiment state is O(1) but
+    * State discipline: per-experiment state is O(1) but
     * experiment cardinality is unbounded, so the state runs under
     * EventTimeTimeout — an experiment silent for `idleTtlMs` of event
     * time is CLOSED: one final row with closed=true, then the state is

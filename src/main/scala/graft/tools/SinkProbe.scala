@@ -4,10 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import graft.streaming.StreamingIngest
 
-/** Scale probe for the foreachBatch sink folds (r16 verdict #8): time
-  * one csBatch / ssBatch / ewBatch fold of the events table at a given
-  * replication factor and report wall time plus the resulting state
-  * file size. The claim under test is the sinks' O(types)/O(k·types)
+/** Scale probe for the foreachBatch sink folds: time one fold of each
+  * monitor sink over the events table at a given replication factor and
+  * report wall time plus the resulting state file size. The claim under test is the sinks' O(types)/O(k·types)
   * state bound and the one-grouped-count-per-batch cost: at N× the
   * events, the batch groupBy scales linearly while the state file must
   * stay byte-identical in SIZE (same types, same vector lengths). One

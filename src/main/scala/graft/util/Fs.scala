@@ -1,10 +1,13 @@
 package graft.util
 
-import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path,
+  StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Shared filesystem helpers: directory listing, the write-temp-then-swap
-  * pattern, and the create-if-absent primitives the table commits use. */
+  * patterns for a file and a directory, and the create-if-absent
+  * primitives the table commits use. */
 object Fs {
   /** Entries of directory `dir`; none if it does not exist. The stream
     * is closed before returning (an unclosed `Files.list` leaks an fd per
@@ -22,6 +25,21 @@ object Fs {
       list(p).foreach(deleteRec)
       Files.delete(p)
     }
+
+  /** Replace file `target` with `body` (UTF-8) atomically: write a
+    * uniquely named hidden temp sibling, then rename it over the target,
+    * so a reader sees the complete old file or the complete new one, and
+    * two writers never share a temp file. A read-modify-write caller still
+    * serializes under its own lock. */
+  def replace(target: Path, body: String): Unit = {
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    try {
+      Files.write(tmp, body.getBytes(UTF_8), StandardOpenOption.CREATE_NEW)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING): Unit
+    } catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+  }
 
   /** Swap `tmp` into `target` without ever exposing a torn table.
     *

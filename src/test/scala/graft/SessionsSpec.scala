@@ -4,10 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** One session factory, no function registration and one directory
-  * listing: scans `src/main` for the setup paths `Sessions.local` and the
-  * typed `graft.functions` builders replaced and for inline `Files.list`
-  * calls, and pins the factory's session settings. */
+/** One session factory, no function registration, one directory listing,
+  * one sink trigger and one atomic file replace: scans `src/main` for the
+  * setup paths `Sessions.local` and the typed `graft.functions` builders
+  * replaced, for inline `Files.list` calls, `.foreachBatch` triggers,
+  * `ATOMIC_MOVE` renames and regex state decoders, and pins the factory's
+  * session settings. */
 class SessionsSpec extends SparkSpec {
 
   private lazy val mainSources: Seq[Path] = {
@@ -46,6 +48,26 @@ class SessionsSpec extends SparkSpec {
     // not closed leaks one file descriptor per call
     val hits = offenders("""Files\.list\(""",
       _.endsWith(Paths.get("util", "Fs.scala")))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("one trigger skeleton: .foreachBatch appears once in src/main") {
+    val hits = offenders("""\.foreachBatch""")
+    assert(hits.size == 1, hits.mkString("\n"))
+  }
+
+  test("ATOMIC_MOVE appears only in util/Fs.scala and GroupCommit.scala") {
+    // Fs.replace is the one atomic file replace; GroupCommit renames a
+    // staged page directory
+    val hits = offenders("ATOMIC_MOVE", p =>
+      p.endsWith(Paths.get("util", "Fs.scala")) ||
+        p.getFileName.toString == "GroupCommit.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no regex decodes a state file's lastBatch cursor") {
+    // the sink state files are read with Jackson (StreamingIngest.JsonState)
+    val hits = offenders("""lastBatch.*\\\\[sd]""")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -208,10 +208,10 @@ class StreamingSpec extends SparkSpec {
     assert(math.abs(r.getAs[Double]("chi2") - chi2) < 1e-9)
     assert(r.getAs[Boolean]("srm_flag") === (chi2 > 5.991464547107979))
     // replay guard: re-running an already-folded batchId is a state no-op
-    val before = StreamingIngest.srmState(state)
+    val before = StreamingIngest.srmState.read(state)
     StreamingIngest.srmBatch(spark, out, state,
       Seq(9999L).toDF("doc_id"), batchId = 0L)
-    assert(StreamingIngest.srmState(state) === before,
+    assert(StreamingIngest.srmState.read(state) === before,
       "replayed batchId must not re-fold into the cumulative state")
   }
 
@@ -252,10 +252,10 @@ class StreamingSpec extends SparkSpec {
     assert(math.abs(last.getAs[Double]("best_ucb")
       - ucb(20, 20 * 200, 51, 200)) < 1e-12)
     // replay guard: re-running an already-folded batchId is a no-op
-    val before = StreamingIngest.ucbState(state)
+    val before = StreamingIngest.ucbState.read(state)
     StreamingIngest.ucbBatch(spark, out, state,
       Seq(("A", 9.0)).toDF("event_type", "value"), batchId = 0L)
-    assert(StreamingIngest.ucbState(state) === before,
+    assert(StreamingIngest.ucbState.read(state) === before,
       "replayed batchId must not re-fold into the cumulative state")
   }
 
@@ -273,7 +273,7 @@ class StreamingSpec extends SparkSpec {
         .withColumn("value", org.apache.spark.sql.functions.lit(0.0))
         .limit(0),
       batchId = 0L)
-    assert(StreamingIngest.ucbState(state)._1 === 0L)
+    assert(StreamingIngest.ucbState.read(state)._1 === 0L)
     assert(!new java.io.File(out).exists() ||
       spark.read.parquet(out).isEmpty)
     // rewards all < 0.005 quantize to qv = 0 -> qvmax = 0; means must be
@@ -286,6 +286,29 @@ class StreamingSpec extends SparkSpec {
     val u = row.getAs[Double]("best_ucb")
     assert(!u.isNaN && !u.isInfinite)
     assert(math.abs(u - math.sqrt(2.0 * math.log(2.0))) < 1e-12)
+  }
+
+  test("UCB sink state keeps arms whose names need JSON escaping: a " +
+      "quote, a backslash and the empty name fold cumulatively across " +
+      "triggers") {
+    import spark.implicits._
+    val out = tmpDir("ucb-esc-out") + "/decisions"
+    val state = tmpDir("ucb-esc-state") + "/_ucb.json"
+    val arms = Seq("a\"b", "c\\d", "")
+    StreamingIngest.ucbBatch(spark, out, state,
+      arms.map(a => (a, 1.0)).toDF("event_type", "value"), batchId = 0L)
+    StreamingIngest.ucbBatch(spark, out, state,
+      (arms.map(a => (a, 2.0)) :+ (("c\\d", 0.5)))
+        .toDF("event_type", "value"), batchId = 1L)
+    // rewards quantize to cents: 1.0 -> 100, 2.0 -> 200, 0.5 -> 50
+    assert(StreamingIngest.ucbState.read(state) === ((1L, Map(
+      "a\"b" -> ((2L, 300L, 200L)),
+      "c\\d" -> ((3L, 350L, 200L)),
+      "" -> ((2L, 300L, 200L))))))
+    val last = spark.read.parquet(out).collect()
+      .filter(_.getAs[Long]("batch_id") == 1L).head
+    assert(last.getAs[Long]("n_pulls_total") === 7L)
+    assert(last.getAs[Int]("n_arms") === 3)
   }
 
   test("streaming exact dedup drops same-content docs within the watermark") {
@@ -835,6 +858,73 @@ class StreamingSpec extends SparkSpec {
         "fixture stopped exercising it")
   }
 
+  test("chunk-state sinks: a batch replayed after a crash between its " +
+      "survivor write and its state swap writes its survivors once") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    implicit val sc = spark.sqlContext
+    def doc(tag: String): String =
+      (0 until 6).flatMap(b => (0 until 25).map(i => s"$tag${b}x$i"))
+        .mkString(" ")
+    def copyTree(from: String, to: String): Unit = {
+      val src = Paths.get(from)
+      val walk = Files.walk(src)
+      try walk.iterator().asScala.foreach(p =>
+        Files.copy(p, Paths.get(to).resolve(src.relativize(p))))
+      finally walk.close()
+    }
+    type Sink = (org.apache.spark.sql.DataFrame, String, String, String) =>
+      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]
+    Seq[(String, Sink)](
+      "fixed" -> (StreamingIngest.chunkDedupSink(_, spark, _, _, _)),
+      "cdc" -> (StreamingIngest.cdcChunkDedupSink(_, spark, _, _, _))
+    ).foreach { case (name, sink) =>
+      val out = tmpDir(s"chunkreplay-out-$name") + "/docs"
+      val state = tmpDir(s"chunkreplay-state-$name") + "/fps"
+      val saved = tmpDir(s"chunkreplay-saved-$name") + "/fps"
+      val ckpt = tmpDir(s"chunkreplay-ckpt-$name")
+      val mem = MemoryStream[(Long, Timestamp, String)]
+      def run(): Unit = sink(mem.toDF().toDF("doc_id", "ts", "text"), out,
+        state, ckpt).start().awaitTermination()
+      def survivors(): Seq[Long] = spark.read.parquet(out).select("doc_id")
+        .as[Long].collect().sorted.toSeq
+      mem.addData((1L, Timestamp.valueOf("2024-01-01 10:00:00"), doc("g0")))
+      run()
+      copyTree(state, saved)
+      mem.addData((2L, Timestamp.valueOf("2024-01-01 10:10:00"), doc("g1")))
+      run()
+      assert(survivors() === Seq(1L, 2L))
+      // the crash window: the second batch's survivors were written, but
+      // neither its state swap nor its commit landed — restore the
+      // pre-batch state and drop the batch's commit-log entry, so the
+      // restarted query replays the batch
+      graft.util.Fs.deleteRec(Paths.get(state))
+      copyTree(saved, state)
+      val commits = Paths.get(ckpt, "commits")
+      val lastCommit = graft.util.Fs.list(commits).map(_.getFileName.toString)
+        .filter(_.forall(_.isDigit)).maxBy(_.toLong)
+      Files.delete(commits.resolve(lastCommit))
+      Files.deleteIfExists(commits.resolve(s".$lastCommit.crc"))
+      run()
+      assert(survivors() === Seq(1L, 2L),
+        s"$name: the replayed batch must not write its survivors twice")
+      // survivors appended flat at the root (the layout before per-batch
+      // directories) would be skipped by a read beside batch= directories,
+      // so such an output is refused, not silently hidden
+      val flat = tmpDir(s"chunkreplay-flat-$name") + "/docs"
+      Seq((9L, Timestamp.valueOf("2024-01-01 09:00:00"), "x"))
+        .toDF("doc_id", "ts", "text").write.parquet(flat)
+      val fresh = MemoryStream[(Long, Timestamp, String)]
+      fresh.addData((3L, Timestamp.valueOf("2024-01-01 10:20:00"), doc("g2")))
+      val ex = intercept[Exception] {
+        sink(fresh.toDF().toDF("doc_id", "ts", "text"), flat, state,
+          tmpDir(s"chunkreplay-flatckpt-$name")).start().awaitTermination()
+      }
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("batch=legacy")))
+    }
+  }
+
   test("streaming EWMA control chart equals the exact reference fold " +
       "and is batch-boundary invariant") {
     import spark.implicits._
@@ -1288,15 +1378,15 @@ class StreamingSpec extends SparkSpec {
     assert(rb.getAs[Long]("n_hours") == 11L)
     assert(rb.getAs[String]("first_alarm_up") == null)
     // replayed batchId must not re-fold into the state
-    val before = StreamingIngest.phStates(state)
+    val before = StreamingIngest.phStates.read(state)
     StreamingIngest.phBatch(spark, out, state,
       Seq(("a", hr(3))).toDF("event_type", "ts"), batchId = 0L)
-    assert(StreamingIngest.phStates(state) == before,
+    assert(StreamingIngest.phStates.read(state) == before,
       "replayed batchId must be a no-op")
     // an hour below the pending hour is dropped and counted
     StreamingIngest.phBatch(spark, out, state,
       Seq(("a", hr(2))).toDF("event_type", "ts"), batchId = 2L)
-    val (_, st) = StreamingIngest.phStates(state)
+    val (_, st) = StreamingIngest.phStates.read(state)
     assert(st("a").late == 1L && st("a").nh == 11L)
   }
 
@@ -1361,15 +1451,15 @@ class StreamingSpec extends SparkSpec {
     assert(rb.getAs[Double]("max_cusum_up") == 0.0)
     assert(rb.getAs[String]("first_alarm_up") == null)
     // replayed batchId must not re-fold
-    val before = StreamingIngest.csStates(state)
+    val before = StreamingIngest.csStates.read(state)
     StreamingIngest.csBatch(spark, out, state,
       Seq(("a", hr(3))).toDF("event_type", "ts"), batchId = 0L)
-    assert(StreamingIngest.csStates(state) == before,
+    assert(StreamingIngest.csStates.read(state) == before,
       "replayed batchId must be a no-op")
     // a late hour is dropped and counted; state rows stay O(types)
     StreamingIngest.csBatch(spark, out, state,
       Seq(("a", hr(2))).toDF("event_type", "ts"), batchId = 2L)
-    val (_, st) = StreamingIngest.csStates(state)
+    val (_, st) = StreamingIngest.csStates.read(state)
     assert(st("a").late == 1L && st("a").nh == 11L)
     assert(st.size == 2)
   }
@@ -1426,10 +1516,10 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("est_count"), r.getAs[Long]("user_id")))
     assert(ranked.sortBy(x => (-x._1, x._2)).toSeq == ranked.toSeq)
     // replayed batchId must not re-fold
-    val before = StreamingIngest.ssStates(state)
+    val before = StreamingIngest.ssStates.read(state)
     StreamingIngest.ssBatch(spark, out, state,
       Seq((1L, "click")).toDF("user_id", "event_type"), batchId = 0L)
-    assert(StreamingIngest.ssStates(state) == before,
+    assert(StreamingIngest.ssStates.read(state) == before,
       "replayed batchId must be a no-op")
   }
 
@@ -1500,15 +1590,15 @@ class StreamingSpec extends SparkSpec {
     assert(rb.getAs[String]("first_alarm") == null)
     assert(math.abs(rb.getAs[Double]("ewma") - 4.0) < 1e-9)
     // replayed batchId must not re-fold
-    val before = StreamingIngest.ewStates(state)
+    val before = StreamingIngest.ewStates.read(state)
     StreamingIngest.ewBatch(spark, out, state,
       Seq(("a", hr(3))).toDF("event_type", "ts"), batchId = 0L)
-    assert(StreamingIngest.ewStates(state) == before,
+    assert(StreamingIngest.ewStates.read(state) == before,
       "replayed batchId must be a no-op")
     // a late hour is dropped and counted; state rows stay O(types)
     StreamingIngest.ewBatch(spark, out, state,
       Seq(("a", hr(2))).toDF("event_type", "ts"), batchId = 2L)
-    val (_, st) = StreamingIngest.ewStates(state)
+    val (_, st) = StreamingIngest.ewStates.read(state)
     assert(st("a").late == 1L && st("a").nh == 11L)
     assert(st.size == 2)
   }
@@ -1583,10 +1673,10 @@ class StreamingSpec extends SparkSpec {
     assert(rb.getAs[Double]("p50_le") == 8.0 &&
       rb.getAs[Double]("p99_le") == 8.0)
     // replayed batchId must not re-fold
-    val before = StreamingIngest.hqStates(state)
+    val before = StreamingIngest.hqStates.read(state)
     StreamingIngest.hqBatch(spark, out, state,
       Seq(("a", 50.25)).toDF("event_type", "value"), batchId = 0L)
-    assert(StreamingIngest.hqStates(state) == before,
+    assert(StreamingIngest.hqStates.read(state) == before,
       "replayed batchId must be a no-op")
     // crash window: verdict appended, state write lost -> the replay
     // re-folds from the OLD state and appends a bit-identical duplicate
@@ -1595,10 +1685,10 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(state))
     val dfCrash = Seq(("a", 50.25)).toDF("event_type", "value")
     StreamingIngest.hqBatch(spark, out, state, dfCrash, batchId = 2L)
-    val afterOnce = StreamingIngest.hqStates(state)
+    val afterOnce = StreamingIngest.hqStates.read(state)
     java.nio.file.Files.write(java.nio.file.Paths.get(state), stateBytes)
     StreamingIngest.hqBatch(spark, out, state, dfCrash, batchId = 2L)
-    assert(StreamingIngest.hqStates(state) == afterOnce,
+    assert(StreamingIngest.hqStates.read(state) == afterOnce,
       "state must be exactly-once under the batch cursor")
     val dup = spark.read.parquet(out).collect()
       .filter(r => r.getAs[Long]("batch_id") == 2L &&
@@ -1610,11 +1700,11 @@ class StreamingSpec extends SparkSpec {
     assert(afterOnce._2.size == 2)
     // NULL values are counted and exported, never clamped into bucket
     // 0 (pre-seal review r18: greatest/least skip NULLs silently)
-    val preNull = StreamingIngest.hqStates(state)._2("a")
+    val preNull = StreamingIngest.hqStates.read(state)._2("a")
     StreamingIngest.hqBatch(spark, out, state,
       Seq(("a", Option(50.25)), ("a", Option.empty[Double]))
         .toDF("event_type", "value"), batchId = 3L)
-    val postNull = StreamingIngest.hqStates(state)._2("a")
+    val postNull = StreamingIngest.hqStates.read(state)._2("a")
     assert(postNull.nulls == preNull.nulls + 1)
     assert(postNull.n == preNull.n + 1, "only the non-null row folds")
     assert(postNull.buckets.head == preNull.buckets.head,
@@ -1626,11 +1716,11 @@ class StreamingSpec extends SparkSpec {
     // below-grid values are counted into the exported n_underflow and
     // never folded into bucket 0 — the symmetric twin of the clamp
     // bucket (r18 advice #2)
-    val preNeg = StreamingIngest.hqStates(state)._2("a")
+    val preNeg = StreamingIngest.hqStates.read(state)._2("a")
     StreamingIngest.hqBatch(spark, out, state,
       Seq(("a", -3.25), ("a", 50.25)).toDF("event_type", "value"),
       batchId = 4L)
-    val postNeg = StreamingIngest.hqStates(state)._2("a")
+    val postNeg = StreamingIngest.hqStates.read(state)._2("a")
     assert(postNeg.under == preNeg.under + 1)
     assert(postNeg.n == preNeg.n + 1, "only the in-grid row folds")
     assert(postNeg.buckets.head == preNeg.buckets.head,
@@ -1670,7 +1760,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(state),
       s"""{"lastBatch": 0, "types": [{"t": "a", "v": [$legacyVec]}]}"""
         .getBytes("UTF-8"))
-    val (last, st) = StreamingIngest.hqStates(state)
+    val (last, st) = StreamingIngest.hqStates.read(state)
     assert(last == 0L)
     val a = st("a")
     assert(a.n == 3L && a.nulls == 1L && a.under == 0L,
@@ -1684,14 +1774,14 @@ class StreamingSpec extends SparkSpec {
     StreamingIngest.hqBatch(spark, out, state,
       Seq(("a", 2.25), ("a", -1.0), ("a", 99999.0))
         .toDF("event_type", "value"), batchId = 1L)
-    val resumed = StreamingIngest.hqStates(state)._2("a")
+    val resumed = StreamingIngest.hqStates.read(state)._2("a")
     assert(resumed.n == 5L && resumed.nulls == 1L && resumed.under == 1L)
     assert(resumed.buckets(2) == 2L && resumed.buckets(511) == 1L)
     // any other vector length is a loud failure, never a silent shift
     java.nio.file.Files.write(java.nio.file.Paths.get(state),
       """{"lastBatch": 0, "types": [{"t": "a", "v": [1, 2, 3]}]}"""
         .getBytes("UTF-8"))
-    val ex = intercept[RuntimeException] { StreamingIngest.hqStates(state) }
+    val ex = intercept[RuntimeException] { StreamingIngest.hqStates.read(state) }
     assert(ex.getMessage.contains("histogram-quantile state"))
   }
 
@@ -1714,7 +1804,7 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("n_underflow"),
       "old-layout output must be rejected by name, not mixed into")
     // the state must not have advanced past the refused append
-    assert(StreamingIngest.hqStates(state)._1 == -1L,
+    assert(StreamingIngest.hqStates.read(state)._1 == -1L,
       "a refused append must not consume the batch id")
     // a current-layout table (or a fresh path) appends normally
     val out2 = tmpDir("hqo-out2")
@@ -1837,7 +1927,7 @@ class StreamingSpec extends SparkSpec {
       (Seq(("a", Option(1L)), ("a", Option(2L)),
         ("a", Option.empty[Long]))).toDF("event_type", "user_id"),
       batchId = 0L)
-    val (last0, st0) = StreamingIngest.bnStates(state)
+    val (last0, st0) = StreamingIngest.bnStates.read(state)
     assert(last0 == 0L)
     assert(st0("a").n == 2L && st0("a").nulls == 1L,
       "only non-null users fold; the NULL is counted")
@@ -1845,17 +1935,17 @@ class StreamingSpec extends SparkSpec {
     // replayed batch id: no-op
     StreamingIngest.bnBatch(spark, out, state,
       Seq(("a", 99L)).toDF("event_type", "user_id"), batchId = 0L)
-    assert(StreamingIngest.bnStates(state)._2("a").n == 2L)
+    assert(StreamingIngest.bnStates.read(state)._2("a").n == 2L)
     // crash window: verdict appended, state write lost → replay from
     // the OLD state appends a bit-identical duplicate verdict row
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(state))
     val dfC = Seq(("a", 3L)).toDF("event_type", "user_id")
     StreamingIngest.bnBatch(spark, out, state, dfC, batchId = 1L)
-    val afterOnce = StreamingIngest.bnStates(state)
+    val afterOnce = StreamingIngest.bnStates.read(state)
     java.nio.file.Files.write(java.nio.file.Paths.get(state), bytes)
     StreamingIngest.bnBatch(spark, out, state, dfC, batchId = 1L)
-    assert(StreamingIngest.bnStates(state) == afterOnce,
+    assert(StreamingIngest.bnStates.read(state) == afterOnce,
       "state must be exactly-once under the batch cursor")
     val dup = spark.read.parquet(out).collect()
       .filter(r => r.getAs[Long]("batch_id") == 1L)
@@ -1864,11 +1954,11 @@ class StreamingSpec extends SparkSpec {
       "at-least-once verdicts, bit-identical duplicates")
     // OR idempotence: refolding the SAME users under a NEW batch id
     // leaves the filter words byte-identical and reports zero novelty
-    val wordsBefore = StreamingIngest.bnStates(state)._2("a").words
+    val wordsBefore = StreamingIngest.bnStates.read(state)._2("a").words
     StreamingIngest.bnBatch(spark, out, state,
       Seq(("a", 1L), ("a", 2L), ("a", 3L)).toDF("event_type", "user_id"),
       batchId = 2L)
-    val after = StreamingIngest.bnStates(state)._2("a")
+    val after = StreamingIngest.bnStates.read(state)._2("a")
     assert(after.words == wordsBefore,
       "bit-OR of already-present users must not change the filter")
     val r2 = spark.read.parquet(out).collect()
@@ -1879,7 +1969,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(state),
       """{"lastBatch": 2, "types": [{"t": "a", "v": [2, 0, 0, 0]}]}"""
         .getBytes("UTF-8"))
-    val ex = intercept[RuntimeException] { StreamingIngest.bnStates(state) }
+    val ex = intercept[RuntimeException] { StreamingIngest.bnStates.read(state) }
     assert(ex.getMessage.contains("bloom-novelty state"))
   }
 
@@ -1926,7 +2016,7 @@ class StreamingSpec extends SparkSpec {
         acc.updated(reg, math.max(acc(reg), rho))
       }
     }
-    val (_, st) = StreamingIngest.hllStates(state)
+    val (_, st) = StreamingIngest.hllStates.read(state)
     val trueBig = ((1L to 1200L) ++ (601L to 2000L)).distinct
     assert(st("big").regs == regsOf(trueBig),
       "big registers must equal the exact md5-path replay")
@@ -1950,10 +2040,10 @@ class StreamingSpec extends SparkSpec {
     // any register (max-merge), independent of the batch cursor
     assert(regsOf(trueBig ++ (601L to 2000L)) == regsOf(trueBig))
     // replayed batchId must not re-fold state (n_events would double)
-    val before = StreamingIngest.hllStates(state)
+    val before = StreamingIngest.hllStates.read(state)
     StreamingIngest.hllBatch(spark, out, state,
       Seq(("big", 1L)).toDF("event_type", "user_id"), batchId = 0L)
-    assert(StreamingIngest.hllStates(state) == before,
+    assert(StreamingIngest.hllStates.read(state) == before,
       "replayed batchId must be a no-op")
     assert(before._2.size == 2, "state stays O(types)")
     // NULL user ids are counted and exported, never hashed (pre-seal
@@ -1961,7 +2051,7 @@ class StreamingSpec extends SparkSpec {
     StreamingIngest.hllBatch(spark, out, state,
       Seq(("big", Option(5L)), ("big", Option.empty[Long]))
         .toDF("event_type", "user_id"), batchId = 2L)
-    val (_, st2) = StreamingIngest.hllStates(state)
+    val (_, st2) = StreamingIngest.hllStates.read(state)
     assert(st2("big").nulls == 1L && st2("big").n == before._2("big").n + 1)
     assert(st2("big").regs == regsOf(trueBig :+ 5L))
     val nullRow = spark.read.parquet(out).collect()
@@ -2010,7 +2100,7 @@ class StreamingSpec extends SparkSpec {
     def bottomK(users: Seq[Long]): Seq[(Long, Long)] =
       users.distinct.map(u => (h60(u), u)).sorted.take(128)
     val trueBig = ((1L to 1200L) ++ (601L to 2000L)).distinct
-    val (_, st) = StreamingIngest.mkStates(state)
+    val (_, st) = StreamingIngest.mkStates.read(state)
     assert(st("big").sample == bottomK(trueBig).toVector,
       "big sample must equal the exact md5-path bottom-k replay")
     assert(st("small").sample == bottomK(1L to 30L).toVector)
@@ -2056,10 +2146,10 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingIngest.mkMerge(st("big").sample,
       bottomK((601L to 2000L).toSeq)) == st("big").sample)
     // replayed batchId must not re-fold (counters would double)
-    val before = StreamingIngest.mkStates(state)
+    val before = StreamingIngest.mkStates.read(state)
     StreamingIngest.mkBatch(spark, out, state,
       Seq(("big", 1L)).toDF("event_type", "user_id"), batchId = 0L)
-    assert(StreamingIngest.mkStates(state) == before,
+    assert(StreamingIngest.mkStates.read(state) == before,
       "replayed batchId must be a no-op")
     // crash window: verdict appended, state write lost -> the replay
     // re-folds from the OLD state and appends a bit-identical
@@ -2069,10 +2159,10 @@ class StreamingSpec extends SparkSpec {
     val dfCrash = Seq(("big", Option(9999L)),
       ("big", Option.empty[Long])).toDF("event_type", "user_id")
     StreamingIngest.mkBatch(spark, out, state, dfCrash, batchId = 2L)
-    val afterOnce = StreamingIngest.mkStates(state)
+    val afterOnce = StreamingIngest.mkStates.read(state)
     java.nio.file.Files.write(java.nio.file.Paths.get(state), stateBytes)
     StreamingIngest.mkBatch(spark, out, state, dfCrash, batchId = 2L)
-    assert(StreamingIngest.mkStates(state) == afterOnce,
+    assert(StreamingIngest.mkStates.read(state) == afterOnce,
       "state must be exactly-once under the batch cursor")
     val dup = spark.read.parquet(out).collect()
       .filter(r => r.getAs[Long]("batch_id") == 2L &&
@@ -2090,6 +2180,55 @@ class StreamingSpec extends SparkSpec {
     // state stays O(types) and the sample never exceeds k
     assert(afterOnce._2.size == 2)
     assert(afterOnce._2.values.forall(_.sample.length <= 128))
+  }
+
+  test("state files in the earlier hand-written layout decode to the " +
+      "same state: ucb arms, srm counts, space-saving counters, a long " +
+      "vector with an escaped type name, and the bucketed watermark") {
+    val dir = tmpDir("state-compat")
+    def file(name: String, body: String): String = {
+      val p = Paths.get(dir, name)
+      Files.writeString(p, body)
+      p.toString
+    }
+    val ucb = file("_ucb.json", """{"lastBatch": 4, "arms": [""" +
+      """{"arm": "A", "n": 20, "q": 4000, "mx": 200}, """ +
+      """{"arm": "B", "n": 31, "q": 700, "mx": 100}]}""")
+    assert(StreamingIngest.ucbState.read(ucb) === ((4L,
+      Map("A" -> ((20L, 4000L, 200L)), "B" -> ((31L, 700L, 100L))))))
+    val srm = file("_srm.json",
+      """{"lastBatch": 2, "train": 398, "valid": 51, "test": 51}""")
+    assert(StreamingIngest.srmState.read(srm) === ((2L, (398L, 51L, 51L))))
+    val ss = file("_ss.json", """{"lastBatch": 1, "types": [""" +
+      """{"t": "click", "n": 12, "c": [[7, 5, 0], [3, 4, 1]]}, """ +
+      """{"t": "q\"t", "n": 1, "c": [[9, 1, 0]]}]}""")
+    assert(StreamingIngest.ssStates.read(ss) === ((1L, Map(
+      "click" -> StreamingIngest.SsState(12L, List((7L, 5L, 0L), (3L, 4L, 1L))),
+      "q\"t" -> StreamingIngest.SsState(1L, List((9L, 1L, 0L)))))))
+    val ew = file("_ew.json", """{"lastBatch": 3, "types": [""" +
+      """{"t": "a\\b\"c", "v": [7, 4000000000, 12000, 1, """ +
+      """1767225600000000, 1767247200000000, 5, 2]}, """ +
+      """{"t": "view", "v": [1, 3000000000, 0, 0, -1, -1, 0, 0]}]}""")
+    assert(StreamingIngest.ewStates.read(ew) === ((3L, Map(
+      "a\\b\"c" -> StreamingIngest.EwState(7L, 4000000000L, 12000L, 1L,
+        1767225600000000L, 1767247200000000L, 5L, 2L),
+      "view" -> StreamingIngest.EwState(1L, 3000000000L, 0L, 0L, -1L, -1L,
+        0L, 0L)))))
+    val wm = file("fps._watermark.json",
+      """{"cutoff": 1704067200000, "lastPrune": 1704063600000}""")
+    assert(StreamingIngest.watermark.read(wm) ===
+      Some((1704067200000L, 1704063600000L)))
+    // and each decoded state survives the codec's own write unchanged
+    def roundTrip[S](st: StreamingIngest.JsonState[S], path: String): Unit = {
+      val before = st.read(path)
+      st.write(path, before)
+      assert(st.read(path) === before, path)
+    }
+    roundTrip(StreamingIngest.ucbState, ucb)
+    roundTrip(StreamingIngest.srmState, srm)
+    roundTrip(StreamingIngest.ssStates, ss)
+    roundTrip(StreamingIngest.ewStates, ew)
+    roundTrip(StreamingIngest.watermark, wm)
   }
 
   test("sink crash between verdict append and state write: the replay " +
